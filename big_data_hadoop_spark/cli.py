@@ -473,19 +473,23 @@ def _run_store_cli(args: argparse.Namespace, spec: dict) -> None:
     vacuum / export / stats plus store-specific extras (round-11: the
     four ~170-line near-clones folded into this).
 
-    ``spec`` keys: ``name`` (CLI command), ``hint`` (meta hint),
+    ``spec`` keys: ``name`` (CLI command), ``family`` (the store's
+    ``batch_store.Family`` — meta hint, refresh, compact, vacuum),
     ``build_defaults`` (build-only flags with their argparse defaults
     — passing one to a non-build action refuses loudly: params come
     from the store's meta, a mid-history change would silently
     redefine "duplicate"), ``flag_actions`` (flags additionally legal
-    for specific extra actions), ``refusal_suffix``, ``vacuum`` /
-    ``build`` / ``batch_frame`` / ``refresh`` / ``matches`` /
-    ``compact`` / ``load`` callables, ``match_order`` / ``match_fmt``
+    for specific extra actions), ``refusal_suffix``, ``build`` /
+    ``batch_frame`` / ``matches`` / ``load`` callables,
+    ``match_order`` / ``match_fmt``
     (stdout form of the read-only novelty check), ``export_key``,
     ``stats_view`` (meta → printable dict), ``extra`` (action →
     ``fn(spark, args) -> stats``)."""
     import json as _json
 
+    from big_data_hadoop_spark.sources import batch_store
+
+    fam = spec["family"]
     flag_actions = spec.get("flag_actions", {})
     flag_allowed = spec.get("flag_allowed", {})
     passed, off_build = [], []
@@ -530,16 +534,14 @@ def _run_store_cli(args: argparse.Namespace, spec: dict) -> None:
         )
     if args.action == "vacuum":
         # filesystem-only: no Spark session spin-up for a sweep
-        st = spec["vacuum"](args.store, args.grace_seconds)
+        st = batch_store.vacuum(fam, args.store, args.grace_seconds)
         print(_json.dumps(st, sort_keys=True))
         return
     if args.action == "stats":
         # inspect before you mutate: committed meta verbatim (params +
         # manifest), no Spark session — a metadata read must not cost
         # a JVM spin-up
-        from big_data_hadoop_spark.sources import batch_store
-
-        meta = batch_store.read_meta(args.store, spec["hint"])
+        meta = batch_store.read_meta(args.store, fam.hint)
         print(
             _json.dumps(
                 spec.get("stats_view", lambda m: m)(meta), sort_keys=True
@@ -555,13 +557,11 @@ def _run_store_cli(args: argparse.Namespace, spec: dict) -> None:
         if args.action == "build":
             st = spec["build"](spark, args)
         else:
-            from big_data_hadoop_spark.sources import batch_store
-
             # refresh/matches derive EVERY parameter (tier, column
             # names) from the store's meta — argparse defaults would
             # make a store built with custom columns permanently
             # un-refreshable from the CLI
-            meta = batch_store.read_meta(args.store, spec["hint"])
+            meta = batch_store.read_meta(args.store, fam.hint)
             df = spec["batch_frame"](spark, args, meta)
             if args.action == "matches":
                 # read-only novelty check: what the store would reject
@@ -579,9 +579,9 @@ def _run_store_cli(args: argparse.Namespace, spec: dict) -> None:
                         print(fmt(r))
                     st = {"matches": len(rows)}
             else:
-                st = spec["refresh"](spark, df, args.store)
+                st = batch_store.append(spark, fam, df, args.store)
     elif args.action == "compact":
-        st = spec["compact"](spark, args.store)
+        st = batch_store.compact(spark, fam, args.store)
     elif args.action == "export":
         if not args.output:
             raise SystemExit(f"{spec['name']} export requires --output")
@@ -624,7 +624,7 @@ def cmd_neardup_graph(args: argparse.Namespace) -> None:
         args,
         {
             "name": "neardup-graph",
-            "hint": "neardup_graph_build",
+            "family": ng_ops.FAMILY,
             "build_defaults": {
                 "ngram": 3,
                 "num_perm": 128,
@@ -633,18 +633,13 @@ def cmd_neardup_graph(args: argparse.Namespace) -> None:
                 "text_col": "text",
                 "id_col": "doc_id",
             },
-            "vacuum": lambda store, grace: ng_ops.neardup_graph_vacuum(
-                store, grace_seconds=grace
-            ),
             "build": build,
             "batch_frame": lambda spark, args, meta: _read_table_cli(
                 spark, args.input
             ).select(meta["id_col"], meta["text_col"]),
-            "refresh": ng_ops.neardup_graph_refresh,
             "matches": ng_ops.neardup_graph_matches,
             "match_order": lambda meta: (meta["id_col"], "prior_id"),
             "match_fmt": lambda r: f"{r[0]}\t{r[1]}\t{r[2]:.6f}",
-            "compact": ng_ops.neardup_graph_compact,
             "load": ng_ops.neardup_graph_load,
             "export_key": "edges",
         },
@@ -804,22 +799,17 @@ def cmd_fingerprint_store(args: argparse.Namespace) -> None:
         args,
         {
             "name": "fingerprint-store",
-            "hint": "fingerprint_store_build",
+            "family": fs_ops.FAMILY,
             "build_defaults": {
                 "max_hamming": 3,
                 "text_col": "text",
                 "id_col": "doc_id",
                 "fp_col": "fp",
             },
-            "vacuum": lambda store, grace: fs_ops.fingerprint_store_vacuum(
-                store, grace_seconds=grace
-            ),
             "build": build,
             "batch_frame": batch_frame,
-            "refresh": fs_ops.fingerprint_store_refresh,
             "matches": fs_ops.fingerprint_store_matches,
             "match_order": lambda meta: (meta["id_col"],),
-            "compact": fs_ops.fingerprint_store_compact,
             "load": fs_ops.fingerprint_store_load,
             "export_key": "fingerprints",
         },
@@ -899,7 +889,7 @@ def cmd_framehash_store(args: argparse.Namespace) -> None:
         args,
         {
             "name": "framehash-store",
-            "hint": "framehash_store_build",
+            "family": fh_ops.FAMILY,
             "build_defaults": {
                 "max_hamming": 1,
                 "min_matching_frames": 2,
@@ -908,15 +898,10 @@ def cmd_framehash_store(args: argparse.Namespace) -> None:
                 "match_constant_frames": False,
                 "max_frame_df": None,
             },
-            "vacuum": lambda store, grace: fh_ops.framehash_store_vacuum(
-                store, grace_seconds=grace
-            ),
             "build": build,
             "batch_frame": batch_frame,
-            "refresh": fh_ops.framehash_store_refresh,
             "matches": fh_ops.framehash_store_matches,
             "match_order": lambda meta: (meta["id_col"],),
-            "compact": fh_ops.framehash_store_compact,
             "load": fh_ops.framehash_store_load,
             "export_key": "frame_rows",
         },
@@ -986,7 +971,7 @@ def cmd_embedding_store(args: argparse.Namespace) -> None:
     def audit(spark, args):
         if not args.input:
             raise SystemExit("embedding-store audit requires --input")
-        meta = batch_store.read_meta(args.store, "embedding_store_build")
+        meta = batch_store.read_meta(args.store, es_ops.FAMILY.hint)
         df = _read_table_cli(spark, args.input).select(
             F.col(meta["id_col"]), F.col(meta["vec_col"])
         )
@@ -1060,7 +1045,7 @@ def cmd_embedding_store(args: argparse.Namespace) -> None:
         args,
         {
             "name": "embedding-store",
-            "hint": "embedding_store_build",
+            "family": es_ops.FAMILY,
             "build_defaults": {
                 "eps": 0.95,
                 "n_cells": None,
@@ -1090,17 +1075,12 @@ def cmd_embedding_store(args: argparse.Namespace) -> None:
                 "clear_max_cell_rows": ("rebuild",),
             },
             "refusal_suffix": ", or move a cell boundary",
-            "vacuum": lambda store, grace: es_ops.embedding_store_vacuum(
-                store, grace_seconds=grace
-            ),
             "build": build,
             "batch_frame": lambda spark, args, meta: _read_table_cli(
                 spark, args.input
             ).select(F.col(meta["id_col"]), F.col(meta["vec_col"])),
-            "refresh": es_ops.embedding_store_refresh,
             "matches": es_ops.embedding_store_matches,
             "match_order": lambda meta: (meta["id_col"],),
-            "compact": es_ops.embedding_store_compact,
             "load": es_ops.embedding_store_load,
             "export_key": "embeddings",
             "stats_view": stats_view,
@@ -1515,7 +1495,7 @@ def main(argv: list[str] | None = None) -> None:
         default=None,
         help="bootstrap bloom-sidecar columns (comma-sep, subset of --cols)",
     )
-    ix.add_argument("--bloom-bits", type=int, default=8192)
+    ix.add_argument("--bloom-bits", type=int, default=32768)
     ix.add_argument("--bloom-k", type=int, default=6)
 
     sk = sub.add_parser(

@@ -88,7 +88,7 @@ ROUND-12 RECALL LEVER — acting on the number round 11 measured
 
 from __future__ import annotations
 
-import os
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,10 +101,6 @@ from big_data_hadoop_spark.operators.similarity import (
     ivf_build,
 )
 from big_data_hadoop_spark.sources import batch_store
-from big_data_hadoop_spark.sources.io import _VERB_LOCK_OPTS, table_write_lock
-
-_HINT = "embedding_store_build"
-_KINDS = ("emb",)
 
 #: Boundary-margin window for the ``boundary_frac`` diagnostic: a row
 #: counts as boundary-risky when its runner-up centroid's SQUARED L2
@@ -116,6 +112,20 @@ _KINDS = ("emb",)
 #: (``embedding_store_recall_audit``) and consider raising the
 #: meta-pinned ``check_cells`` (cheap) before reaching for a rebuild.
 BOUNDARY_MARGIN = 0.25
+
+
+def _finite_centroids(centroids: list[list[float]]) -> list[list[float]]:
+    """Refuse a centroid with a NaN/inf coordinate, naming its cell: no
+    row has a finite distance to it, and rendered as a SQL literal it
+    would fail far from the cause (``nanD`` is not a literal)."""
+    for i, c in enumerate(centroids):
+        if not all(math.isfinite(x) for x in c):
+            raise ValueError(
+                f"centroid of cell {i} has a non-finite coordinate — "
+                "the quantizer fit diverged or the pinned meta is "
+                "corrupt; refit with embedding_store_rebuild"
+            )
+    return centroids
 
 
 def assign_cells(
@@ -152,7 +162,7 @@ def assign_cells(
                 "cell_dist2", F.lit(None).cast("double")
             )
         return out
-    k = len(centroids)
+    k = len(_finite_centroids(centroids))
     # ONE parsed literal matrix: k·dim F.lit Column nodes through py4j
     # cost ~0.5 s of driver time per assignment at 8x64 (repr(float)
     # round-trips doubles exactly, so the parsed literals are the same
@@ -232,6 +242,21 @@ def assign_cells(
     return out.drop(scratch2) if scratch2 is not None else out
 
 
+def _prune_to_cells(history: DataFrame, cells: list[int], meta: dict):
+    """``history`` restricted to the batch's CHECKED ``cells``: the
+    predicate pushes into the parquet scan and — because committed
+    batches are CLUSTERED by cell — skips whole row groups, so a batch
+    checking k of n cells reads ~k/n of history. The cell equi-join's
+    result is unchanged (rows outside every checked cell can never
+    match). No filter when the batch checks EVERY cell: it could prune
+    nothing and would only add plan noise."""
+    if not cells:
+        return history.filter(F.lit(False))
+    if len(cells) < (len(meta.get("centroids") or []) or 1):
+        return history.filter(F.col("cell").isin(cells))
+    return history
+
+
 def _checked_cells(assigned: DataFrame) -> list[int]:
     """The distinct CHECKED cell set of a p>1-assigned frame, collected
     cell-bounded: the per-row ``cells`` arrays are EXPLODED before the
@@ -277,20 +302,7 @@ def _matches(
         na = _flat(
             new_assigned, id_col, vec_col, dim, "_a", extra=("cell",)
         )
-    sb = (
-        _flat(
-            stored.select(
-                F.col(id_col).alias("_sid"), "cell", F.col(vec_col)
-            ),
-            "_sid",
-            vec_col,
-            dim,
-            "_b",
-            extra=("cell",),
-        )
-        .withColumnRenamed("cell", "cell_b")
-        .withColumnRenamed("nrm", "nrm_b")
-    )
+    sb = _flat_stored(stored, dim, id_col, vec_col)
     dotc = _flat_dot("_a", "_b", dim)
     return (
         na.join(
@@ -300,6 +312,25 @@ def _matches(
         )
         .select(F.col(id_col))
         .distinct()
+    )
+
+
+def _flat_stored(
+    stored: DataFrame, dim: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The stored (home-cell) side of a cell equi-join in flat-column
+    form: ``(_sid, cell_b, _b0.., nrm_b)``."""
+    return (
+        _flat(
+            stored.select(F.col(id_col).alias("_sid"), "cell", F.col(vec_col)),
+            "_sid",
+            vec_col,
+            dim,
+            "_b",
+            extra=("cell",),
+        )
+        .withColumnRenamed("cell", "cell_b")
+        .withColumnRenamed("nrm", "nrm_b")
     )
 
 
@@ -322,18 +353,18 @@ def _within_pairs(
     via one explode of the prober's ``cells``, then canonicalize with
     least/greatest + distinct (a pair can hit in both directions or
     in several cells)."""
+    fb = (
+        _flat(assigned, id_col, vec_col, dim, "_b", extra=("cell",))
+        .withColumnRenamed(id_col, "id_b")
+        .withColumnRenamed("cell", "cell_b")
+        .withColumnRenamed("nrm", "nrm_b")
+    )
+    dotc = _flat_dot("_a", "_b", dim)
     if check_cells > 1:
         fa = _flat(
             assigned, id_col, vec_col, dim, "_a", extra=("cells",)
         ).withColumnRenamed(id_col, "id_a")
         fa = fa.withColumn("cell", F.explode("cells")).drop("cells")
-        fb = (
-            _flat(assigned, id_col, vec_col, dim, "_b", extra=("cell",))
-            .withColumnRenamed(id_col, "id_b")
-            .withColumnRenamed("cell", "cell_b")
-            .withColumnRenamed("nrm", "nrm_b")
-        )
-        dotc = _flat_dot("_a", "_b", dim)
         return (
             fa.join(
                 fb,
@@ -353,13 +384,6 @@ def _within_pairs(
     fa = _flat(
         assigned, id_col, vec_col, dim, "_a", extra=("cell",)
     ).withColumnRenamed(id_col, "id_a")
-    fb = (
-        _flat(assigned, id_col, vec_col, dim, "_b", extra=("cell",))
-        .withColumnRenamed(id_col, "id_b")
-        .withColumnRenamed("cell", "cell_b")
-        .withColumnRenamed("nrm", "nrm_b")
-    )
-    dotc = _flat_dot("_a", "_b", dim)
     return fa.join(
         fb,
         (F.col("cell") == F.col("cell_b"))
@@ -428,44 +452,29 @@ def _malformed_msg(dim: int, what: str) -> str:
     )
 
 
-def _validate_batch(
-    df: DataFrame,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    what: str,
-    check_dups: bool = True,
-) -> int:
-    """Every write-path batch refusal in ONE aggregation job (round-11
-    verb diet: the NULL-id scan, the duplicate-id groupBy, the
-    malformed-vector scan, and the row count the accept fold needs
-    were four separate jobs — store-verb job count IS the fixed cost
-    the suite pays per lifecycle). Returns the batch row count.
+def _validate(df: DataFrame, meta: dict, check_dups: bool):
+    """Every write-path batch refusal in ONE aggregation job (the
+    NULL-id scan, the duplicate-id check, the malformed-vector scan,
+    and the row count the accept fold needs) → ``(df, row count)``.
     ``check_dups=False`` is the ``validate_ids=False`` contract
     (uniqueness guaranteed upstream); NULL ids and malformed vectors
     always refuse — both corrupt the store silently."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.col(id_col)).alias("n_ids"),
-        F.count_distinct(F.col(id_col)).alias("n_distinct"),
-        F.count(F.when(_bad_vector(dim, vec_col), 1)).alias("n_bad"),
-    ).first()
-    if row["n_ids"] < row["n"]:
-        raise ValueError(
-            "NULL ids in the embedding batch — a NULL id neither "
-            "equi-joins nor orders, so its dedup outcome would be "
-            "silent; assign real ids first"
-        )
-    if check_dups and row["n_distinct"] < row["n_ids"]:
-        raise ValueError(
-            f"duplicate {id_col} values within the batch — the greedy "
-            "keep-first outcome for an id seen twice is undefined; "
-            "dropDuplicates the batch first, or pass "
-            "validate_ids=False if uniqueness is guaranteed upstream"
-        )
+    dim, id_col, vec_col = meta["dim"], meta["id_col"], meta["vec_col"]
+    # a batch judged before any centroids are pinned is the build frame
+    what = (
+        "embedding refresh batch" if "centroids" in meta
+        else "embedding build frame"
+    )
+    row = batch_store.refuse_bad_ids(
+        df, id_col, "ids in the embedding batch",
+        f"duplicate {id_col} values within the batch — the greedy "
+        "keep-first outcome for an id seen twice is undefined",
+        check_dups,
+        n_bad=F.count(F.when(_bad_vector(dim, vec_col), 1)),
+    )
     if row["n_bad"]:
         raise ValueError(_malformed_msg(dim, what))
-    return row["n"]
+    return df, row["n"]
 
 
 def _refuse_malformed(
@@ -478,29 +487,23 @@ def _refuse_malformed(
         raise ValueError(_malformed_msg(dim, what))
 
 
-def _accept(
-    df: DataFrame,
-    prior: DataFrame | None,
-    meta: dict,
-    stats: dict,
-    n_in: int,
-) -> tuple[DataFrame, int]:
+def _accept(df: DataFrame, n_in: int, prior, meta: dict, stats: dict):
     """The dedup fold: drop zero-norm rows (counted), reject same-cell
     history matches at eps (counted), within-batch cluster dedup
-    (counted) → (accepted ``(id, cell, embedding)`` rows, eagerly
-    checkpointed; their count — already paid for by the stats
-    bookkeeping, so callers never re-count the write). Also reports
-    the centroid-staleness diagnostic: ``assign_dist_mean`` /
-    ``assign_dist_p99`` (squared L2 to the winning PINNED centroid —
-    exact percentile, deterministic), folded into the SAME aggregation
-    job as the usable-row count."""
+    (counted) → accepted ``(id, cell, embedding)`` rows, eagerly
+    checkpointed, and their count (already paid for by the stats
+    bookkeeping). Also reports the centroid-staleness diagnostic:
+    ``assign_dist_mean`` / ``assign_dist_p99`` (squared L2 to the
+    winning PINNED centroid — exact percentile, deterministic), folded
+    into the SAME aggregation job as the usable-row count, and —
+    against a history — ``dist_drift`` (see ``_drift``)."""
     eps, dim, id_col, vec_col = (
         meta["eps"], meta["dim"], meta["id_col"], meta["vec_col"]
     )
     p = int(meta.get("check_cells", 1) or 1)
     norm_in = df.select(F.col(id_col), F.col(vec_col))
-    # n_in comes from the calling verb's single validation job
-    # (_validate_batch) — malformed vectors (wrong width / NULL/NaN
+    # n_in comes from the lifecycle's single validation job
+    # (_validate) — malformed vectors (wrong width / NULL/NaN
     # elements) were refused there, BEFORE any expensive work. NULL
     # embeddings stay the disclosed drop below (no norm, no direction
     # — the NULL-fp contract).
@@ -552,59 +555,35 @@ def _accept(
     )
     if prior is not None:
         # prune the history scan to the batch's CHECKED cells BEFORE
-        # the within-cell join: the predicate pushes into the parquet
-        # scan and — because committed batches are CLUSTERED by cell at
-        # write time — skips whole row groups. A batch that checks
-        # k of n_cells reads ~k/n_cells of history instead of all of
-        # it; the join result is unchanged (rows outside every checked
-        # cell can never match the cell equi-key). Skipped when the
-        # batch checks EVERY cell — the filter can prune nothing and
-        # would only add plan noise (the dense toy-scale case;
-        # production batches against many-cell stores touch a subset).
-        if p > 1:
-            cells = _checked_cells(assigned)
-        else:
-            cells = sorted(int(c) for c in (drow["cells"] or []))
-        n_total = len(meta.get("centroids") or []) or 1
-        if not cells:
-            prior = prior.filter(F.lit(False))
-        elif len(cells) < n_total:
-            prior = prior.filter(F.col("cell").isin(cells))
+        # the within-cell join (see _prune_to_cells)
+        cells = (
+            _checked_cells(assigned) if p > 1
+            else sorted(int(c) for c in (drow["cells"] or []))
+        )
         hits = _matches(
-            assigned, prior, eps, dim, id_col, vec_col, check_cells=p
+            assigned, _prune_to_cells(prior, cells, meta), eps, dim,
+            id_col, vec_col, check_cells=p,
         ).localCheckpoint(eager=True)
         fresh = assigned.join(hits, id_col, "left_anti").localCheckpoint(
             eager=True
         )
         n_fresh = fresh.count()
-        stats["rejected_history"] = n_usable - n_fresh
     else:
         fresh = assigned
         n_fresh = n_usable
-        stats["rejected_history"] = 0
+    stats["rejected_history"] = n_usable - n_fresh
     pairs = _within_pairs(fresh, eps, dim, id_col, vec_col, check_cells=p)
     accepted = dedup_by_clusters(fresh, pairs, id_col=id_col).localCheckpoint(
         eager=True
     )
     n_accepted = accepted.count()
+    stats["accepted"] = n_accepted
     stats["rejected_within_batch"] = n_fresh - n_accepted
-    return accepted.select(F.col(id_col), "cell", F.col(vec_col)), n_accepted
-
-
-def _write_clustered(accepted: DataFrame, out: str) -> None:
-    """Commit one immutable batch CLUSTERED by cell: sort each
-    partition by cell before writing, so every row GROUP spans few
-    cells and the cell-pruning filter the refresh path pushes into the
-    scan skips row groups via parquet min/max stats — most of
-    partition-by-cell's I/O win without a layout migration.
-    Deliberately sortWithinPartitions, NOT repartition("cell"): the
-    in-memory sort is nearly free, while a per-commit shuffle measured
-    +29% on the store's e2e probe for a concentration benefit that
-    row-group stats already capture (at scale each large file holds
-    many row groups, so within-file ordering is what the reader
-    skips on)."""
-    accepted.sortWithinPartitions("cell").write.mode("overwrite").parquet(
-        out
+    if prior is not None:
+        _drift(meta, stats)
+    return (
+        {"emb": accepted.select(F.col(id_col), "cell", F.col(vec_col))},
+        n_accepted,
     )
 
 
@@ -660,6 +639,57 @@ def _drift(meta: dict, stats: dict) -> None:
     base = meta.get("build_dist_mean")
     cur = stats.get("assign_dist_mean")
     stats["dist_drift"] = cur / base if base and cur is not None else None
+
+
+def _settle(tables: dict, prior, meta: dict, stats: dict, path: str):
+    """Occupancy AFTER this commit — the meta's incremental
+    ``cell_counts`` plus the rows just accepted (one cell-bounded agg,
+    NEVER a history re-scan) — disclosed in stats and pinned in meta;
+    the hot-cell valve refuses BEFORE the write, so a refused batch
+    leaves the store untouched. A store without history (build,
+    rebuild) also pins its assignment-distance profile as the drift
+    baseline; a store written before the counts existed upgrades with
+    a one-time history scan."""
+    if prior is None:
+        total: dict[int, int] = {}
+        meta["build_dist_mean"] = stats["assign_dist_mean"]
+        meta["build_dist_p99"] = stats["assign_dist_p99"]
+    elif meta.get("cell_counts") is not None:
+        total = {int(k): v for k, v in meta["cell_counts"].items()}
+    else:
+        total = _cell_counts(prior.select("cell"))
+    for c, k in _cell_counts(tables["emb"].select("cell")).items():
+        total[c] = total.get(c, 0) + k
+    _refuse_hot_cell(
+        _occupancy_stats(total, stats), meta.get("max_cell_rows"), path
+    )
+    meta["cell_counts"] = {str(k): v for k, v in total.items()}
+
+
+FAMILY = batch_store.Family(
+    hint="embedding_store_build",
+    noun="an embedding store",
+    kinds={"emb": "embeddings"},
+    validate=_validate,
+    accept=_accept,
+    known=(
+        "refresh batch contains ids already accepted into the store at "
+        "{path} — re-ingesting an id would re-litigate its dedup fate; "
+        "pass drop_known=True to skip known ids (the streaming/replay "
+        "mode)"
+    ),
+    empty={"accepted": 0},
+    settle=_settle,
+    # every batch is written CLUSTERED by cell: each partition sorted
+    # by cell, so every row GROUP spans few cells and the cell-pruning
+    # filter refresh and matches push into the scan skips row groups
+    # via parquet min/max stats — most of partition-by-cell's I/O win
+    # without a layout migration. Deliberately sortWithinPartitions,
+    # NOT repartition("cell"): a per-commit shuffle measured +29% on
+    # the store's e2e probe for a concentration benefit row-group
+    # stats already capture.
+    cluster_by="cell",
+)
 
 
 def embedding_store_build(
@@ -726,69 +756,36 @@ def embedding_store_build(
         raise ValueError("max_cell_rows must be >= 1 (or None)")
     if int(check_cells) < 1:
         raise ValueError("check_cells must be >= 1")
-    if os.path.exists(batch_store.meta_path(path)):
-        raise ValueError(
-            f"an embedding store already exists at {path} — append "
-            "batches with embedding_store_refresh, or choose a new path"
+    meta = {
+        "version": 1,
+        "eps": float(eps),
+        "n_cells": int(n_cells),
+        "dim": int(dim),
+        "id_col": id_col,
+        "vec_col": vec_col,
+        "seed": int(seed),
+        "max_cell_rows": (
+            int(max_cell_rows) if max_cell_rows is not None else None
+        ),
+        "check_cells": int(check_cells),
+    }
+
+    def pin(batch: DataFrame, n: int, meta: dict) -> None:
+        # after the ONE validation job, BEFORE paying for the KMeans
+        # fit — a bad build frame would otherwise die inside MLlib with
+        # an opaque error after the fit cost. n_rows = the validation
+        # job's exact count: the training sample is a pure function of
+        # (ids, n, cap), so reusing it skips ivf_build's presence probe
+        # and sample-count jobs
+        idx = ivf_build(
+            batch, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
+            seed=seed, train_cap=train_cap, n_rows=n,
         )
-    created = not os.path.exists(path)
-    os.makedirs(path, exist_ok=True)
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        # fail-sweep runs INSIDE the claim: sweeping after release
-        # could rmtree a lock-losing contender's in-flight staging
-        # (round-11 advice; see batch_store.sweep_uncommitted)
-        with batch_store.sweep_uncommitted(path, created):
-            if os.path.exists(batch_store.meta_path(path)):
-                raise ValueError(
-                    f"an embedding store already exists at {path} "
-                    "(created while waiting for the writer claim)"
-                )
-            # ONE validation job (NULL/duplicate ids + malformed
-            # vectors + row count), BEFORE paying for the KMeans fit —
-            # a bad build frame would otherwise die inside MLlib with
-            # an opaque error after the fit cost (round-10 advice)
-            n_in = _validate_batch(
-                df, dim, id_col, vec_col, "embedding build frame",
-                check_dups=validate_ids,
-            )
-            # n_rows = the validation job's exact count: the training
-            # sample is a pure function of (ids, n, cap), so reusing the
-            # count changes nothing and skips ivf_build's presence probe
-            # and sample-count jobs (guide #1.2: fewer passes)
-            idx = ivf_build(
-                df, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
-                seed=seed, train_cap=train_cap, n_rows=n_in,
-            )
-            meta = {
-                "version": 1,
-                "eps": float(eps),
-                "n_cells": int(n_cells),
-                "dim": int(dim),
-                "id_col": id_col,
-                "vec_col": vec_col,
-                "seed": int(seed),
-                "max_cell_rows": (
-                    int(max_cell_rows)
-                    if max_cell_rows is not None
-                    else None
-                ),
-                "check_cells": int(check_cells),
-                "centroids": idx.centroids,
-                "batches": [0],
-            }
-            stats: dict = {}
-            accepted, n = _accept(df, None, meta, stats, n_in)
-            counts = _cell_counts(accepted.select("cell"))
-            _refuse_hot_cell(
-                _occupancy_stats(counts, stats), max_cell_rows, path
-            )
-            out = batch_store.batch_dirs(path, "emb", [0])[0]
-            _write_clustered(accepted, out)
-            meta["build_dist_mean"] = stats["assign_dist_mean"]
-            meta["build_dist_p99"] = stats["assign_dist_p99"]
-            meta["cell_counts"] = {str(k): v for k, v in counts.items()}
-            batch_store.write_meta(path, meta, lock)
-    return {"batch": 0, "accepted": n, **stats}
+        meta["centroids"] = _finite_centroids(idx.centroids)
+
+    return batch_store.create(
+        spark, FAMILY, df, path, meta, validate_ids, pin=pin
+    )
 
 
 def embedding_store_refresh(
@@ -828,72 +825,10 @@ def embedding_store_refresh(
     if the store pinned ``max_cell_rows`` at build, a batch that would
     push a cell past it REFUSES before committing — the hot-cell
     valve)."""
-    meta = batch_store.read_meta(path, _HINT)  # fail fast pre-lock
-    id_col = meta["id_col"]
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        meta = batch_store.read_meta(path, _HINT)  # re-read under claim
-        id_col = meta["id_col"]
-        batches = list(meta["batches"])
-        # ONE validation job: NULL/duplicate ids, malformed vectors,
-        # and the emptiness probe all come out of the same aggregation
-        n_in = _validate_batch(
-            df, meta["dim"], id_col, meta["vec_col"],
-            "embedding refresh batch", check_dups=validate_ids,
-        )
-        if n_in == 0:
-            return {"batch": None, "accepted": 0}
-        prior = spark.read.parquet(
-            *batch_store.batch_dirs(path, "emb", batches)
-        )
-        if drop_known:
-            df = df.join(
-                prior.select(F.col(id_col)), id_col, "left_anti"
-            ).localCheckpoint(eager=True)
-            n_in = df.count()
-            if n_in == 0:
-                return {"batch": None, "accepted": 0}
-        else:
-            clash = (
-                df.select(F.col(id_col))
-                .join(prior.select(F.col(id_col)), id_col, "semi")
-                .limit(1)
-                .count()
-            )
-            if clash:
-                raise ValueError(
-                    "refresh batch contains ids already accepted into "
-                    f"the store at {path} — re-ingesting an id would "
-                    "re-litigate its dedup fate; pass drop_known=True "
-                    "to skip known ids (the streaming/replay mode)"
-                )
-        stats: dict = {}
-        accepted, n = _accept(df, prior, meta, stats, n_in)
-        _drift(meta, stats)
-        if n == 0:
-            return {"batch": None, "accepted": 0, **stats}
-        # occupancy AFTER this commit = meta's incremental counts + the
-        # rows just accepted (one cell-bounded agg — NEVER a history
-        # re-scan); the valve refuses BEFORE the write, so a refused
-        # batch leaves the store untouched. A store written before the
-        # counts existed upgrades with a one-time history scan.
-        stored = meta.get("cell_counts")
-        total = (
-            {int(k): v for k, v in stored.items()}
-            if stored is not None
-            else _cell_counts(prior.select("cell"))
-        )
-        for c, k in _cell_counts(accepted.select("cell")).items():
-            total[c] = total.get(c, 0) + k
-        _refuse_hot_cell(
-            _occupancy_stats(total, stats), meta.get("max_cell_rows"), path
-        )
-        batch = max(batches) + 1
-        out = batch_store.batch_dirs(path, "emb", [batch])[0]
-        _write_clustered(accepted, out)
-        meta["batches"] = batches + [batch]
-        meta["cell_counts"] = {str(k): v for k, v in total.items()}
-        batch_store.write_meta(path, meta, lock)
-    return {"batch": batch, "accepted": n, **stats}
+    return batch_store.append(
+        spark, FAMILY, df, path, drop_known=drop_known,
+        validate_ids=validate_ids,
+    )
 
 
 def embedding_store_load(spark: SparkSession, path: str) -> DataFrame:
@@ -901,10 +836,7 @@ def embedding_store_load(spark: SparkSession, path: str) -> DataFrame:
     built: the semantically-deduped corpus itself (plus each row's
     pinned cell), and the history every future batch is judged
     against. Reads only committed immutable directories."""
-    meta = batch_store.read_meta(path, _HINT)
-    return spark.read.parquet(
-        *batch_store.batch_dirs(path, "emb", meta["batches"])
-    )
+    return batch_store.load(spark, FAMILY, path)
 
 
 def embedding_store_matches(
@@ -927,7 +859,7 @@ def embedding_store_matches(
     filter could prune nothing); the match set is identical either
     way (rows outside every checked cell can never satisfy the cell
     equi-join). Plan shape pinned in tests/test_plans.py."""
-    meta = batch_store.read_meta(path, _HINT)
+    meta = batch_store.read_meta(path, FAMILY.hint)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     p = int(meta.get("check_cells", 1) or 1)
     base = df.select(F.col(id_col), F.col(vec_col))
@@ -945,15 +877,9 @@ def embedding_store_matches(
     else:
         crow = assigned.agg(F.collect_set("cell").alias("cells")).first()
         cells = sorted(int(c) for c in (crow["cells"] or []))
-    history = embedding_store_load(spark, path)
-    n_total = len(meta.get("centroids") or []) or 1
-    if not cells:
-        history = history.filter(F.lit(False))
-    elif len(cells) < n_total:
-        history = history.filter(F.col("cell").isin(cells))
     return _matches(
         assigned,
-        history,
+        _prune_to_cells(embedding_store_load(spark, path), cells, meta),
         meta["eps"],
         meta["dim"],
         id_col,
@@ -1007,17 +933,11 @@ def embedding_store_rebuild(
             raise ValueError("max_cell_rows must be >= 1 (or None)")
     if check_cells is not None and int(check_cells) < 1:
         raise ValueError("check_cells must be >= 1 (or None to keep)")
-    meta = batch_store.read_meta(path, _HINT)  # fail fast pre-lock
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        meta = batch_store.read_meta(path, _HINT)
-        batches = list(meta["batches"])
+
+    def replay(history: DataFrame, meta: dict):
         id_col, vec_col = meta["id_col"], meta["vec_col"]
-        history = (
-            spark.read.parquet(
-                *batch_store.batch_dirs(path, "emb", batches)
-            )
-            .select(F.col(id_col), F.col(vec_col))
-            .localCheckpoint(eager=True)
+        history = history.select(F.col(id_col), F.col(vec_col)).localCheckpoint(
+            eager=True
         )
         new_cells = int(n_cells if n_cells is not None else meta["n_cells"])
         new_seed = int(seed if seed is not None else meta["seed"])
@@ -1029,7 +949,7 @@ def embedding_store_rebuild(
         new_meta.update(
             n_cells=new_cells,
             seed=new_seed,
-            centroids=idx.centroids,
+            centroids=_finite_centroids(idx.centroids),
             check_cells=int(
                 check_cells
                 if check_cells is not None
@@ -1040,31 +960,13 @@ def embedding_store_rebuild(
             new_meta["max_cell_rows"] = (
                 int(max_cell_rows) if max_cell_rows is not None else None
             )
-        stats: dict = {}
-        accepted, n = _accept(
-            history, None, new_meta, stats, history.count()
-        )
-        counts = _cell_counts(accepted.select("cell"))
-        _refuse_hot_cell(
-            _occupancy_stats(counts, stats),
-            new_meta.get("max_cell_rows"),
-            path,
-        )
-        batch = max(batches) + 1
-        out = batch_store.batch_dirs(path, "emb", [batch])[0]
-        _write_clustered(accepted, out)
-        new_meta["build_dist_mean"] = stats["assign_dist_mean"]
-        new_meta["build_dist_p99"] = stats["assign_dist_p99"]
-        new_meta["cell_counts"] = {str(k): v for k, v in counts.items()}
-        new_meta["batches"] = [batch]
-        batch_store.write_meta(path, new_meta, lock)
-    return {
-        "batch": batch,
-        "accepted": n,
-        "history_rows": n + stats["rejected_within_batch"]
-        + stats["zero_norm"],
-        **stats,
-    }
+        return history, history.count(), new_meta
+
+    st = batch_store.rewrite(spark, FAMILY, path, replay)
+    st["history_rows"] = (
+        st["accepted"] + st["rejected_within_batch"] + st["zero_norm"]
+    )
+    return st
 
 
 def _audit_truth(
@@ -1080,7 +982,7 @@ def _audit_truth(
     history, truth)``."""
     if sample_rows < 1:
         raise ValueError("sample_rows must be >= 1")
-    meta = batch_store.read_meta(path, _HINT)
+    meta = batch_store.read_meta(path, FAMILY.hint)
     dim, id_col, vec_col = meta["dim"], meta["id_col"], meta["vec_col"]
     base = df.select(F.col(id_col), F.col(vec_col))
     _refuse_malformed(base, dim, vec_col, "audit batch")
@@ -1257,20 +1159,7 @@ def embedding_store_recall_sweep(
         na = _flat(
             assigned, id_col, vec_col, dim, "_a", extra=("cell",)
         ).withColumn("_rank0", F.lit(0))
-    sb = (
-        _flat(
-            history.select(
-                F.col(id_col).alias("_sid"), "cell", F.col(vec_col)
-            ),
-            "_sid",
-            vec_col,
-            dim,
-            "_b",
-            extra=("cell",),
-        )
-        .withColumnRenamed("cell", "cell_b")
-        .withColumnRenamed("nrm", "nrm_b")
-    )
+    sb = _flat_stored(history, dim, id_col, vec_col)
     dotc = _flat_dot("_a", "_b", dim)
     ranks = (
         na.join(
@@ -1306,11 +1195,7 @@ def embedding_store_recall_sweep(
 def embedding_store_compact(spark: SparkSession, path: str) -> dict:
     """Fold all committed batch directories into one slot →
     ``{"batches_before": k, "embeddings": n}`` (shared protocol)."""
-    st = batch_store.compact(spark, path, _KINDS, _HINT, cluster_by="cell")
-    return {
-        "batches_before": st["batches_before"],
-        "embeddings": st["rows"]["emb"],
-    }
+    return batch_store.compact(spark, FAMILY, path)
 
 
 def embedding_store_vacuum(
@@ -1318,6 +1203,4 @@ def embedding_store_vacuum(
 ) -> dict:
     """Sweep unreferenced batch directories after the grace window →
     ``{"removed": n, "kept": m}`` (shared protocol)."""
-    return batch_store.vacuum(
-        path, _KINDS, _HINT, grace_seconds=grace_seconds
-    )
+    return batch_store.vacuum(FAMILY, path, grace_seconds)

@@ -12,8 +12,9 @@ a half-written history). This store gives the fingerprint history the
 same managed lifecycle the near-dup pair graph got in round 9: built
 once, appended per batch under the writer lock, immutable batch
 directories with an atomic meta commit (the shared
-``sources/batch_store.py`` protocol — one implementation, two stores),
-replay-safe via in-lock known-id drops.
+``sources/batch_store.py`` lifecycle — this module supplies only the
+family's hooks, :data:`FAMILY`), replay-safe via in-lock known-id
+drops.
 
 DEDUP SEMANTICS — greedy keep-first by ARRIVAL, the engine's
 incremental contract (q64 exact / q68 minhash / q93 simhash):
@@ -54,8 +55,6 @@ reader never sees a swap window.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,55 +64,29 @@ from big_data_hadoop_spark.operators.dedup import (
     simhash_matches_against,
 )
 from big_data_hadoop_spark.sources import batch_store
-from big_data_hadoop_spark.sources.io import _VERB_LOCK_OPTS, table_write_lock
-
-_HINT = "fingerprint_store_build"
-_KINDS = ("fp",)
 
 
-def _validate_batch(
-    fps: DataFrame, id_col: str, check_dups: bool = True
-) -> int:
+def _validate(fps: DataFrame, meta: dict, check_dups: bool):
     """NULL-id refusal, duplicate-id refusal, and the emptiness probe
-    in ONE aggregation job (round-11 verb diet — these were three
-    separate scans of a possibly decode-backed frame). Returns the
-    batch row count. ``check_dups=False`` is the ``validate_ids=False``
-    contract (uniqueness guaranteed upstream); NULL ids always refuse
-    — their dedup outcome would be silent."""
-    row = fps.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.col(id_col)).alias("n_ids"),
-        F.count_distinct(F.col(id_col)).alias("n_distinct"),
-    ).first()
-    if row["n_ids"] < row["n"]:
-        raise ValueError(
-            "NULL ids in the fingerprint batch — a NULL id neither "
-            "equi-joins nor orders, so its dedup outcome would be "
-            "silent; assign real ids first"
-        )
-    if check_dups and row["n_distinct"] < row["n_ids"]:
-        raise ValueError(
-            f"duplicate {id_col} values within the batch — the greedy "
-            "keep-first outcome for an id seen twice is undefined; "
-            "dropDuplicates the batch first, or pass "
-            "validate_ids=False if uniqueness is guaranteed upstream"
-        )
-    return row["n"]
+    in ONE aggregation job → ``(fps, row count)``."""
+    id_col = meta["id_col"]
+    row = batch_store.refuse_bad_ids(
+        fps, id_col, "ids in the fingerprint batch",
+        f"duplicate {id_col} values within the batch — the greedy "
+        "keep-first outcome for an id seen twice is undefined",
+        check_dups,
+    )
+    return fps, row["n"]
 
 
-def _accept(
-    fps: DataFrame,
-    prior: DataFrame | None,
-    max_hamming: int,
-    id_col: str,
-    fp_col: str,
-    stats: dict,
-) -> tuple[DataFrame, int]:
+def _accept(fps: DataFrame, n: int, prior, meta: dict, stats: dict):
     """The dedup fold: drop NULL fps (counted), reject history matches
-    (counted), within-batch cluster dedup (counted) → (accepted
-    ``(id_col, fp_col)`` rows, eagerly checkpointed; their count —
-    already paid for by the stats bookkeeping, so callers never
-    re-count the write)."""
+    (counted), within-batch cluster dedup (counted) → the accepted
+    ``(id_col, fp_col)`` rows, eagerly checkpointed, and their count
+    (already paid for by the stats bookkeeping)."""
+    max_hamming, id_col, fp_col = (
+        meta["max_hamming"], meta["id_col"], meta["fp_col"]
+    )
     # ONE execution of the caller's (possibly decode-backed) upstream:
     # every downstream frame — the null filter, the history match, the
     # anti-join, the within-batch pairs — reads this narrow checkpoint
@@ -138,11 +111,10 @@ def _accept(
             eager=True
         )
         n_fresh = fresh.count()
-        stats["rejected_history"] = n_usable - n_fresh
     else:
         fresh = usable
         n_fresh = n_usable
-        stats["rejected_history"] = 0
+    stats["rejected_history"] = n_usable - n_fresh
     # Exact-fp duplicates collapse to their min-id representative
     # BEFORE the pair join: same-value rows are all pairwise Hamming 0,
     # so a value's component equals its representative's component in
@@ -159,11 +131,28 @@ def _accept(
         eager=True
     )
     n_accepted = accepted.count()
+    stats["accepted"] = n_accepted
     stats["rejected_within_batch"] = n_fresh - n_accepted
     return (
-        accepted.select(F.col(id_col), F.col("simhash").alias(fp_col)),
+        {"fp": accepted.select(F.col(id_col), F.col("simhash").alias(fp_col))},
         n_accepted,
     )
+
+
+FAMILY = batch_store.Family(
+    hint="fingerprint_store_build",
+    noun="a fingerprint store",
+    kinds={"fp": "fingerprints"},
+    validate=_validate,
+    accept=_accept,
+    known=(
+        "refresh batch contains ids already accepted into the store at "
+        "{path} — re-ingesting an id would re-litigate its dedup fate; "
+        "pass drop_known=True to skip known ids (the streaming/replay "
+        "mode)"
+    ),
+    empty={"accepted": 0},
+)
 
 
 def fingerprint_store_build(
@@ -197,40 +186,15 @@ def fingerprint_store_build(
     itself never reads it."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("max_hamming must be in 0..3 (4x16-bit banding)")
-    if os.path.exists(batch_store.meta_path(path)):
-        # instant filesystem refusal BEFORE any Spark scan
-        raise ValueError(
-            f"a fingerprint store already exists at {path} — append "
-            "batches with fingerprint_store_refresh, or choose a new path"
-        )
-    created = not os.path.exists(path)
-    os.makedirs(path, exist_ok=True)
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        # fail-sweep runs INSIDE the claim: sweeping after release
-        # could rmtree a lock-losing contender's in-flight staging
-        # (round-11 advice; see batch_store.sweep_uncommitted)
-        with batch_store.sweep_uncommitted(path, created):
-            if os.path.exists(batch_store.meta_path(path)):
-                raise ValueError(
-                    f"a fingerprint store already exists at {path} "
-                    "(created while waiting for the writer claim)"
-                )
-            _validate_batch(fps, id_col, check_dups=validate_ids)
-            stats: dict = {}
-            accepted, n = _accept(fps, None, max_hamming, id_col, fp_col, stats)
-            out = batch_store.batch_dirs(path, "fp", [0])[0]
-            accepted.write.mode("overwrite").parquet(out)
-            meta = {
-                "version": 1,
-                "max_hamming": int(max_hamming),
-                "id_col": id_col,
-                "fp_col": fp_col,
-                "family": family,
-                "extras": dict(extras or {}),
-                "batches": [0],
-            }
-            batch_store.write_meta(path, meta, lock)
-    return {"batch": 0, "accepted": n, **stats}
+    meta = {
+        "version": 1,
+        "max_hamming": int(max_hamming),
+        "id_col": id_col,
+        "fp_col": fp_col,
+        "family": family,
+        "extras": dict(extras or {}),
+    }
+    return batch_store.create(spark, FAMILY, fps, path, meta, validate_ids)
 
 
 def fingerprint_store_refresh(
@@ -249,59 +213,15 @@ def fingerprint_store_refresh(
     Batch ids must be NEW: a re-ingested id refuses loudly by default
     (its first ingest already decided its dedup fate);
     ``drop_known=True`` instead drops already-stored ids INSIDE the
-    writer claim — the replay-safe mode the streaming sink runs on
-    (checking outside the lock is the TOCTOU the graph store's round-9
-    review documented). Note ``drop_known`` sees only ACCEPTED ids:
-    a row rejected as a near-dup in an earlier batch is judged again
-    on replay and rejected again by the same history — idempotent
-    either way. An empty batch commits nothing, ``batch: None``."""
-    meta = batch_store.read_meta(path, _HINT)  # fail fast pre-lock
-    id_col = meta["id_col"]
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        meta = batch_store.read_meta(path, _HINT)  # re-read under claim
-        max_hamming, id_col, fp_col = (
-            meta["max_hamming"], meta["id_col"], meta["fp_col"]
-        )
-        batches = list(meta["batches"])
-        # ONE validation job: NULL/duplicate ids + the emptiness probe
-        if _validate_batch(fps, id_col, check_dups=validate_ids) == 0:
-            return {"batch": None, "accepted": 0}
-        prior = spark.read.parquet(
-            *batch_store.batch_dirs(path, "fp", batches)
-        )
-        if drop_known:
-            fps = fps.join(
-                prior.select(F.col(id_col)), id_col, "left_anti"
-            ).localCheckpoint(eager=True)
-            if fps.isEmpty():
-                return {"batch": None, "accepted": 0}
-        else:
-            clash = (
-                fps.select(F.col(id_col))
-                .join(prior.select(F.col(id_col)), id_col, "semi")
-                .limit(1)
-                .count()
-            )
-            if clash:
-                raise ValueError(
-                    "refresh batch contains ids already accepted into "
-                    f"the store at {path} — re-ingesting an id would "
-                    "re-litigate its dedup fate; pass drop_known=True "
-                    "to skip known ids (the streaming/replay mode)"
-                )
-        stats: dict = {}
-        accepted, n = _accept(fps, prior, max_hamming, id_col, fp_col, stats)
-        if n == 0:
-            # nothing survived (all near-dups / NULL fps): commit no
-            # slot — a no-new-content stream would otherwise append
-            # one empty directory per trigger, pure small-files churn
-            return {"batch": None, "accepted": 0, **stats}
-        batch = max(batches) + 1
-        out = batch_store.batch_dirs(path, "fp", [batch])[0]
-        accepted.write.mode("overwrite").parquet(out)
-        meta["batches"] = batches + [batch]
-        batch_store.write_meta(path, meta, lock)
-    return {"batch": batch, "accepted": n, **stats}
+    writer claim — the replay-safe mode the streaming sink runs on.
+    Note ``drop_known`` sees only ACCEPTED ids: a row rejected as a
+    near-dup in an earlier batch is judged again on replay and
+    rejected again by the same history — idempotent either way. An
+    empty batch commits nothing, ``batch: None``."""
+    return batch_store.append(
+        spark, FAMILY, fps, path, drop_known=drop_known,
+        validate_ids=validate_ids,
+    )
 
 
 def fingerprint_store_load(spark: SparkSession, path: str) -> DataFrame:
@@ -311,23 +231,20 @@ def fingerprint_store_load(spark: SparkSession, path: str) -> DataFrame:
     ``fp_col`` to what the consumer expects), and the survivor-id set
     of the whole ingest history. Reads only committed immutable
     directories — no swap window, no retry."""
-    meta = batch_store.read_meta(path, _HINT)
-    return spark.read.parquet(
-        *batch_store.batch_dirs(path, "fp", meta["batches"])
-    )
+    return batch_store.load(spark, FAMILY, path)
 
 
 def fingerprint_store_matches(
     spark: SparkSession, fps: DataFrame, path: str
 ) -> DataFrame:
-    """Read-only novelty check (round 10 — the store-family `matches`
-    verb): ids of ``fps`` (``(id_col, fp_col)`` per the store's meta)
-    that WOULD be rejected against the store right now — within the
-    pinned Hamming radius of ANY accepted fingerprint. No writer
-    claim, no mutation; the decontamination / pre-ingest filter read
-    path. NULL fingerprints never match (an un-fingerprintable blob
-    can't collide)."""
-    meta = batch_store.read_meta(path, _HINT)
+    """Read-only novelty check (the store-family `matches` verb): ids
+    of ``fps`` (``(id_col, fp_col)`` per the store's meta) that WOULD
+    be rejected against the store right now — within the pinned
+    Hamming radius of ANY accepted fingerprint. No writer claim, no
+    mutation; the decontamination / pre-ingest filter read path. NULL
+    fingerprints never match (an un-fingerprintable blob can't
+    collide)."""
+    meta = batch_store.read_meta(path, FAMILY.hint)
     id_col, fp_col = meta["id_col"], meta["fp_col"]
     stored = fingerprint_store_load(spark, path).select(
         F.col(fp_col).alias("simhash")
@@ -347,11 +264,7 @@ def fingerprint_store_compact(spark: SparkSession, path: str) -> dict:
     ``{"batches_before": k, "fingerprints": n}`` (the shared
     ``batch_store`` protocol; crash leaves the previous generation
     readable, orphans go to :func:`fingerprint_store_vacuum`)."""
-    st = batch_store.compact(spark, path, _KINDS, _HINT)
-    return {
-        "batches_before": st["batches_before"],
-        "fingerprints": st["rows"]["fp"],
-    }
+    return batch_store.compact(spark, FAMILY, path)
 
 
 def fingerprint_store_vacuum(
@@ -359,6 +272,4 @@ def fingerprint_store_vacuum(
 ) -> dict:
     """Sweep unreferenced batch directories after the grace window →
     ``{"removed": n, "kept": m}`` (shared protocol)."""
-    return batch_store.vacuum(
-        path, _KINDS, _HINT, grace_seconds=grace_seconds
-    )
+    return batch_store.vacuum(FAMILY, path, grace_seconds)

@@ -13,9 +13,10 @@ means >= ``min_matching_frames`` frame pairs within the Hamming radius
 against ONE stored clip. Without a managed store, every caller
 re-invents an append-a-parquet frame-hash history with none of the
 engine's crash/replay discipline. This store gives that history the
-shared immutable-batch lifecycle (``sources/batch_store.py`` — one
-protocol, three stores): built once, appended per batch under the
-writer lock, atomic meta commit, replay-safe known-id drops.
+shared immutable-batch lifecycle (``sources/batch_store.py`` — this
+module supplies only the family's hooks, :data:`FAMILY`): built once,
+appended per batch under the writer lock, atomic meta commit,
+replay-safe known-id drops.
 
 DEDUP SEMANTICS — greedy keep-first by ARRIVAL at clip granularity
 (the fingerprint store's contract, one tier up):
@@ -55,8 +56,6 @@ nothing, readers never see a swap window.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,71 +65,43 @@ from big_data_hadoop_spark.operators.videohash import (
     video_neardup_pairs,
 )
 from big_data_hadoop_spark.sources import batch_store
-from big_data_hadoop_spark.sources.io import _VERB_LOCK_OPTS, table_write_lock
-
-_HINT = "framehash_store_build"
-_KINDS = ("fh",)
-_PARAM_KEYS = ("max_hamming", "min_matching_frames", "drop_constant", "id_col")
 
 
-def _validate_batch(
-    fh: DataFrame, id_col: str, check_dups: bool = True
-) -> int:
+def _validate(fh: DataFrame, meta: dict, check_dups: bool):
     """NULL-clip-id refusal, duplicate-(clip, frame_no) refusal, and
-    the emptiness probe in ONE aggregation job (round-11 verb diet —
-    these were three separate scans of a possibly decode-backed
-    frame). Returns the batch ROW count (frame rows, not clips).
-    ``check_dups=False`` is the ``validate_ids=False`` contract; NULL
-    ids always refuse. Two hash rows for one (clip, frame_no) would
-    store a chimera clip whose identity matches neither source."""
+    the emptiness probe in ONE aggregation job → ``(fh, ROW count)``
+    (frame rows, not clips). Two hash rows for one (clip, frame_no)
+    would store a chimera clip whose identity matches neither
+    source."""
+    id_col = meta["id_col"]
     # distinct over a STRUCT, not count_distinct(id, frame_no): the
     # multi-argument form drops rows where ANY argument is NULL, so a
     # legitimate NULL frame_no would be spuriously refused as a
-    # duplicate (round-11 self-review). The when() keeps NULL-id rows
-    # out of the distinct count (they get the NULL refusal instead),
-    # matching the old groupBy semantics exactly — including treating
-    # (id, NULL) pairs seen twice as duplicates.
-    row = fh.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.col(id_col)).alias("n_ids"),
-        F.count_distinct(
-            F.when(
-                F.col(id_col).isNotNull(),
-                F.struct(F.col(id_col), F.col("frame_no")),
-            )
-        ).alias("n_distinct"),
-    ).first()
-    if row["n_ids"] < row["n"]:
-        raise ValueError(
-            "NULL clip ids in the frame-hash batch — a NULL id neither "
-            "equi-joins nor orders, so its dedup outcome would be "
-            "silent; assign real ids first"
-        )
-    if check_dups and row["n_distinct"] < row["n_ids"]:
-        raise ValueError(
-            f"duplicate ({id_col}, frame_no) rows within the batch — "
-            "two hashes for one sampled frame make a chimera clip; "
-            "dropDuplicates the batch first, or pass "
-            "validate_ids=False if uniqueness is guaranteed upstream"
-        )
-    return row["n"]
+    # duplicate — while (id, NULL) pairs seen twice still are
+    row = batch_store.refuse_bad_ids(
+        fh, id_col, "clip ids in the frame-hash batch",
+        f"duplicate ({id_col}, frame_no) rows within the batch — two "
+        "hashes for one sampled frame make a chimera clip",
+        check_dups, key=F.struct(F.col(id_col), F.col("frame_no")),
+    )
+    return fh, row["n"]
 
 
-def _accept(
-    fh: DataFrame,
-    prior: DataFrame | None,
-    max_hamming: int,
-    min_frames: int,
-    drop_constant: bool,
-    max_frame_df: int | None,
-    id_col: str,
-    stats: dict,
-) -> tuple[DataFrame, int]:
+def _accept(fh: DataFrame, n: int, prior, meta: dict, stats: dict):
     """The clip-granularity dedup fold: reject history matches
-    (counted), within-batch cluster dedup (counted) → (the accepted
-    clips' FULL frame rows, eagerly checkpointed; the accepted CLIP
-    count — already paid for by the stats bookkeeping, so callers
-    never re-count the write)."""
+    (counted), within-batch cluster dedup (counted) → the accepted
+    clips' FULL frame rows, eagerly checkpointed, and the accepted
+    CLIP count (already paid for by the stats bookkeeping)."""
+    id_col = meta["id_col"]
+    # pre-round-10 stores have no max_frame_df key: None (the pure
+    # contract), exactly what they were built under
+    rule = dict(
+        max_hamming=meta["max_hamming"],
+        min_matching_frames=meta["min_matching_frames"],
+        id_col=id_col,
+        drop_constant=meta["drop_constant"],
+        max_frame_df=meta.get("max_frame_df"),
+    )
     # ONE execution of the caller's (possibly decode-backed) upstream
     norm = fh.select(
         F.col(id_col),
@@ -140,40 +111,43 @@ def _accept(
     n_in = norm.select(id_col).distinct().count()
     stats["clips_in"] = n_in
     if prior is not None:
-        hits = video_matches_against(
-            norm,
-            prior,
-            max_hamming=max_hamming,
-            min_matching_frames=min_frames,
-            id_col=id_col,
-            drop_constant=drop_constant,
-            max_frame_df=max_frame_df,
-        ).localCheckpoint(eager=True)
+        hits = video_matches_against(norm, prior, **rule).localCheckpoint(
+            eager=True
+        )
         fresh = norm.join(hits, id_col, "left_anti").localCheckpoint(
             eager=True
         )
         n_fresh = fresh.select(id_col).distinct().count()
-        stats["rejected_history"] = n_in - n_fresh
     else:
         fresh = norm
         n_fresh = n_in
-        stats["rejected_history"] = 0
-    pairs = video_neardup_pairs(
-        fresh,
-        max_hamming=max_hamming,
-        min_matching_frames=min_frames,
-        id_col=id_col,
-        drop_constant=drop_constant,
-        max_frame_df=max_frame_df,
-    ).select("id_a", "id_b")
+    stats["rejected_history"] = n_in - n_fresh
+    pairs = video_neardup_pairs(fresh, **rule).select("id_a", "id_b")
     clips = fresh.select(id_col).distinct()
     keep = dedup_by_clusters(clips, pairs, id_col=id_col)
     accepted = fresh.join(
         keep.select(id_col), id_col, "semi"
     ).localCheckpoint(eager=True)
     n_clips = accepted.select(id_col).distinct().count()
+    stats["accepted"] = n_clips
     stats["rejected_within_batch"] = n_fresh - n_clips
-    return accepted, n_clips
+    return {"fh": accepted}, n_clips
+
+
+FAMILY = batch_store.Family(
+    hint="framehash_store_build",
+    noun="a frame-hash store",
+    kinds={"fh": "frame_rows"},
+    validate=_validate,
+    accept=_accept,
+    known=(
+        "refresh batch contains clip ids already accepted into the "
+        "store at {path} — re-ingesting a clip would re-litigate its "
+        "dedup fate; pass drop_known=True to skip known ids (the "
+        "streaming/replay mode)"
+    ),
+    empty={"accepted": 0},
+)
 
 
 def framehash_store_build(
@@ -209,47 +183,19 @@ def framehash_store_build(
         raise ValueError("min_matching_frames must be >= 1")
     if max_frame_df is not None and max_frame_df < 1:
         raise ValueError("max_frame_df must be >= 1 (or None)")
-    if os.path.exists(batch_store.meta_path(path)):
-        # instant filesystem refusal BEFORE any Spark scan
-        raise ValueError(
-            f"a frame-hash store already exists at {path} — append "
-            "batches with framehash_store_refresh, or choose a new path"
-        )
-    created = not os.path.exists(path)
-    os.makedirs(path, exist_ok=True)
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        # fail-sweep runs INSIDE the claim: sweeping after release
-        # could rmtree a lock-losing contender's in-flight staging
-        # (round-11 advice; see batch_store.sweep_uncommitted)
-        with batch_store.sweep_uncommitted(path, created):
-            if os.path.exists(batch_store.meta_path(path)):
-                raise ValueError(
-                    f"a frame-hash store already exists at {path} "
-                    "(created while waiting for the writer claim)"
-                )
-            _validate_batch(fh, id_col, check_dups=validate_ids)
-            stats: dict = {}
-            accepted, n = _accept(
-                fh, None, max_hamming, min_matching_frames, drop_constant,
-                max_frame_df, id_col, stats,
-            )
-            out = batch_store.batch_dirs(path, "fh", [0])[0]
-            accepted.write.mode("overwrite").parquet(out)
-            meta = {
-                "version": 1,
-                "max_hamming": int(max_hamming),
-                "min_matching_frames": int(min_matching_frames),
-                "drop_constant": bool(drop_constant),
-                "max_frame_df": (
-                    int(max_frame_df) if max_frame_df is not None else None
-                ),
-                "id_col": id_col,
-                "family": family,
-                "extras": dict(extras or {}),
-                "batches": [0],
-            }
-            batch_store.write_meta(path, meta, lock)
-    return {"batch": 0, "accepted": n, **stats}
+    meta = {
+        "version": 1,
+        "max_hamming": int(max_hamming),
+        "min_matching_frames": int(min_matching_frames),
+        "drop_constant": bool(drop_constant),
+        "max_frame_df": (
+            int(max_frame_df) if max_frame_df is not None else None
+        ),
+        "id_col": id_col,
+        "family": family,
+        "extras": dict(extras or {}),
+    }
+    return batch_store.create(spark, FAMILY, fh, path, meta, validate_ids)
 
 
 def framehash_store_refresh(
@@ -268,74 +214,21 @@ def framehash_store_refresh(
 
     Clip ids must be NEW: a re-ingested id refuses loudly by default;
     ``drop_known=True`` instead drops already-ACCEPTED clip ids INSIDE
-    the writer claim — the replay-safe streaming mode (out-of-lock
-    pre-checks are the TOCTOU the graph store's round-9 review
-    documented; a clip REJECTED earlier is simply judged again by the
-    same history and rejected again — idempotent either way). An empty
-    or fully-rejected batch commits no slot (``batch: None`` — the
-    fingerprint store's no-empty-slot rule).
+    the writer claim — the replay-safe streaming mode (a clip REJECTED
+    earlier is simply judged again by the same history and rejected
+    again — idempotent either way). An empty or fully-rejected batch
+    commits no slot (``batch: None``).
 
     Input frames backed by EXPENSIVE upstreams (media decode, model
     scoring) should be eagerly localCheckpointed by the caller: the
-    validation probes (isEmpty / known-id check) and the accept fold
-    each reference the frame before its internal checkpoint, so an
+    validation probe, the known-id check and the accept fold each
+    reference the frame before its internal checkpoint, so an
     un-materialized decode lineage executes more than once (the CLI
-    tier builders do this; round-9/10 convention)."""
-    meta = batch_store.read_meta(path, _HINT)  # fail fast pre-lock
-    id_col = meta["id_col"]
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        meta = batch_store.read_meta(path, _HINT)  # re-read under claim
-        max_hamming, min_frames, drop_constant, id_col = (
-            meta[k] for k in _PARAM_KEYS
-        )
-        # pre-round-10 stores have no max_frame_df key: None (pure
-        # contract), exactly what they were built under
-        max_frame_df = meta.get("max_frame_df")
-        batches = list(meta["batches"])
-        # ONE validation job: NULL/duplicate checks + emptiness probe
-        if _validate_batch(fh, id_col, check_dups=validate_ids) == 0:
-            return {"batch": None, "accepted": 0}
-        prior = spark.read.parquet(
-            *batch_store.batch_dirs(path, "fh", batches)
-        )
-        if drop_known:
-            fh = fh.join(
-                prior.select(F.col(id_col)).distinct(),
-                id_col,
-                "left_anti",
-            ).localCheckpoint(eager=True)
-            if fh.isEmpty():
-                return {"batch": None, "accepted": 0}
-        else:
-            clash = (
-                fh.select(F.col(id_col))
-                .join(
-                    prior.select(F.col(id_col)).distinct(), id_col, "semi"
-                )
-                .limit(1)
-                .count()
-            )
-            if clash:
-                raise ValueError(
-                    "refresh batch contains clip ids already accepted "
-                    f"into the store at {path} — re-ingesting a clip "
-                    "would re-litigate its dedup fate; pass "
-                    "drop_known=True to skip known ids (the "
-                    "streaming/replay mode)"
-                )
-        stats: dict = {}
-        accepted, n = _accept(
-            fh, prior, max_hamming, min_frames, drop_constant,
-            max_frame_df, id_col, stats,
-        )
-        if n == 0:
-            return {"batch": None, "accepted": 0, **stats}
-        batch = max(batches) + 1
-        out = batch_store.batch_dirs(path, "fh", [batch])[0]
-        accepted.write.mode("overwrite").parquet(out)
-        meta["batches"] = batches + [batch]
-        batch_store.write_meta(path, meta, lock)
-    return {"batch": batch, "accepted": n, **stats}
+    tier builders do this)."""
+    return batch_store.append(
+        spark, FAMILY, fh, path, drop_known=drop_known,
+        validate_ids=validate_ids,
+    )
 
 
 def framehash_store_load(spark: SparkSession, path: str) -> DataFrame:
@@ -344,10 +237,7 @@ def framehash_store_load(spark: SparkSession, path: str) -> DataFrame:
     ``video_matches_against`` and the surviving-clip identity set of
     the whole ingest history. Reads only committed immutable
     directories — no swap window, no retry."""
-    meta = batch_store.read_meta(path, _HINT)
-    return spark.read.parquet(
-        *batch_store.batch_dirs(path, "fh", meta["batches"])
-    )
+    return batch_store.load(spark, FAMILY, path)
 
 
 def framehash_store_matches(
@@ -358,7 +248,7 @@ def framehash_store_matches(
     rejected against the stored history right now, under the store's
     pinned (radius, min matching frames, blank-frame, boilerplate-
     valve) parameters. No writer claim, no mutation."""
-    meta = batch_store.read_meta(path, _HINT)
+    meta = batch_store.read_meta(path, FAMILY.hint)
     return video_matches_against(
         fh,
         framehash_store_load(spark, path),
@@ -375,11 +265,7 @@ def framehash_store_compact(spark: SparkSession, path: str) -> dict:
     ``{"batches_before": k, "frame_rows": n}`` (shared protocol;
     crash leaves the previous generation readable, orphans go to
     :func:`framehash_store_vacuum`)."""
-    st = batch_store.compact(spark, path, _KINDS, _HINT)
-    return {
-        "batches_before": st["batches_before"],
-        "frame_rows": st["rows"]["fh"],
-    }
+    return batch_store.compact(spark, FAMILY, path)
 
 
 def framehash_store_vacuum(
@@ -387,6 +273,4 @@ def framehash_store_vacuum(
 ) -> dict:
     """Sweep unreferenced batch directories after the grace window →
     ``{"removed": n, "kept": m}`` (shared protocol)."""
-    return batch_store.vacuum(
-        path, _KINDS, _HINT, grace_seconds=grace_seconds
-    )
+    return batch_store.vacuum(FAMILY, path, grace_seconds)

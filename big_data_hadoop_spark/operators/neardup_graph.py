@@ -33,18 +33,10 @@ STORE LAYOUT under ``path/``::
     sig/b00000/ ...      (id, sig array<bigint>) parquet per batch
     edge/b00000/ ...     (id_a, id_b, jac_est) parquet per batch
 
-Batch directories are IMMUTABLE once committed; ``meta.json`` is the
-single commit point, replaced atomically (write-tmp + ``os.replace``).
-A reader therefore never sees a swap window at all — it lists committed
-batches from the meta generation it read and touches only immutable
-directories (no retry loop needed, unlike the stage-and-swap tables
-``read_table`` serves). A refresh killed mid-write leaves an orphaned
-UNCOMMITTED directory that the retry simply overwrites (batch numbers
-come from the committed list, so the retry reuses the same slot);
-nothing referenced by any committed meta generation is ever rewritten.
-Writers (build / refresh) serialize under :func:`table_write_lock` —
-two concurrent refreshes would otherwise both claim the same batch slot
-and the loser's edges would silently vanish from the manifest.
+The lifecycle — immutable batch directories, the atomic ``meta.json``
+commit, serialized writers, compaction and vacuum — is the shared
+store protocol in ``sources/batch_store.py``; this module supplies the
+family's hooks (:data:`FAMILY`).
 
 100 TB shape per refresh: the raw batch's TEXT is read ONCE (the
 signature aggregation; the default ``validate_ids`` duplicate check
@@ -60,8 +52,6 @@ anything a reader holds open.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,29 +63,6 @@ from big_data_hadoop_spark.operators.dedup import (
     minhash_signatures,
 )
 from big_data_hadoop_spark.sources import batch_store
-from big_data_hadoop_spark.sources.io import _VERB_LOCK_OPTS, table_write_lock
-
-_PARAM_KEYS = ("n", "num_perm", "bands", "threshold", "id_col", "text_col")
-_HINT = "neardup_graph_build"
-
-
-def _meta_path(path: str) -> str:
-    return batch_store.meta_path(path)
-
-
-def _read_meta(path: str) -> dict:
-    # storage protocol shared with the fingerprint store (round-9
-    # continuation: factored to sources/batch_store.py so the two
-    # stores cannot diverge — the _sig_est sharing precedent)
-    return batch_store.read_meta(path, _HINT)
-
-
-def _write_meta(path: str, meta: dict, lock) -> None:
-    batch_store.write_meta(path, meta, lock)
-
-
-def _batch_dirs(path: str, kind: str, batches) -> list[str]:
-    return batch_store.batch_dirs(path, kind, batches)
 
 
 def _self_est_pairs(
@@ -123,28 +90,13 @@ def _self_est_pairs(
     )
 
 
-def _refuse_null_ids(sigs: DataFrame, id_col: str) -> None:
-    """NULL doc ids refuse loudly (the engine's NULL contract): a NULL
-    id never equi-joins, so its edges would silently vanish from every
-    downstream graph while ``minhash_signatures`` collapses ALL
-    NULL-id docs into one phantom signature row. Cheap — one limit(1)
-    probe over the already-checkpointed signatures."""
-    if sigs.filter(F.col(id_col).isNull()).limit(1).count():
-        raise ValueError(
-            "NULL doc ids in the batch — a NULL id neither equi-joins "
-            "nor orders, and all NULL-id docs would collapse into one "
-            "phantom signature; assign real ids first"
-        )
-
-
 def _refuse_duplicate_ids(df: DataFrame, id_col: str) -> None:
     """Duplicate ids WITHIN one batch refuse loudly: two different
     documents sharing an id silently merge into one chimera signature
     (``minhash_signatures`` takes per-slot minima over the union of
     their shingles — a signature matching neither document) and the
-    corruption would be committed permanently (round-9 review finding;
-    the same hazard class as the NULL refusal). One column-pruned scan
-    of the id column."""
+    corruption would be committed permanently (the same hazard class
+    as the NULL refusal). One column-pruned scan of the id column."""
     dup = (
         df.filter(F.col(id_col).isNotNull())  # NULLs get the NULL refusal
         .groupBy(F.col(id_col))
@@ -162,25 +114,71 @@ def _refuse_duplicate_ids(df: DataFrame, id_col: str) -> None:
         )
 
 
-def _write_batch(
-    sigs: DataFrame, edges: DataFrame, path: str, batch: int, id_col: str
-) -> tuple[int, int]:
-    """Write one immutable (sig, edge) directory pair; returns
-    (docs, new_edges). Uncommitted until the caller's meta commit —
-    overwrite mode clears a crashed predecessor's orphan in this slot."""
-    sig_dir, edge_dir = (
-        _batch_dirs(path, "sig", [batch])[0],
-        _batch_dirs(path, "edge", [batch])[0],
+def _validate(df: DataFrame, meta: dict, check_dups: bool):
+    """The batch's signatures (the ONLY pass over raw text, eagerly
+    checkpointed — the edge joins and the sig write all read it) and
+    their count, after the duplicate-id refusal. NULL doc ids refuse
+    loudly (the engine's NULL contract): a NULL id never equi-joins,
+    so its edges would silently vanish from every downstream graph
+    while ``minhash_signatures`` collapses ALL NULL-id docs into one
+    phantom signature row — caught by the same job that counts."""
+    id_col = meta["id_col"]
+    if check_dups:
+        _refuse_duplicate_ids(df, id_col)
+    sigs = minhash_signatures(
+        df, n=meta["n"], num_perm=meta["num_perm"],
+        text_col=meta["text_col"], id_col=id_col,
+    ).localCheckpoint(eager=True)
+    row = sigs.agg(
+        F.count(F.lit(1)).alias("n"), F.count(F.col(id_col)).alias("n_ids")
+    ).first()
+    if row["n_ids"] < row["n"]:
+        raise ValueError(
+            "NULL doc ids in the batch — a NULL id neither equi-joins "
+            "nor orders, and all NULL-id docs would collapse into one "
+            "phantom signature; assign real ids first"
+        )
+    return sigs, row["n"]
+
+
+def _accept(sigs: DataFrame, n: int, prior, meta: dict, stats: dict):
+    """Every signature is stored; the new edges are the within-batch
+    pairs plus, against a history, the band join of the batch's
+    signatures against the STORED ones (``minhash_matches_against`` —
+    history text is never touched)."""
+    num_perm, bands, threshold, id_col = (
+        meta["num_perm"], meta["bands"], meta["threshold"], meta["id_col"]
     )
-    # sigs is referenced by the edge computation the caller built from
-    # it AND written here — the caller checkpoints it, so the batch's
-    # raw text is read once in total
-    sigs.select(F.col(id_col), "sig").write.mode("overwrite").parquet(sig_dir)
-    edges.write.mode("overwrite").parquet(edge_dir)
-    spark = sigs.sparkSession
-    n_docs = spark.read.parquet(sig_dir).count()
-    n_edges = spark.read.parquet(edge_dir).count()
-    return n_docs, n_edges
+    edges = _self_est_pairs(sigs, num_perm, bands, threshold, id_col)
+    if prior is not None:
+        cross = minhash_matches_against(
+            sigs, prior, num_perm=num_perm, bands=bands,
+            threshold=threshold, id_col=id_col,
+        ).select(
+            F.least(F.col(id_col), F.col("prior_id")).alias("id_a"),
+            F.greatest(F.col(id_col), F.col("prior_id")).alias("id_b"),
+            "jac_est",
+        )
+        edges = edges.unionByName(cross)
+    stats["docs"] = n
+    return {"sig": sigs.select(F.col(id_col), "sig"), "edge": edges}, n
+
+
+FAMILY = batch_store.Family(
+    hint="neardup_graph_build",
+    noun="a near-dup graph store",
+    kinds={"sig": "docs", "edge": "edges"},
+    validate=_validate,
+    accept=_accept,
+    known=(
+        "refresh batch contains ids already stored in the graph at "
+        "{path} — re-ingesting a document would double its vertex; "
+        "dedup the batch against history first (minhash_dedup_against "
+        "/ exact_dedup_against) or pass drop_known=True to skip known ids"
+    ),
+    empty={"docs": 0, "new_edges": 0},
+    counted={"edge": "new_edges"},
+)
 
 
 def neardup_graph_build(
@@ -204,42 +202,16 @@ def neardup_graph_build(
     :func:`neardup_graph_refresh` for the chimera-signature hazard)."""
     if num_perm % bands:
         raise ValueError("bands must divide num_perm")
-    if os.path.exists(_meta_path(path)):
-        # the instant filesystem refusal runs BEFORE the duplicate-id
-        # Spark scan — a re-run against an existing store must not pay
-        # a corpus scan to learn it is refused (round-9 review, 2nd
-        # pass)
-        raise ValueError(
-            f"a near-dup graph store already exists at {path} — append "
-            "batches with neardup_graph_refresh, or choose a new path"
-        )
-    if validate_ids:
-        _refuse_duplicate_ids(df, id_col)
-    os.makedirs(path, exist_ok=True)
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        if os.path.exists(_meta_path(path)):
-            raise ValueError(
-                f"a near-dup graph store already exists at {path} "
-                "(created while waiting for the writer claim)"
-            )
-        sigs = minhash_signatures(
-            df, n=n, num_perm=num_perm, text_col=text_col, id_col=id_col
-        ).localCheckpoint(eager=True)
-        _refuse_null_ids(sigs, id_col)
-        edges = _self_est_pairs(sigs, num_perm, bands, threshold, id_col)
-        n_docs, n_edges = _write_batch(sigs, edges, path, 0, id_col)
-        meta = {
-            "version": 1,
-            "n": n,
-            "num_perm": num_perm,
-            "bands": bands,
-            "threshold": threshold,
-            "id_col": id_col,
-            "text_col": text_col,
-            "batches": [0],
-        }
-        _write_meta(path, meta, lock)
-    return {"batch": 0, "docs": n_docs, "new_edges": n_edges}
+    meta = {
+        "version": 1,
+        "n": n,
+        "num_perm": num_perm,
+        "bands": bands,
+        "threshold": threshold,
+        "id_col": id_col,
+        "text_col": text_col,
+    }
+    return batch_store.create(spark, FAMILY, df, path, meta, validate_ids)
 
 
 def neardup_graph_refresh(
@@ -266,11 +238,8 @@ def neardup_graph_refresh(
     ``exact_dedup_against`` exist for exactly that).
     ``drop_known=True`` instead DROPS already-stored ids inside the
     writer claim and ingests only the remainder — the replay-safe mode
-    ``streaming_neardup_graph`` runs on (doing this dedup outside the
-    lock is a TOCTOU: a concurrent writer committing overlapping ids
-    between the check and the refresh would turn the refusal into a
-    stream-killing surprise; round-9 review finding). Either way the
-    history id scan happens ONCE, in-lock.
+    ``streaming_neardup_graph`` runs on. Either way the history id
+    scan happens ONCE, in-lock.
 
     Ids must also be unique WITHIN the batch (``validate_ids``): two
     different documents sharing an id would silently merge into one
@@ -283,67 +252,10 @@ def neardup_graph_refresh(
     An empty batch (no ids, or no doc long enough to shingle, or —
     under ``drop_known`` — nothing new) commits nothing and returns
     ``docs=0``."""
-    meta = _read_meta(path)  # fail fast on a missing store pre-lock
-    if validate_ids:
-        # id_col comes from the store's meta; the pre-lock read is
-        # fine here (params are immutable for the store's lifetime)
-        _refuse_duplicate_ids(df, meta["id_col"])
-    with table_write_lock(path, **_VERB_LOCK_OPTS) as lock:
-        # re-read under the claim: a concurrent refresh that committed
-        # while we waited must be part of OUR history
-        meta = _read_meta(path)
-        n, num_perm, bands, threshold, id_col, text_col = (
-            meta[k] for k in _PARAM_KEYS
-        )
-        batches = list(meta["batches"])
-        sigs = minhash_signatures(
-            df, n=n, num_perm=num_perm, text_col=text_col, id_col=id_col
-        ).localCheckpoint(eager=True)
-        if sigs.isEmpty():
-            return {"batch": None, "docs": 0, "new_edges": 0}
-        _refuse_null_ids(sigs, id_col)
-        prior = spark.read.parquet(*_batch_dirs(path, "sig", batches))
-        if drop_known:
-            sigs = sigs.join(
-                prior.select(F.col(id_col)), id_col, "left_anti"
-            ).localCheckpoint(eager=True)
-            if sigs.isEmpty():
-                return {"batch": None, "docs": 0, "new_edges": 0}
-        else:
-            clash = (
-                sigs.select(F.col(id_col))
-                .join(prior.select(F.col(id_col)), id_col, "semi")
-                .limit(1)
-                .count()
-            )
-            if clash:
-                raise ValueError(
-                    "refresh batch contains ids already stored in the "
-                    f"graph at {path} — re-ingesting a document would "
-                    "double its vertex; dedup the batch against history "
-                    "first (minhash_dedup_against / exact_dedup_against) "
-                    "or pass drop_known=True to skip known ids"
-                )
-        cross = minhash_matches_against(
-            sigs,
-            prior,
-            num_perm=num_perm,
-            bands=bands,
-            threshold=threshold,
-            id_col=id_col,
-        ).select(
-            F.least(F.col(id_col), F.col("prior_id")).alias("id_a"),
-            F.greatest(F.col(id_col), F.col("prior_id")).alias("id_b"),
-            "jac_est",
-        )
-        within = _self_est_pairs(sigs, num_perm, bands, threshold, id_col)
-        batch = max(batches) + 1
-        n_docs, n_edges = _write_batch(
-            sigs, within.unionByName(cross), path, batch, id_col
-        )
-        meta["batches"] = batches + [batch]
-        _write_meta(path, meta, lock)
-    return {"batch": batch, "docs": n_docs, "new_edges": n_edges}
+    return batch_store.append(
+        spark, FAMILY, df, path, drop_known=drop_known,
+        validate_ids=validate_ids,
+    )
 
 
 def neardup_graph_load(spark: SparkSession, path: str) -> DataFrame:
@@ -353,8 +265,7 @@ def neardup_graph_load(spark: SparkSession, path: str) -> DataFrame:
     ``label_propagation(weight_col=...)``, ``k_core``,
     ``duplicate_clusters``. Reads only directories the committed meta
     references (immutable once committed — no swap window, no retry)."""
-    meta = _read_meta(path)
-    return spark.read.parquet(*_batch_dirs(path, "edge", meta["batches"]))
+    return batch_store.load(spark, FAMILY, path, "edge")
 
 
 def neardup_graph_compact(spark: SparkSession, path: str) -> dict:
@@ -364,26 +275,10 @@ def neardup_graph_compact(spark: SparkSession, path: str) -> dict:
     pair per refresh — at production cadence that is thousands of
     small directories whose listing cost eventually dominates reads
     (the same small-files economics ``compact_parquet`` exists for).
-    Compaction rewrites the union of every committed batch into a
-    fresh slot and commits a meta whose batch list is that single
-    slot.
-
-    Crash safety is the refresh protocol's: the consolidated
-    directories land in a NEW slot (max + 1) while every old directory
-    stays committed until the atomic meta replace — a crash at any
-    point leaves the store readable at its previous generation. After
-    the commit the old directories are orphans;
-    :func:`neardup_graph_vacuum` sweeps them (two-phase like
-    ``vacuum_table``: commit first, delete later — never delete
-    anything a concurrent reader's meta generation may still
-    reference until the grace window passes). Protocol in
-    ``sources/batch_store.py`` (shared with the fingerprint store)."""
-    st = batch_store.compact(spark, path, ("sig", "edge"), _HINT)
-    return {
-        "batches_before": st["batches_before"],
-        "docs": st["rows"]["sig"],
-        "edges": st["rows"]["edge"],
-    }
+    A crash at any point leaves the store readable at its previous
+    generation; :func:`neardup_graph_vacuum` sweeps the superseded
+    directories (``batch_store.compact``)."""
+    return batch_store.compact(spark, FAMILY, path)
 
 
 def neardup_graph_vacuum(
@@ -391,16 +286,10 @@ def neardup_graph_vacuum(
 ) -> dict:
     """Delete batch directories no committed meta references —
     compaction leftovers and crashed-refresh orphans — once older than
-    ``grace_seconds`` → ``{"removed": n, "kept": m}``. The grace
-    window protects readers that loaded an older meta generation and
-    are still lazily scanning its directories (the same contract as
-    ``vacuum_table``); within the window orphans are counted as
-    ``kept``, never removed. Runs under the writer claim so a
-    concurrent refresh cannot commit a new slot while the sweep is
-    deciding what is orphaned. Protocol in ``sources/batch_store.py``."""
-    return batch_store.vacuum(
-        path, ("sig", "edge"), _HINT, grace_seconds=grace_seconds
-    )
+    ``grace_seconds`` → ``{"removed": n, "kept": m}`` (the
+    ``vacuum_table`` contract: within the window orphans are counted
+    as ``kept``, never removed; ``batch_store.vacuum``)."""
+    return batch_store.vacuum(FAMILY, path, grace_seconds)
 
 
 def neardup_graph_matches(
@@ -413,7 +302,7 @@ def neardup_graph_matches(
     signatures, no writer claim, no mutation. The decontamination /
     pre-ingest filter read path; ``neardup_graph_refresh`` computes
     exactly these matches when the batch is actually ingested."""
-    meta = _read_meta(path)
+    meta = batch_store.read_meta(path, FAMILY.hint)
     sigs = minhash_signatures(
         df,
         n=meta["n"],
@@ -437,5 +326,4 @@ def neardup_graph_signatures(spark: SparkSession, path: str) -> DataFrame:
     ``minhash_matches_against``, so incremental DEDUP and the
     incremental GRAPH share one maintained signature table instead of
     each consumer re-deriving its own."""
-    meta = _read_meta(path)
-    return spark.read.parquet(*_batch_dirs(path, "sig", meta["batches"]))
+    return batch_store.load(spark, FAMILY, path, "sig")

@@ -904,6 +904,14 @@ def streaming_upsert(
             stats_glob=stats_glob,
         )
 
+    return _start_foreach(stream, fold, checkpoint, available_now)
+
+
+def _start_foreach(
+    stream: DataFrame, fold, checkpoint: str, available_now: bool
+):
+    """Start ``fold`` as the stream's ``foreachBatch`` sink — the
+    writer shared by the CDC upsert and the store sinks."""
     writer = (
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", checkpoint)
@@ -941,6 +949,71 @@ def _append_sink_stats(
     ).coalesce(1).write.mode("append").parquet(stats_path)
 
 
+def _pinned_columns(
+    frame: DataFrame, cols, what: str, shape: str
+) -> DataFrame:
+    """``frame`` unchanged if it carries the store's pinned ``cols``;
+    otherwise a refusal naming what is missing (at the sink, not as a
+    raw unresolved-column error deep inside the store's accept fold)."""
+    missing = [c for c in cols if c not in frame.columns]
+    if missing:
+        raise ValueError(
+            f"{what} columns {frame.columns} — the store's pinned "
+            f"column(s) {missing} are missing; return {shape} frame "
+            "matching the store's meta"
+        )
+    return frame
+
+
+def _store_sink(
+    stream: DataFrame,
+    path: str,
+    checkpoint: str,
+    refresh,
+    transform,
+    available_now: bool,
+    stats_path: str | None,
+):
+    """The ONE fold behind the four store sinks: per non-empty
+    micro-batch, ``transform`` turns the raw rows into the store's
+    batch (column check, in-batch ``dropDuplicates`` — same-id rows in
+    a stream are replays of the same immutable item — and, for
+    decode- or model-backed frames, the eager checkpoint that lets the
+    store's validation, known-id check and accept fold share ONE
+    execution of the upstream), then ``refresh`` appends it.
+
+    Effectively-once on an at-least-once channel: ``foreachBatch`` can
+    REPLAY a micro-batch after a crash, and the store's known-id
+    refusal would kill the stream on the replayed rows; each
+    micro-batch therefore refreshes with ``drop_known=True`` — the
+    store drops already-ingested ids INSIDE its writer claim (a replay
+    of a committed batch refreshes nothing; a replay of a CRASHED
+    refresh re-runs it in the same slot, because the meta commit is
+    atomic and nothing was committed; a row an earlier batch REJECTED
+    is judged again by the same history and rejected again). Doing
+    that dedup fold-side, outside the lock, would be a TOCTOU — a
+    concurrent backfill committing overlapping ids between the check
+    and the refresh turns the refusal into a stream-killing surprise.
+    ``validate_ids=False`` is redundant after the ``dropDuplicates``;
+    NULL ids still refuse loudly (a silent drop would hide a broken id
+    pipeline upstream). ``stats_path`` (optional) appends each
+    micro-batch's refresh stats as an ``(epoch, stats json)``
+    health-log row (:func:`_append_sink_stats`)."""
+
+    def fold(batch: DataFrame, epoch: int) -> None:
+        if batch.isEmpty():
+            return
+        spark = batch.sparkSession
+        st = refresh(
+            spark, transform(batch), path, drop_known=True,
+            validate_ids=False,
+        )
+        if stats_path is not None:
+            _append_sink_stats(spark, stats_path, epoch, st)
+
+    return _start_foreach(stream, fold, checkpoint, available_now)
+
+
 def streaming_neardup_graph(
     stream: DataFrame,
     path: str,
@@ -953,26 +1026,9 @@ def streaming_neardup_graph(
     store per micro-batch — the streaming twin of per-ingest
     ``neardup_graph_refresh``, so "the graph is always current" costs
     one batch-sized increment per trigger instead of a scheduled
-    corpus-wide rebuild.
-
-    Effectively-once on an at-least-once channel: ``foreachBatch`` can
-    REPLAY a micro-batch after a crash, and the store's known-id
-    refusal would kill the stream on the replayed rows; each
-    micro-batch therefore refreshes with ``drop_known=True`` — the
-    store drops already-ingested ids INSIDE its writer claim (a replay
-    of a committed batch refreshes nothing; a replay of a CRASHED
-    refresh re-runs it in the same slot, because the meta commit is
-    atomic and nothing was committed). Doing that dedup fold-side,
-    outside the lock, would be a TOCTOU — a concurrent backfill
-    committing overlapping ids between the check and the refresh turns
-    the refusal into a stream-killing surprise — and would scan the
-    signature history twice per trigger (round-9 review findings).
-    Within a micro-batch, duplicate ids collapse to one arbitrary row
-    (a docs stream's same-id rows are replays of the same immutable
-    document — the analogous collapse to ``streaming_upsert``'s
-    latest-by-version, which needs no version here). NULL ids refuse
-    loudly (the store's contract; a silent drop would hide a broken id
-    pipeline upstream).
+    corpus-wide rebuild. Effectively-once on an at-least-once channel
+    (the shared store-sink fold, :func:`_store_sink`); within a
+    micro-batch, duplicate ids collapse to one arbitrary row.
 
     The store must exist (``neardup_graph_build``) BEFORE wiring —
     checked here, at wiring time, not inside the first micro-batch
@@ -981,16 +1037,14 @@ def streaming_neardup_graph(
     the store's meta, so the stream cannot silently redefine
     "duplicate" mid-history. Per micro-batch cost: one pass over the
     batch text (signatures) + the band join against stored history —
-    the refresh scale shape, unchanged. ``stats_path`` (optional)
-    appends each micro-batch's refresh stats as an ``(epoch, stats
-    json)`` health-log row — the batch verbs' disclosure surface,
-    streaming edition (see ``_append_sink_stats``)."""
+    the refresh scale shape, unchanged. ``stats_path``: see
+    :func:`_store_sink`."""
     from big_data_hadoop_spark.operators.neardup_graph import (
-        _read_meta,
         neardup_graph_refresh,
     )
+    from big_data_hadoop_spark.sources import batch_store
 
-    meta = _read_meta(path)
+    meta = batch_store.read_meta(path, "neardup_graph_build")
     id_col, text_col = meta["id_col"], meta["text_col"]
     missing = [c for c in (id_col, text_col) if c not in stream.columns]
     if missing:
@@ -998,29 +1052,11 @@ def streaming_neardup_graph(
             f"stream lacks the store's columns {missing}; has "
             f"{stream.columns}"
         )
-
-    def fold(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        b = batch.select(id_col, text_col).dropDuplicates([id_col])
-        # drop_known dedups against history INSIDE the writer claim
-        # (single history scan, no TOCTOU); validate_ids is redundant
-        # after the dropDuplicates above
-        st = neardup_graph_refresh(
-            spark, b, path, drop_known=True, validate_ids=False
-        )
-        if stats_path is not None:
-            _append_sink_stats(spark, stats_path, epoch, st)
-
-    writer = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _store_sink(
+        stream, path, checkpoint, neardup_graph_refresh,
+        lambda b: b.select(id_col, text_col).dropDuplicates([id_col]),
+        available_now, stats_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_video_dedup(
@@ -1045,15 +1081,9 @@ def streaming_video_dedup(
     clip-id set is the surviving catalog, queryable mid-stream via
     ``framehash_store_load``.
 
-    Effectively-once on an at-least-once channel, the established
-    argument verbatim: replayed clip ids drop INSIDE the store's
-    writer claim (``drop_known=True`` — an out-of-lock pre-check is a
-    TOCTOU against a concurrent backfill), and a clip an earlier batch
-    REJECTED is judged again by the same history on replay — rejected
-    again, idempotent. Within a micro-batch, duplicate
-    ``(id, frame_no)`` rows collapse to one arbitrary row (same-id
-    rows in a media stream are replays of the same immutable clip).
-    The store must exist (``framehash_store_build``) BEFORE wiring —
+    Effectively-once on an at-least-once channel (:func:`_store_sink`);
+    within a micro-batch, duplicate ``(id, frame_no)`` rows collapse
+    to one arbitrary row. The store must exist (``framehash_store_build``) BEFORE wiring —
     checked here at wiring time, with the callable's output columns
     validated per batch against the store's pinned id column (the
     ``streaming_fingerprint_dedup`` fp_col lesson, applied from birth).
@@ -1069,45 +1099,19 @@ def streaming_video_dedup(
     from big_data_hadoop_spark.sources import batch_store
 
     meta = batch_store.read_meta(path, "framehash_store_build")
-    id_col = meta["id_col"]
+    key = [meta["id_col"], "frame_no"]
 
-    def fold(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        fh = frame_hashes(batch)
-        missing = [
-            c for c in (id_col, "frame_no", "dhash") if c not in fh.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"frame_hashes callable returned columns {fh.columns} — "
-                f"the store's pinned column(s) {missing} are missing; "
-                "return an (id, frame_no, dhash) frame matching the "
-                "store's meta"
-            )
-        # ONE execution of the decode/hash upstream: refresh's isEmpty
-        # probe, drop_known join, and accept fold each reference the
-        # frame before its internal checkpoint — the caller-checkpoint
-        # convention the refresh docstring pins (round-10 advice; the
-        # CLI tier builders already follow it)
-        fh = fh.dropDuplicates([id_col, "frame_no"]).localCheckpoint(
-            eager=True
+    def transform(batch: DataFrame) -> DataFrame:
+        fh = _pinned_columns(
+            frame_hashes(batch), [*key, "dhash"],
+            "frame_hashes callable returned", "an (id, frame_no, dhash)",
         )
-        st = framehash_store_refresh(
-            spark, fh, path, drop_known=True, validate_ids=False
-        )
-        if stats_path is not None:
-            _append_sink_stats(spark, stats_path, epoch, st)
+        return fh.dropDuplicates(key).localCheckpoint(eager=True)
 
-    writer = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _store_sink(
+        stream, path, checkpoint, framehash_store_refresh, transform,
+        available_now, stats_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_embedding_dedup(
@@ -1130,11 +1134,9 @@ def streaming_embedding_dedup(
     ``embedding_store_load``; ``embedding_store_matches`` is the
     read-only novelty check.
 
-    Effectively-once on an at-least-once channel — the established
-    argument verbatim: replayed ids drop INSIDE the store's writer
-    claim (``drop_known=True``), previously-rejected rows are judged
-    again by the same history and rejected again, duplicate in-batch
-    ids collapse to one arbitrary row. The store must exist
+    Effectively-once on an at-least-once channel (:func:`_store_sink`);
+    duplicate in-batch ids collapse to one arbitrary row. The store
+    must exist
     (``embedding_store_build``) BEFORE wiring — the centroids and eps
     are meta-pinned, so the stream can never move a cell boundary
     mid-history. Per micro-batch cost: one embedding/assignment pass
@@ -1148,41 +1150,21 @@ def streaming_embedding_dedup(
     meta = batch_store.read_meta(path, "embedding_store_build")
     id_col, vec_col = meta["id_col"], meta["vec_col"]
 
-    def fold(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        emb = embeddings(batch) if embeddings is not None else batch
-        missing = [c for c in (id_col, vec_col) if c not in emb.columns]
-        if missing:
-            raise ValueError(
-                f"embedding frame has columns {emb.columns} — the "
-                f"store's pinned column(s) {missing} are missing; "
-                "return an (id, vector) frame matching the store's meta"
-            )
-        # ONE execution of the (possibly model-backed) embedding
-        # upstream: refresh probes the frame several times before its
-        # internal checkpoint — the caller-checkpoint convention the
-        # refresh docstring pins (round-10 advice)
-        emb = (
+    def transform(batch: DataFrame) -> DataFrame:
+        emb = _pinned_columns(
+            embeddings(batch) if embeddings is not None else batch,
+            [id_col, vec_col], "embedding frame has", "an (id, vector)",
+        )
+        return (
             emb.select(id_col, vec_col)
             .dropDuplicates([id_col])
             .localCheckpoint(eager=True)
         )
-        st = embedding_store_refresh(
-            spark, emb, path, drop_known=True, validate_ids=False
-        )
-        if stats_path is not None:
-            _append_sink_stats(spark, stats_path, epoch, st)
 
-    writer = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _store_sink(
+        stream, path, checkpoint, embedding_store_refresh, transform,
+        available_now, stats_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_fingerprint_dedup(
@@ -1205,16 +1187,9 @@ def streaming_fingerprint_dedup(
     surviving corpus, queryable mid-stream via
     ``fingerprint_store_load``.
 
-    Effectively-once on an at-least-once channel, the
-    ``streaming_neardup_graph`` argument verbatim: replayed ids are
-    dropped INSIDE the store's writer claim (``drop_known=True`` — an
-    out-of-lock pre-check would be a TOCTOU against a concurrent
-    backfill), and a row an earlier batch REJECTED is simply judged
-    again by the same history on replay — rejected again, nothing
-    stored, idempotent either way. Within a micro-batch, duplicate ids
-    collapse to one arbitrary row before validation
-    (``dropDuplicates`` — same-id rows in a media stream are replays
-    of the same immutable blob). The store must exist
+    Effectively-once on an at-least-once channel (:func:`_store_sink`);
+    within a micro-batch, duplicate ids collapse to one arbitrary row
+    before validation. The store must exist
     (``fingerprint_store_build``) BEFORE wiring — checked here at
     wiring time; the radius and column names come from its meta, so
     the stream cannot silently redefine "duplicate" mid-history.
@@ -1232,40 +1207,17 @@ def streaming_fingerprint_dedup(
     meta = batch_store.read_meta(path, "fingerprint_store_build")
     id_col, fp_col = meta["id_col"], meta["fp_col"]
 
-    def fold(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        fp = fingerprint(batch)
-        # validate BOTH pinned columns (round-10 ADVICE: a callable
-        # returning the right id but a differently-named fingerprint
-        # column previously died later inside _accept with a raw
-        # unresolved-column AnalysisException instead of this error)
-        missing = [c for c in (id_col, fp_col) if c not in fp.columns]
-        if missing:
-            raise ValueError(
-                f"fingerprint callable returned columns {fp.columns} — "
-                f"the store's pinned column(s) {missing} are missing; "
-                "return an (id, fp) frame matching the store's meta"
-            )
-        # ONE execution of the decode/fingerprint upstream: refresh
-        # probes the frame several times before its internal
-        # checkpoint (the caller-checkpoint convention; round-10
-        # advice). drop_known dedups against accepted history INSIDE
-        # the writer claim; validate_ids is redundant after the
-        # dropDuplicates.
-        fp = fp.dropDuplicates([id_col]).localCheckpoint(eager=True)
-        st = fingerprint_store_refresh(
-            spark, fp, path, drop_known=True, validate_ids=False
+    def transform(batch: DataFrame) -> DataFrame:
+        # BOTH pinned columns: a callable returning the right id but a
+        # differently-named fingerprint column would otherwise die
+        # inside the accept fold with a raw unresolved-column error
+        fp = _pinned_columns(
+            fingerprint(batch), [id_col, fp_col],
+            "fingerprint callable returned", "an (id, fp)",
         )
-        if stats_path is not None:
-            _append_sink_stats(spark, stats_path, epoch, st)
+        return fp.dropDuplicates([id_col]).localCheckpoint(eager=True)
 
-    writer = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _store_sink(
+        stream, path, checkpoint, fingerprint_store_refresh, transform,
+        available_now, stats_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

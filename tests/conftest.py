@@ -159,3 +159,17 @@ def pytest_collection_modifyitems(config, items):
         base = item.nodeid.split("[", 1)[0]
         if base in _SLOWTIER_IDS:
             item.add_marker(pytest.mark.slowtier)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Make the default slowtier deselection visible after every run."""
+    n = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slowtier")
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} slowtier test(s) deselected by pytest.ini; run the "
+            'full battery with: pytest tests/ -m ""'
+        )

@@ -187,6 +187,36 @@ def test_assign_cells_rule_pinned(spark):
     assert set(got0.values()) == {0}
 
 
+def test_non_finite_centroid_refused_naming_its_cell(
+    spark, tmp_path, monkeypatch
+):
+    """A NaN/inf centroid refuses with a ValueError naming the cell —
+    in assignment (not a SQL ParseException from its rendered literal)
+    and at build, before the meta commit, leaving no store behind."""
+    import types
+
+    from big_data_hadoop_spark.operators import embedding_store as es
+
+    rows = {1: (1, 0, 0, 0), 2: (0, 1, 0, 0)}
+    for bad in (float("nan"), float("inf")):
+        cents = [[1.0, 0.0, 0.0, 0.0], [0.0, bad, 0.0, 0.0]]
+        with pytest.raises(ValueError, match="cell 1"):
+            assign_cells(_emb_df(spark, rows), cents)
+    monkeypatch.setattr(
+        es,
+        "ivf_build",
+        lambda *a, **k: types.SimpleNamespace(
+            centroids=[[float("nan"), 0.0, 0.0, 0.0]]
+        ),
+    )
+    path = str(tmp_path / "s")
+    with pytest.raises(ValueError, match="cell 0"):
+        embedding_store_build(
+            spark, _emb_df(spark, rows), path, eps=EPS, n_cells=1, dim=DIM
+        )
+    assert not os.path.exists(path)
+
+
 def test_refusals_and_validation(spark, tmp_path):
     path, _ = _grow(spark, tmp_path)
     with pytest.raises(ValueError, match="already exists"):

@@ -358,6 +358,8 @@ def test_null_doc_ids_refused(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL doc ids"):
         neardup_graph_build(spark, with_null, str(tmp_path / "g1"))
+    # a refused build leaves no directory behind
+    assert not os.path.exists(tmp_path / "g1")
     path = str(tmp_path / "g2")
     neardup_graph_build(spark, good, path)
     more = _docs(spark).filter(F.col("doc_id") >= 400)
