@@ -21,15 +21,15 @@ Four tiers, all over a ``documents(doc_id, text, ...)``-shaped table:
   all JVM-side.
 
 Downstream of any pair operator, ``duplicate_clusters`` resolves the
-pair graph into connected components (min-label propagation) and
-``dedup_by_clusters`` keeps one canonical doc per component — the
-cluster-safe dedup ACTION. Across runs, ``exact_dedup_against`` +
-``content_digests`` give incremental ingestion dedup on 32-byte history
-digests, and ``minhash_dedup_against`` + ``minhash_signatures`` the
-near-dup analog on stored fixed-size signatures (band join +
-slot-agreement estimate — history documents never ship). Embedding-
-cosine near-dup lives in ``similarity.py``; winnow (MOSS) fingerprint
-pairs in ``textstats.py``.
+pair graph into connected components (a driver union-find for small
+graphs, small-star/large-star otherwise) and ``dedup_by_clusters``
+keeps one canonical doc per component — the cluster-safe dedup
+ACTION. Across runs, ``exact_dedup_against`` + ``content_digests``
+give incremental ingestion dedup on 32-byte history digests, and
+``minhash_dedup_against`` + ``minhash_signatures`` the near-dup analog
+on stored fixed-size signatures (band join + slot-agreement estimate —
+history documents never ship). Embedding-cosine near-dup lives in
+``similarity.py``; winnow (MOSS) fingerprint pairs in ``textstats.py``.
 """
 
 from __future__ import annotations
@@ -920,10 +920,10 @@ def simhash_dedup_against(
 
 
 #: Default ceiling (symmetric edge rows) under which the pair graph is
-#: resolved with a driver-side union-find instead of iterated label
-#: propagation. 32 Ki edges is ~0.5 MB of ids on the driver — the same
+#: resolved with a driver-side union-find instead of the distributed
+#: star loop. 32 Ki edges is ~0.5 MB of ids on the driver — the same
 #: state class as a small broadcast-join build side — while each
-#: propagation round the fast path replaces costs a full join+agg query
+#: alternation the fast path replaces costs a full join+agg query
 #: (7-9 scheduled AQE stage-jobs measured per round at any input size,
 #: pure fixed overhead on a near-empty graph). Near-dup components are
 #: shallow but COMMON at batch granularity: most store-verb within-batch
@@ -938,7 +938,6 @@ def duplicate_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    method: str = "jump",
     stats: dict | None = None,
     small_graph_max: int = SMALL_GRAPH_MAX_EDGES,
 ) -> DataFrame:
@@ -952,52 +951,54 @@ def duplicate_clusters(
     it drops 2 AND 3 even though 3 may only resemble 2; clustering keeps
     exactly one representative per component.
 
-    Min-label propagation: every node starts labeled with its own id;
-    each round, a node takes the minimum label in its neighborhood;
-    fixpoint in O(graph diameter) rounds — near-dup components are
-    shallow (stars/short chains), so convergence is typically 2-4
-    rounds. Each round is one join + one aggregation (all keyed
-    shuffles, no driver-side graph); iterates like KMeans does, with a
-    LIMIT-1 changed check. Each round's frames are EAGER LOCAL
-    CHECKPOINTS, not persists: persist caches rows but round i's
+    A graph of at most ``small_graph_max`` symmetric edge rows (empty
+    included) is collected by one bounded ``take`` and resolved with a
+    driver union-find (``_driver_clusters``). A larger graph runs the
+    alternating small-star/large-star loop (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14), which rewires EDGES
+    toward each neighborhood's minimum:
+
+    - **large-star**: every node ``u`` links its strictly LARGER
+      neighbors to the minimum of its closed neighborhood
+      ``m = min(N(u) ∪ {u})`` — emits ``(v, m)`` for ``v ∈ N(u),
+      v > u``. Tall chains fold toward local minima.
+    - **small-star**: edges oriented larger→smaller; every node ``u``
+      links its smaller neighbors AND itself to its minimum neighbor —
+      star-ifies each local neighborhood.
+
+    Each pass is one groupBy-min + one self-join over the edge list, all
+    keyed shuffles with no label table and no driver-side graph. It
+    converges in O(log n) alternations with the edge count bounded by
+    O(n + m), however deep the component or wherever its minimum id
+    sits. The fixpoint is a small-star output edge-set-equal to the
+    previous one (count + one anti-join). Each alternation is an EAGER
+    LOCAL CHECKPOINT, not a persist: persist caches rows but round i's
     LOGICAL plan still nests round i-1's, so analyzer/optimizer time
     grows with every round (a 300-pair chain graph needing 8 rounds:
     217s under persist, ~8s checkpointed — and with an expression-heavy
     pairs input like the flat-dot semantic-dedup join, round plans grow
-    past what explainString can even allocate). Checkpointing collapses
-    each round to a leaf. On a cluster deployment prefer a reliable
-    checkpoint dir if executor loss matters (local checkpoints die with
-    their executor).
-
-    ``method`` picks the iteration scheme:
-
-    - ``"jump"`` (default): the pointer-jumped propagation above —
-      lowest constant factors, right for near-dup graphs (shallow
-      stars/chains, typically 2-4 rounds).
-    - ``"star"``: the alternating small-star/large-star formulation
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC'14 — public), the planet-scale shape: per round it rewires
-      EDGES toward each neighborhood's minimum instead of propagating
-      labels, so intermediate state stays O(edges) with no label table,
-      the per-round joins are plain edge-list self-aggregations, and
-      deep components collapse in O(log n) alternations regardless of
-      where the minimum sits. Pick it for duplicate graphs with deep
-      chains or when ``jump`` hits ``max_iter``.
+    past what explainString can even allocate). On a cluster deployment
+    prefer a reliable checkpoint dir if executor loss matters (local
+    checkpoints die with their executor). Raises ``RuntimeError`` when
+    ``max_iter`` alternations pass without reaching the fixpoint.
 
     Only ids that appear in ``pairs`` are emitted — singletons are their
-    own cluster implicitly.
+    own cluster implicitly. NULL ids follow the graph operators'
+    contract: a half-NULL pair contributes no edge, its non-NULL id is
+    emitted as its own cluster (unless another pair links it), and NULL
+    is never emitted.
 
     Pass a ``stats`` dict to observe convergence: on return it carries
-    ``{"rounds": <iterations executed>}`` (jump rounds or star
-    alternations). The scaling claim both methods make — O(log n)
-    rounds, flat as data grows — is measurable through this hook (the
-    sf1 exhibit reports it), not just argued from the papers.
+    ``{"rounds": <star alternations>}`` (0 on the driver path).
     """
     # Symmetrize with ONE explode pass, not union-of-swapped-self: the
     # union form duplicates the whole upstream lineage inside a single
     # query (two scans, and a second copy of any observe/CollectMetrics
     # node upstream — which corrupts Observation metrics on the ingest
-    # path, seen via the CLI's JSONL triage).
+    # path, seen via the CLI's JSONL triage). The NULL rule is applied
+    # here, once for both paths: rows with a NULL ``src`` go, and a NULL
+    # ``dst`` becomes a self-loop, which keeps the id as a node without
+    # an edge.
     edges = (
         pairs.select(
             F.explode(
@@ -1011,181 +1012,19 @@ def duplicate_clusters(
                 )
             ).alias("e")
         )
-        .select("e.src", "e.dst")
+        .filter(F.col("e.src").isNotNull())
+        .select("e.src", F.coalesce("e.dst", "e.src").alias("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if method not in ("star", "jump"):
-        raise ValueError(f"unknown method {method!r}; use 'jump' or 'star'")
-    # Empty/small pair graph — the common clean-batch case on the store
-    # verbs' within-batch pass: ONE bounded ``take`` of the already-
-    # checkpointed edges replaces the old LIMIT-1 emptiness probe, and
-    # when the whole graph fits under ``small_graph_max`` its components
-    # are resolved with a driver union-find in microseconds instead of
-    # 3-5 propagation rounds of fixed per-round job cost (7-9 AQE
-    # stage-jobs each, measured). Output is IDENTICAL by construction —
-    # (member, component minimum) for every id in the pairs — and
-    # pinned against the distributed methods in tests/test_clusters.py.
-    # A graph past the bound pays one truncated scan and proceeds
+    # One bounded ``take`` of the checkpointed edges picks the path: a
+    # graph past the bound pays one truncated scan and stays
     # distributed, so corpus-scale graphs never collect.
     head = edges.take(small_graph_max + 1) if small_graph_max >= 0 else None
-    if head is not None and len(head) == 0:
-        if stats is not None:
-            stats["rounds"] = 0
-        return edges.select(
-            F.col("src").alias("member_id"), F.col("dst").alias("cluster_id")
-        )
     if head is not None and len(head) <= small_graph_max:
         if stats is not None:
             stats["rounds"] = 0
         return _driver_clusters(edges, head)
-    if method == "star":
-        return _star_clusters(edges, max_iter, stats=stats)
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neigh = (
-            edges.join(
-                labels.select(
-                    F.col("id").alias("dst"), F.col("label").alias("nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("min_nl"))
-        )
-        # Pointer jumping: besides the neighborhood minimum, each node
-        # also adopts its LABEL'S label from the previous round
-        # (label(label(x)) <= label(x) since labels only decrease, so
-        # the jump never regresses). Pure neighbor propagation needs
-        # O(diameter) rounds — a 300-node chain needs 301, silently
-        # exceeding any sane max_iter; with the jump it converges in 11
-        # (O(log diameter)), so max_iter=20 covers diameters past 2^20.
-        # Both lookups join the same checkpointed leaf — one extra
-        # equi-join, still one materializing job per round. The changed
-        # flag rides the checkpointed frame, so the fixpoint check is a
-        # LIMIT-1 scan of already-stored partitions (the old persist
-        # design re-joined old and new labels — a second full round's
-        # work per round).
-        lab = F.least(
-            F.col("label"),
-            F.coalesce("min_nl", F.col("label")),
-            F.coalesce("jl", F.col("label")),
-        )
-        new_labels = (
-            labels.join(
-                neigh.select(F.col("src").alias("id"), "min_nl"), "id", "left"
-            )
-            .join(
-                labels.select(
-                    F.col("id").alias("_jid"), F.col("label").alias("jl")
-                ),
-                F.col("label") == F.col("_jid"),
-                "left",
-            )
-            .select(
-                "id",
-                lab.alias("label"),
-                (lab < F.col("label")).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter("chg").limit(1).count()
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select(
-        F.col("id").alias("member_id"), F.col("label").alias("cluster_id")
-    )
-
-
-def _driver_clusters(edges: DataFrame, head: list) -> DataFrame:
-    """Resolve an ALREADY-COLLECTED small symmetric edge list into
-    ``(member_id, cluster_id = component minimum)`` with a driver-side
-    union-find — the small-graph fast path of :func:`duplicate_clusters`
-    (``head`` is the complete edge set, bounded by ``small_graph_max``;
-    see the constant's comment for the size argument). Path compression
-    + union by minimum root keeps the label exactly the component
-    minimum, the same contract both distributed methods converge to.
-    The frame returns through the Arrow driver path (``local_frame``)
-    with the edge columns' types, so consumers see the same schema the
-    distributed path produces."""
-    from pyspark.sql.types import StructField, StructType
-
-    from big_data_hadoop_spark.sources.io import local_frame
-
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in head:
-        a, b = row[0], row[1]
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by minimum: the smaller id stays the root, so every
-            # root is its component's minimum at the end
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    rows = sorted((m, find(m)) for m in parent)
-    src_t = edges.schema["src"].dataType
-    dst_t = edges.schema["dst"].dataType
-    schema = StructType(
-        [
-            StructField("member_id", src_t, False),
-            StructField("cluster_id", dst_t, False),
-        ]
-    )
-    return local_frame(edges.sparkSession, rows, schema)
-
-
-def _star_clusters(
-    edges: DataFrame, max_iter: int, stats: dict | None = None
-) -> DataFrame:
-    """Alternating small-star/large-star connected components (Kiveris
-    et al., SoCC'14 §3 — public paper; no reference-repo counterpart:
-    the reference has no graph operator at all). Operates purely on the
-    EDGE LIST — no label table to join each round:
-
-    - **large-star**: every node ``u`` links its strictly LARGER
-      neighbors to the minimum of its closed neighborhood
-      ``m = min(N(u) ∪ {u})`` — emits ``(v, m)`` for ``v ∈ N(u),
-      v > u``. Tall chains fold toward local minima.
-    - **small-star**: edges oriented larger→smaller; every node ``u``
-      links its smaller neighbors AND itself to its minimum neighbor —
-      star-ifies each local neighborhood.
-
-    Both are one groupBy-min + one self-join per pass, all keyed
-    shuffles; each alternation is checkpointed to a leaf (same
-    lineage-growth defense as the jump method). The paper proves
-    convergence in O(log n) alternations with edge count bounded by
-    O(n + m), independent of component DIAMETER or where the minimum
-    id sits — the property the pointer-jump method only gets through
-    its label table. Fixpoint = the small-star output is edge-set-equal
-    to the previous alternation's (checked by count + one anti-join,
-    both on checkpointed leaves).
-
-    Emits the same contract as the jump method: ``(member_id,
-    cluster_id = component minimum)`` for every id appearing in the
-    input edges."""
     # ids present in the input (kept aside: star rounds drop self-loops
     # and orphan the root of each finished star, both restored at the
     # end from this node list)
@@ -1194,16 +1033,12 @@ def _star_clusters(
     )
     cur = edges.filter(F.col("src") != F.col("dst"))
     prev_cnt = -1
-    alternations = 0
     for it in range(max_iter):
-        alternations += 1
         # large-star over the symmetric closure of the current edges.
-        # Round 1's input is ALREADY symmetric (duplicate_clusters
-        # hands over the exploded both-directions set), so unioning
-        # the swap would double every edge through the heaviest
-        # round's aggregation and self-join (review finding); later
-        # rounds consume small-star output, which is oriented and
-        # does need the closure.
+        # Round 1's input is ALREADY symmetric, so unioning the swap
+        # would double every edge through the heaviest round's
+        # aggregation and self-join; later rounds consume small-star
+        # output, which is oriented and does need the closure.
         sym = (
             cur
             if it == 0
@@ -1240,28 +1075,83 @@ def _star_clusters(
             .localCheckpoint(eager=True)
         )
         cnt = nxt.count()
-        if cnt == prev_cnt:
-            # same size: equal iff nothing in nxt is new
-            diff = (
-                nxt.join(cur, ["src", "dst"], "left_anti").limit(1).count()
-            )
-            if diff == 0:
-                cur = nxt
-                break
+        # same size: equal iff nothing in nxt is new
+        if cnt == prev_cnt and (
+            nxt.join(cur, ["src", "dst"], "left_anti").limit(1).count() == 0
+        ):
+            break
         cur, prev_cnt = nxt, cnt
-    if stats is not None:
-        stats["rounds"] = alternations
-    # at fixpoint every component is a star rooted at its minimum:
-    # members point at the root, the root points nowhere. min() guards
-    # a non-converged max_iter cutoff (still a valid label choice).
-    labels = cur.groupBy("src").agg(F.min("dst").alias("label"))
-    return (
-        nodes.join(labels, nodes.id == labels.src, "left")
-        .select(
-            F.col("id").alias("member_id"),
-            F.coalesce("label", "id").alias("cluster_id"),
+    else:
+        raise RuntimeError(
+            f"duplicate_clusters did not converge in max_iter={max_iter} "
+            "star alternations — raise max_iter"
         )
+    if stats is not None:
+        stats["rounds"] = it + 1
+    # at fixpoint every component is a star rooted at its minimum:
+    # members point at the root, the root points nowhere
+    labels = cur.groupBy("src").agg(F.min("dst").alias("label"))
+    return nodes.join(labels, nodes.id == labels.src, "left").select(
+        F.col("id").alias("member_id"),
+        F.coalesce("label", "id").alias("cluster_id"),
     )
+
+
+def _driver_clusters(edges: DataFrame, head: list) -> DataFrame:
+    """Resolve an ALREADY-COLLECTED small symmetric edge list into
+    ``(member_id, cluster_id = component minimum)`` with a driver-side
+    union-find — the small-graph fast path of :func:`duplicate_clusters`
+    (``head`` is the complete edge set, bounded by ``small_graph_max``;
+    see the constant's comment for the size argument). Path compression
+    + union by minimum root keeps the label exactly the component
+    minimum, the same contract the star loop converges to.
+    The frame returns through the Arrow driver path (``local_frame``)
+    with the edge columns' types, so consumers see the same schema the
+    distributed path produces."""
+    from pyspark.sql.types import StructField, StructType
+
+    from big_data_hadoop_spark.sources.io import local_frame
+
+    if not head:
+        # nothing to union: the checkpointed empty edge frame already
+        # has the schema, and reading it skips local_frame's slow
+        # empty-list fallback (~0.3 s more per call, measured)
+        return edges.select(
+            F.col("src").alias("member_id"), F.col("dst").alias("cluster_id")
+        )
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for row in head:
+        a, b = row[0], row[1]
+        if a not in parent:
+            parent[a] = a
+        if b not in parent:
+            parent[b] = b
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by minimum: the smaller id stays the root, so every
+            # root is its component's minimum at the end
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    rows = sorted((m, find(m)) for m in parent)
+    src_t = edges.schema["src"].dataType
+    dst_t = edges.schema["dst"].dataType
+    schema = StructType(
+        [
+            StructField("member_id", src_t, False),
+            StructField("cluster_id", dst_t, False),
+        ]
+    )
+    return local_frame(edges.sparkSession, rows, schema)
 
 
 def edit_distance_pairs(
@@ -1326,7 +1216,7 @@ def edit_distance_pairs(
     # (indexed, probe, shorts, near_short, and both verification
     # rejoins) — localCheckpoint pays the source scan once instead of
     # re-reading the corpus per subtree, the same reused-frame rule
-    # duplicate_clusters/_star_clusters follow (review finding)
+    # duplicate_clusters follows (review finding)
     base = (
         docs.select(
             F.col(id_col).alias("_id"),

@@ -149,7 +149,7 @@ def pagerank(
         # Symmetrize with ONE explode pass, not union-of-swapped-self:
         # the union form executes the (often expensive) upstream pair
         # subtree once per branch inside the edges checkpoint — the
-        # same re-execution dedup's _star_clusters documents and LPA
+        # same re-execution dedup's duplicate_clusters documents and LPA
         # fixed this round. Self-loops are NOT reversed: the unweighted
         # path's distinct collapses the mirrored copy anyway, and the
         # weighted sum must not double a self-loop's weight relative
@@ -817,10 +817,17 @@ def triangle_count(
     # instead of shuffling the wedges removes the whole exchange (guide
     # §3.1); the checkpointed edge list reports no stats, so Spark
     # would never pick the broadcast itself. Size-gated by the edge
-    # count (one sub-100ms job over checkpointed partitions): past the
-    # cap — graphs where 16·m approaches the broadcast budget — the
-    # planner keeps the plain distributed join.
-    if oriented.count() <= 4_000_000:
+    # count (one sub-100ms job over checkpointed partitions) against
+    # the session's own budget: 16 B per (v1, v2) row must fit
+    # spark.sql.autoBroadcastJoinThreshold (~4.19M rows at the engine's
+    # 64 MB), and a threshold <= 0 disables the hint as it disables the
+    # planner's broadcasts. Past the cap the plain distributed join stays.
+    budget = (
+        pairs.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if budget > 0 and oriented.count() * 16 <= budget:
         closing = F.broadcast(closing)
     triangles = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
     per_vertex = (

@@ -115,7 +115,9 @@ def curate_training_data(
       drops both 2 and 3); ``"cluster"`` resolves the pair graph into
       connected components (``dedup.duplicate_clusters``) and keeps the
       minimum id per component — exact keep-one semantics, at the cost
-      of the iterative label-propagation (runs Spark jobs when called).
+      of resolving the components (a driver union-find for small pair
+      graphs, iterative small-star/large-star rounds for large ones;
+      runs Spark jobs when called).
 
     The gates are one fused filter over the scan; their predicates are
     deliberately identical to the standalone probes so the whole funnel

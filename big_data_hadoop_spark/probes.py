@@ -1109,8 +1109,8 @@ def q57_winnow_neardup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q58_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
-    """Near-dup pair graph resolved into duplicate clusters (min-label
-    propagation over q19's MinHash-LSH pairs; xxhash64-based + iterative
+    """Near-dup pair graph resolved into duplicate clusters (connected
+    components of q19's MinHash-LSH pairs; xxhash64-based + iterative
     — rows-only check, value-verified against Python union-find in
     pytest). One row per non-singleton cluster with its canonical id,
     member count, and key-sorted member list. Round 10: the pair
@@ -1947,17 +1947,17 @@ def q84_trained_quality(spark: SparkSession, sf: str) -> DataFrame:
 
 def q85_star_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Small-star/large-star connected components (rows-only check —
-    iterative fixpoint, no ANSI-SQL form; pinned equal to union-find
-    AND to the jump method on these exact pairs in
-    tests/test_clusters.py). Same pair relation as q58, resolved with
-    ``method='star'`` — the O(log n)-alternation planet-scale scheme —
-    then aggregated to (cluster_id, n_members). Round 10: pairs load
-    from the per-corpus derived table (see q58)."""
+    iterative fixpoint, no ANSI-SQL form; pinned equal to union-find on
+    these exact pairs in tests/test_clusters.py). Same pair relation as
+    q58, resolved with ``small_graph_max=0`` so the graph skips the
+    driver union-find and runs the distributed O(log n)-alternation
+    loop, then aggregated to (cluster_id, n_members). Round 10: pairs
+    load from the per-corpus derived table (see q58)."""
     from big_data_hadoop_spark.operators.dedup import duplicate_clusters
 
     pairs = _shared_exact_pairs(spark, sf)
     return (
-        duplicate_clusters(pairs, method="star")
+        duplicate_clusters(pairs, small_graph_max=0)
         .groupBy("cluster_id")
         .agg(F.count("*").alias("n_members"))
         .orderBy("cluster_id")

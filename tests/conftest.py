@@ -79,7 +79,6 @@ _SLOWTIER_IDS = {
     "tests/test_cli.py::test_cli_ingest_incremental",
     "tests/test_cli.py::test_cli_neardup_graph_refresh_honors_meta_columns",
     "tests/test_clusters.py::test_star_converges_in_log_rounds_on_10k_chain",
-    "tests/test_clusters.py::test_stats_hook_reports_log_rounds",
     "tests/test_copurchase.py::test_copurchase_feeds_weighted_pagerank",
     "tests/test_crossengine_fuzz.py::test_corpus_profile_agrees_with_duckdb_on_random_text",
     "tests/test_crossengine_fuzz.py::test_curation_gate_agrees_with_duckdb_on_random_text",

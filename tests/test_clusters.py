@@ -1,14 +1,17 @@
-"""Duplicate-cluster resolution: min-label propagation must equal a
-Python union-find on adversarial graph shapes and on real minhash pairs
-at sf0.01, and the cluster-resolved dedup action must keep exactly one
-representative per component (unlike pairwise keep-first, which
-over-deletes on chains)."""
+"""Duplicate-cluster resolution: both the driver union-find path and the
+distributed small-star/large-star loop (forced with ``small_graph_max=0``)
+must equal a Python union-find on adversarial graph shapes and on real
+minhash pairs at sf0.01, and the cluster-resolved dedup action must keep
+exactly one representative per component (unlike pairwise keep-first,
+which over-deletes on chains)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.operators.dedup import (
+    SMALL_GRAPH_MAX_EDGES,
     dedup_by_clusters,
     duplicate_clusters,
     minhash_lsh_pairs,
@@ -38,10 +41,11 @@ def _union_find(pairs):
     return {m: min(ms + [root]) for root, ms in comp.items() for m in ms}
 
 
-def _clusters_of(spark, pairs):
+def _clusters_of(spark, pairs, **kw):
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     return {
-        r.member_id: r.cluster_id for r in duplicate_clusters(df).collect()
+        r.member_id: r.cluster_id
+        for r in duplicate_clusters(df, **kw).collect()
     }
 
 
@@ -59,10 +63,11 @@ def test_matches_union_find_on_adversarial_shapes(spark):
 
 
 def test_star_matches_union_find_on_adversarial_shapes(spark):
-    """The small-star/large-star method must produce IDENTICAL clusters
-    to union-find on the same shapes the jump method is pinned on, plus
-    star-hostile extras: a long chain whose minimum sits at the far
-    end, a binary tree, and a barbell (two cliques + long bridge)."""
+    """The distributed small-star/large-star loop (forced past the
+    driver path) must produce IDENTICAL clusters to union-find on
+    star-hostile shapes: a long chain whose minimum sits at the far
+    end, a binary tree, a barbell (two cliques + long bridge) and a
+    self-pair."""
     chain = [(i, i + 1) for i in range(100, 400)] + [(400, 7)]
     tree = [((i - 1) // 2 + 1000, i + 1000) for i in range(1, 64)]
     barbell = (
@@ -71,14 +76,42 @@ def test_star_matches_union_find_on_adversarial_shapes(spark):
         + [(504, 550), (550, 551), (551, 600)]
     )
     pairs = chain + tree + barbell + [(9000, 9000)]  # self-pair too
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {
-        r.member_id: r.cluster_id
-        for r in duplicate_clusters(df, method="star").collect()
-    }
+    got = _clusters_of(spark, pairs, small_graph_max=0)
     expect = _union_find([(a, b) for a, b in pairs if a != b])
     expect[9000] = 9000  # self-pair id is its own cluster
     assert got == expect
+
+
+def test_far_minimum_chain_matches_union_find(spark):
+    """A 61-node chain whose minimum (7) hangs off the FAR end: label
+    propagation from the near end needs a round per hop, the star loop
+    needs O(log n) alternations. Forced distributed, the labels must
+    all be 7."""
+    pairs = [(i, i + 1) for i in range(100, 160)] + [(160, 7)]
+    got = _clusters_of(spark, pairs, small_graph_max=0)
+    assert got == _union_find(pairs)
+    assert set(got.values()) == {7}
+
+
+def test_non_convergence_raises(spark):
+    """Running out of ``max_iter`` alternations is an error, never a
+    silent return of non-minimum labels."""
+    pairs = [(i, i + 1) for i in range(1, 10_000)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        duplicate_clusters(df, max_iter=3, small_graph_max=0)
+
+
+@pytest.mark.parametrize(
+    "small_graph_max", [SMALL_GRAPH_MAX_EDGES, 0], ids=["driver", "distributed"]
+)
+def test_null_endpoints_one_rule_on_both_paths(spark, small_graph_max):
+    """A half-NULL pair contributes no edge but keeps its non-NULL id as
+    a node (its own cluster unless linked elsewhere); NULL is never
+    emitted. The driver and distributed paths agree."""
+    pairs = [(1, 2), (2, None), (None, 3), (None, None)]
+    got = _clusters_of(spark, pairs, small_graph_max=small_graph_max)
+    assert got == {1: 1, 2: 1, 3: 3}
 
 
 def test_star_converges_in_log_rounds_on_10k_chain(spark):
@@ -87,45 +120,28 @@ def test_star_converges_in_log_rounds_on_10k_chain(spark):
     halves the remaining stride on a path, so convergence takes
     ~log2(10000) ≈ 14 alternations (O(log n), SoCC'14) — max_iter is
     capped at 16, so diameter-bound convergence (10,000 rounds needed)
-    produces wrong labels and fails the equality check."""
+    would exhaust it and raise."""
     n = 10_000
     pairs = [(i, i + 1) for i in range(1, n)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = duplicate_clusters(df, method="star", max_iter=16, small_graph_max=0)
+    got = duplicate_clusters(df, max_iter=16, small_graph_max=0)
     assert got.filter(F.col("cluster_id") != 1).count() == 0
     assert got.count() == n
 
 
-def test_star_and_jump_agree_on_minhash_pairs(spark):
-    docs = load_table(spark, SF_ORACLE, "documents")
-    pairs_df = minhash_lsh_pairs(docs, threshold=0.7)
-    jump = {
-        r.member_id: r.cluster_id
-        for r in duplicate_clusters(pairs_df, method="jump").collect()
-    }
-    star = {
-        r.member_id: r.cluster_id
-        for r in duplicate_clusters(pairs_df, method="star").collect()
-    }
-    assert star == jump and jump
-
-
-def test_unknown_cluster_method_rejected(spark):
-    import pytest as _pytest
-
-    df = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with _pytest.raises(ValueError, match="method"):
-        duplicate_clusters(df, method="propagate")
-
-
-def test_matches_union_find_on_minhash_pairs_sf001(spark):
+@pytest.mark.parametrize(
+    "small_graph_max", [SMALL_GRAPH_MAX_EDGES, 0], ids=["driver", "distributed"]
+)
+def test_matches_union_find_on_minhash_pairs_sf001(spark, small_graph_max):
     docs = load_table(spark, SF_ORACLE, "documents")
     pairs_df = minhash_lsh_pairs(docs, threshold=0.7)
     pairs = [(r.id_a, r.id_b) for r in pairs_df.collect()]
     assert pairs, "fixture corpus must contain near-dups"
     got = {
         r.member_id: r.cluster_id
-        for r in duplicate_clusters(pairs_df).collect()
+        for r in duplicate_clusters(
+            pairs_df, small_graph_max=small_graph_max
+        ).collect()
     }
     assert got == _union_find(pairs)
 
@@ -210,8 +226,9 @@ def test_q58_probe_matches_union_find(spark):
 
 
 def test_q85_probe_matches_union_find(spark):
-    """The q85 star-method registry probe's (cluster_id, n_members)
-    must equal the union-find component sizes of the same pairs."""
+    """The q85 registry probe (the distributed star loop, forced with
+    ``small_graph_max=0``) must report (cluster_id, n_members) equal to
+    the union-find component sizes of the same pairs."""
     from big_data_hadoop_spark.probes import QUERIES
 
     docs = load_table(spark, SF_ORACLE, "documents")
@@ -231,25 +248,18 @@ def test_q85_probe_matches_union_find(spark):
 
 
 def test_stats_hook_reports_log_rounds(spark):
-    """The stats out-param reports iterations for both methods: on a
-    1000-node chain the star method must converge in O(log n)
-    alternations (≤ 12 for n=1000), and the jump method's pointer
-    jumping likewise in O(log diameter) — the hook the sf1 exhibit
-    uses to show rounds stay FLAT as data grows."""
+    """The stats out-param reports star alternations: on a 1000-node
+    chain the loop must converge in O(log n) alternations (≤ 12 for
+    n=1000) — the hook the sf1 exhibit uses to show rounds stay FLAT
+    as data grows."""
     pairs = [(i, i + 1) for i in range(1, 1000)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     star_stats: dict = {}
     got = duplicate_clusters(
-        df, method="star", max_iter=16, stats=star_stats,
-        small_graph_max=0,
+        df, max_iter=16, stats=star_stats, small_graph_max=0
     )
     assert got.filter(F.col("cluster_id") != 1).count() == 0
     assert 2 <= star_stats["rounds"] <= 12
-    jump_stats: dict = {}
-    duplicate_clusters(
-        df, method="jump", stats=jump_stats, small_graph_max=0
-    ).collect()
-    assert 2 <= jump_stats["rounds"] <= 14
 
 
 def test_dedup_keep_best_col_keeps_argmax_per_cluster(spark):
@@ -290,12 +300,15 @@ def test_dedup_keep_best_col_keeps_argmax_per_cluster(spark):
 def test_empty_pair_graph_short_circuits_both_methods(spark):
     """An EMPTY pair graph (the clean-batch case on every store verb's
     within-batch pass) must resolve to an empty cluster frame without
-    running a propagation round: rounds == 0 via the stats hook, output
+    running a star round, at the default bound and at
+    ``small_graph_max=0`` alike: rounds == 0 via the stats hook, output
     schema/types unchanged, and dedup_by_clusters keeps every doc."""
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    for method in ("jump", "star"):
+    for small_graph_max in (SMALL_GRAPH_MAX_EDGES, 0):
         stats: dict = {}
-        out = duplicate_clusters(pairs, method=method, stats=stats)
+        out = duplicate_clusters(
+            pairs, stats=stats, small_graph_max=small_graph_max
+        )
         assert out.columns == ["member_id", "cluster_id"]
         assert [f.dataType.simpleString() for f in out.schema.fields] == [
             "bigint",
@@ -310,7 +323,7 @@ def test_empty_pair_graph_short_circuits_both_methods(spark):
 
 def test_small_graph_fast_path_matches_distributed(spark):
     """The driver union-find fast path (small_graph_max) must produce
-    EXACTLY the distributed methods' labels — same (member, component
+    EXACTLY the distributed star loop's labels — same (member, component
     minimum) pairs, same schema — on a graph mixing chains, stars, a
     self-loop, and singleton-free ids, and stats must report rounds=0
     (no propagation executed). The 10k-chain/convergence tests force
@@ -333,13 +346,7 @@ def test_small_graph_fast_path_matches_distributed(spark):
         r.member_id: r.cluster_id
         for r in duplicate_clusters(df, small_graph_max=0).collect()
     }
-    star = {
-        r.member_id: r.cluster_id
-        for r in duplicate_clusters(
-            df, method="star", small_graph_max=0
-        ).collect()
-    }
-    assert got == slow == star == _union_find(pairs)
+    assert got == slow == _union_find(pairs)
     # boundary: a graph LARGER than the bound must go distributed and
     # still agree (small_graph_max counts SYMMETRIC edge rows)
     tiny_bound = duplicate_clusters(df, small_graph_max=2)

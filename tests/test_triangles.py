@@ -111,3 +111,23 @@ def test_triangles_empty_and_degenerate(spark):
     # only self-loops → no simple edges → empty result
     loops = spark.createDataFrame([(7, 7), (8, 8)], "id_a long, id_b long")
     assert triangle_count(loops).count() == 0
+
+
+def test_closing_broadcast_follows_session_threshold(spark):
+    """The closing-edge broadcast is capped by
+    spark.sql.autoBroadcastJoinThreshold (16 B per edge row), so a
+    session that disables broadcasts (-1) gets no BroadcastHashJoin,
+    while the engine's 64 MB default keeps the broadcast plan."""
+    from big_data_hadoop_spark.plans import formatted_plan
+
+    tri = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (1, 9)], "id_a long, id_b long"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    assert "BroadcastHashJoin" in formatted_plan(triangle_count(tri))
+    try:
+        spark.conf.set(key, "-1")
+        assert "BroadcastHashJoin" not in formatted_plan(triangle_count(tri))
+    finally:
+        spark.conf.set(key, prior)

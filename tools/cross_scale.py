@@ -89,7 +89,7 @@ def main() -> None:
             )
             stats: dict = {}
             n_pairs = pairs.count()
-            duplicate_clusters(pairs, method="star", stats=stats).count()
+            duplicate_clusters(pairs, stats=stats, small_graph_max=0).count()
             rounds[sf_label] = {
                 "edges": n_pairs,
                 "alternations": stats["rounds"],
