@@ -88,16 +88,16 @@ ROUND-12 RECALL LEVER — acting on the number round 11 measured
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.operators.dedup import dedup_by_clusters
 from big_data_hadoop_spark.operators.similarity import (
     _as_double,
+    _finite_centroids,
     _flat,
     _flat_dot,
+    assign_cells,
     ivf_build,
 )
 from big_data_hadoop_spark.sources import batch_store
@@ -112,134 +112,6 @@ from big_data_hadoop_spark.sources import batch_store
 #: (``embedding_store_recall_audit``) and consider raising the
 #: meta-pinned ``check_cells`` (cheap) before reaching for a rebuild.
 BOUNDARY_MARGIN = 0.25
-
-
-def _finite_centroids(centroids: list[list[float]]) -> list[list[float]]:
-    """Refuse a centroid with a NaN/inf coordinate, naming its cell: no
-    row has a finite distance to it, and rendered as a SQL literal it
-    would fail far from the cause (``nanD`` is not a literal)."""
-    for i, c in enumerate(centroids):
-        if not all(math.isfinite(x) for x in c):
-            raise ValueError(
-                f"centroid of cell {i} has a non-finite coordinate — "
-                "the quantizer fit diverged or the pinned meta is "
-                "corrupt; refit with embedding_store_rebuild"
-            )
-    return centroids
-
-
-def assign_cells(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    with_dist: bool = False,
-    check_cells: int = 1,
-) -> DataFrame:
-    """Add ``cell int``: index of the nearest pinned centroid by
-    squared L2, FIRST minimum on ties (deterministic — a pure function
-    of the embedding and the centroid list). One narrow pass, k x dim
-    multiply-adds per row via array HOFs — this runs once per INPUT
-    row; the per-PAIR hot path downstream uses the flat-column
-    scoring. ``with_dist`` also emits ``cell_dist double`` (the
-    squared L2 to the winning centroid — the assignment metric itself,
-    so the store's drift diagnostic measures exactly what assignment
-    optimizes) and ``cell_dist2 double`` (to the RUNNER-UP centroid;
-    NULL with a single centroid) — the boundary-margin diagnostic's
-    raw input. ``check_cells`` = p > 1 also emits ``cells
-    array<int>``: the p nearest centroid indices in distance order,
-    ties broken by LOWER index (so ``cells[0] == cell`` always — the
-    same first-minimum rule, pinned in tests); capped at the centroid
-    count. This is IVF's n_probe applied to the dedup tier: a PROBE
-    row checks its p nearest cells while stored rows keep living in
-    exactly one."""
-    p = max(1, int(check_cells))
-    if not centroids:
-        out = df.withColumn("cell", F.lit(0).cast("int"))
-        if p > 1:
-            out = out.withColumn("cells", F.array(F.lit(0).cast("int")))
-        if with_dist:
-            out = out.withColumn("cell_dist", F.lit(0.0)).withColumn(
-                "cell_dist2", F.lit(None).cast("double")
-            )
-        return out
-    k = len(_finite_centroids(centroids))
-    # ONE parsed literal matrix: k·dim F.lit Column nodes through py4j
-    # cost ~0.5 s of driver time per assignment at 8x64 (repr(float)
-    # round-trips doubles exactly, so the parsed literals are the same
-    # doubles the Column path produced — pinned by the plan-equality A/B)
-    cents = F.expr(
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")"
-            for c in centroids
-        )
-        + ")"
-    )
-    emb = _as_double(F.col(vec_col))
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(emb, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    # materialize the k-vector ONCE per row; the argmin, min, runner-up
-    # and top-p all read it (inlining `dists` more than once would
-    # multiply the k x dim work). The scratch column name is namespaced
-    # so a caller frame that happens to carry a same-named column is
-    # never clobbered then dropped (round-11 self-review).
-    scratch = "__bdhs_assign_dists"
-    while scratch in df.columns:
-        scratch += "_"
-    out = df.withColumn(scratch, dists).withColumn(
-        "cell",
-        (
-            F.array_position(F.col(scratch), F.array_min(F.col(scratch)))
-            - 1
-        ).cast("int"),
-    )
-    scratch2 = None
-    if p > 1:
-        # (distance, index) struct sort: lexicographic — distance
-        # ascending, index ascending on ties, so element 1 is exactly
-        # the argmin rule above. Materialized like `scratch` so the
-        # top-p slice AND the runner-up distance below read ONE sort
-        # per row (round-12 review: cell_dist2 previously re-sorted
-        # the k-vector a second time).
-        scratch2 = "__bdhs_assign_ranked"
-        while scratch2 in df.columns:
-            scratch2 += "_"
-        out = out.withColumn(
-            scratch2,
-            F.array_sort(
-                F.zip_with(
-                    F.col(scratch),
-                    F.sequence(F.lit(0), F.lit(k - 1)),
-                    lambda d, i: F.struct(d.alias("d"), i.alias("i")),
-                )
-            ),
-        ).withColumn(
-            "cells",
-            F.transform(
-                F.slice(F.col(scratch2), 1, min(p, k)),
-                lambda s: s["i"].cast("int"),
-            ),
-        )
-    if with_dist:
-        out = out.withColumn("cell_dist", F.array_min(F.col(scratch)))
-        if k < 2:
-            cd2 = F.lit(None).cast("double")
-        elif scratch2 is not None:
-            # the struct sort's 2nd element carries the 2nd-smallest
-            # distance (d is the primary sort key, so the d components
-            # come out as the sorted multiset)
-            cd2 = F.element_at(F.col(scratch2), 2)["d"]
-        else:
-            cd2 = F.element_at(F.array_sort(F.col(scratch)), 2)
-        out = out.withColumn("cell_dist2", cd2)
-    out = out.drop(scratch)
-    return out.drop(scratch2) if scratch2 is not None else out
 
 
 def _prune_to_cells(history: DataFrame, cells: list[int], meta: dict):

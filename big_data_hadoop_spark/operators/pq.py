@@ -40,8 +40,12 @@ in Python:
   distances is one aggregation with map-side combine (the shuffle
   carries one row per (query, corpus id) pair); top-k is the standard
   per-query rank window. No driver collect anywhere on the search path.
-  A ``residual=True`` IVF-PQ index (full IVFADC) widens the LUT to one
-  per (query, PROBED cell) — ``q*n_probe*m*k`` rows, still
+  ``ivfpq_search`` probes cells exactly as IVF search does: each query
+  ranks the coarse centroids with ``similarity.assign_cells`` (one
+  parsed literal matrix, a per-row sort — no shuffle) and keeps its
+  ``n_probe`` nearest. A ``residual=True`` IVF-PQ index (full IVFADC)
+  widens the LUT to one per (query, PROBED cell), reading that cell's
+  centroid from the same matrix — ``q*n_probe*m*k`` rows, still
   query-batch-sized, never corpus-sized.
 
 Codes are deliberately storable: persist ``pq_encode``'s output plus
@@ -62,6 +66,10 @@ from pyspark.sql.window import Window
 from big_data_hadoop_spark.operators.similarity import (
     _as_double,
     _bounded_training_sample,
+    _centroid_matrix,
+    _probe_cells,
+    _sq_l2,
+    ivf_build,
 )
 
 __all__ = [
@@ -97,15 +105,6 @@ class PQCodebook:
     @property
     def dsub(self) -> int:
         return self.dim // self.m
-
-
-def _sq_l2(a, b) -> F.Column:
-    """Squared L2 between two equal-length double arrays, left-fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _subvectors(df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int) -> DataFrame:
@@ -376,19 +375,6 @@ class IVFPQIndex:
     residual: bool = False
 
 
-def _centroid_lits(centroids: list[list[float]]):
-    """The coarse centroids as one literal array-of-arrays column —
-    ``element_at(..., cell + 1)`` indexes a row's centroid without any
-    broadcast variable or join (n_cells × dim doubles of plan
-    literals, the ``ivfpq_search`` probing idiom)."""
-    return F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in c])
-            for c in centroids
-        ]
-    )
-
-
 def ivfpq_build(
     df: DataFrame,
     dim: int,
@@ -420,10 +406,8 @@ def ivfpq_build(
     (query, PROBED cell) — ``q × n_probe × m × k`` rows, still a
     broadcast-sized frame (it scales with the query batch, never the
     corpus). The residual pass is declarative (``zip_with`` subtract
-    against the literal centroid array under the SAME bounded-sample
-    fits) — no extra shuffle vs the raw mode."""
-    from big_data_hadoop_spark.operators.similarity import ivf_build
-
+    against the cell's row of the parsed centroid matrix under the
+    SAME bounded-sample fits) — no extra shuffle vs the raw mode."""
     ivf = ivf_build(
         df, n_cells=n_cells, id_col=id_col, vec_col=vec_col, seed=seed,
         train_cap=train_cap, n_rows=n_rows,
@@ -439,7 +423,7 @@ def ivfpq_build(
             F.zip_with(
                 F.col("emb_d"),
                 F.element_at(
-                    _centroid_lits(ivf.centroids), F.col("cell") + 1
+                    _centroid_matrix(ivf.centroids), F.col("cell") + 1
                 ),
                 lambda x, y: x - y,
             ).alias("_res"),
@@ -493,38 +477,19 @@ def ivfpq_search(
     q = queries.select(
         F.col(query_id_col), _as_double(F.col(query_vec_col)).alias("_qd")
     )
-    # rank the driver-side centroids per query (tiny literal table)
-    centers = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("cell"),
-                F.array(*[F.lit(float(x)) for x in c]).alias("ctr"),
-            )
-            for i, c in enumerate(index.centroids)
-        ]
-    )
-    d2 = _sq_l2(F.col("_qd"), F.col("c.ctr"))
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("d2"), F.asc("q_cell"))
-    probed_full = (
-        q.select(query_id_col, "_qd", F.explode(centers).alias("c"))
-        .select(
-            query_id_col,
-            "_qd",
-            F.col("c.cell").alias("q_cell"),
-            F.col("c.ctr").alias("_ctr"),
-            d2.alias("d2"),
-        )
-        .withColumn("pr", F.row_number().over(w))
-        .filter(F.col("pr") <= n_probe)
-    )
+    probed = _probe_cells(q, index.centroids, "_qd", n_probe)
     if index.residual:
         # one LUT row set per (query, probed cell): the query's
         # residual against THAT cell vs every (j, code) centroid
-        probed_res = probed_full.select(
+        probed_res = probed.select(
             query_id_col,
             "q_cell",
             F.zip_with(
-                F.col("_qd"), F.col("_ctr"), lambda x, y: x - y
+                F.col("_qd"),
+                F.element_at(
+                    _centroid_matrix(index.centroids), F.col("q_cell") + 1
+                ),
+                lambda x, y: x - y,
             ).alias("_qr"),
         )
         lut = (
@@ -562,7 +527,7 @@ def ivfpq_search(
             .agg(F.sum("pdist").alias("adc_dist"))
         )
     else:
-        probed = probed_full.select(query_id_col, "q_cell")
+        probed = probed.select(query_id_col, "q_cell")
         lut = (
             q.join(F.broadcast(cb.entries))
             .select(

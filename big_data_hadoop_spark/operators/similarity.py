@@ -69,6 +69,13 @@ def dot(
 
 
 def norm(a: Column | str, dim: int | None = None) -> Column:
+    """Left-fold L2 norm: ``sqrt((0.0 + a1*a1) + a2*a2 + ...)``.
+
+    The same contract as :func:`dot`: with ``dim`` given, ``a`` must be
+    a column NAME (a Column raises ``TypeError``) and the fold is
+    unrolled into one parsed ``element_at`` chain with the identical
+    association order, so both forms are bit-equal.
+    """
     if dim is not None:
         if not isinstance(a, str):
             raise TypeError("norm(dim=...) takes a column name, not a Column")
@@ -535,6 +542,145 @@ def _bounded_training_sample(
     return e.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(modulus)) == 0)
 
 
+def _finite_centroids(centroids: list[list[float]]) -> list[list[float]]:
+    """Refuse a centroid with a NaN/inf coordinate, naming its cell: no
+    row has a finite distance to it, and rendered as a SQL literal it
+    would fail far from the cause (``nanD`` is not a literal)."""
+    for i, c in enumerate(centroids):
+        if not all(math.isfinite(x) for x in c):
+            raise ValueError(
+                f"centroid of cell {i} has a non-finite coordinate — "
+                "the quantizer fit diverged or the pinned centroids are "
+                "corrupt; refit (ivf_build / embedding_store_rebuild)"
+            )
+    return centroids
+
+
+def _sq_l2(a: Column, b: Column) -> Column:
+    """Squared L2 between two equal-length double arrays, left-fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _centroid_matrix(centroids: list[list[float]]) -> Column:
+    """The centroids as ONE parsed ``array<array<double>>`` literal —
+    ``element_at(matrix, cell + 1)`` is a cell's centroid. k·dim
+    ``F.lit`` Column nodes through py4j cost ~0.5 s of driver time at
+    8x64; the SQL parse is milliseconds, and ``repr(float)``
+    round-trips doubles exactly, so the literals are the same doubles
+    (pinned by the plan-equality A/B)."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")"
+            for c in _finite_centroids(centroids)
+        )
+        + ")"
+    )
+
+
+def assign_cells(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str = "embedding",
+    with_dist: bool = False,
+    check_cells: int = 1,
+) -> DataFrame:
+    """Add ``cell int``: index of the nearest centroid by squared L2,
+    FIRST minimum on ties (deterministic — a pure function of the
+    vector and the centroid list). The one kernel that ranks rows
+    against driver-side centroids: IVF and IVF-PQ search probe with it
+    and the embedding store assigns with it. One narrow pass over the
+    parsed centroid matrix (``_centroid_matrix``, which refuses a
+    non-finite centroid), k x dim left-fold ``(x-y)²`` multiply-adds
+    per row via array HOFs — this runs once per INPUT row; the
+    per-PAIR hot path downstream uses the flat-column scoring.
+    ``with_dist`` also emits ``cell_dist double`` (the squared L2 to
+    the winning centroid — the assignment metric itself, so the
+    store's drift diagnostic measures exactly what assignment
+    optimizes) and ``cell_dist2 double`` (to the RUNNER-UP centroid;
+    NULL with a single centroid) — the boundary-margin diagnostic's
+    raw input. ``check_cells`` = p > 1 also emits ``cells
+    array<int>``: the p nearest centroid indices in distance order,
+    ties broken by LOWER index (so ``cells[0] == cell`` always — the
+    same first-minimum rule, pinned in tests); capped at the centroid
+    count. This is IVF's n_probe: a query probes its p nearest cells,
+    and a store PROBE row checks them while stored rows keep living
+    in exactly one."""
+    p = max(1, int(check_cells))
+    if not centroids:
+        out = df.withColumn("cell", F.lit(0).cast("int"))
+        if p > 1:
+            out = out.withColumn("cells", F.array(F.lit(0).cast("int")))
+        if with_dist:
+            out = out.withColumn("cell_dist", F.lit(0.0)).withColumn(
+                "cell_dist2", F.lit(None).cast("double")
+            )
+        return out
+    k = len(centroids)
+    emb = _as_double(F.col(vec_col))
+    dists = F.transform(_centroid_matrix(centroids), lambda c: _sq_l2(emb, c))
+    # materialize the k-vector ONCE per row; the argmin, min, runner-up
+    # and top-p all read it (inlining `dists` more than once would
+    # multiply the k x dim work). The scratch column name is namespaced
+    # so a caller frame that happens to carry a same-named column is
+    # never clobbered then dropped (round-11 self-review).
+    scratch = "__bdhs_assign_dists"
+    while scratch in df.columns:
+        scratch += "_"
+    out = df.withColumn(scratch, dists).withColumn(
+        "cell",
+        (
+            F.array_position(F.col(scratch), F.array_min(F.col(scratch)))
+            - 1
+        ).cast("int"),
+    )
+    scratch2 = None
+    if p > 1:
+        # (distance, index) struct sort: lexicographic — distance
+        # ascending, index ascending on ties, so element 1 is exactly
+        # the argmin rule above. Materialized like `scratch` so the
+        # top-p slice AND the runner-up distance below read ONE sort
+        # per row (round-12 review: cell_dist2 previously re-sorted
+        # the k-vector a second time).
+        scratch2 = "__bdhs_assign_ranked"
+        while scratch2 in df.columns:
+            scratch2 += "_"
+        out = out.withColumn(
+            scratch2,
+            F.array_sort(
+                F.zip_with(
+                    F.col(scratch),
+                    F.sequence(F.lit(0), F.lit(k - 1)),
+                    lambda d, i: F.struct(d.alias("d"), i.alias("i")),
+                )
+            ),
+        ).withColumn(
+            "cells",
+            F.transform(
+                F.slice(F.col(scratch2), 1, min(p, k)),
+                lambda s: s["i"].cast("int"),
+            ),
+        )
+    if with_dist:
+        out = out.withColumn("cell_dist", F.array_min(F.col(scratch)))
+        if k < 2:
+            cd2 = F.lit(None).cast("double")
+        elif scratch2 is not None:
+            # the struct sort's 2nd element carries the 2nd-smallest
+            # distance (d is the primary sort key, so the d components
+            # come out as the sorted multiset)
+            cd2 = F.element_at(F.col(scratch2), 2)["d"]
+        else:
+            cd2 = F.element_at(F.array_sort(F.col(scratch)), 2)
+        out = out.withColumn("cell_dist2", cd2)
+    out = out.drop(scratch)
+    return out.drop(scratch2) if scratch2 is not None else out
+
+
 @dataclass
 class IVFIndex:
     """A built IVF index: driver-side centroids (``n_cells × dim`` floats
@@ -606,47 +752,34 @@ def ivf_build(
         available = n_cells
     else:
         available = train.limit(n_cells).count()
-    if available == 0:
+    if available <= 1:
+        # No fit: an empty corpus has no cells, and with one training
+        # row (this Spark's KMeans rejects k=1 anyway) the one cell's
+        # centroid IS the sampled vector. ORDERED (review finding): with
+        # n_cells=1 over a multi-row corpus an unordered limit(1)
+        # returned an arbitrary partition's first row, so the persisted
+        # centroid depended on cluster layout; min-id is deterministic
+        # (the k=1 centroid is a representative, not a mean — recall is
+        # governed by n_probe).
+        centroids = []
+        if available == 1:
+            (row,) = train.orderBy(id_col).limit(1).select("_v").collect()
+            centroids = [[float(x) for x in row._v.toArray()]]
         assigned = with_norm(e, vec_col=vec_col).select(
             F.col(id_col), F.lit(0).alias("cell"), "emb_d", "nrm"
         )
-        # honor `table` here too (review finding: the empty branch
-        # skipped persistence, so a serving job's ivf_load/spark.table
-        # failed only when an input partition happened to be empty)
-        if table is not None:
-            from big_data_hadoop_spark.sources.io import write_bucketed
-
-            write_bucketed(assigned, table, buckets, key="cell")
-            assigned = df.sparkSession.table(table)
-        return IVFIndex([], assigned, id_col)
-    if available == 1:
-        # This Spark's KMeans rejects k=1 — and with one training row
-        # there is nothing to fit anyway: one cell whose centroid IS the
-        # sampled vector. ORDERED (review finding): with n_cells=1 over
-        # a multi-row corpus an unordered limit(1) returned an arbitrary
-        # partition's first row, so the persisted centroid depended on
-        # cluster layout; min-id is deterministic (the k=1 centroid is a
-        # representative, not a mean — recall is governed by n_probe).
-        (row,) = train.orderBy(id_col).limit(1).select("_v").collect()
-        assigned = with_norm(e, vec_col=vec_col).select(
-            F.col(id_col), F.lit(0).alias("cell"), "emb_d", "nrm"
+    else:
+        model = KMeans(
+            k=min(n_cells, available), seed=seed, featuresCol="_v",
+            predictionCol="cell", maxIter=max_iter,
+        ).fit(train)
+        IVF_FIT_COUNT += 1
+        assigned = with_norm(model.transform(e), vec_col=vec_col).select(
+            F.col(id_col), "cell", "emb_d", "nrm"
         )
-        centroids = [[float(x) for x in row._v.toArray()]]
-        if table is not None:
-            from big_data_hadoop_spark.sources.io import write_bucketed
-
-            write_bucketed(assigned, table, buckets, key="cell")
-            assigned = df.sparkSession.table(table)
-        return IVFIndex(centroids, assigned, id_col)
-    model = KMeans(
-        k=min(n_cells, available), seed=seed, featuresCol="_v",
-        predictionCol="cell", maxIter=max_iter,
-    ).fit(train)
-    IVF_FIT_COUNT += 1
-    assigned = with_norm(model.transform(e), vec_col=vec_col).select(
-        F.col(id_col), "cell", "emb_d", "nrm"
-    )
-    centroids = [[float(x) for x in c] for c in model.clusterCenters()]
+        centroids = [[float(x) for x in c] for c in model.clusterCenters()]
+    # the empty index persists too: a serving job's ivf_load/spark.table
+    # must not fail just because an input partition happened to be empty
     if table is not None:
         from big_data_hadoop_spark.sources.io import write_bucketed
 
@@ -670,6 +803,20 @@ def _ivf_empty_result(index: IVFIndex, id_type) -> DataFrame:
     )
 
 
+def _probe_cells(
+    q: DataFrame, centroids: list[list[float]], vec_col: str, n_probe: int
+) -> DataFrame:
+    """``q`` once per probed cell, in ``q_cell``: the ``n_probe``
+    nearest centroids by the :func:`assign_cells` rule (squared L2,
+    lower index on ties). A per-row sort — nothing shuffles before the
+    broadcast join; ``n_probe < 1`` probes nothing."""
+    ranked = assign_cells(q, centroids, vec_col=vec_col, check_cells=n_probe)
+    cells = F.col("cells") if n_probe > 1 else F.array("cell")
+    return ranked.select(*q.columns, F.explode(cells).alias("q_cell")).filter(
+        F.lit(n_probe >= 1)
+    )
+
+
 def _ivf_search_core(
     index: IVFIndex,
     q: DataFrame,
@@ -678,35 +825,12 @@ def _ivf_search_core(
     exclude_self: bool,
 ) -> DataFrame:
     """Shared IVF search: ``q`` is ``(query_id, q_emb, q_nrm)``. Each
-    query ranks the driver-side centroids (a literal cell table — tiny),
-    keeps its ``n_probe`` nearest cells, and exact-cosine re-ranks inside
-    them via a broadcast equi-join on the cell id — the corpus meets
-    candidates on a short key, never all-pairs."""
+    query keeps its ``n_probe`` nearest cells (``_probe_cells`` over
+    the index's parsed centroid matrix) and exact-cosine re-ranks
+    inside them via a broadcast equi-join on the cell id — the corpus
+    meets candidates on a short key, never all-pairs."""
     assigned, id_col = index.assigned, index.id_col
-    centers = [
-        F.struct(
-            F.lit(i).alias("cell"),
-            F.array(*[F.lit(float(x)) for x in c]).alias("ctr"),
-        )
-        for i, c in enumerate(index.centroids)
-    ]
-    cells = F.explode(F.array(*centers)).alias("c")
-    dist2 = F.aggregate(
-        F.zip_with(F.col("q_emb"), F.col("c.ctr"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probed = (
-        q.select("query_id", "q_emb", "q_nrm", cells)
-        .select(
-            "query_id", "q_emb", "q_nrm", F.col("c.cell").alias("cell"),
-            dist2.alias("d2"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "q_emb", "q_nrm", F.col("cell").alias("q_cell"))
-    )
+    probed = _probe_cells(q, index.centroids, "q_emb", n_probe)
     cond = F.col("cell") == F.col("q_cell")
     if exclude_self:
         cond = cond & (F.col("query_id") != F.col(id_col))
@@ -759,10 +883,12 @@ def ivf_search_vectors(
     serving shape: queries arrive as ``(id, embedding)`` rows that are
     NOT part of the indexed corpus (no self-exclusion), e.g. a batch of
     fresh documents to link against the training set. Same plan as
-    :func:`ivf_search`: centroid ranking on the driver-side literal
-    table, broadcast of the probed queries, cell equi-join, exact cosine
-    re-rank — the corpus is scanned once per batch regardless of query
-    count."""
+    :func:`ivf_search`: each query ranks the centroids with
+    :func:`assign_cells` (a per-row sort over one parsed literal
+    matrix; a non-finite centroid raises ``ValueError`` naming its
+    cell), then broadcast of the probed queries, cell equi-join, exact
+    cosine re-rank — the corpus is scanned once per batch regardless of
+    query count."""
     if not index.centroids:
         return _ivf_empty_result(index, queries.schema[id_col].dataType)
     q = with_norm(queries, vec_col=vec_col).select(

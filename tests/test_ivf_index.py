@@ -280,3 +280,155 @@ def test_lsh_multi_table_backcompat_and_monotone_recall(spark, corpus):
         sim.lsh_bucketed_topk(
             corpus, query_ids=qids, k=k, dim=6, num_planes=6, n_tables=0
         )
+
+
+# Hand-pinned centroids with dyadic coordinates, so squared-L2 ties are
+# exact in floating point: cell 3 sits midway between cells 0 and 1.
+_CENTS = [
+    [10.0, 5.0, 0.0, 0.0, 0.0, 0.0],
+    [0.0, 0.0, 10.0, 5.0, 0.0, 0.0],
+    [0.0, 0.0, 0.0, 0.0, 10.0, 5.0],
+    [5.0, 2.5, 5.0, 2.5, 0.0, 0.0],
+]
+
+
+def _np_probe(v, cents, n_probe):
+    """The n_probe nearest centroids by left-fold squared L2, lower
+    index on ties."""
+    d = [sum((float(x) - y) ** 2 for x, y in zip(v, c)) for c in cents]
+    return sorted(range(len(cents)), key=lambda i: (d[i], i))[:n_probe]
+
+
+def _hand_indexes(spark, corpus, cents):
+    """An IVF and a raw-mode IVF-PQ index over ``corpus`` whose cells
+    are ``cents`` and whose assignment is the NumPy nearest-centroid
+    rule — built directly, no coarse KMeans."""
+    from big_data_hadoop_spark.operators import pq as pqm
+
+    cells = spark.createDataFrame(
+        [(r.vec_id, _np_probe(r.embedding, cents, 1)[0]) for r in corpus.collect()],
+        "vec_id long, cell int",
+    )
+    assigned = sim.with_norm(corpus).join(cells, "vec_id").select(
+        "vec_id", "cell", "emb_d", "nrm"
+    )
+    cb = pqm.pq_train(corpus, dim=6, m=2, k=4, seed=7)
+    codes = pqm.pq_encode(corpus, cb).join(cells, "vec_id")
+    return (
+        sim.IVFIndex(cents, assigned, "vec_id"),
+        pqm.IVFPQIndex(centroids=cents, cb=cb, codes=codes, id_col="vec_id"),
+    )
+
+
+def test_partial_probe_matches_numpy_reference(spark, corpus):
+    """n_probe < n_cells probes exactly the n_probe nearest centroids,
+    lower index on ties, and ranks by exact cosine inside them — for
+    ivf_search_vectors row for row, and every raw IVF-PQ hit lies in
+    the same cells. Query 300 ties cells 0 and 1 for the second probe;
+    query 301 ties cells 1, 2 and 3 for both."""
+    import numpy as np
+
+    from big_data_hadoop_spark.operators.pq import ivfpq_search
+
+    index, pindex = _hand_indexes(spark, corpus, _CENTS)
+    qrows = [
+        (300, [5.0, 2.5, 5.0, 2.5, 0.0, 0.0]),
+        (301, [0.0, 0.0, 5.0, 2.5, 5.0, 2.5]),
+        (302, [0.1, 0.0, 10.2, 4.9, 0.0, 0.1]),
+        (303, [9.9, 5.1, 0.2, 0.0, 0.3, 0.0]),
+    ]
+    queries = spark.createDataFrame(
+        qrows, "query_id long, embedding array<double>"
+    )
+    probes = {qid: _np_probe(qv, _CENTS, 2) for qid, qv in qrows}
+    assert probes[300] == [3, 0] and probes[301] == [1, 2]
+    cell_of = {r.vec_id: r.cell for r in index.assigned.collect()}
+    corpus_rows = corpus.collect()
+    expect = []
+    for qid, qv in qrows:
+        qv = np.array(qv)
+        sims = sorted(
+            (
+                (
+                    float(
+                        np.dot(qv, np.array(r.embedding))
+                        / (np.linalg.norm(qv) * np.linalg.norm(r.embedding))
+                    ),
+                    r.vec_id,
+                )
+                for r in corpus_rows
+                if cell_of[r.vec_id] in probes[qid]
+            ),
+            key=lambda t: (-t[0], t[1]),
+        )[:3]
+        expect += [(qid, vid, round(s, 9)) for s, vid in sims]
+    got = sim.ivf_search_vectors(index, queries, k=3, n_probe=2).collect()
+    assert sorted(
+        (r.query_id, r.neighbor_id, round(r.sim, 9)) for r in got
+    ) == sorted(expect)
+
+    hits = ivfpq_search(pindex, queries, topk=5, n_probe=2).collect()
+    assert {r.query_id for r in hits} == set(probes)
+    for r in hits:
+        assert cell_of[r.vec_id] in probes[r.query_id], r
+
+
+def test_non_finite_centroid_refused_by_search(spark, corpus):
+    """A NaN/inf IVF centroid raises ValueError naming its cell in every
+    search path — it used to rank silently last."""
+    import dataclasses
+
+    from big_data_hadoop_spark.operators.pq import ivfpq_search
+
+    queries = spark.createDataFrame(
+        [(300, [5.0, 2.5, 5.0, 2.5, 0.0, 0.0])],
+        "query_id long, embedding array<double>",
+    )
+    index, pindex = _hand_indexes(spark, corpus, _CENTS)
+    for bad in (float("nan"), float("inf")):
+        cents = [list(c) for c in _CENTS]
+        cents[2][4] = bad
+        bad_index = sim.IVFIndex(cents, index.assigned, "vec_id")
+        with pytest.raises(ValueError, match="cell 2"):
+            sim.ivf_search(bad_index, [0, 1], k=3, n_probe=2)
+        with pytest.raises(ValueError, match="cell 2"):
+            sim.ivf_search_vectors(bad_index, queries, k=3, n_probe=2)
+        for residual in (False, True):
+            with pytest.raises(ValueError, match="cell 2"):
+                ivfpq_search(
+                    dataclasses.replace(
+                        pindex, centroids=cents, residual=residual
+                    ),
+                    queries,
+                    n_probe=2,
+                )
+
+
+def test_dot_norm_dim_contract(spark):
+    """``dot``/``norm`` with ``dim`` take column NAMES only (a Column
+    raises TypeError), and the unrolled form is bit-equal to the
+    array fold: same left-fold association order."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [
+            ([1e16, 1.0, -1e16, 0.1], [1.0, 1.0, 1.0, 3.0]),
+            ([0.1, 0.2, 0.3, 1e-300], [0.7, -1.3, 2.9, 1e300]),
+        ],
+        "a array<double>, b array<double>",
+    )
+    with pytest.raises(TypeError):
+        sim.dot(F.col("a"), F.col("b"), dim=4)
+    with pytest.raises(TypeError):
+        sim.dot("a", F.col("b"), dim=4)
+    with pytest.raises(TypeError):
+        sim.norm(F.col("a"), dim=4)
+    rows = df.select(
+        sim.dot("a", "b", dim=4).alias("dot_u"),
+        sim.dot(F.col("a"), F.col("b")).alias("dot_f"),
+        sim.norm("a", dim=4).alias("norm_u"),
+        sim.norm(F.col("a")).alias("norm_f"),
+    ).collect()
+    for r in rows:
+        assert r.dot_u.hex() == r.dot_f.hex()
+        assert r.norm_u.hex() == r.norm_f.hex()
