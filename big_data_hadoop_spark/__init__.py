@@ -13,7 +13,7 @@ Design stance (see SURVEY.md):
 - Catalyst supplies partial aggregation (the reference's hand-wired
   combiners), shuffle planning (its custom partitioner) and top-K
   (``TakeOrderedAndProject`` replaces driver-side ``take(1000)``).
-- Co-occurrence windows are computed with array higher-order functions
+- Co-occurrence windows are computed by zipping shifted array slices
   (no self-join), so the only shuffle is the final aggregation.
 """
 

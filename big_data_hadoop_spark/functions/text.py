@@ -65,6 +65,16 @@ def categorize(token: Column) -> Column:
     )
 
 
+def category_sql(token_sql: str) -> str:
+    """:func:`categorize` as a SQL ``CASE`` over the SQL expression
+    ``token_sql``, for lambdas parsed from a string (``t -> ...``); the
+    doubled backslashes are SQL string-literal escapes."""
+    return (
+        f"CASE WHEN {token_sql} RLIKE '\\\\A{WORD_PATTERN}\\\\z' THEN '{WORD}' "
+        f"WHEN {token_sql} RLIKE '\\\\A{NUMBER_PATTERN}\\\\z' THEN '{NUMBER}' END"
+    )
+
+
 def kept_tokens(text: Column, lowercase: bool = True) -> Column:
     """Kept-token array: single-space split with empties dropped
     (lowercased by default) — the shared token contract of the

@@ -6,14 +6,16 @@ co-occurrence ``(t[i], t[i+d])`` iff ``t[i+d]`` has the SAME category
 (``HadoopWordPairs.java:54-79``, ``HadoopWordPairs2.java:49-77``,
 ``HadoopWordStripes2.java:50-112``).
 
-Spark-first formulation: the window is computed with array higher-order
-functions over the per-document token array — ``transform`` with an index
-lambda enumerates positions, ``F.get`` handles out-of-range neighbors by
-returning NULL. There is NO self-join and NO SQL window: the whole
-pair-generation is a narrow projection inside whole-stage codegen, and the
-single shuffle in the plan is the final count aggregation. At 100 TB this
-matters: a band self-join on ``(doc_id, pos BETWEEN ...)`` would shuffle the
-token stream twice and explode the equi-join on ``doc_id``; the array form
+Spark-first formulation: the window is plain array functions parsed from
+one SQL string. Each offset ``d`` zips the token arrays with themselves
+shifted by ``d`` (``arrays_zip`` of ``slice``s); the zips are concatenated,
+``inline``d and filtered to same-category pairs. NO self-join, NO SQL
+window and no lambda in the generator: ``Generate``, filter and partial
+aggregate run as one whole-stage-codegen stage, and the single shuffle is
+the count aggregation. The one ``CodegenFallback`` left is the tokenizer's
+``cats`` ``transform`` in the projection below. At 100 TB this matters: a
+band self-join on ``(doc_id, pos BETWEEN ...)`` would shuffle the token
+stream twice and explode the equi-join on ``doc_id``; the array form
 shuffles only the (much smaller) aggregated pair counts.
 
 Skew note: stopword pairs are Zipf-skewed. The aggregation is a partial
@@ -24,42 +26,35 @@ combiner — and AQE handles residual post-shuffle skew.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from big_data_hadoop_spark.operators.tokenize import tokenized, tokens
+from big_data_hadoop_spark.operators.tokenize import tokenized
 
 
-def _window_elements(toks: Column, cats: Column, offsets: list[int]) -> Column:
-    """Array of ``struct(category, left, right)`` for every in-window,
-    same-category co-occurrence in one document.
+def _window_elements(offsets: list[int]) -> str:
+    """SQL for the array of ``(category, left, right, right_category)``
+    structs at the given offsets of one document's ``toks``/``cats``.
 
-    ``offsets`` are the relative positions to pair with (e.g. ``[1]`` for
-    distance-1 forward pairs, ``[-m..-1, 1..m]`` for symmetric stripes).
-    ``F.get`` returns NULL for out-of-range indexes, and the filter drops
-    those along with cross-category and uncategorized pairs — exactly the
-    reference's guard structure (``HadoopWordPairs2.java:61-66``).
+    Offset ``d`` pairs position ``i`` with ``i + d`` by zipping two
+    shifted slices of the same arrays, ``n = size - |d|`` long (clamped at
+    0: ``slice`` rejects a negative length). Uncategorized and
+    cross-category pairs survive here and are dropped by the caller's
+    ``category = right_category`` filter — the reference's guard
+    structure (``HadoopWordPairs2.java:61-66``). Offset ``0`` is the
+    stripes sentinel: each position with a NULL ``right``.
     """
-    offs = F.array(*[F.lit(d) for d in offsets])
-    return F.flatten(
-        F.transform(
-            toks,
-            lambda x, i: F.filter(
-                F.transform(
-                    offs,
-                    lambda d: F.struct(
-                        F.get(cats, i).alias("category"),
-                        x.alias("left"),
-                        F.get(toks, i + d).alias("right"),
-                        F.get(cats, i + d).alias("right_category"),
-                    ),
-                ),
-                lambda s: s["category"].isNotNull()
-                & s["right_category"].isNotNull()
-                & (s["category"] == s["right_category"]),
-            ),
+    zips = []
+    for d in offsets:
+        lo, hi = (1, 1 + d) if d >= 0 else (1 - d, 1)
+        n = f"greatest(size(toks) - {abs(d)}, 0)"
+        null = f"array_repeat(CAST(NULL AS STRING), {n})"
+        right = f"slice(toks, {hi}, {n})" if d else null
+        zips.append(
+            f"arrays_zip(slice(cats, {lo}, {n}), slice(toks, {lo}, {n}), "
+            f"{right}, slice(cats, {hi}, {n}))"
         )
-    )
+    return f"concat({', '.join(zips)})"
 
 
 def _cooccur_counts(
@@ -70,14 +65,13 @@ def _cooccur_counts(
 ) -> DataFrame:
     """``(category, left, right, cnt)`` for the given offset window."""
     t = tokenized(df, text_col=text_col, lowercase=lowercase, keep_cols=())
-    elems = _window_elements(F.col("toks"), F.col("cats"), offsets)
     return (
-        t.select(F.explode(elems).alias("p"))
-        .groupBy(
-            F.col("p.category").alias("category"),
-            F.col("p.left").alias("left"),
-            F.col("p.right").alias("right"),
+        t.selectExpr(
+            f"inline({_window_elements(offsets)})"
+            " AS (category, `left`, `right`, right_category)"
         )
+        .where("category = right_category")
+        .groupBy("category", "left", "right")
         .agg(F.count("*").alias("cnt"))
     )
 
@@ -117,11 +111,8 @@ def neighbor_counts(
         raise ValueError(f"window must be >= 1, got {m}")
     offsets = [d for d in range(-m, m + 1) if d != 0]
     nb = _cooccur_counts(df, offsets, text_col, lowercase)
-    return nb.select(
-        "category",
-        F.col("left").alias("token"),
-        F.col("right").alias("neighbor"),
-        "cnt",
+    return nb.selectExpr(
+        "category", "`left` AS token", "`right` AS neighbor", "cnt"
     )
 
 
@@ -143,31 +134,24 @@ def stripes(
 
     ``keep_empty`` preserves the reference's behavior of emitting a stripe
     for every categorized token even when it has no same-category neighbor
-    (``HadoopWordStripes.java:100``). Map entries are key-sorted so any
-    serialization of the map is canonical (SURVEY Q7).
+    (``HadoopWordStripes.java:100``): the window explode carries one
+    sentinel ``(category, token, NULL)`` per categorized position (offset
+    0), which stripe and mass skip, so a token with no neighbor gets the
+    empty map and mass 0 from the same scan (``keep_empty=False`` drops
+    those rows). Map entries are key-sorted so any serialization of the
+    map is canonical (SURVEY Q7).
     """
-    nb = neighbor_counts(df, m=m, text_col=text_col, lowercase=lowercase)
-    agg = nb.groupBy("category", "token").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("neighbor", "cnt")))
+    if m < 1:
+        raise ValueError(f"window must be >= 1, got {m}")
+    nb = _cooccur_counts(df, list(range(-m, m + 1)), text_col, lowercase)
+    agg = nb.groupBy("category", F.col("left").alias("token")).agg(
+        F.expr(
+            "map_from_entries(sort_array(collect_list("
+            "IF(`right` IS NULL, NULL, struct(`right` AS neighbor, cnt)))))"
         ).alias("stripe"),
-        F.sum("cnt").alias("mass"),
+        F.expr("coalesce(sum(IF(`right` IS NULL, NULL, cnt)), 0L)").alias("mass"),
     )
-    if not keep_empty:
-        return agg
-    vocab = (
-        tokens(df, text_col=text_col, lowercase=lowercase, keep_cols=())
-        .select("category", "token")
-        .distinct()
-    )
-    return (
-        vocab.join(agg, ["category", "token"], "left")
-        .withColumn(
-            "stripe",
-            F.coalesce("stripe", F.expr("cast(map() as map<string,bigint>)")),
-        )
-        .withColumn("mass", F.coalesce("mass", F.lit(0).cast("long")))
-    )
+    return agg if keep_empty else agg.where("size(stripe) > 0")
 
 
 def stripe_entries(stripes_df: DataFrame) -> DataFrame:

@@ -13,7 +13,8 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_hadoop_spark.functions.text import categorize, kept_tokens, split_tokens
+from big_data_hadoop_spark.functions.text import kept_tokens, split_tokens
+from big_data_hadoop_spark.operators.tokenize import tokenized
 
 #: BPE-ish subword-run pattern (GPT-2-style approximation): a token is an
 #: optionally space-prefixed letter run, digit run, or punctuation run.
@@ -53,17 +54,16 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     string, no second aggregation, and an arithmetic form the oracle
     reproduces exactly.
     """
-    toks = _toks(text_col)
-    cats = F.transform(toks, categorize)
-    n_tokens = F.size(toks).cast("long")
-    return df.select(
+    t = tokenized(df, text_col=text_col, lowercase=True, keep_cols=(id_col, text_col))
+    n_tokens = F.size("toks").cast("long")
+    return t.select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
         F.regexp_count(F.col(text_col), F.lit(BPE_PATTERN))
         .cast("long")
         .alias("n_bpe_tokens"),
-        F.size(F.filter(cats, lambda c: c == "word")).cast("long").alias("n_words"),
-        F.size(F.filter(cats, lambda c: c == "number")).cast("long").alias("n_numbers"),
+        F.size(F.filter("cats", lambda c: c == "word")).cast("long").alias("n_words"),
+        F.size(F.filter("cats", lambda c: c == "number")).cast("long").alias("n_numbers"),
         (
             (F.length(F.col(text_col)) - n_tokens + 1).cast("double")
             / n_tokens

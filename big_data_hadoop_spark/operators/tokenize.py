@@ -4,8 +4,8 @@ Two shapes, both built on the same split+classify expressions:
 
 - ``tokenized`` keeps the token stream as ARRAY columns (``toks``,
   ``cats``) — the co-occurrence operators consume this form and compute
-  windows with array higher-order functions, so adjacency never needs a
-  shuffle or a self-join.
+  windows with array functions, so adjacency never needs a shuffle or a
+  self-join.
 - ``tokens`` explodes to one row per raw position — the counting operators
   and the relational surface consume this long form.
 
@@ -20,9 +20,12 @@ the reference's accidental cross-line carryover (SURVEY Q2).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from big_data_hadoop_spark.functions.text import categorize, split_tokens
+from big_data_hadoop_spark.functions.text import category_sql
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def tokenized(
@@ -34,11 +37,14 @@ def tokenized(
     """Add ``toks: array<string>`` and ``cats: array<string>`` columns.
 
     ``cats[i]`` is the category of ``toks[i]`` or NULL. Both arrays are
-    positionally aligned with the raw split stream.
+    positionally aligned with the raw split stream. The split is
+    :func:`~big_data_hadoop_spark.functions.text.split_tokens` in SQL; it
+    sits in its own projection so ``cats`` reads it instead of repeating it.
     """
-    arr = split_tokens(F.col(text_col), lowercase=lowercase)
-    return df.select(*keep_cols, arr.alias("toks")).withColumn(
-        "cats", F.transform("toks", categorize)
+    keep = [_quote(c) for c in keep_cols]
+    text = f"lower({_quote(text_col)})" if lowercase else _quote(text_col)
+    return df.selectExpr(*keep, f"split({text}, ' ', -1) AS toks").selectExpr(
+        *keep, "toks", f"transform(toks, t -> {category_sql('t')}) AS cats"
     )
 
 
@@ -56,16 +62,11 @@ def tokens(
     pattern are dropped — positions are assigned before the filter, so
     adjacency semantics survive.
     """
+    keep = [_quote(c) for c in keep_cols]
     t = tokenized(df, text_col=text_col, lowercase=lowercase, keep_cols=keep_cols)
-    out = t.select(
-        *keep_cols,
-        F.posexplode(F.arrays_zip("toks", "cats")).alias("pos", "tc"),
-    ).select(
-        *keep_cols,
-        "pos",
-        F.col("tc.toks").alias("token"),
-        F.col("tc.cats").alias("category"),
-    )
+    out = t.selectExpr(
+        *keep, "posexplode(arrays_zip(toks, cats)) AS (pos, tc)"
+    ).selectExpr(*keep, "pos", "tc.toks AS token", "tc.cats AS category")
     if categorized_only:
-        out = out.filter(F.col("category").isNotNull())
+        out = out.where("category IS NOT NULL")
     return out

@@ -254,12 +254,12 @@ def streaming_pair_counts(
     ``HadoopWordPairs2.java:49-77``.
 
     Zero new machinery is the point of the design: pair generation
-    (``operators.cooccur._window_elements``) is a stateless per-document
-    array projection — it streams unchanged — and the count is a single
-    streaming aggregation whose state is one long per live (category,
-    left, right) key, map-side-compacted before the shuffle exactly as in
-    batch. Complete-mode sink expected; drained output equals batch
-    ``pair_counts`` row-for-row.
+    (``operators.cooccur._window_elements``: shifted-slice zips of one
+    document's arrays, inlined) is stateless — it streams unchanged — and
+    the count is a single streaming aggregation whose state is one long
+    per live (category, left, right) key, map-side-compacted before the
+    shuffle exactly as in batch. Complete-mode sink expected; drained
+    output equals batch ``pair_counts`` row-for-row.
     """
     from big_data_hadoop_spark.operators.cooccur import pair_counts
 

@@ -3,8 +3,13 @@ worked examples (FIXTURES.md §B; cites in SURVEY §5.1)."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.text import NUMBER_PATTERN, WORD_PATTERN
 from big_data_hadoop_spark.operators.cooccur import (
     neighbor_counts,
     pair_counts,
@@ -139,6 +144,89 @@ def test_positions_assigned_on_raw_stream(spark, golden_lines):
     assert rows[0] == ("I", None)
     assert rows[6] == ("3", "number")
     assert rows[12] == ("2.5.5", None)
+
+
+def test_tokens_quote_column_names(spark, golden_lines):
+    """Column names are rendered into SQL: spaces and backticks in them
+    must survive as plain names."""
+    odd = golden_lines.toDF("doc `id`", "body text")
+    got = tokens(odd, text_col="body text", keep_cols=("doc `id`",))
+    want = tokens(golden_lines).withColumnRenamed("doc_id", "doc `id`")
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def _category(tok):
+    for cat, pat in (("word", WORD_PATTERN), ("number", NUMBER_PATTERN)):
+        if re.fullmatch(pat, tok):
+            return cat
+    return None
+
+
+def _window_reference(texts, m, lowercase):
+    """Pure-Python forward pairs, symmetric neighbors and stripes."""
+    pairs, vocab = Counter(), set()
+    for text in texts:
+        if text is None:
+            continue
+        toks = (text.lower() if lowercase else text).split(" ")
+        cats = [_category(t) for t in toks]
+        for i, (t, c) in enumerate(zip(toks, cats)):
+            if c is None:
+                continue
+            vocab.add((c, t))
+            for j in range(i + 1, min(i + m + 1, len(toks))):
+                if cats[j] == c:
+                    pairs[(c, t, toks[j])] += 1
+    nbrs = Counter()
+    for (c, a, b), n in pairs.items():
+        nbrs[(c, a, b)] += n
+        nbrs[(c, b, a)] += n
+    stripes_ = {key: {} for key in vocab}
+    for (c, t, nb), n in nbrs.items():
+        stripes_[(c, t)][nb] = n
+    return pairs, nbrs, {k: (s, sum(s.values())) for k, s in stripes_.items()}
+
+
+_SHORT_DOCS = [
+    "x",  # one token, shorter than every window below
+    "ab 7",  # two tokens, cross-category
+    "a b",  # two tokens, shorter than m=5
+    "",
+    None,
+    "!! ?? ..",  # uncategorized only
+    "a  b",  # double space: an empty token holds a position
+    "Q r Q",  # uppercase drops out unless lowercased
+]
+
+
+@pytest.mark.parametrize("lowercase", [False, True])
+@pytest.mark.parametrize("m", [3, 5])
+def test_short_documents_window_matches_reference(spark, m, lowercase):
+    """Documents shorter than the window, empty and NULL text: every
+    shifted slice clamps to length 0 instead of failing."""
+    df = spark.createDataFrame(list(enumerate(_SHORT_DOCS)), "doc_id long, text string")
+    pairs, nbrs, want = _window_reference(_SHORT_DOCS, m, lowercase)
+    got_pairs = {
+        (r.category, r.left, r.right): r.cnt
+        for r in pair_counts(df, m=m, lowercase=lowercase).collect()
+    }
+    assert got_pairs == dict(pairs)
+    got_nbrs = {
+        (r.category, r.token, r.neighbor): r.cnt
+        for r in neighbor_counts(df, m=m, lowercase=lowercase).collect()
+    }
+    assert got_nbrs == dict(nbrs)
+    for keep_empty in (True, False):
+        got = {
+            (r.category, r.token): (dict(r.stripe), r.mass)
+            for r in stripes(
+                df, m=m, lowercase=lowercase, keep_empty=keep_empty
+            ).collect()
+        }
+        assert got == {
+            k: v for k, v in want.items() if keep_empty or v[0]
+        }, keep_empty
 
 
 def test_stripe_entries_canonical(spark, golden_lines):

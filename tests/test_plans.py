@@ -33,6 +33,35 @@ def test_tokenization_scans_only_text(spark):
     assert schema == "struct<text:string>", schema
 
 
+def test_stripes_reads_source_once(spark):
+    """Empty stripes come from the window's own sentinel entries: one
+    scan of the corpus, no vocabulary re-tokenized and joined back."""
+    from big_data_hadoop_spark.operators.cooccur import stripes
+    from big_data_hadoop_spark.plans.audit import formatted_plan
+    from big_data_hadoop_spark.sources.io import load_table
+
+    st = stripes(load_table(spark, SF_SMOKE, "documents"), m=2)
+    assert len(read_schemas(st)) == 1
+    assert "Join" not in formatted_plan(st)
+
+
+def test_window_generate_inside_codegen(spark):
+    """The pair-generating Generate runs inside a whole-stage-codegen
+    stage: its generator holds no lambda (CodegenFallback)."""
+    import re
+
+    from big_data_hadoop_spark.operators.cooccur import pair_counts
+    from big_data_hadoop_spark.sources.io import load_table
+
+    df = pair_counts(load_table(spark, SF_SMOKE, "documents"), m=3)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    (gen,) = [ln for ln in final.splitlines() if " Generate " in ln]
+    assert "lambdafunction" not in gen, gen
+    assert re.search(r"\*\(\d+\) Generate ", gen), gen
+
+
 def test_dimension_joins_broadcast(spark):
     assert has_broadcast_join(QUERIES["q09_join_agg"](spark, SF_SMOKE))
     assert has_broadcast_join(QUERIES["q10_multijoin_date"](spark, SF_SMOKE))
