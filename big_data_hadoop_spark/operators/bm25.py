@@ -38,8 +38,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from big_data_hadoop_spark.functions.rank import _quote, top_k_per
 from big_data_hadoop_spark.functions.text import kept_tokens
 
 __all__ = ["BM25Index", "bm25_index", "bm25_topk", "hybrid_topk"]
@@ -133,14 +133,10 @@ def bm25_topk(
     scored = hit.groupBy(query_id_col, index.id_col).agg(
         F.sum(term_score).alias("score")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(index.id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id_col, index.id_col, "score", "rank")
-    )
+    return top_k_per(
+        scored, query_id_col, f"score DESC, {_quote(index.id_col)} ASC",
+        topk, rank="rank",
+    ).select(query_id_col, index.id_col, "score", "rank")
 
 
 def hybrid_topk(
@@ -193,11 +189,7 @@ def hybrid_topk(
         .join(q_emb, query_id_col)
         .withColumn("cosine", cos)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(index.id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id_col, index.id_col, "bm25_score", "cosine", "rank")
-    )
+    return top_k_per(
+        scored, query_id_col, f"cosine DESC, {_quote(index.id_col)} ASC",
+        topk, rank="rank",
+    ).select(query_id_col, index.id_col, "bm25_score", "cosine", "rank")

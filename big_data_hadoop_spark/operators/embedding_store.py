@@ -93,10 +93,10 @@ from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.operators.dedup import dedup_by_clusters
 from big_data_hadoop_spark.operators.similarity import (
-    _as_double,
     _finite_centroids,
     _flat,
     _flat_dot,
+    _nonzero,
     assign_cells,
     ivf_build,
 )
@@ -379,9 +379,7 @@ def _accept(df: DataFrame, n_in: int, prior, meta: dict, stats: dict):
     # elements) were refused there, BEFORE any expensive work. NULL
     # embeddings stay the disclosed drop below (no norm, no direction
     # — the NULL-fp contract).
-    usable = norm_in.filter(
-        F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-    )
+    usable = _nonzero(norm_in, vec_col)
     # ONE execution of the caller's upstream: assignment + every
     # downstream join reads this narrow checkpoint
     assigned = assign_cells(
@@ -738,9 +736,7 @@ def embedding_store_matches(
     # same malformed-vector refusal as the accept fold: a bad probe
     # row silently reading as "novel" would invite ingesting it next
     _refuse_malformed(base, meta["dim"], vec_col, "probe batch")
-    usable = base.filter(
-        F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-    )
+    usable = _nonzero(base, vec_col)
     assigned = assign_cells(
         usable, meta["centroids"], vec_col=vec_col, check_cells=p
     ).localCheckpoint(eager=True)
@@ -859,9 +855,7 @@ def _audit_truth(
     base = df.select(F.col(id_col), F.col(vec_col))
     _refuse_malformed(base, dim, vec_col, "audit batch")
     sample = (
-        base.filter(
-            F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-        )
+        _nonzero(base, vec_col)
         .orderBy(F.xxhash64(F.col(id_col), F.lit(int(seed))))
         .limit(int(sample_rows))
         .localCheckpoint(eager=True)

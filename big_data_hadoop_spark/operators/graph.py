@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import top_k_per
+
 
 def pagerank(
     pairs: DataFrame,
@@ -958,20 +960,13 @@ def copurchase_edges(
                 "baskets, or pass on_hot='sample' for a deterministic "
                 "per-basket downsample (documented approximation)."
             )
-        from pyspark.sql import Window
-
         # O(hot baskets) rows, referenced by TWO joins below —
         # checkpointed so neither re-runs the sizes scan
         hot_ids = hot.select("basket").localCheckpoint(eager=True)
-        w = Window.partitionBy("basket").orderBy(
-            F.xxhash64("item", F.lit(int(seed))), "item"
-        )
-        kept_hot = (
-            items.join(hot_ids, "basket")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(max_basket))
-            .drop("_rn")
-        )
+        kept_hot = top_k_per(
+            items.join(hot_ids, "basket"), "basket",
+            f"xxhash64(item, {int(seed)}), item", max_basket, rank="_rn",
+        ).drop("_rn")
         # re-checkpoint the rebuilt membership: the anti-join and
         # kept_hot branches each scan the first checkpoint, and the
         # pair join below would otherwise run that union twice (once

@@ -61,8 +61,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from big_data_hadoop_spark.functions.rank import _quote, top_k_per
 from big_data_hadoop_spark.operators.similarity import (
     _as_double,
     _bounded_training_sample,
@@ -277,14 +277,10 @@ def pq_search(
         .groupBy(query_id_col, id_col)
         .agg(F.sum("pdist").alias("adc_dist"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        dists.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id_col, id_col, "adc_dist", "rank")
-    )
+    return top_k_per(
+        dists, query_id_col, f"adc_dist ASC, {_quote(id_col)} ASC", topk,
+        rank="rank",
+    ).select(query_id_col, id_col, "adc_dist", "rank")
 
 
 def pq_refine(
@@ -342,14 +338,10 @@ def pq_refine(
             _sq_l2(F.col("_qd"), F.col("_cd")).alias("dist"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id_col, id_col, "dist", "rank")
-    )
+    return top_k_per(
+        scored, query_id_col, f"dist ASC, {_quote(id_col)} ASC", topk,
+        rank="rank",
+    ).select(query_id_col, id_col, "dist", "rank")
 
 
 @dataclass
@@ -554,14 +546,10 @@ def ivfpq_search(
             .groupBy(query_id_col, index.id_col)
             .agg(F.sum("pdist").alias("adc_dist"))
         )
-    rw = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col(index.id_col).asc()
-    )
-    return (
-        dists.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= topk)
-        .select(query_id_col, index.id_col, "adc_dist", "rank")
-    )
+    return top_k_per(
+        dists, query_id_col, f"adc_dist ASC, {_quote(index.id_col)} ASC",
+        topk, rank="rank",
+    ).select(query_id_col, index.id_col, "adc_dist", "rank")
 
 
 def ivfpq_save(index: IVFPQIndex, path: str) -> None:

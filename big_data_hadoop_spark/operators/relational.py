@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from big_data_hadoop_spark.functions.rank import top_k_per
+
 
 def filter_project(
     df: DataFrame, predicate: Column, columns: Sequence[str | Column]
@@ -230,32 +232,6 @@ def asof_join(
         *[F.col(c) for c in left.columns],
         *[F.col(f"{payload}.{c}").alias(c) for c in value_cols],
     )
-
-
-def range_join_count(
-    left: DataFrame,
-    right: DataFrame,
-    equi_key: str,
-    left_ts: Column,
-    right_lo: Column,
-    right_hi: Column,
-    group_cols: Sequence[str],
-) -> DataFrame:
-    """Range join (count form): pair rows sharing ``equi_key`` whose right
-    timestamp falls in ``(right_lo, right_hi]``, counting per group.
-
-    Spark plans the equi key as the join key and the band as a post-join
-    filter — correct, and safe when the equi key bounds group sizes. For
-    unkeyed bands at 100 TB, bucketize the range dimension and equi-join on
-    the bucket (see SURVEY §4).
-    """
-    joined = left.join(
-        right,
-        (left[equi_key] == right[equi_key])
-        & (left_ts > right_lo)
-        & (left_ts <= right_hi),
-    )
-    return joined.groupBy(*group_cols).agg(F.count("*").alias("n_within"))
 
 
 def bucketized_range_join(
@@ -644,14 +620,9 @@ def funnel_progress(
         # earliest-N per user in (t, y) order — the same lexicographic
         # struct order array_sort walks below, so the capped array is
         # exactly the first N elements of the uncapped one
-        rank_w = Window.partitionBy("user").orderBy(
-            F.col("e.t"), F.col("e.y")
-        )
-        relevant = (
-            relevant.withColumn("_rn", F.row_number().over(rank_w))
-            .filter(F.col("_rn") <= max_events_per_user)
-            .drop("_rn")
-        )
+        relevant = top_k_per(
+            relevant, "user", "e.t, e.y", max_events_per_user, rank="_rn"
+        ).drop("_rn")
     per_user = relevant.groupBy("user").agg(
         F.array_sort(F.collect_list("e")).alias("evs")
     )

@@ -12,11 +12,16 @@ Scale design:
 - ``cosine_neardup_pairs`` is the brute-force all-pairs baseline (the
   verification primitive).
 - ``lsh_bucketed_topk`` is the 100 TB path: random-hyperplane signatures
-  bucket the corpus so candidates meet on an equi-join of short signature
-  keys instead of a cross join; exact cosine re-ranks within buckets.
+  bucket the corpus so candidates meet on an equi-join of short
+  ``(table, bucket)`` keys instead of a cross join; exact cosine re-ranks
+  within buckets. One plan serves any number of hash tables.
 - ``operators.pq`` adds the compressed tier (product quantization +
   asymmetric-distance search) for corpora whose raw vectors exceed the
   memory budget.
+
+Every per-query top-k here is ``functions.rank.top_k_per`` ordered by
+``sim DESC, neighbor_id ASC``, and every cosine operator drops zero-norm
+vectors with one guard, :func:`_nonzero`.
 """
 
 from __future__ import annotations
@@ -26,7 +31,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from big_data_hadoop_spark.functions.rank import _quote, top_k_per
 
 #: KMeans fits performed by ``ivf_build`` since import — test observability
 #: for the build-once/search-many contract (VERDICT r3 #2).
@@ -35,6 +41,23 @@ IVF_FIT_COUNT = 0
 
 def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
+
+
+def _nonzero(df: DataFrame, vec_col: str) -> DataFrame:
+    """Rows of ``df`` whose ``vec_col`` has a nonzero element: the
+    zero-norm guard of every cosine operator, on corpus and query sides
+    alike. A zero vector has no direction: its cosine divides by zero,
+    which is NULL in Spark (an error under ANSI) but NaN in DuckDB, so
+    it would diverge from the oracle and pollute top-k tails. The
+    predicate reads the RAW
+    array (``exists nonzero element`` is ``nrm > 0`` up to square
+    underflow) because a ``nrm > 0`` conjunct pushes through the flat
+    projection and re-inlines the dim-term sqrt chain and its casts
+    into filter and constraint propagation (plan-size explosion, OOM
+    observed); the raw predicate is cheap and reaches the scan."""
+    return df.where(
+        f"exists(CAST({_quote(vec_col)} AS ARRAY<DOUBLE>), x -> x != 0.0D)"
+    )
 
 
 def dot(
@@ -193,20 +216,9 @@ def cosine_neardup_pairs(
     for the single-node verifier role — cluster callers should pass
     their target parallelism explicitly."""
     if dim is not None:
-        # Zero-norm guard (ADVICE r2): the multiplied-form predicate below
-        # admits zero-norm vectors (0 >= 0) whose sim is NULL in Spark
-        # (x/0 -> NULL non-ANSI) but NaN in DuckDB — a latent oracle
-        # divergence. Excluding them as a join-side `nrm > 0` conjunct is
-        # NOT safe: the predicate pushes through the flat projection,
-        # re-inlining the 64-term sqrt chain (and its casts) into filter
-        # and constraint propagation — plan-size explosion (OOM observed).
-        # Instead filter the RAW array column before flattening: `exists
-        # nonzero element` ≡ `nrm > 0` (modulo square-underflow, absent
-        # here), is cheap, and pushes to the scan. The oracle mirrors the
-        # same list predicate so the selected set stays identical.
-        df = df.filter(
-            F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-        )
+        # the multiplied-form predicate below admits zero-norm vectors
+        # (0 >= 0); the oracle mirrors the same list predicate
+        df = _nonzero(df, vec_col)
         # The repartition is a deliberate codegen boundary, not a data
         # movement need: fused scan+flatten+join exceeds Janino's method
         # limit and silently falls back to interpreted eval (~5x slower).
@@ -277,14 +289,7 @@ def cosine_topk(
     by query — k rows per query survive. With ``dim`` given, both sides are
     flattened to scalar columns (see ``_flat``) for codegen'd scoring.
     """
-    # zero-norm guard (review finding; same rationale and same RAW-array
-    # predicate as cosine_neardup_pairs): a zero vector's sim is NULL in
-    # Spark but NaN in IEEE engines, diverging from the oracle and
-    # polluting top-k tails; zero-norm rows cannot be ranked by cosine
-    # and are excluded from corpus and query sides alike.
-    df = df.filter(
-        F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-    )
+    df = _nonzero(df, vec_col)
     if dim is not None:
         e = _flat(df, id_col, vec_col, dim, "_a")
         q = (
@@ -297,14 +302,9 @@ def cosine_topk(
         scored = e.join(
             F.broadcast(q), F.col("query_id") != F.col(id_col)
         ).select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("sim"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "neighbor_id", "sim")
-        )
+        return top_k_per(
+            scored, "query_id", "sim DESC, neighbor_id ASC", k
+        ).select("query_id", "neighbor_id", "sim")
     e = with_norm(
         df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
     ).select(F.col(id_col), "emb_d", "nrm")
@@ -322,12 +322,9 @@ def cosine_topk(
             sim.alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    return top_k_per(
+        scored, "query_id", "sim DESC, neighbor_id ASC", k
+    ).select("query_id", "neighbor_id", "sim")
 
 
 def hyperplane_signatures(
@@ -407,10 +404,10 @@ def lsh_bucketed_topk(
     round-12 measurement that single-table recall at the registered 8
     planes is only ~0.13 on weakly-clustered corpora, and FALLS as
     planes rise): hash every row into ``n_tables`` independent plane
-    sets (seed-offset ``seed + t * 7919``; table 0 IS the single-table
-    plane set, so ``n_tables=1`` is plan-identical to the historical
-    behavior), candidate when query and corpus row share a bucket in
-    ANY table, then de-duplicate the candidate pairs before the exact
+    sets (seed-offset ``seed + t * 7919``; table 0 is the single-table
+    plane set of :func:`hyperplane_signatures`), candidate when query
+    and corpus row share a bucket in ANY table, then (with more than
+    one table) de-duplicate the candidate pairs before the exact
     re-rank so a row found by several tables ranks once. Candidate
     sets are nested in ``n_tables`` (each table only ADDS pairs), so
     recall@k is monotone non-decreasing in it — pinned in tests, and
@@ -425,54 +422,11 @@ def lsh_bucketed_topk(
     join were measured to cost ~6 s of one-off plan-compile time at
     bench scale.
     """
-    # zero-norm guard (review finding; same rationale and same RAW-array
-    # predicate as cosine_neardup_pairs): a zero vector's sim is NULL in
-    # Spark but NaN in IEEE engines, diverging from the oracle and
-    # polluting top-k tails; zero-norm rows cannot be ranked by cosine
-    # and are excluded from corpus and query sides alike.
     if n_tables < 1:
         raise ValueError(f"n_tables must be >= 1, got {n_tables}")
-    df = df.filter(
-        F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-    )
-    if n_tables == 1:
-        # the historical single-table plan, untouched: no (table,
-        # bucket) widening, no candidate-dedup shuffle (a pair can
-        # only be found once)
-        sigs = hyperplane_signatures(
-            df, dim=dim, num_planes=num_planes, id_col=id_col,
-            vec_col=vec_col, seed=seed,
-        )
-        e = with_norm(sigs, vec_col=vec_col).select(
-            F.col(id_col), "bucket", "emb_d", "nrm"
-        )
-        q = e.filter(F.col(id_col).isin(query_ids)).select(
-            F.col(id_col).alias("query_id"),
-            F.col("bucket").alias("q_bucket"),
-            F.col("emb_d").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-        sim = dot(F.col("q_emb"), F.col("emb_d")) / (
-            F.col("q_nrm") * F.col("nrm")
-        )
-        scored = e.join(
-            F.broadcast(q),
-            (F.col("q_bucket") == F.col("bucket"))
-            & (F.col("query_id") != F.col(id_col)),
-        ).select(
-            "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("sim"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "neighbor_id", "sim")
-        )
-    # multi-table: ONE cast + norm pass emits every table's signature
-    # (table t's planes come from seed + t*7919; t=0 reproduces the
-    # single-table stream), exploded to (id, t, bucket)
+    df = _nonzero(df, vec_col)
+    # ONE cast + norm pass emits every table's signature (table t's
+    # planes come from seed + t*7919), exploded to (id, t, bucket)
     base = with_norm(
         df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
     ).select(F.col(id_col), "emb_d", "nrm")
@@ -507,16 +461,14 @@ def lsh_bucketed_topk(
         & (F.col("q_bucket") == F.col("bucket"))
         & (F.col("query_id") != F.col(id_col)),
     ).select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
-    # a pair found by several tables carries IDENTICAL sim on every
-    # copy (same vectors) — keep one so the rank window counts each
-    # neighbor once
-    scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    if n_tables > 1:
+        # a pair found by several tables carries IDENTICAL sim on every
+        # copy (same vectors) — keep one so the rank window counts each
+        # neighbor once
+        scored = scored.dropDuplicates(["query_id", "neighbor_id"])
+    return top_k_per(
+        scored, "query_id", "sim DESC, neighbor_id ASC", k
+    ).select("query_id", "neighbor_id", "sim")
 
 
 def _bounded_training_sample(
@@ -835,18 +787,15 @@ def _ivf_search_core(
     if exclude_self:
         cond = cond & (F.col("query_id") != F.col(id_col))
     sim = dot(F.col("q_emb"), F.col("emb_d")) / (F.col("q_nrm") * F.col("nrm"))
-    # zero-norm guard: NULL sims are unrankable (see cosine_topk)
+    # zero-norm guard: NULL sims are unrankable (see _nonzero)
     assigned = assigned.filter(F.col("nrm") > 0)
     probed = probed.filter(F.col("q_nrm") > 0)
     scored = assigned.join(F.broadcast(probed), cond).select(
         "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    return top_k_per(
+        scored, "query_id", "sim DESC, neighbor_id ASC", k
+    ).select("query_id", "neighbor_id", "sim")
 
 
 def ivf_search(
@@ -939,17 +888,8 @@ def cosine_topk_vectors(
     part of the corpus, so there is no self-exclusion. The query batch
     is broadcast; the corpus streams through one scan; a rank window per
     query keeps k rows, tie-broken on neighbor id."""
-    # zero-norm guard (review finding; same rationale and same RAW-array
-    # predicate as cosine_neardup_pairs): a zero vector's sim is NULL in
-    # Spark but NaN in IEEE engines, diverging from the oracle and
-    # polluting top-k tails; zero-norm rows cannot be ranked by cosine
-    # and are excluded from corpus and query sides alike.
-    df = df.filter(
-        F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-    )
-    queries = queries.filter(
-        F.exists(_as_double(F.col(query_vec_col)), lambda x: x != F.lit(0.0))
-    )
+    df = _nonzero(df, vec_col)
+    queries = _nonzero(queries, query_vec_col)
     e = with_norm(
         df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
     ).select(F.col(id_col), "emb_d", "nrm")
@@ -962,12 +902,9 @@ def cosine_topk_vectors(
     scored = e.join(F.broadcast(q)).select(
         "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    return top_k_per(
+        scored, "query_id", "sim DESC, neighbor_id ASC", k
+    ).select("query_id", "neighbor_id", "sim")
 
 
 def topk_recall_audit(
@@ -1111,14 +1048,10 @@ def semantic_neardup_pairs(
         )
     cells = index.assigned.select(F.col(index.id_col), "cell")
     if dim is not None:
-        # Same guard/boundary reasoning as cosine_neardup_pairs: the
-        # raw-array exists-filter excludes zero-norm vectors at the scan
-        # (a nrm > 0 conjunct would re-inline the sqrt chain), and the
+        # Same boundary reasoning as cosine_neardup_pairs: the
         # fixed-count repartition is the codegen boundary that keeps the
         # fused scan+flatten+join under Janino's method limit.
-        nz = df.filter(
-            F.exists(_as_double(F.col(vec_col)), lambda x: x != F.lit(0.0))
-        )
+        nz = _nonzero(df, vec_col)
         nparts = n_parts or df.sparkSession.sparkContext.defaultParallelism
         fa = (
             _flat(nz, id_col, vec_col, dim, "_a")

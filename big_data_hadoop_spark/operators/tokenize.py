@@ -21,11 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.functions.text import category_sql
-
-
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 def tokenized(

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from big_data_hadoop_spark.functions.rank import _quote, top_k_per
 from big_data_hadoop_spark.functions.text import split_tokens
 from big_data_hadoop_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
 from big_data_hadoop_spark.operators.textstats import STOPWORDS, _stop_count
@@ -777,15 +778,10 @@ def cap_per_group(
         )
 
     passthrough = semi(under)
-    w = Window.partitionBy(group_col).orderBy(
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1_000_000_007)),
-        F.col(id_col),
-    )
-    capped = (
-        semi(over)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cap)
-        .drop("_rn")
+    key = _quote(id_col)
+    order = f"pmod(xxhash64({key}, {int(seed)}), 1000000007), {key}"
+    capped = top_k_per(semi(over), group_col, order, cap, rank="_rn").drop(
+        "_rn"
     )
     return passthrough.unionByName(capped)
 
@@ -839,12 +835,9 @@ def weighted_sample(
     if group_col is None:
         picked = eligible.orderBy("_es_key", id_col).limit(k)
     else:
-        win = Window.partitionBy(group_col).orderBy("_es_key", id_col)
-        picked = (
-            eligible.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
+        picked = top_k_per(
+            eligible, group_col, f"_es_key, {_quote(id_col)}", k, rank="_rn"
+        ).drop("_rn")
     return picked.drop("_es_key")
 
 

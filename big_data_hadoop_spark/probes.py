@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from big_data_hadoop_spark.functions.rank import top_k_per
 from big_data_hadoop_spark.functions.text import NUMBER_PATTERN, WORD_PATTERN
 from big_data_hadoop_spark.operators import relational as R
 from big_data_hadoop_spark.operators import similarity as sim
@@ -2266,10 +2267,8 @@ def q96_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
             | (F.col("_qc") != F.col("_nc"))
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return (
-        kept.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        top_k_per(kept, "query_id", "sim DESC, neighbor_id", 5, rank="rank")
         .select(
             "query_id",
             "neighbor_id",

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import duckdb
 import pytest
 
@@ -38,6 +40,34 @@ def duck_smoke():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def py4j_calls():
+    """``with py4j_calls() as n:`` counts the py4j round trips
+    (``GatewayClient.send_command``) the calling thread makes inside the
+    block in ``n[0]``. py4j's finalizer thread, which releases dead Java
+    references whenever Python's collector runs, is not counted."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    @contextmanager
+    def counting():
+        send, n, me = GatewayClient.send_command, [0], threading.get_ident()
+
+        def counted(self, *args, **kwargs):
+            if threading.get_ident() == me:
+                n[0] += 1
+            return send(self, *args, **kwargs)
+
+        GatewayClient.send_command = counted
+        try:
+            yield n
+        finally:
+            GatewayClient.send_command = send
+
+    return counting
 
 
 @pytest.fixture(scope="session")

@@ -156,6 +156,58 @@ def test_tokens_quote_column_names(spark, golden_lines):
     assert sorted(got.collect()) == sorted(want.collect())
 
 
+def test_ranked_outputs_quote_column_names(spark):
+    """Caller-named id and group columns reach the SQL-rendered top-k:
+    a space in a name must not change a ranked operator's rows, and the
+    one quoting rule keeps backticks as plain name characters."""
+    from big_data_hadoop_spark.functions.rank import _quote, top_k_per
+    from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk
+    from big_data_hadoop_spark.operators.pq import pq_encode, pq_search, pq_train
+    from big_data_hadoop_spark.pipeline import cap_per_group
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    vecs = [(i, [float(i % 4), float(i % 7), float(i % 3), 1.0]) for i in range(24)]
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    odd_emb = emb.toDF("vec id", "embedding")
+    q = emb.filter("vec_id < 3").toDF("query_id", "embedding")
+    odd_q = q.toDF("query id", "embedding")
+    cb = pq_train(emb, dim=4, m=2, k=4, seed=3)
+    want = pq_search(pq_encode(emb, cb), cb, q, topk=4)
+    got = pq_search(
+        pq_encode(odd_emb, cb, id_col="vec id"), cb, odd_q, topk=4,
+        id_col="vec id", query_id_col="query id",
+    )
+    assert rows(got) == rows(want)
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 5} w{i % 3} x{i}", f"s{i % 3}") for i in range(30)],
+        "doc_id long, text string, source string",
+    )
+    odd_docs = docs.toDF("doc id", "text", "src group")
+    tq = docs.filter("doc_id < 4").select(
+        F.col("doc_id").alias("query_id"), "text"
+    )
+    want = bm25_topk(bm25_index(docs), tq, topk=3)
+    got = bm25_topk(
+        bm25_index(odd_docs, id_col="doc id"),
+        tq.toDF("query id", "text"), topk=3, query_id_col="query id",
+    )
+    assert rows(got) == rows(want)
+
+    want = cap_per_group(docs, group_col="source", cap=4, seed=5)
+    got = cap_per_group(
+        odd_docs, group_col="src group", cap=4, id_col="doc id", seed=5
+    )
+    assert rows(got) == rows(want)
+
+    ticked = docs.toDF("doc `id`", "text", "src `group`")
+    want = top_k_per(docs, "source", "doc_id DESC", 2)
+    got = top_k_per(ticked, "src `group`", f"{_quote('doc `id`')} DESC", 2)
+    assert rows(got) == rows(want)
+
+
 def _category(tok):
     for cat, pat in (("word", WORD_PATTERN), ("number", NUMBER_PATTERN)):
         if re.fullmatch(pat, tok):

@@ -282,6 +282,75 @@ def test_lsh_multi_table_backcompat_and_monotone_recall(spark, corpus):
         )
 
 
+def _lsh_reference(vecs, qids, k, num_planes, seed):
+    """Single-table hyperplane LSH top-k in pure Python: the sin-stream
+    planes, bit p set when the left-fold dot with plane p is >= 0,
+    same-bucket candidates (never the query itself, never a zero
+    vector), left-fold cosine, top k by (sim desc, id asc)."""
+    import math
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    dim = len(next(iter(vecs.values())))
+    planes = [
+        [math.sin(seed + p * 1009 + i * 9176) for i in range(dim)]
+        for p in range(num_planes)
+    ]
+    live = {i: v for i, v in vecs.items() if any(x != 0.0 for x in v)}
+    bucket = {
+        i: sum(1 << p for p, pl in enumerate(planes) if fold(v, pl) >= 0)
+        for i, v in live.items()
+    }
+    nrm = {i: math.sqrt(fold(v, v)) for i, v in live.items()}
+    out = set()
+    for q in qids:
+        if q not in live:
+            continue
+        cands = [
+            (fold(live[q], live[c]) / (nrm[q] * nrm[c]), c)
+            for c in live
+            if c != q and bucket[c] == bucket[q]
+        ]
+        cands.sort(key=lambda t: (-t[0], t[1]))
+        out |= {(q, c, sim) for sim, c in cands[:k]}
+    return out
+
+
+@pytest.mark.parametrize("num_planes,seed", [(3, 42), (2, 7)])
+def test_lsh_single_table_matches_python_reference(spark, num_planes, seed):
+    """``lsh_bucketed_topk(n_tables=1)`` row-equal to a pure-Python
+    single-table LSH, sims compared exactly: a zero vector (as corpus
+    row and as query) and a scaled copy of row 0 (exact cosine ties,
+    broken by the lower id) are included."""
+    vecs = {}
+    for i in range(45):
+        g = i % 3
+        base = [0.0] * 6
+        base[g * 2] = 10.0
+        base[g * 2 + 1] = 5.0
+        vecs[i] = [v + ((i * 7 + j * 3) % 5) * 0.1 for j, v in enumerate(base)]
+    vecs[45] = [0.0] * 6
+    vecs[46] = [2.0 * x for x in vecs[0]]
+    df = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<double>"
+    )
+    qids = [0, 1, 2, 40, 45, 46]
+    got = {
+        (r.query_id, r.neighbor_id, r.sim)
+        for r in sim.lsh_bucketed_topk(
+            df, query_ids=qids, k=5, dim=6, num_planes=num_planes,
+            n_tables=1, seed=seed,
+        ).collect()
+    }
+    want = _lsh_reference(vecs, qids, 5, num_planes, seed)
+    assert len(want) == 25  # five live queries, each with a full top-5
+    assert got == want
+
+
 # Hand-pinned centroids with dyadic coordinates, so squared-L2 ties are
 # exact in floating point: cell 3 sits midway between cells 0 and 1.
 _CENTS = [
@@ -432,3 +501,17 @@ def test_dot_norm_dim_contract(spark):
     for r in rows:
         assert r.dot_u.hex() == r.dot_f.hex()
         assert r.norm_u.hex() == r.norm_f.hex()
+
+
+def test_ivf_search_vectors_py4j_budget(spark, corpus, py4j_calls):
+    """Building (not running) a serving search on a warm index stays
+    inside a py4j round-trip budget: the cost of constructing the plan
+    is deterministic in calls, unlike its wall time. The budget is
+    the count measured when the top-k tail became one parsed window
+    (959 calls before, with the window built as Column objects)."""
+    index = sim.ivf_build(corpus, n_cells=4)
+    queries = corpus.filter("vec_id < 8").toDF("query_id", "embedding")
+    sim.ivf_search_vectors(index, queries, k=5, n_probe=2)  # warm
+    with py4j_calls() as n:
+        sim.ivf_search_vectors(index, queries, k=5, n_probe=2)
+    assert n[0] <= 900, n[0]

@@ -560,3 +560,40 @@ def test_lsh_multi_table_broadcast_equi_join_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert casts_at(2) == casts_at(8), "cast count must not scale with L"
+
+
+def test_every_top_k_plans_a_window_group_limit(spark):
+    """Every per-group top-k goes through ``functions.rank.top_k_per``,
+    so the physical choice is made once: a ``row_number`` window under a
+    constant rank filter, which the optimizer turns into a
+    ``WindowGroupLimit`` (the partial limit that runs before the
+    window's exchange). Pinned on each ranked operator family."""
+    from pyspark.sql import functions as F
+
+    from big_data_hadoop_spark.operators import pq
+    from big_data_hadoop_spark.operators import similarity as sim
+    from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk
+    from big_data_hadoop_spark.pipeline import cap_per_group
+    from big_data_hadoop_spark.probes import EMBED_DIM
+    from big_data_hadoop_spark.sources.io import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    queries = emb.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
+    docs = load_table(spark, SF_SMOKE, "documents")
+    text_q = docs.limit(3).select(F.col("doc_id").alias("query_id"), "text")
+    cb = pq.pq_train(emb, dim=EMBED_DIM, m=4, k=4, seed=3)
+    ivfpq = pq.ivfpq_build(emb, dim=EMBED_DIM, n_cells=4, m=4, k=4, seed=3)
+    ranked = {
+        "cosine_topk": sim.cosine_topk(emb, [1, 2], k=5, dim=EMBED_DIM),
+        "cosine_topk_vectors": sim.cosine_topk_vectors(emb, queries, k=5),
+        "ivf_search_vectors": sim.ivf_search_vectors(
+            sim.ivf_build(emb, n_cells=4), queries, k=5, n_probe=2
+        ),
+        "pq_search": pq.pq_search(pq.pq_encode(emb, cb), cb, queries, topk=3),
+        "ivfpq_search": pq.ivfpq_search(ivfpq, queries, topk=3, n_probe=2),
+        "bm25_topk": bm25_topk(bm25_index(docs), text_q, topk=5),
+        "cap_per_group": cap_per_group(docs, group_col="source", cap=10),
+    }
+    for name, df in ranked.items():
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "WindowGroupLimit" in opt, (name, opt)
