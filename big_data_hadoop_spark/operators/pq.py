@@ -68,7 +68,7 @@ from big_data_hadoop_spark.operators.similarity import (
     _bounded_training_sample,
     _centroid_matrix,
     _probe_cells,
-    _sq_l2,
+    _sq_l2_sql,
     ivf_build,
 )
 
@@ -105,6 +105,20 @@ class PQCodebook:
     @property
     def dsub(self) -> int:
         return self.dim // self.m
+
+
+def _sub(vec: str, dsub: int) -> str:
+    """SQL text for subspace ``j``'s slice of the array column ``vec``."""
+    return f"slice({vec}, j * {dsub} + 1, {dsub})"
+
+
+def _residual(vec: str, centroids: list[list[float]], cell: str) -> str:
+    """SQL text for ``vec`` minus the centroid of the cell in column
+    ``cell``, elementwise (the IVFADC residual)."""
+    return (
+        f"zip_with({vec}, element_at({_centroid_matrix(centroids)}, "
+        f"{cell} + 1), (x, y) -> x - y)"
+    )
 
 
 def _subvectors(df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int) -> DataFrame:
@@ -220,7 +234,7 @@ def pq_encode(
         id_col,
         "j",
         "code",
-        _sq_l2(F.col("sub"), F.col("centroid")).alias("dist"),
+        F.expr(_sq_l2_sql("sub", "centroid")).alias("dist"),
     )
     best = scored.groupBy(id_col, "j").agg(
         F.min(F.struct("dist", "code")).alias("b")
@@ -262,10 +276,7 @@ def pq_search(
             query_id_col,
             "j",
             "code",
-            _sq_l2(
-                F.slice("_qd", F.col("j") * cb.dsub + 1, cb.dsub),
-                F.col("centroid"),
-            ).alias("pdist"),
+            F.expr(_sq_l2_sql(_sub("_qd", cb.dsub), "centroid")).alias("pdist"),
         )
     )
     flat = codes.select(
@@ -335,7 +346,7 @@ def pq_refine(
         .select(
             query_id_col,
             id_col,
-            _sq_l2(F.col("_qd"), F.col("_cd")).alias("dist"),
+            F.expr(_sq_l2_sql("_qd", "_cd")).alias("dist"),
         )
     )
     return top_k_per(
@@ -412,13 +423,7 @@ def ivfpq_build(
         res = ivf.assigned.select(
             F.col(id_col),
             F.col("cell"),
-            F.zip_with(
-                F.col("emb_d"),
-                F.element_at(
-                    _centroid_matrix(ivf.centroids), F.col("cell") + 1
-                ),
-                lambda x, y: x - y,
-            ).alias("_res"),
+            F.expr(_residual("emb_d", ivf.centroids, "cell")).alias("_res"),
         ).localCheckpoint(eager=True)
         cb = pq_train(
             res, dim=dim, m=m, k=k, id_col=id_col, vec_col="_res",
@@ -476,13 +481,7 @@ def ivfpq_search(
         probed_res = probed.select(
             query_id_col,
             "q_cell",
-            F.zip_with(
-                F.col("_qd"),
-                F.element_at(
-                    _centroid_matrix(index.centroids), F.col("q_cell") + 1
-                ),
-                lambda x, y: x - y,
-            ).alias("_qr"),
+            F.expr(_residual("_qd", index.centroids, "q_cell")).alias("_qr"),
         )
         lut = (
             probed_res.join(F.broadcast(cb.entries))
@@ -491,10 +490,9 @@ def ivfpq_search(
                 "q_cell",
                 "j",
                 "code",
-                _sq_l2(
-                    F.slice("_qr", F.col("j") * cb.dsub + 1, cb.dsub),
-                    F.col("centroid"),
-                ).alias("pdist"),
+                F.expr(_sq_l2_sql(_sub("_qr", cb.dsub), "centroid")).alias(
+                    "pdist"
+                ),
             )
         )
         cand = index.codes.join(
@@ -526,10 +524,9 @@ def ivfpq_search(
                 query_id_col,
                 "j",
                 "code",
-                _sq_l2(
-                    F.slice("_qd", F.col("j") * cb.dsub + 1, cb.dsub),
-                    F.col("centroid"),
-                ).alias("pdist"),
+                F.expr(_sq_l2_sql(_sub("_qd", cb.dsub), "centroid")).alias(
+                    "pdist"
+                ),
             )
         )
         cand = index.codes.join(

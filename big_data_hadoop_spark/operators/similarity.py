@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.functions.rank import _quote, top_k_per
+from big_data_hadoop_spark.session import release_on_drop
 
 #: KMeans fits performed by ``ivf_build`` since import — test observability
 #: for the build-once/search-many contract (VERDICT r3 #2).
@@ -72,7 +73,7 @@ def dot(
     doubles and building two throwaway arrays per candidate pair. The
     unrolled form takes column NAMES and parses ONE SQL string: building
     3·dim Column nodes through py4j costs ~0.4 s of driver time per call
-    at dim=64, the parser under a millisecond, and the resulting
+    at dim=64, the parse ~2 ms (warm JVM, 4 vCPU), and the resulting
     expression tree is identical (pinned by the optimized-plan equality
     A/B this round).
     """
@@ -173,10 +174,7 @@ def _flat(
     flat = cast_once.selectExpr(
         f"`{id_col}`",
         *[f"`{c}`" for c in extra],
-        *[
-            f"COALESCE(element_at(_ed, {i}), 0.0D) AS {prefix}{i}"
-            for i in range(1, dim + 1)
-        ],
+        *_flat_cols("_ed", prefix, dim),
     )
     acc = "0.0D" + "".join(
         f" + {prefix}{i} * {prefix}{i}" for i in range(1, dim + 1)
@@ -185,6 +183,16 @@ def _flat(
     # nullable nrm under a join predicate re-triggers the inferred-filter
     # explosion described above. sqrt(sum of squares) is never null here.
     return flat.withColumn("nrm", F.expr(f"COALESCE(SQRT({acc}), 0.0D)"))
+
+
+def _flat_cols(arr: str, prefix: str, dim: int) -> list[str]:
+    """The ``dim`` scalar columns ``<prefix>1 .. <prefix><dim>`` of the
+    double-array column ``arr`` as ``selectExpr`` strings, each
+    ``COALESCE``d to non-nullable (see :func:`_flat`)."""
+    return [
+        f"COALESCE(element_at({arr}, {i}), 0.0D) AS {prefix}{i}"
+        for i in range(1, dim + 1)
+    ]
 
 
 def _flat_dot(prefix_a: str, prefix_b: str, dim: int) -> Column:
@@ -215,10 +223,10 @@ def cosine_neardup_pairs(
     #6); it defaults to the local ``defaultParallelism``, which is right
     for the single-node verifier role — cluster callers should pass
     their target parallelism explicitly."""
+    # on both paths: the multiplied-form predicate below admits
+    # zero-norm vectors (0 >= 0), and the division fails under ANSI
+    df = _nonzero(df, vec_col)
     if dim is not None:
-        # the multiplied-form predicate below admits zero-norm vectors
-        # (0 >= 0); the oracle mirrors the same list predicate
-        df = _nonzero(df, vec_col)
         # The repartition is a deliberate codegen boundary, not a data
         # movement need: fused scan+flatten+join exceeds Janino's method
         # limit and silently falls back to interpreted eval (~5x slower).
@@ -508,30 +516,34 @@ def _finite_centroids(centroids: list[list[float]]) -> list[list[float]]:
     return centroids
 
 
-def _sq_l2(a: Column, b: Column) -> Column:
-    """Squared L2 between two equal-length double arrays, left-fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _sq_l2_sql(a: str, b: str) -> str:
+    """Squared L2 between two equal-length double arrays as SQL text
+    over the SQL expressions ``a`` and ``b``, left-fold ``((0.0 +
+    (a1-b1)²) + (a2-b2)²) + ...``: the one squared-L2 kernel of cell
+    assignment and of PQ encoding, lookup tables and re-ranking."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "0.0D, (acc, x) -> acc + x)"
     )
 
 
-def _centroid_matrix(centroids: list[list[float]]) -> Column:
-    """The centroids as ONE parsed ``array<array<double>>`` literal —
-    ``element_at(matrix, cell + 1)`` is a cell's centroid. k·dim
-    ``F.lit`` Column nodes through py4j cost ~0.5 s of driver time at
-    8x64; the SQL parse is milliseconds, and ``repr(float)``
-    round-trips doubles exactly, so the literals are the same doubles
-    (pinned by the plan-equality A/B)."""
-    return F.expr(
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")"
-            for c in _finite_centroids(centroids)
-        )
-        + ")"
+def _centroid_matrix(centroids: list[list[float]]) -> str:
+    """The centroids as SQL text for ONE ``array<array<double>>``
+    value (``element_at(matrix, cell + 1)`` is a cell's centroid): a
+    JSON string literal under ``from_json``, which ConstantFolding
+    turns into a literal matrix, so no ``from_json`` runs.
+    ``repr(float)`` round-trips doubles exactly (pinned by
+    ``float.hex``). As k·dim ``…D`` literals in nested ``array(...)``
+    calls the matrix parsed in ~1.5 ms but cost ~60 ms of analysis per
+    call at 16×32 (warm JVM, 4 vCPU); with the one literal,
+    :func:`assign_cells`'s whole distance expression analyzes in ~10
+    ms. A non-finite centroid is refused first: JSON has no literal
+    for it."""
+    rows = ",".join(
+        "[" + ",".join(repr(float(x)) for x in c) + "]"
+        for c in _finite_centroids(centroids)
     )
+    return f"from_json('[{rows}]', 'array<array<double>>')"
 
 
 def assign_cells(
@@ -548,8 +560,10 @@ def assign_cells(
     and the embedding store assigns with it. One narrow pass over the
     parsed centroid matrix (``_centroid_matrix``, which refuses a
     non-finite centroid), k x dim left-fold ``(x-y)²`` multiply-adds
-    per row via array HOFs — this runs once per INPUT row; the
-    per-PAIR hot path downstream uses the flat-column scoring.
+    per row (``_sq_l2_sql``) — this runs once per INPUT row; the
+    per-PAIR hot path downstream uses the flat-column scoring. Every
+    expression is parsed from SQL text, so building the plan costs a
+    handful of py4j calls whatever k and dim are.
     ``with_dist`` also emits ``cell_dist double`` (the squared L2 to
     the winning centroid — the assignment metric itself, so the
     store's drift diagnostic measures exactly what assignment
@@ -573,24 +587,29 @@ def assign_cells(
             )
         return out
     k = len(centroids)
-    emb = _as_double(F.col(vec_col))
-    dists = F.transform(_centroid_matrix(centroids), lambda c: _sq_l2(emb, c))
     # materialize the k-vector ONCE per row; the argmin, min, runner-up
-    # and top-p all read it (inlining `dists` more than once would
-    # multiply the k x dim work). The scratch column name is namespaced
-    # so a caller frame that happens to carry a same-named column is
-    # never clobbered then dropped (round-11 self-review).
-    scratch = "__bdhs_assign_dists"
+    # and top-p all read it (inlining it more than once would multiply
+    # the k x dim work). The scratch column names are namespaced so a
+    # caller frame that happens to carry a same-named column is never
+    # clobbered then dropped (round-11 self-review).
+    scratch, scratch2 = "__bdhs_assign_dists", "__bdhs_assign_ranked"
     while scratch in df.columns:
         scratch += "_"
-    out = df.withColumn(scratch, dists).withColumn(
-        "cell",
-        (
-            F.array_position(F.col(scratch), F.array_min(F.col(scratch)))
-            - 1
-        ).cast("int"),
+    while scratch2 in df.columns:
+        scratch2 += "_"
+    vec = f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)"
+    # the centroid lambda variable borrows the scratch name: absent from
+    # the caller's columns, it cannot shadow the one ``vec`` reads
+    out = df.withColumn(
+        scratch,
+        F.expr(
+            f"transform({_centroid_matrix(centroids)}, "
+            f"{scratch} -> {_sq_l2_sql(vec, scratch)})"
+        ),
     )
-    scratch2 = None
+    cols = {
+        "cell": f"CAST(array_position({scratch}, array_min({scratch})) - 1 AS INT)"
+    }
     if p > 1:
         # (distance, index) struct sort: lexicographic — distance
         # ascending, index ascending on ties, so element 1 is exactly
@@ -598,39 +617,29 @@ def assign_cells(
         # top-p slice AND the runner-up distance below read ONE sort
         # per row (round-12 review: cell_dist2 previously re-sorted
         # the k-vector a second time).
-        scratch2 = "__bdhs_assign_ranked"
-        while scratch2 in df.columns:
-            scratch2 += "_"
-        out = out.withColumn(
-            scratch2,
-            F.array_sort(
-                F.zip_with(
-                    F.col(scratch),
-                    F.sequence(F.lit(0), F.lit(k - 1)),
-                    lambda d, i: F.struct(d.alias("d"), i.alias("i")),
-                )
-            ),
-        ).withColumn(
-            "cells",
-            F.transform(
-                F.slice(F.col(scratch2), 1, min(p, k)),
-                lambda s: s["i"].cast("int"),
-            ),
+        cols[scratch2] = (
+            f"array_sort(transform({scratch}, (d, i) -> struct(d AS d, i AS i)))"
+        )
+    out = out.withColumns({c: F.expr(e) for c, e in cols.items()})
+    cols = {}
+    if p > 1:
+        cols["cells"] = (
+            f"transform(slice({scratch2}, 1, {min(p, k)}), s -> CAST(s.i AS INT))"
         )
     if with_dist:
-        out = out.withColumn("cell_dist", F.array_min(F.col(scratch)))
+        cols["cell_dist"] = f"array_min({scratch})"
         if k < 2:
-            cd2 = F.lit(None).cast("double")
-        elif scratch2 is not None:
+            cols["cell_dist2"] = "CAST(NULL AS DOUBLE)"
+        elif p > 1:
             # the struct sort's 2nd element carries the 2nd-smallest
             # distance (d is the primary sort key, so the d components
             # come out as the sorted multiset)
-            cd2 = F.element_at(F.col(scratch2), 2)["d"]
+            cols["cell_dist2"] = f"element_at({scratch2}, 2).d"
         else:
-            cd2 = F.element_at(F.array_sort(F.col(scratch)), 2)
-        out = out.withColumn("cell_dist2", cd2)
-    out = out.drop(scratch)
-    return out.drop(scratch2) if scratch2 is not None else out
+            cols["cell_dist2"] = f"element_at(array_sort({scratch}), 2)"
+    if cols:
+        out = out.withColumns({c: F.expr(e) for c, e in cols.items()})
+    return out.drop(scratch, scratch2)
 
 
 @dataclass
@@ -763,10 +772,11 @@ def _probe_cells(
     lower index on ties). A per-row sort — nothing shuffles before the
     broadcast join; ``n_probe < 1`` probes nothing."""
     ranked = assign_cells(q, centroids, vec_col=vec_col, check_cells=n_probe)
-    cells = F.col("cells") if n_probe > 1 else F.array("cell")
-    return ranked.select(*q.columns, F.explode(cells).alias("q_cell")).filter(
-        F.lit(n_probe >= 1)
+    cells = "cells" if n_probe > 1 else "array(cell)"
+    probed = ranked.selectExpr(
+        *map(_quote, q.columns), f"explode({cells}) AS q_cell"
     )
+    return probed if n_probe >= 1 else probed.where("false")
 
 
 def _ivf_search_core(
@@ -780,22 +790,38 @@ def _ivf_search_core(
     query keeps its ``n_probe`` nearest cells (``_probe_cells`` over
     the index's parsed centroid matrix) and exact-cosine re-ranks
     inside them via a broadcast equi-join on the cell id — the corpus
-    meets candidates on a short key, never all-pairs."""
+    meets candidates on a short key, never all-pairs. Both sides are
+    flattened below the join into scalar columns (:func:`_flat`'s
+    form), so a candidate pair is scored by one codegen'd multiply-add
+    chain, :func:`dot`'s left fold (bit-identical sims), as in
+    ``cosine_topk(dim=...)``. The result releases its JVM query when
+    dropped (:func:`release_on_drop`): the flat plan is large, and a
+    search runs once per serving batch."""
     assigned, id_col = index.assigned, index.id_col
-    probed = _probe_cells(q, index.centroids, "q_emb", n_probe)
-    cond = F.col("cell") == F.col("q_cell")
-    if exclude_self:
-        cond = cond & (F.col("query_id") != F.col(id_col))
-    sim = dot(F.col("q_emb"), F.col("emb_d")) / (F.col("q_nrm") * F.col("nrm"))
+    dim = len(index.centroids[0])
     # zero-norm guard: NULL sims are unrankable (see _nonzero)
-    assigned = assigned.filter(F.col("nrm") > 0)
-    probed = probed.filter(F.col("q_nrm") > 0)
-    scored = assigned.join(F.broadcast(probed), cond).select(
+    fa = assigned.where("nrm > 0").selectExpr(
+        _quote(id_col), "cell", "nrm", *_flat_cols("emb_d", "_a", dim)
+    )
+    fb = (
+        _probe_cells(q, index.centroids, "q_emb", n_probe)
+        .where("q_nrm > 0")
+        .selectExpr(
+            "query_id", "q_cell", "q_nrm", *_flat_cols("q_emb", "_b", dim)
+        )
+    )
+    cond = "cell = q_cell"
+    if exclude_self:
+        cond += f" AND query_id != {_quote(id_col)}"
+    sim = _flat_dot("_b", "_a", dim) / (F.col("q_nrm") * F.col("nrm"))
+    scored = fa.join(F.broadcast(fb), F.expr(cond)).select(
         "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
     )
-    return top_k_per(
-        scored, "query_id", "sim DESC, neighbor_id ASC", k
-    ).select("query_id", "neighbor_id", "sim")
+    return release_on_drop(
+        top_k_per(scored, "query_id", "sim DESC, neighbor_id ASC", k).select(
+            "query_id", "neighbor_id", "sim"
+        )
+    )
 
 
 def ivf_search(
@@ -837,13 +863,24 @@ def ivf_search_vectors(
     matrix; a non-finite centroid raises ``ValueError`` naming its
     cell), then broadcast of the probed queries, cell equi-join, exact
     cosine re-rank — the corpus is scanned once per batch regardless of
-    query count."""
+    query count. A query vector whose width differs from the index's
+    fails the search with an error naming both widths."""
     if not index.centroids:
         return _ivf_empty_result(index, queries.schema[id_col].dataType)
-    q = with_norm(queries, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("emb_d").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    # a query of another width has no cosine against the index: refuse
+    # it inside the plan (no extra job), before anything reads it
+    dim, v = len(index.centroids[0]), _quote(vec_col)
+    queries = queries.withColumn(
+        vec_col,
+        F.expr(
+            f"CASE WHEN {v} IS NOT NULL AND size({v}) != {dim} THEN "
+            "raise_error(concat('ivf_search_vectors: a query vector has ', "
+            f"CAST(size({v}) AS STRING), ' dimensions, the index has {dim}')) "
+            f"ELSE {v} END"
+        ),
+    )
+    q = with_norm(queries, vec_col=vec_col).selectExpr(
+        f"{_quote(id_col)} AS query_id", "emb_d AS q_emb", "nrm AS q_nrm"
     )
     return _ivf_search_core(index, q, k, n_probe, exclude_self=False)
 

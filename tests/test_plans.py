@@ -597,3 +597,32 @@ def test_every_top_k_plans_a_window_group_limit(spark):
     for name, df in ranked.items():
         opt = df._jdf.queryExecution().optimizedPlan().toString()
         assert "WindowGroupLimit" in opt, (name, opt)
+
+
+def test_ivf_search_scores_flat_columns_after_the_join(spark):
+    """IVF serving scores each candidate pair with one codegen'd
+    multiply-add chain over scalar columns flattened below the cell
+    join: the projection right above the join holds no array fold
+    (``aggregate``/``zip_with``), the centroid matrix's ``from_json``
+    is folded into a literal, and the top-k still plans a
+    ``WindowGroupLimit``."""
+    from pyspark.sql import functions as F
+
+    from big_data_hadoop_spark.operators import similarity as sim
+    from big_data_hadoop_spark.sources.io import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    queries = emb.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
+    plan = sim.ivf_search_vectors(
+        sim.ivf_build(emb, n_cells=4), queries, k=5, n_probe=2
+    )._jdf.queryExecution().optimizedPlan()
+    text = plan.toString()
+    assert "JsonToStructs" not in text and "from_json" not in text, text
+    assert "WindowGroupLimit" in text, text
+    node = plan
+    while node.children().head().nodeName() != "Join":
+        node = node.children().head()
+    post_join = node.simpleString(100_000)
+    assert node.nodeName() == "Project", post_join
+    assert "_b1" in post_join and "_a1" in post_join, post_join
+    assert "aggregate" not in post_join and "zip_with" not in post_join, post_join

@@ -161,3 +161,25 @@ def test_semantic_subset_of_exact(spark, emb):
         for r in semantic_neardup_pairs(emb, eps=EPS, n_cells=8).collect()
     }
     assert approx <= exact
+
+
+def test_exact_pairs_skip_zero_vector_without_dim(spark):
+    """A corpus holding an all-zero vector: the array path (no ``dim``)
+    drops it like the flat path does, instead of failing the whole call
+    with ``DIVIDE_BY_ZERO`` under ANSI; both paths return the same rows,
+    sims equal bit for bit."""
+    rows = [
+        (i, [0.0] * 6 if i == 3 else [float(np.sin(i * 7 + j)) for j in range(6)])
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def pairs(**kw):
+        return sorted(
+            (r.vec_a, r.vec_b, r.sim.hex())
+            for r in cosine_neardup_pairs(df, threshold=0.3, **kw).collect()
+        )
+
+    flat = pairs(dim=6)
+    assert flat and all(3 not in p[:2] for p in flat)
+    assert pairs() == flat
