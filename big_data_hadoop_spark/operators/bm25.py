@@ -24,9 +24,10 @@ skeleton — postings ``(term, doc, tf)`` and docstats ``(doc, len)`` —
 plus a one-row totals frame (N, avgdl) that joins in by broadcast,
 all lazy. Scoring is one equi-join of query terms against postings on
 the term key (the classic inverted-index lookup: only documents
-sharing a term are touched), a per-(query, doc) sum with map-side
-partials, and the standard top-k rank window. Ultra-common terms make
-the term join skew-prone at corpus scale; ``max_df_frac`` drops terms
+sharing a term are touched), a per-(query, doc) sum in ascending
+term-score order (bit-identical from run to run), and the standard
+top-k rank window. Ultra-common terms make the term join skew-prone
+at corpus scale; ``max_df_frac`` drops terms
 appearing in more than that fraction of documents from the INDEX
 (the standard stopword valve — such terms carry near-zero idf anyway),
 bounding any posting list at ``max_df_frac · N``.
@@ -41,6 +42,7 @@ from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.functions.rank import _quote, top_k_per
 from big_data_hadoop_spark.functions.text import kept_tokens
+from big_data_hadoop_spark.session import release_on_drop
 
 __all__ = ["BM25Index", "bm25_index", "bm25_topk", "hybrid_topk"]
 
@@ -130,13 +132,25 @@ def bm25_topk(
         F.lit(1.0 - b) + F.lit(float(b)) * F.col("dlen") / F.col("avgdl")
     )
     term_score = idf * tf * F.lit(float(k1) + 1.0) / denom
-    scored = hit.groupBy(query_id_col, index.id_col).agg(
-        F.sum(term_score).alias("score")
+    # summed in ascending order, not by F.sum: after two shuffle joins
+    # the rows of a group arrive in a different order from run to run,
+    # and so did the last bits of a float sum
+    scored = (
+        hit.select(query_id_col, index.id_col, term_score.alias("_ts"))
+        .groupBy(query_id_col, index.id_col)
+        .agg(
+            F.expr(
+                "aggregate(array_sort(collect_list(_ts)), 0.0D, "
+                "(acc, x) -> acc + x)"
+            ).alias("score")
+        )
     )
-    return top_k_per(
-        scored, query_id_col, f"score DESC, {_quote(index.id_col)} ASC",
-        topk, rank="rank",
-    ).select(query_id_col, index.id_col, "score", "rank")
+    return release_on_drop(
+        top_k_per(
+            scored, query_id_col, f"score DESC, {_quote(index.id_col)} ASC",
+            topk, rank="rank",
+        ).select(query_id_col, index.id_col, "score", "rank")
+    )
 
 
 def hybrid_topk(

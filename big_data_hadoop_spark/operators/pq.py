@@ -69,8 +69,10 @@ from big_data_hadoop_spark.operators.similarity import (
     _centroid_matrix,
     _probe_cells,
     _sq_l2_sql,
+    _width_checked,
     ivf_build,
 )
+from big_data_hadoop_spark.session import release_on_drop
 
 __all__ = [
     "PQCodebook",
@@ -118,6 +120,18 @@ def _residual(vec: str, centroids: list[list[float]], cell: str) -> str:
     return (
         f"zip_with({vec}, element_at({_centroid_matrix(centroids)}, "
         f"{cell} + 1), (x, y) -> x - y)"
+    )
+
+
+def _query_vectors(
+    queries: DataFrame, id_col: str, vec_col: str, dim: int, op: str
+) -> DataFrame:
+    """``(id_col, _qd)``: the query vectors as ``array<double>``, a
+    vector whose width is not the codebook's refused in the plan
+    (``similarity._width_checked``)."""
+    checked = _width_checked(_quote(vec_col), dim, op, "the codebook")
+    return queries.select(
+        F.col(id_col), F.expr(f"CAST({checked} AS ARRAY<DOUBLE>)").alias("_qd")
     )
 
 
@@ -266,11 +280,10 @@ def pq_search(
     ``codes`` is ``pq_encode`` output (or its persisted table);
     ``queries`` a small frame of raw query vectors. The LUT and the
     exploded-code join are both broadcast-side; see the module
-    docstring for the full shape."""
+    docstring for the full shape. A query vector whose width is not
+    the codebook's fails the search with an error naming both widths."""
     lut = (
-        queries.select(
-            F.col(query_id_col), _as_double(F.col(query_vec_col)).alias("_qd")
-        )
+        _query_vectors(queries, query_id_col, query_vec_col, cb.dim, "pq_search")
         .join(F.broadcast(cb.entries))
         .select(
             query_id_col,
@@ -288,10 +301,12 @@ def pq_search(
         .groupBy(query_id_col, id_col)
         .agg(F.sum("pdist").alias("adc_dist"))
     )
-    return top_k_per(
-        dists, query_id_col, f"adc_dist ASC, {_quote(id_col)} ASC", topk,
-        rank="rank",
-    ).select(query_id_col, id_col, "adc_dist", "rank")
+    return release_on_drop(
+        top_k_per(
+            dists, query_id_col, f"adc_dist ASC, {_quote(id_col)} ASC", topk,
+            rank="rank",
+        ).select(query_id_col, id_col, "adc_dist", "rank")
+    )
 
 
 def pq_refine(
@@ -469,10 +484,12 @@ def ivfpq_search(
     ``||q − (c_cell + r̂)||² = ||(q − c_cell) − r̂||²`` — the LUT is
     built per (query, PROBED cell) from the query's residual against
     that cell (``q × n_probe × m × k`` rows, broadcast-sized), and
-    the per-candidate sum joins on (query, cell, subspace, code)."""
+    the per-candidate sum joins on (query, cell, subspace, code). A
+    query vector whose width is not the codebook's fails the search
+    with an error naming both widths."""
     cb = index.cb
-    q = queries.select(
-        F.col(query_id_col), _as_double(F.col(query_vec_col)).alias("_qd")
+    q = _query_vectors(
+        queries, query_id_col, query_vec_col, cb.dim, "ivfpq_search"
     )
     probed = _probe_cells(q, index.centroids, "_qd", n_probe)
     if index.residual:
@@ -543,10 +560,12 @@ def ivfpq_search(
             .groupBy(query_id_col, index.id_col)
             .agg(F.sum("pdist").alias("adc_dist"))
         )
-    return top_k_per(
-        dists, query_id_col, f"adc_dist ASC, {_quote(index.id_col)} ASC",
-        topk, rank="rank",
-    ).select(query_id_col, index.id_col, "adc_dist", "rank")
+    return release_on_drop(
+        top_k_per(
+            dists, query_id_col, f"adc_dist ASC, {_quote(index.id_col)} ASC",
+            topk, rank="rank",
+        ).select(query_id_col, index.id_col, "adc_dist", "rank")
+    )
 
 
 def ivfpq_save(index: IVFPQIndex, path: str) -> None:

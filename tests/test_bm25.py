@@ -213,3 +213,32 @@ def test_hybrid_zero_norm_embedding_never_ranks(spark, corpus):
     assert rows, "query should still retrieve non-zero candidates"
     assert target not in {r["doc_id"] for r in rows}
     assert not any(np.isnan(r["cosine"]) for r in rows)
+
+
+def test_scores_bit_identical_across_shuffle_layouts(spark, corpus):
+    """A document's score does not depend on the order its term rows
+    arrive in: two runs whose joins shuffle into different partition
+    counts give scores equal by ``float.hex`` (an order-dependent float
+    sum differed in its last bits from run to run)."""
+    queries = corpus.orderBy("doc_id").limit(6).select(
+        F.col("doc_id").alias("query_id"), "text"
+    )
+    conf = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in [*conf, "spark.sql.shuffle.partitions"]}
+    runs = []
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for parts in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            rows = bm25_topk(bm25_index(corpus), queries, topk=20).collect()
+            runs.append(
+                sorted((r["query_id"], r["doc_id"], r["score"].hex()) for r in rows)
+            )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert runs[0] and runs[0] == runs[1]

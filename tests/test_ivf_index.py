@@ -507,33 +507,84 @@ def test_ivf_search_vectors_py4j_budget(spark, corpus, py4j_calls):
     """Building (not running) a serving search on a warm index stays
     inside a py4j round-trip budget: the cost of constructing the plan
     is deterministic in calls, unlike its wall time. The budget is
-    the count measured once cell assignment and the flat-column scoring
-    were parsed from SQL text (900 calls before, with the distance
-    fold, the struct sort and the probe slice built as Column lambdas;
+    the count measured once the query cast and norm were parsed from
+    one SQL string each and the corpus side became the index's
+    resident serving copy (325 calls before; 900 before cell
+    assignment and the flat-column scoring were parsed from SQL text;
     959 before the top-k tail became one parsed window)."""
     index = sim.ivf_build(corpus, n_cells=4)
     queries = corpus.filter("vec_id < 8").toDF("query_id", "embedding")
     sim.ivf_search_vectors(index, queries, k=5, n_probe=2)  # warm
     with py4j_calls() as n:
         sim.ivf_search_vectors(index, queries, k=5, n_probe=2)
-    assert n[0] <= 325, n[0]
+    assert n[0] <= 211, n[0]
 
 
-def test_ivf_search_result_releases_its_jvm_query_when_dropped(spark, corpus):
-    """Dropping a search result frees its JVM ``Dataset`` without
+def _ranked_results():
+    """One small search per ranked vector or text operator, each built
+    by a ``(spark, corpus) -> DataFrame`` factory."""
+    from big_data_hadoop_spark.operators import pq
+    from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk
+
+    def queries(corpus):
+        return corpus.filter("vec_id < 8").toDF("query_id", "embedding")
+
+    def docs(spark):
+        return spark.createDataFrame(
+            [(i, f"w{i % 3} w{i % 5} shared") for i in range(12)],
+            "doc_id long, text string",
+        )
+
+    return {
+        "ivf_search_vectors": lambda spark, corpus: sim.ivf_search_vectors(
+            sim.ivf_build(corpus, n_cells=4), queries(corpus), k=5, n_probe=2
+        ),
+        "ivf_search": lambda spark, corpus: sim.ivf_search(
+            sim.ivf_build(corpus, n_cells=4), list(range(8)), k=5, n_probe=2
+        ),
+        "cosine_topk": lambda spark, corpus: sim.cosine_topk(
+            corpus, list(range(8)), k=5
+        ),
+        "cosine_topk_vectors": lambda spark, corpus: sim.cosine_topk_vectors(
+            corpus, queries(corpus), k=5
+        ),
+        "lsh_bucketed_topk": lambda spark, corpus: sim.lsh_bucketed_topk(
+            corpus, list(range(8)), k=5, dim=6, num_planes=2
+        ),
+        "pq_search": lambda spark, corpus: pq.pq_search(
+            pq.pq_encode(corpus, cb := pq.pq_train(corpus, dim=6, m=2, k=4)),
+            cb, queries(corpus), topk=5,
+        ),
+        "ivfpq_search": lambda spark, corpus: pq.ivfpq_search(
+            pq.ivfpq_build(corpus, dim=6, n_cells=2, m=2, k=4),
+            queries(corpus), topk=5, n_probe=2,
+        ),
+        "bm25_topk": lambda spark, corpus: bm25_topk(
+            bm25_index(docs(spark)),
+            docs(spark).filter("doc_id < 3").toDF("query_id", "text"),
+            topk=5,
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_ranked_results()))
+def test_ivf_search_result_releases_its_jvm_query_when_dropped(
+    spark, corpus, op
+):
+    """Dropping a ranked result frees its JVM ``Dataset`` without
     waiting for Python's full collection: the gateway forgets the
     object, although py4j's cached-method cycle keeps the Python
     ``JavaObject`` itself uncollected. py4j sends the release from its
-    finalizer thread, so the test polls for it."""
+    finalizer thread, so the test polls for it. Every ranked vector
+    and text operator returns its result this way, not only the IVF
+    search."""
     import time
 
     from py4j.protocol import Py4JError
 
-    index = sim.ivf_build(corpus, n_cells=4)
-    queries = corpus.filter("vec_id < 8").toDF("query_id", "embedding")
-    res = sim.ivf_search_vectors(index, queries, k=5, n_probe=2)
+    res = _ranked_results()[op](spark, corpus)
     jdf = res._jdf
-    assert len(res.collect()) == 8 * 5
+    assert len(res.collect()) > 0
     assert not jdf.isEmpty()  # live while the frame is
     del res
     deadline = time.monotonic() + 10
@@ -543,21 +594,141 @@ def test_ivf_search_result_releases_its_jvm_query_when_dropped(spark, corpus):
         except Py4JError:
             return
         time.sleep(0.05)
-    pytest.fail("the dropped search result's Dataset is still bound")
+    pytest.fail(f"the dropped {op} result's Dataset is still bound")
 
 
 @pytest.mark.parametrize("width", [5, 7])
-def test_ivf_search_vectors_refuses_wrong_dimension(spark, corpus, width):
-    """A query vector one element short of or past the index's width
-    fails the search with both widths in the message; it no longer
-    comes back as neighbours with ``sim = None``."""
-    index = sim.ivf_build(corpus, n_cells=4)
+@pytest.mark.parametrize(
+    "op",
+    ["ivf_search_vectors", "cosine_topk_vectors", "pq_search", "ivfpq_search"],
+)
+def test_ivf_search_vectors_refuses_wrong_dimension(spark, corpus, op, width):
+    """A query vector one element short of or past the corpus width
+    fails the search with both widths in the message, in the IVF
+    search, the exact search and both PQ searches alike; it no longer
+    comes back as neighbours with ``sim = None`` or ranked by a partial
+    distance."""
+    from big_data_hadoop_spark.operators import pq
+
     queries = spark.createDataFrame(
         [(1, [1.0] * 6), (2, [1.0] * width)],
         "query_id long, embedding array<double>",
     )
-    with pytest.raises(Exception, match=f"has {width} dimensions, the index has 6"):
-        sim.ivf_search_vectors(index, queries, k=3, n_probe=2).collect()
+    of = "the codebook"
+    if op == "ivf_search_vectors":
+        index = sim.ivf_build(corpus, n_cells=4)
+        res = sim.ivf_search_vectors(index, queries, k=3, n_probe=2)
+        of = "the index"
+    elif op == "cosine_topk_vectors":
+        res, of = sim.cosine_topk_vectors(corpus, queries, k=3), "the corpus"
+    elif op == "pq_search":
+        cb = pq.pq_train(corpus, dim=6, m=2, k=4)
+        res = pq.pq_search(pq.pq_encode(corpus, cb), cb, queries, topk=3)
+    else:
+        index = pq.ivfpq_build(corpus, dim=6, n_cells=2, m=2, k=4)
+        res = pq.ivfpq_search(index, queries, topk=3, n_probe=2)
+    with pytest.raises(
+        Exception, match=f"{op}: a query vector has {width} dimensions, {of} has 6"
+    ):
+        res.collect()
+
+
+def _search_jobs(spark, fn):
+    """``(result rows, Spark jobs run)`` for the action ``fn()``, counted
+    by the status tracker over a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ivf-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one search")
+    try:
+        rows = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ivf_search_vectors_serves_from_its_resident_copy(spark, corpus):
+    """After the first search has filled the index's serving copy, a
+    batch is 2 jobs (the broadcast of the probed queries and the
+    result) over an in-memory scan of the copy, with no shuffle: the
+    one-partition copy already satisfies the top-k window's
+    clustering. Its rows are the flat assignment (``nrm > 0`` rows
+    only), and the results equal the exact search at full probe."""
+    table = "ivf_serving_jobs_test"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        index = sim.ivf_build(corpus, n_cells=4, table=table, buckets=4)
+        queries = corpus.filter("vec_id < 8").toDF("query_id", "embedding")
+        sim.ivf_search_vectors(index, queries, k=5, n_probe=4).collect()  # fill
+        copy = index.serving()
+        assert copy.rdd.getNumPartitions() == 1
+        assert copy.columns == ["vec_id", "cell", "nrm"] + [
+            f"_a{i}" for i in range(1, 7)
+        ]
+        res = sim.ivf_search_vectors(index, queries, k=5, n_probe=4)
+        rows, jobs = _search_jobs(spark, res.collect)
+        assert jobs == 2, jobs
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        shuffles = [
+            line for line in plan.splitlines()
+            if "Exchange" in line and "BroadcastExchange" not in line
+        ]
+        assert not shuffles and "ShuffleQueryStage" not in plan, plan
+        exact = sim.cosine_topk_vectors(corpus, queries, k=5).collect()
+
+        def hexed(rs):
+            return sorted((r.query_id, r.neighbor_id, r.sim.hex()) for r in rs)
+
+        assert hexed(rows) == hexed(exact)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_dropping_the_index_unpersists_its_serving_copy(spark, corpus):
+    """The serving copy's cache entry lives exactly as long as its
+    index, and two indexes over one assignment own separate entries:
+    dropping one leaves the other's copy cached."""
+    import gc
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    index = sim.ivf_build(corpus, n_cells=4)
+    twin = sim.IVFIndex(index.centroids, index.assigned, index.id_col)
+    queries = corpus.filter("vec_id < 4").toDF("query_id", "embedding")
+    sim.ivf_search_vectors(index, queries, k=3, n_probe=2).collect()
+    sim.ivf_search_vectors(twin, queries, k=3, n_probe=2).collect()
+    copy, twin_copy = index.serving(), twin.serving()
+    assert index.serving() is copy  # filled once
+    assert cache.lookupCachedData(copy._jdf).isDefined()
+    del index
+    gc.collect()
+    assert cache.lookupCachedData(copy._jdf).isEmpty()
+    assert cache.lookupCachedData(twin_copy._jdf).isDefined()
+    del twin
+    gc.collect()
+    assert cache.lookupCachedData(twin_copy._jdf).isEmpty()
+
+
+def test_rebuilding_into_the_same_table_serves_the_new_rows(spark, corpus):
+    """An index rebuilt into the table of an index that has served
+    (and is still alive) fills its own copy from the new rows."""
+    table = "ivf_serving_rebuild_test"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        old = sim.ivf_build(corpus, n_cells=4, table=table, buckets=4)
+        queries = corpus.filter("vec_id < 4").toDF("query_id", "embedding")
+        got = sim.ivf_search_vectors(old, queries, k=3, n_probe=4).collect()
+        assert {r.neighbor_id for r in got} <= set(range(45))
+        shifted = corpus.selectExpr("vec_id + 1000 AS vec_id", "embedding")
+        new = sim.ivf_build(shifted, n_cells=4, table=table, buckets=4)
+        got = sim.ivf_search_vectors(new, queries, k=3, n_probe=4).collect()
+        assert len(got) == 4 * 3
+        assert {r.neighbor_id for r in got} <= set(range(1000, 1045)), got
+        assert old.centroids  # the old index is still alive
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_centroid_matrix_folds_to_exact_doubles(spark):
