@@ -567,17 +567,10 @@ def _ranked_results():
     }
 
 
-@pytest.mark.parametrize("op", sorted(_ranked_results()))
-def test_ivf_search_result_releases_its_jvm_query_when_dropped(
-    spark, corpus, op
-):
-    """Dropping a ranked result frees its JVM ``Dataset`` without
-    waiting for Python's full collection: the gateway forgets the
-    object, although py4j's cached-method cycle keeps the Python
-    ``JavaObject`` itself uncollected. py4j sends the release from its
-    finalizer thread, so the test polls for it. Every ranked vector
-    and text operator returns its result this way, not only the IVF
-    search."""
+def _assert_released_when_dropped(spark, corpus, op):
+    """Build the ``op`` result of ``_ranked_results``, collect it, drop
+    it, and poll until the gateway has forgotten its JVM ``Dataset``.
+    py4j sends the release from its finalizer thread, hence the poll."""
     import time
 
     from py4j.protocol import Py4JError
@@ -597,17 +590,27 @@ def test_ivf_search_result_releases_its_jvm_query_when_dropped(
     pytest.fail(f"the dropped {op} result's Dataset is still bound")
 
 
-@pytest.mark.parametrize("width", [5, 7])
+def test_ivf_search_result_releases_its_jvm_query_when_dropped(spark, corpus):
+    """Dropping a search result frees its JVM ``Dataset`` without
+    waiting for Python's full collection: the gateway forgets the
+    object, although py4j's cached-method cycle keeps the Python
+    ``JavaObject`` itself uncollected."""
+    _assert_released_when_dropped(spark, corpus, "ivf_search_vectors")
+
+
 @pytest.mark.parametrize(
-    "op",
-    ["ivf_search_vectors", "cosine_topk_vectors", "pq_search", "ivfpq_search"],
+    "op", sorted(set(_ranked_results()) - {"ivf_search_vectors"})
 )
-def test_ivf_search_vectors_refuses_wrong_dimension(spark, corpus, op, width):
-    """A query vector one element short of or past the corpus width
-    fails the search with both widths in the message, in the IVF
-    search, the exact search and both PQ searches alike; it no longer
-    comes back as neighbours with ``sim = None`` or ranked by a partial
-    distance."""
+def test_ranked_result_releases_its_jvm_query_when_dropped(spark, corpus, op):
+    """Every other ranked vector and text operator returns its result
+    the same way as the IVF search: dropping it frees its JVM
+    ``Dataset``."""
+    _assert_released_when_dropped(spark, corpus, op)
+
+
+def _assert_refuses_wrong_dimension(spark, corpus, op, width):
+    """The ``op`` search of a 6-wide corpus fails when one query vector
+    has ``width`` dimensions, with both widths in the message."""
     from big_data_hadoop_spark.operators import pq
 
     queries = spark.createDataFrame(
@@ -631,6 +634,25 @@ def test_ivf_search_vectors_refuses_wrong_dimension(spark, corpus, op, width):
         Exception, match=f"{op}: a query vector has {width} dimensions, {of} has 6"
     ):
         res.collect()
+
+
+@pytest.mark.parametrize("width", [5, 7])
+def test_ivf_search_vectors_refuses_wrong_dimension(spark, corpus, width):
+    """A query vector one element short of or past the index's width
+    fails the search with both widths in the message; it no longer
+    comes back as neighbours with ``sim = None``."""
+    _assert_refuses_wrong_dimension(spark, corpus, "ivf_search_vectors", width)
+
+
+@pytest.mark.parametrize("width", [5, 7])
+@pytest.mark.parametrize(
+    "op", ["cosine_topk_vectors", "pq_search", "ivfpq_search"]
+)
+def test_vector_search_refuses_wrong_dimension(spark, corpus, op, width):
+    """The exact search and both PQ searches refuse a wrong-width query
+    the same way as the IVF search; they no longer rank it by a partial
+    distance."""
+    _assert_refuses_wrong_dimension(spark, corpus, op, width)
 
 
 def _search_jobs(spark, fn):
