@@ -112,29 +112,20 @@ def dot(
     )
 
 
-def norm(a: Column | str, dim: int | None = None) -> Column:
-    """Left-fold L2 norm: ``sqrt((0.0 + a1*a1) + a2*a2 + ...)``.
-
-    The same contract as :func:`dot`: with ``dim`` given, ``a`` must be
-    a column NAME (a Column raises ``TypeError``) and the fold is
-    unrolled into one parsed ``element_at`` chain with the identical
-    association order, so both forms are bit-equal.
-    """
-    if dim is not None:
-        if not isinstance(a, str):
-            raise TypeError("norm(dim=...) takes a column name, not a Column")
-        return F.expr(_norm_sql(a, dim))
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
+def norm(a: str, dim: int | None = None) -> Column:
+    """Left-fold L2 norm of the double-array column NAMED ``a``:
+    ``sqrt((0.0 + a1*a1) + a2*a2 + ...)``, parsed from
+    :func:`_norm_sql` (a Column raises ``TypeError``). With ``dim``
+    the fold is unrolled into an ``element_at`` chain with the
+    identical association order, so both forms are bit-equal."""
+    if not isinstance(a, str):
+        raise TypeError("norm takes a column name, not a Column")
+    return F.expr(_norm_sql(a, dim))
 
 
 def _norm_sql(a: str, dim: int | None) -> str:
-    """:func:`norm` of the double-array column NAMED ``a`` as SQL text:
-    the array fold, or with ``dim`` its unrolled ``element_at`` chain —
-    the same left fold either way."""
+    """:func:`norm` as SQL text: the one rendering of the norm fold —
+    the array fold, or with ``dim`` its unrolled ``element_at`` chain."""
     if dim is None:
         return (
             f"SQRT(aggregate(transform({_quote(a)}, x -> x * x), 0.0D, "
@@ -162,7 +153,7 @@ def with_norm(
     trips per call, a quarter of building an IVF search."""
     return df.withColumn(
         "emb_d", F.expr(f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)")
-    ).withColumn(out, F.expr(_norm_sql("emb_d", dim)))
+    ).withColumn(out, norm("emb_d", dim))
 
 
 def _flat(
@@ -720,7 +711,13 @@ class IVFIndex:
         otherwise share an entry, and dropping either would unpersist
         the other's copy. Unpersisted through ``weakref.finalize`` when
         the index is dropped: every cached entry adds plan matching to
-        each later query of the session."""
+        each later query of the session. A local checkpoint would need
+        neither tag nor finalizer and serves as fast, but it is not
+        released when the index is dropped (its blocks wait for the
+        JVM's cleaner, which had not run 20 s after a drop and a
+        ``System.gc()``), and it cuts the lineage: once a block is
+        lost, every later search fails instead of recomputing it from
+        ``assigned``."""
         if self._serving is None:
             tag = next(_SERVING_TAGS)
             # zero-norm rows: NULL sims are unrankable (see _nonzero)
@@ -734,8 +731,8 @@ class IVFIndex:
             advisory = to_bytes.byteStringAsBytes(
                 spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
             )
-            # a Java int: an index the optimizer cannot size (built
-            # without a table, it is estimated at ~1e20 bytes) keeps
+            # a Java int: an index the optimizer cannot size (one over
+            # a Python-side frame is estimated at ~1e20 bytes) keeps
             # its partitions, since coalesce never adds any
             parts = min(max(1, -(-int(size) // advisory)), 2**31 - 1)
             self._serving = flat.coalesce(parts).persist()
@@ -1015,9 +1012,10 @@ def cosine_topk_vectors(
     verifier for it): queries arrive as ``(id, embedding)`` rows not
     part of the corpus, so there is no self-exclusion. The query batch
     is broadcast; the corpus streams through one scan; a rank window per
-    query keeps k rows, tie-broken on neighbor id. A query vector whose
-    width differs from the corpus vectors' fails the search with an
-    error naming both widths."""
+    query keeps k rows, tie-broken on neighbor id. A pair of query and
+    corpus vectors of different widths fails the search with an error
+    naming both widths: a wrong-width query, or a malformed corpus row,
+    has no cosine."""
     df = _nonzero(df, vec_col)
     queries = _nonzero(queries, query_vec_col)
     e = with_norm(
@@ -1030,7 +1028,7 @@ def cosine_topk_vectors(
     )
     q_emb = F.expr(
         _width_checked(
-            "q_emb", "size(emb_d)", "cosine_topk_vectors", "the corpus"
+            "q_emb", "size(emb_d)", "cosine_topk_vectors", "a corpus vector"
         )
     )
     sim = dot(q_emb, F.col("emb_d")) / (F.col("q_nrm") * F.col("nrm"))

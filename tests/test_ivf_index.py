@@ -474,9 +474,9 @@ def test_non_finite_centroid_refused_by_search(spark, corpus):
 
 
 def test_dot_norm_dim_contract(spark):
-    """``dot``/``norm`` with ``dim`` take column NAMES only (a Column
-    raises TypeError), and the unrolled form is bit-equal to the
-    array fold: same left-fold association order."""
+    """``dot`` with ``dim``, and ``norm`` always, take column NAMES
+    only (a Column raises TypeError), and the unrolled form is
+    bit-equal to the array fold: same left-fold association order."""
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
@@ -492,11 +492,13 @@ def test_dot_norm_dim_contract(spark):
         sim.dot("a", F.col("b"), dim=4)
     with pytest.raises(TypeError):
         sim.norm(F.col("a"), dim=4)
+    with pytest.raises(TypeError):
+        sim.norm(F.col("a"))
     rows = df.select(
         sim.dot("a", "b", dim=4).alias("dot_u"),
         sim.dot(F.col("a"), F.col("b")).alias("dot_f"),
         sim.norm("a", dim=4).alias("norm_u"),
-        sim.norm(F.col("a")).alias("norm_f"),
+        sim.norm("a").alias("norm_f"),
     ).collect()
     for r in rows:
         assert r.dot_u.hex() == r.dot_f.hex()
@@ -522,7 +524,9 @@ def test_ivf_search_vectors_py4j_budget(spark, corpus, py4j_calls):
 
 def _ranked_results():
     """One small search per ranked vector or text operator, each built
-    by a ``(spark, corpus) -> DataFrame`` factory."""
+    by a ``(spark, corpus) -> (DataFrame, rows)`` factory. ``rows`` is
+    the result's row count where the search is exhaustive over the 45
+    nonzero corpus vectors (8 queries x k=5), else None."""
     from big_data_hadoop_spark.operators import pq
     from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk
 
@@ -536,48 +540,50 @@ def _ranked_results():
         )
 
     return {
-        "ivf_search_vectors": lambda spark, corpus: sim.ivf_search_vectors(
+        "ivf_search_vectors": lambda spark, corpus: (sim.ivf_search_vectors(
             sim.ivf_build(corpus, n_cells=4), queries(corpus), k=5, n_probe=2
-        ),
-        "ivf_search": lambda spark, corpus: sim.ivf_search(
+        ), 8 * 5),
+        "ivf_search": lambda spark, corpus: (sim.ivf_search(
             sim.ivf_build(corpus, n_cells=4), list(range(8)), k=5, n_probe=2
-        ),
-        "cosine_topk": lambda spark, corpus: sim.cosine_topk(
+        ), 8 * 5),
+        "cosine_topk": lambda spark, corpus: (sim.cosine_topk(
             corpus, list(range(8)), k=5
-        ),
-        "cosine_topk_vectors": lambda spark, corpus: sim.cosine_topk_vectors(
+        ), 8 * 5),
+        "cosine_topk_vectors": lambda spark, corpus: (sim.cosine_topk_vectors(
             corpus, queries(corpus), k=5
-        ),
-        "lsh_bucketed_topk": lambda spark, corpus: sim.lsh_bucketed_topk(
+        ), 8 * 5),
+        "lsh_bucketed_topk": lambda spark, corpus: (sim.lsh_bucketed_topk(
             corpus, list(range(8)), k=5, dim=6, num_planes=2
-        ),
-        "pq_search": lambda spark, corpus: pq.pq_search(
+        ), None),
+        "pq_search": lambda spark, corpus: (pq.pq_search(
             pq.pq_encode(corpus, cb := pq.pq_train(corpus, dim=6, m=2, k=4)),
             cb, queries(corpus), topk=5,
-        ),
-        "ivfpq_search": lambda spark, corpus: pq.ivfpq_search(
+        ), 8 * 5),
+        "ivfpq_search": lambda spark, corpus: (pq.ivfpq_search(
             pq.ivfpq_build(corpus, dim=6, n_cells=2, m=2, k=4),
             queries(corpus), topk=5, n_probe=2,
-        ),
-        "bm25_topk": lambda spark, corpus: bm25_topk(
+        ), 8 * 5),
+        "bm25_topk": lambda spark, corpus: (bm25_topk(
             bm25_index(docs(spark)),
             docs(spark).filter("doc_id < 3").toDF("query_id", "text"),
             topk=5,
-        ),
+        ), None),
     }
 
 
 def _assert_released_when_dropped(spark, corpus, op):
-    """Build the ``op`` result of ``_ranked_results``, collect it, drop
-    it, and poll until the gateway has forgotten its JVM ``Dataset``.
-    py4j sends the release from its finalizer thread, hence the poll."""
+    """Build the ``op`` result of ``_ranked_results``, collect it (all
+    its rows where their count is fixed), drop it, and poll until the
+    gateway has forgotten its JVM ``Dataset``. py4j sends the release
+    from its finalizer thread, hence the poll."""
     import time
 
     from py4j.protocol import Py4JError
 
-    res = _ranked_results()[op](spark, corpus)
+    res, rows = _ranked_results()[op](spark, corpus)
     jdf = res._jdf
-    assert len(res.collect()) > 0
+    got = len(res.collect())
+    assert got == rows if rows is not None else got > 0, got
     assert not jdf.isEmpty()  # live while the frame is
     del res
     deadline = time.monotonic() + 10
@@ -623,7 +629,8 @@ def _assert_refuses_wrong_dimension(spark, corpus, op, width):
         res = sim.ivf_search_vectors(index, queries, k=3, n_probe=2)
         of = "the index"
     elif op == "cosine_topk_vectors":
-        res, of = sim.cosine_topk_vectors(corpus, queries, k=3), "the corpus"
+        res = sim.cosine_topk_vectors(corpus, queries, k=3)
+        of = "a corpus vector"
     elif op == "pq_search":
         cb = pq.pq_train(corpus, dim=6, m=2, k=4)
         res = pq.pq_search(pq.pq_encode(corpus, cb), cb, queries, topk=3)
@@ -653,6 +660,23 @@ def test_vector_search_refuses_wrong_dimension(spark, corpus, op, width):
     the same way as the IVF search; they no longer rank it by a partial
     distance."""
     _assert_refuses_wrong_dimension(spark, corpus, op, width)
+
+
+def test_exact_vector_search_refuses_a_short_corpus_row(spark, corpus):
+    """A corpus row of the wrong width fails the exact search with both
+    widths in the message, which names the corpus row as the other
+    side: the queries are the right width."""
+    short = spark.createDataFrame(
+        [(99, [1.0] * 5)], "vec_id long, embedding array<double>"
+    )
+    queries = corpus.filter("vec_id < 2").toDF("query_id", "embedding")
+    res = sim.cosine_topk_vectors(corpus.unionByName(short), queries, k=3)
+    with pytest.raises(
+        Exception,
+        match="cosine_topk_vectors: a query vector has 6 dimensions, "
+        "a corpus vector has 5",
+    ):
+        res.collect()
 
 
 def _search_jobs(spark, fn):
