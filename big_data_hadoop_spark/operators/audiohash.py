@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from big_data_hadoop_spark.operators.dedup import (
+    _check_radius,
     _simhash_pairs_given_fps,
     simhash_matches_against,
 )
@@ -179,8 +180,7 @@ def audio_neardup_pairs(
     docstring fix). Rows must be unique per (id, fingerprint), the
     ``_simhash_pairs_given_fps`` precondition — true for every
     fingerprint/store producer."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     fps = fp.filter(F.col("afp").isNotNull()).select(
         F.col(id_col), F.col("afp").alias("simhash")
     )
@@ -193,9 +193,7 @@ def audio_fingerprint_pairs(
     """Convenience composition: fingerprint + pair in one call; the
     fingerprints are eagerly checkpointed so the band join's two sides
     share ONE decode execution (the ``image_dhash_pairs`` discipline)."""
-    if max_hamming > 3:
-        # validate BEFORE the decode job, not after paying it
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)  # before the decode job
     fp = audio_fingerprint(df, id_col=id_col).localCheckpoint(eager=True)
     return audio_neardup_pairs(fp, max_hamming=max_hamming, id_col=id_col)
 
@@ -211,8 +209,7 @@ def audio_matches_against(
     column, distinct — the shared ``simhash_matches_against``
     contract). History is ONE long per past clip; ``afp`` column, id
     optional and ignored."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     batch = fp.filter(F.col("afp").isNotNull()).select(
         F.col(id_col), F.col("afp").alias("simhash")
     )

@@ -48,7 +48,7 @@ __all__ = ["BM25Index", "bm25_index", "bm25_topk", "hybrid_topk"]
 
 
 def _kept(text_col: str):
-    return kept_tokens(F.col(text_col))
+    return kept_tokens(F.col(_quote(text_col)))
 
 
 @dataclass(frozen=True)
@@ -75,10 +75,11 @@ def bm25_index(
     fraction of the corpus from the postings (skew valve, see module
     docstring). ``None`` keeps everything.
     """
-    toks = docs.select(F.col(id_col), F.explode(_kept(text_col)).alias("term"))
-    postings = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    key = _quote(id_col)
+    toks = docs.select(key, F.explode(_kept(text_col)).alias("term"))
+    postings = toks.groupBy(key, "term").agg(F.count("*").alias("tf"))
     docstats = docs.select(
-        F.col(id_col), F.size(_kept(text_col)).cast("long").alias("dlen")
+        key, F.size(_kept(text_col)).cast("long").alias("dlen")
     )
     totals = docstats.agg(
         F.count("*").alias("n_docs"),
@@ -113,8 +114,9 @@ def bm25_topk(
     (inverted-index semantics: a zero-overlap document scores 0 and is
     never materialized).
     """
+    qid, key = _quote(query_id_col), _quote(index.id_col)
     qt = queries.select(
-        F.col(query_id_col),
+        qid,
         F.explode(F.array_distinct(_kept(query_text_col))).alias("term"),
     )
     hit = (
@@ -136,8 +138,8 @@ def bm25_topk(
     # the rows of a group arrive in a different order from run to run,
     # and so did the last bits of a float sum
     scored = (
-        hit.select(query_id_col, index.id_col, term_score.alias("_ts"))
-        .groupBy(query_id_col, index.id_col)
+        hit.select(qid, key, term_score.alias("_ts"))
+        .groupBy(qid, key)
         .agg(
             F.expr(
                 "aggregate(array_sort(collect_list(_ts)), 0.0D, "
@@ -147,9 +149,8 @@ def bm25_topk(
     )
     return release_on_drop(
         top_k_per(
-            scored, query_id_col, f"score DESC, {_quote(index.id_col)} ASC",
-            topk, rank="rank",
-        ).select(query_id_col, index.id_col, "score", "rank")
+            scored, query_id_col, f"score DESC, {key} ASC", topk, rank="rank",
+        ).select(qid, key, "score", "rank")
     )
 
 

@@ -695,10 +695,45 @@ def simhash_neardup_pairs(
     so candidates come from equi-joins on concatenated chunk
     combinations — never an all-pairs scan — and are verified exactly
     with ``bit_count(xor)``. Exact for ``max_hamming <= 3``."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     fp = simhash(df, text_col=text_col, id_col=id_col)
     return _simhash_pairs_given_fps(fp, max_hamming, id_col)
+
+
+def _check_radius(max_hamming: int) -> None:
+    """Refuse a Hamming radius the 4×16-bit banding cannot serve
+    exactly (:func:`_fp_band_keys`). Every public band-join entry point
+    calls it first, so a wide radius fails before any job runs."""
+    if max_hamming > 3:
+        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+
+
+def _hamming_value_pairs(
+    a: DataFrame, b: DataFrame, max_hamming: int, ordered: bool = False
+) -> DataFrame:
+    """The multi-index band join, the one copy of it: distinct value
+    pairs ``(_u, _v, hamming)`` of ``a``'s and ``b``'s ``simhash``
+    columns (each a frame of DISTINCT 64-bit values) within Hamming
+    ``max_hamming``, ``_u`` from ``a``. ``ordered`` keeps only ``_u <
+    _v`` (the self-join, ``a`` and ``b`` the same values). Candidates
+    meet on :func:`_fp_band_keys`' radius-scaled keys — never all pairs
+    — and are verified exactly with ``bit_count(u XOR v)``; a pair that
+    agrees on several chunk combinations is emitted once. Every 64-bit
+    fingerprint family (SimHash, image dHash, audio, video frames)
+    matches through it."""
+    cond = "a.ci = b.ci AND a.cv = b.cv"
+    if ordered:
+        cond += " AND a.simhash < b.simhash"
+    return (
+        _fp_band_keys(a, max_hamming).alias("a")
+        .join(_fp_band_keys(b, max_hamming).alias("b"), F.expr(cond))
+        .selectExpr(
+            "a.simhash AS _u", "b.simhash AS _v",
+            "bit_count(a.simhash ^ b.simhash) AS hamming",
+        )
+        .where(f"hamming <= {int(max_hamming)}")
+        .distinct()
+    )
 
 
 def _fp_band_keys(fp: DataFrame, max_hamming: int) -> DataFrame:
@@ -724,30 +759,17 @@ def _fp_band_keys(fp: DataFrame, max_hamming: int) -> DataFrame:
         # radius 0: the single combination keeps ALL chunks, so the key
         # IS the fingerprint — no array build, no explode (round-10
         # micro-fix; the brute-force equality pins cover this path)
-        return fp.select(
-            "*",
-            F.lit(0).alias("ci"),
-            F.col("simhash").alias("cv"),
+        return fp.selectExpr("*", "0 AS ci", "simhash AS cv")
+    entries = ", ".join(
+        f"struct({i} AS ci, "
+        + " | ".join(
+            f"shiftleft(shiftright(simhash, {16 * j}) & 65535, {16 * pos})"
+            for pos, j in enumerate(combo)
         )
-    chunks = [
-        F.shiftright("simhash", j * 16)
-        .bitwiseAND(F.lit(0xFFFF))
-        .cast("long")
-        for j in range(4)
-    ]
-    entries = []
-    for i, combo in enumerate(combinations(range(4), keep)):
-        cv = F.lit(0).cast("long")
-        for pos, j in enumerate(combo):
-            cv = cv.bitwiseOR(F.shiftleft(chunks[j], 16 * pos))
-        entries.append(F.struct(F.lit(i).alias("ci"), cv.alias("cv")))
-    return (
-        fp.select(
-            "*", F.explode(F.array(*entries)).alias("_c")
-        )
-        .select("*", F.col("_c.ci").alias("ci"), F.col("_c.cv").alias("cv"))
-        .drop("_c")
+        + " AS cv)"
+        for i, combo in enumerate(combinations(range(4), keep))
     )
+    return fp.selectExpr("*", f"inline(array({entries}))")
 
 
 def _simhash_pairs_given_fps(
@@ -761,8 +783,8 @@ def _simhash_pairs_given_fps(
 
     Two-level structure (round-9 sf1 exhibit finding — the naive
     row-level single-chunk join went 57× at 10× data on perceptual
-    fingerprints): (1) the banded join runs over DISTINCT fingerprint
-    VALUES with :func:`_fp_band_keys` radius-scaled keys, so identical-
+    fingerprints): (1) the band join (:func:`_hamming_value_pairs`)
+    runs over DISTINCT fingerprint VALUES, so identical-
     fingerprint clusters (exact duplicates — boilerplate farms) cost
     one value each instead of a quadratic bucket; (2) verified value
     pairs expand back to id pairs through two equi-joins (output-bound
@@ -780,24 +802,7 @@ def _simhash_pairs_given_fps(
     rows would emit duplicated pair rows (round-10 review note)."""
     fps = fp.select(F.col(id_col), "simhash").localCheckpoint(eager=True)
     vals = fps.select("simhash").distinct().localCheckpoint(eager=True)
-    banded = _fp_band_keys(vals, max_hamming)
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    vpairs = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.simhash") < F.col("b.simhash")),
-        )
-        .select(
-            F.col("a.simhash").alias("_u"),
-            F.col("b.simhash").alias("_v"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a value pair can agree on several combinations
-    )
+    vpairs = _hamming_value_pairs(vals, vals, max_hamming, ordered=True)
     cross = (
         vpairs.join(
             fps.select(F.col(id_col).alias("_xid"), F.col("simhash").alias("_u")),
@@ -839,34 +844,19 @@ def simhash_matches_against(
     whose fingerprint lies within Hamming ``max_hamming`` of ANY
     fingerprint in ``stored_fps`` (a one-column ``simhash`` history
     frame — 8 bytes per past document, the SimHash analog of the
-    digest/signature history tables). Same multi-index banding as
-    :func:`_simhash_pairs_given_fps`, in value space: DISTINCT batch
-    fingerprint values band-join DISTINCT history values on the
-    :func:`_fp_band_keys` radius-scaled keys (history documents never
-    ship, only their fingerprints), hits verified exactly with
-    ``bit_count(xor)``, and matched VALUES expand back to batch ids
+    digest/signature history tables). DISTINCT batch fingerprint
+    values band-join DISTINCT history values in the one band join,
+    :func:`_hamming_value_pairs` (history documents never ship, only
+    their fingerprints), and matched VALUES expand back to batch ids
     with one semi-join — identical-fingerprint clusters on either side
     cost one value each instead of a quadratic candidate bucket."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     new_fp = fps.select(F.col(id_col), "simhash").localCheckpoint(eager=True)
-    a = _fp_band_keys(
-        new_fp.select("simhash").distinct(), max_hamming
-    ).alias("a")
-    b = _fp_band_keys(
-        stored_fps.select("simhash").distinct(), max_hamming
-    ).alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    hit_vals = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv")),
-        )
-        .filter(ham <= max_hamming)
-        .select(F.col("a.simhash").alias("simhash"))
-        .distinct()
-    )
+    hit_vals = _hamming_value_pairs(
+        new_fp.select("simhash").distinct(),
+        stored_fps.select("simhash").distinct(),
+        max_hamming,
+    ).select(F.col("_u").alias("simhash"))
     return (
         new_fp.join(hit_vals, "simhash", "semi")
         .select(F.col(id_col))
@@ -897,10 +887,7 @@ def simhash_dedup_against(
     history match and the within-batch join) and the history-hit set
     is checkpointed too (it anti-joins BOTH ``df`` and the
     fingerprints)."""
-    if max_hamming > 3:
-        # validate BEFORE the fingerprint job, not inside the match
-        # (review finding: an invalid radius burned a full pass first)
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)  # before the fingerprint job
     fp = simhash(df, text_col=text_col, id_col=id_col)
     if within_batch:
         fp = fp.localCheckpoint(eager=True)  # reused twice below

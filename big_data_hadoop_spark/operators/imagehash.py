@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from big_data_hadoop_spark.operators.dedup import (
+    _check_radius,
     _simhash_pairs_given_fps,
     simhash_matches_against,
 )
@@ -170,8 +171,7 @@ def image_neardup_pairs(
     call time (both sides must share one upstream execution), and it
     requires rows unique per (id, fingerprint) — true for every
     fingerprint producer (one hash per media id)."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     fps = fp.filter(F.col("dhash").isNotNull()).select(
         F.col(id_col), F.col("dhash").alias("simhash")
     )
@@ -190,9 +190,7 @@ def image_dhash_pairs(
     plan). ``image_neardup_pairs`` stays lazy by contrast: its input
     is typically a stored fingerprint table, where a double scan is
     two cheap column-pruned parquet reads."""
-    if max_hamming > 3:
-        # validate BEFORE the decode job, not after paying it
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)  # before the decode job
     fp = image_dhash(df, id_col=id_col).localCheckpoint(eager=True)
     return image_neardup_pairs(fp, max_hamming=max_hamming, id_col=id_col)
 
@@ -211,8 +209,7 @@ def image_matches_against(
     posture); the banded join ships 2-byte chunk keys, never payloads.
     The band geometry doesn't care which 64-bit fingerprint family it
     keys on, so the SimHash join is reused unchanged."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     batch = fp.filter(F.col("dhash").isNotNull()).select(
         F.col(id_col), F.col("dhash").alias("simhash")
     )

@@ -131,14 +131,14 @@ def _query_vectors(
     (``similarity._width_checked``)."""
     checked = _width_checked(_quote(vec_col), dim, op, "the codebook")
     return queries.select(
-        F.col(id_col), F.expr(f"CAST({checked} AS ARRAY<DOUBLE>)").alias("_qd")
+        _quote(id_col), F.expr(f"CAST({checked} AS ARRAY<DOUBLE>)").alias("_qd")
     )
 
 
 def _subvectors(df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int) -> DataFrame:
     """Explode ``(id, vec)`` into ``(id, j, sub array<double>)`` —
     narrow, one output row per subspace."""
-    emb = _as_double(F.col(vec_col))
+    emb = _as_double(F.col(_quote(vec_col)))
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda j: F.struct(
@@ -146,8 +146,9 @@ def _subvectors(df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int) -> 
             F.slice(emb, j * dsub + 1, dsub).alias("sub"),
         ),
     )
-    return df.select(F.col(id_col), F.explode(subs).alias("s")).select(
-        id_col, F.col("s.j").alias("j"), F.col("s.sub").alias("sub")
+    key = _quote(id_col)
+    return df.select(key, F.explode(subs).alias("s")).select(
+        key, F.col("s.j").alias("j"), F.col("s.sub").alias("sub")
     )
 
 
@@ -243,18 +244,19 @@ def pq_encode(
     """``(id, codes array<int>)``: per subspace, the code of the nearest
     centroid (squared L2; ties break to the LOWEST code via the
     ``min(struct(dist, code))`` aggregate — deterministic)."""
+    key = _quote(id_col)
     subs = _subvectors(df, id_col, vec_col, cb.m, cb.dsub)
     scored = subs.join(F.broadcast(cb.entries), "j").select(
-        id_col,
+        key,
         "j",
         "code",
         F.expr(_sq_l2_sql("sub", "centroid")).alias("dist"),
     )
-    best = scored.groupBy(id_col, "j").agg(
+    best = scored.groupBy(key, "j").agg(
         F.min(F.struct("dist", "code")).alias("b")
     )
     return (
-        best.groupBy(id_col)
+        best.groupBy(key)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("j", F.col("b.code").alias("code")))),
@@ -282,30 +284,27 @@ def pq_search(
     exploded-code join are both broadcast-side; see the module
     docstring for the full shape. A query vector whose width is not
     the codebook's fails the search with an error naming both widths."""
+    qid, key = _quote(query_id_col), _quote(id_col)
     lut = (
         _query_vectors(queries, query_id_col, query_vec_col, cb.dim, "pq_search")
         .join(F.broadcast(cb.entries))
         .select(
-            query_id_col,
+            qid,
             "j",
             "code",
             F.expr(_sq_l2_sql(_sub("_qd", cb.dsub), "centroid")).alias("pdist"),
         )
     )
-    flat = codes.select(
-        F.col(id_col),
-        F.posexplode("codes").alias("j", "code"),
-    )
+    flat = codes.select(key, F.posexplode("codes").alias("j", "code"))
     dists = (
         flat.join(F.broadcast(lut), ["j", "code"])
-        .groupBy(query_id_col, id_col)
+        .groupBy(qid, key)
         .agg(F.sum("pdist").alias("adc_dist"))
     )
     return release_on_drop(
         top_k_per(
-            dists, query_id_col, f"adc_dist ASC, {_quote(id_col)} ASC", topk,
-            rank="rank",
-        ).select(query_id_col, id_col, "adc_dist", "rank")
+            dists, query_id_col, f"adc_dist ASC, {key} ASC", topk, rank="rank"
+        ).select(qid, key, "adc_dist", "rank")
     )
 
 

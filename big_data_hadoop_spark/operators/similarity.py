@@ -81,34 +81,36 @@ def _width_checked(
     )
 
 
-def dot(
-    a: Column | str, b: Column | str, dim: int | None = None
-) -> Column:
-    """Left-fold dot product: ``((0.0 + a1*b1) + a2*b2) + ...``
+def dot(a: str, b: str, dim: int | None = None) -> Column:
+    """Left-fold dot product of the double-array columns NAMED ``a``
+    and ``b``: ``((0.0 + a1*b1) + a2*b2) + ...``, parsed from
+    :func:`_dot_sql` (a Column raises ``TypeError``). With ``dim`` the
+    fold is unrolled into a flat codegen'd ``element_at`` chain:
+    identical association order (so bit-identical results), but no
+    per-row zipped-array allocation."""
+    if not isinstance(a, str) or not isinstance(b, str):
+        raise TypeError("dot takes column names, not Columns")
+    return F.expr(_dot_sql(_quote(a), _quote(b), dim))
 
-    With ``dim`` given, the fold is unrolled into a flat codegen'd
-    expression over ``element_at`` — identical association order (so
-    bit-identical results), but no per-row zipped-array allocation. On an
-    all-pairs join the unrolled form is the difference between scanning
-    doubles and building two throwaway arrays per candidate pair. The
-    unrolled form takes column NAMES and parses ONE SQL string: building
-    3·dim Column nodes through py4j costs ~0.4 s of driver time per call
-    at dim=64, the parse ~2 ms (warm JVM, 4 vCPU), and the resulting
-    expression tree is identical (pinned by the optimized-plan equality
-    A/B this round).
-    """
-    if dim is not None:
-        if not isinstance(a, str) or not isinstance(b, str):
-            raise TypeError("dot(dim=...) takes column names, not Columns")
-        return F.expr(
-            "0.0D"
-            + "".join(
-                f" + element_at(`{a}`, {i}) * element_at(`{b}`, {i})"
-                for i in range(1, dim + 1)
-            )
+
+def _dot_sql(a: str, b: str, dim: int | None = None, flat: bool = False) -> str:
+    """:func:`dot` as SQL text: the one rendering of the left-fold dot
+    ``((0.0 + a1*b1) + a2*b2) + ...`` in all its forms. ``a`` and
+    ``b`` are SQL text for double arrays: without ``dim`` the fold runs
+    over the arrays (``aggregate`` over ``zip_with``), with ``dim`` it
+    is unrolled over ``element_at``. With ``flat`` they are column
+    prefixes and element ``i`` is the scalar column ``<prefix>i``
+    (:func:`_flat`). Every form associates the same way, so all are
+    bit-equal. Parsed, the unrolled form costs a few py4j calls where
+    3·dim Column nodes cost ~0.4 s of driver time at dim=64."""
+    if dim is None:
+        return (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+            "(acc, x) -> acc + x)"
         )
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    at = "{}{}" if flat else "element_at({}, {})"
+    return "0.0D" + "".join(
+        f" + {at.format(a, i)} * {at.format(b, i)}" for i in range(1, dim + 1)
     )
 
 
@@ -125,20 +127,14 @@ def norm(a: str, dim: int | None = None) -> Column:
 
 def _norm_sql(a: str, dim: int | None) -> str:
     """:func:`norm` as SQL text: the one rendering of the norm fold —
-    the array fold, or with ``dim`` its unrolled ``element_at`` chain."""
+    the array fold, or with ``dim`` :func:`_dot_sql`'s unrolled chain
+    of ``a`` with itself."""
     if dim is None:
         return (
             f"SQRT(aggregate(transform({_quote(a)}, x -> x * x), 0.0D, "
             "(acc, x) -> acc + x))"
         )
-    return (
-        "SQRT(0.0D"
-        + "".join(
-            f" + element_at(`{a}`, {i}) * element_at(`{a}`, {i})"
-            for i in range(1, dim + 1)
-        )
-        + ")"
-    )
+    return f"SQRT({_dot_sql(_quote(a), _quote(a), dim)})"
 
 
 def with_norm(
@@ -204,9 +200,7 @@ def _flat(
         *[f"`{c}`" for c in extra],
         *_flat_cols("_ed", prefix, dim),
     )
-    acc = "0.0D" + "".join(
-        f" + {prefix}{i} * {prefix}{i}" for i in range(1, dim + 1)
-    )
+    acc = _dot_sql(prefix, prefix, dim, flat=True)
     # coalesce: Spark declares SQRT nullable unconditionally, and a
     # nullable nrm under a join predicate re-triggers the inferred-filter
     # explosion described above. sqrt(sum of squares) is never null here.
@@ -224,12 +218,7 @@ def _flat_cols(arr: str, prefix: str, dim: int) -> list[str]:
 
 
 def _flat_dot(prefix_a: str, prefix_b: str, dim: int) -> Column:
-    return F.expr(
-        "0.0D"
-        + "".join(
-            f" + {prefix_a}{i} * {prefix_b}{i}" for i in range(1, dim + 1)
-        )
-    )
+    return F.expr(_dot_sql(prefix_a, prefix_b, dim, flat=True))
 
 
 def cosine_neardup_pairs(
@@ -293,18 +282,13 @@ def cosine_neardup_pairs(
         )
     e = with_norm(
         df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
-    ).select(F.col(id_col), "emb_d", "nrm")
-    a, b = e.alias("a"), e.alias("b")
-    sim = dot(F.col("a.emb_d"), F.col("b.emb_d")) / (
-        F.col("a.nrm") * F.col("b.nrm")
     )
+    a = e.selectExpr(f"{_quote(id_col)} AS vec_a", "emb_d AS _ea", "nrm AS _na")
+    b = e.selectExpr(f"{_quote(id_col)} AS vec_b", "emb_d AS _eb", "nrm AS _nb")
+    sim = dot("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
     return (
-        a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
-            sim.alias("sim"),
-        )
+        a.join(b, F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b", sim.alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -351,7 +335,7 @@ def cosine_topk(
         F.col("emb_d").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    sim = dot(F.col("q_emb"), F.col("emb_d")) / (F.col("q_nrm") * F.col("nrm"))
+    sim = dot("q_emb", "emb_d") / (F.col("q_nrm") * F.col("nrm"))
     scored = (
         e.join(F.broadcast(q), F.col("query_id") != F.col(id_col))
         .select(
@@ -392,33 +376,32 @@ def hyperplane_signatures(
     work is O(planes*dim) either way and signatures are computed once
     per row, below any join).
     """
-    cast_once = df.select(
-        F.col(id_col), F.col(vec_col), _as_double(F.col(vec_col)).alias("_ed")
-    )
-    sig = _hyperplane_sig(F.col("_ed"), dim, num_planes, seed)
-    return cast_once.select(F.col(id_col), F.col(vec_col), sig.alias("bucket"))
+    cols = (_quote(id_col), _quote(vec_col))
+    cast_once = df.selectExpr(*cols, f"CAST({cols[1]} AS ARRAY<DOUBLE>) AS _ed")
+    sig = _hyperplane_sig("_ed", dim, num_planes, seed)
+    return cast_once.selectExpr(*cols, f"{sig} AS bucket")
 
 
-def _hyperplane_sig(ed: Column, dim: int, num_planes: int, seed: int) -> Column:
-    """The ``num_planes``-bit hyperplane signature of a materialized
-    ``array<double>`` column — the expression body of
-    :func:`hyperplane_signatures`, factored so the multi-TABLE lever in
-    :func:`lsh_bucketed_topk` can emit one signature per (seed-offset)
-    table over a single cast (same plane stream, same bit packing)."""
-    planes = []
+def _hyperplane_sig(ed: str, dim: int, num_planes: int, seed: int) -> str:
+    """SQL text for the ``num_planes``-bit hyperplane signature of the
+    materialized ``array<double>`` column ``ed`` — the expression body
+    of :func:`hyperplane_signatures`, factored so the multi-TABLE lever
+    in :func:`lsh_bucketed_topk` can emit one signature per
+    (seed-offset) table over a single cast (same plane stream, same bit
+    packing). Each plane is one ``array`` of ``repr(float)`` ``…D``
+    literals (exact round trip), folded into one literal by the
+    optimizer; parsed, a signature costs a few py4j calls where the
+    ``F.lit`` planes cost ~150 per plane."""
+    bits = []
     for p in range(num_planes):
-        coeffs = [
-            math.sin(seed + p * 1009 + i * 9176) for i in range(dim)
-        ]
-        planes.append(F.array(*[F.lit(c) for c in coeffs]))
-    bits = [
-        F.when(dot(ed, plane) >= 0, F.shiftleft(F.lit(1), p)).otherwise(0)
-        for p, plane in enumerate(planes)
-    ]
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig.bitwiseOR(b)
-    return sig
+        plane = ", ".join(
+            f"{math.sin(seed + p * 1009 + i * 9176)!r}D" for i in range(dim)
+        )
+        bits.append(
+            f"CASE WHEN {_dot_sql(ed, f'array({plane})')} >= 0 "
+            f"THEN shiftleft(1, {p}) ELSE 0 END"
+        )
+    return " | ".join(bits)
 
 
 def lsh_bucketed_topk(
@@ -469,23 +452,14 @@ def lsh_bucketed_topk(
     # planes come from seed + t*7919), exploded to (id, t, bucket)
     base = with_norm(
         df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
-    ).select(F.col(id_col), "emb_d", "nrm")
-    tables = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("t"),
-                _hyperplane_sig(
-                    F.col("emb_d"), dim, num_planes, seed + t * 7919
-                ).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
     )
-    e = base.select(
-        F.col(id_col), "emb_d", "nrm", F.explode(tables).alias("s")
-    ).select(
-        id_col, "emb_d", "nrm",
-        F.col("s.t").alias("t"), F.col("s.bucket").alias("bucket"),
+    tables = ", ".join(
+        f"struct({t} AS t, "
+        f"{_hyperplane_sig('emb_d', dim, num_planes, seed + t * 7919)} AS bucket)"
+        for t in range(n_tables)
+    )
+    e = base.selectExpr(
+        _quote(id_col), "emb_d", "nrm", f"inline(array({tables}))"
     )
     q = e.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
@@ -494,7 +468,7 @@ def lsh_bucketed_topk(
         F.col("emb_d").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    sim = dot(F.col("q_emb"), F.col("emb_d")) / (F.col("q_nrm") * F.col("nrm"))
+    sim = dot("q_emb", "emb_d") / (F.col("q_nrm") * F.col("nrm"))
     scored = e.join(
         F.broadcast(q),
         (F.col("q_t") == F.col("t"))
@@ -699,17 +673,20 @@ class IVFIndex:
 
     def serving(self) -> DataFrame:
         """The serving copy, persisted on first use (filled by the
-        first job that reads it). It is coalesced to ``ceil(optimizer
-        size estimate / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
-        partitions, at least 1: an index under the advisory size (64 MB
-        by default; the 10,000×32 benchmark index is estimated at ~17
-        MB) is one partition, whose scan already satisfies the
-        per-query top-k window's clustering, so a search plans no
-        exchange. A tag predicate ``n = n`` (folded away before the
-        copy is filled) keeps every copy's plan distinct: the cache
-        matches plans by result, so two indexes over one table would
-        otherwise share an entry, and dropping either would unpersist
-        the other's copy. Unpersisted through ``weakref.finalize`` when
+        first job that reads it). It is coalesced to ``ceil(size /
+        spark.sql.adaptive.advisoryPartitionSizeInBytes)`` partitions,
+        at least 1: an index under the advisory size (64 MB by default;
+        the 10,000×32 benchmark index is estimated at ~17 MB) is one
+        partition, whose scan already satisfies the per-query top-k
+        window's clustering, so a search plans no exchange. The size is
+        the optimizer's estimate; an index it cannot size (one over a
+        Python-side frame is estimated at ~1e20 bytes) is filled into
+        a first copy, and the served copy is cut from it by the size
+        that copy measures in memory (two jobs, once). A tag predicate
+        ``n = n`` (folded away before the copy is filled) keeps every
+        copy's plan distinct: the cache matches plans by result, so two
+        indexes over one table would otherwise share an entry, and
+        dropping either would unpersist the other's copy. Unpersisted through ``weakref.finalize`` when
         the index is dropped: every cached entry adds plan matching to
         each later query of the session. A local checkpoint would need
         neither tag nor finalizer and serves as fast, but it is not
@@ -725,17 +702,16 @@ class IVFIndex:
                 _quote(self.id_col), "cell", "nrm",
                 *_flat_cols("emb_d", "_a", len(self.centroids[0])),
             )
-            spark = flat.sparkSession
-            size = flat._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils
-            advisory = to_bytes.byteStringAsBytes(
-                spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-            )
-            # a Java int: an index the optimizer cannot size (one over
-            # a Python-side frame is estimated at ~1e20 bytes) keeps
-            # its partitions, since coalesce never adds any
-            parts = min(max(1, -(-int(size) // advisory)), 2**31 - 1)
+            parts, filled = _partitions_for(flat), None
+            if parts >= 2**31:  # more than a Java int: no estimate
+                filled = flat.persist()
+                filled.count()
+                # a new plan: flat's own was optimized before the fill
+                parts = _partitions_for(filled.select("*"))
             self._serving = flat.coalesce(parts).persist()
+            if filled is not None:
+                self._serving.count()  # read from the first copy
+                filled.unpersist()
             drop = weakref.finalize(self, _unpersist, self._serving)
             drop.atexit = False  # the session may be gone at exit
         return self._serving
@@ -743,6 +719,17 @@ class IVFIndex:
 
 #: Tags that keep serving copies' cached plans distinct (IVFIndex.serving).
 _SERVING_TAGS = itertools.count(1)
+
+
+def _partitions_for(df: DataFrame) -> int:
+    """``ceil(optimized size / advisory partition size)``, at least 1."""
+    spark = df.sparkSession
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils
+    advisory = to_bytes.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return max(1, -(-int(size) // advisory))
 
 
 def _unpersist(df: DataFrame) -> None:
@@ -1026,12 +1013,10 @@ def cosine_topk_vectors(
         F.col("emb_d").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    q_emb = F.expr(
-        _width_checked(
-            "q_emb", "size(emb_d)", "cosine_topk_vectors", "a corpus vector"
-        )
+    q_emb = _width_checked(
+        "q_emb", "size(emb_d)", "cosine_topk_vectors", "a corpus vector"
     )
-    sim = dot(q_emb, F.col("emb_d")) / (F.col("q_nrm") * F.col("nrm"))
+    sim = F.expr(_dot_sql(q_emb, "emb_d")) / (F.col("q_nrm") * F.col("nrm"))
     scored = e.join(F.broadcast(q)).select(
         "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
     )
@@ -1228,7 +1213,7 @@ def semantic_neardup_pairs(
         F.col(index.id_col).alias("id_b"), "cell",
         F.col("emb_d").alias("_eb"), F.col("nrm").alias("_nb"),
     )
-    sim = dot(F.col("_ea"), F.col("_eb")) / (F.col("_na") * F.col("_nb"))
+    sim = dot("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
     return (
         left.join(right, "cell")
         .filter(F.col("id_a") < F.col("id_b"))

@@ -36,8 +36,8 @@ FIXED CONTRACT (replicated in ``tests/test_videohash.py``):
 Scale shape: the decode pass is one partition-preserving Arrow
 ``mapInPandas`` (blobs never shuffle; ``n_frames`` 8-byte hashes leave
 per clip); candidate frame pairs come from the shared multi-index
-Hamming band join over DISTINCT hash values (``dedup._fp_band_keys``,
-the round-9 exhibit machinery) keyed on a ``(clip, frame)`` struct id;
+Hamming band join over DISTINCT hash values
+(``dedup._hamming_value_pairs``, the round-9 exhibit machinery) keyed on a ``(clip, frame)`` struct id;
 the clip-pair rollup is one keyed aggregation of the frame-pair
 relation. Nothing is all-pairs in clip space — only clips sharing a
 banded frame-hash chunk ever meet.
@@ -52,7 +52,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from big_data_hadoop_spark.operators.dedup import _simhash_pairs_given_fps
+from big_data_hadoop_spark.operators.dedup import (
+    _check_radius,
+    _hamming_value_pairs,
+    _simhash_pairs_given_fps,
+)
 from big_data_hadoop_spark.operators.imagehash import dhash_pixels
 from big_data_hadoop_spark.operators.multimodal import decode_gif_frames
 
@@ -159,8 +163,7 @@ def video_neardup_pairs(
     in the corpus, the round-10 scale-hazard audit finding. ``None``
     (default) keeps the pure contract; per matched value the pair
     output is bounded by ``max_frame_df``^2."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     if min_matching_frames < 1:
         raise ValueError("min_matching_frames must be >= 1")
     if max_frame_df is not None and max_frame_df < 1:
@@ -206,9 +209,7 @@ def video_dhash_pairs(
     """Convenience composition: frame-hash + clip pairing, with the
     hash frame eagerly checkpointed so the band join's sides share one
     decode execution (the image/audio-tier discipline)."""
-    if max_hamming > 3:
-        # validate BEFORE the decode job, not after paying it
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)  # before the decode job
     fh = video_dhash(
         df, n_frames=n_frames, id_col=id_col
     ).localCheckpoint(eager=True)
@@ -247,8 +248,7 @@ def video_matches_against(
     (:func:`_drop_hot_frames`) to both sides INDEPENDENTLY, so per
     matched value the expansion join's output is bounded by
     ``max_frame_df`` on each side."""
-    if max_hamming > 3:
-        raise ValueError("4x16-bit banding is exact only for max_hamming <= 3")
+    _check_radius(max_hamming)
     if min_matching_frames < 1:
         raise ValueError("min_matching_frames must be >= 1")
     if max_frame_df is not None and max_frame_df < 1:
@@ -269,28 +269,11 @@ def video_matches_against(
         F.col("frame_no").alias("_of"),
         F.col("dhash").alias("_oh"),
     )
-    from big_data_hadoop_spark.operators.dedup import _fp_band_keys
-
-    a = _fp_band_keys(
-        new.select(F.col("_nh").alias("simhash")).distinct(), max_hamming
-    ).alias("a")
-    b = _fp_band_keys(
-        old.select(F.col("_oh").alias("simhash")).distinct(), max_hamming
-    ).alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    vpairs = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv")),
-        )
-        .filter(ham <= max_hamming)
-        .select(
-            F.col("a.simhash").alias("_nh"),
-            F.col("b.simhash").alias("_oh"),
-        )
-        .distinct()
-    )
+    vpairs = _hamming_value_pairs(
+        new.select(F.col("_nh").alias("simhash")).distinct(),
+        old.select(F.col("_oh").alias("simhash")).distinct(),
+        max_hamming,
+    ).select(F.col("_u").alias("_nh"), F.col("_v").alias("_oh"))
     return (
         vpairs.join(new, "_nh")
         .join(old, "_oh")

@@ -762,9 +762,10 @@ def cap_per_group(
     """
     if cap < 0:
         raise ValueError(f"cap must be >= 0, got {cap}")
-    counts = df.groupBy(group_col).agg(F.count("*").alias("_n"))
-    under = counts.filter(F.col("_n") <= cap).select(group_col)
-    over = counts.filter(F.col("_n") > cap).select(group_col)
+    group = _quote(group_col)
+    counts = df.groupBy(group).agg(F.count("*").alias("_n"))
+    under = counts.filter(F.col("_n") <= cap).select(group)
+    over = counts.filter(F.col("_n") > cap).select(group)
     # null-safe semi joins (review finding): groupBy keeps a NULL group
     # (docs with missing provenance), but an equi semi-join never
     # matches NULL == NULL — every NULL-group row silently vanished.
@@ -773,7 +774,7 @@ def cap_per_group(
     def semi(side):
         return df.alias("d").join(
             F.broadcast(side.alias("g")),
-            F.col(f"d.{group_col}").eqNullSafe(F.col(f"g.{group_col}")),
+            F.col(f"d.{group}").eqNullSafe(F.col(f"g.{group}")),
             "left_semi",
         )
 

@@ -474,7 +474,7 @@ def test_non_finite_centroid_refused_by_search(spark, corpus):
 
 
 def test_dot_norm_dim_contract(spark):
-    """``dot`` with ``dim``, and ``norm`` always, take column NAMES
+    """``dot`` and ``norm``, with or without ``dim``, take column NAMES
     only (a Column raises TypeError), and the unrolled form is
     bit-equal to the array fold: same left-fold association order."""
     from pyspark.sql import functions as F
@@ -491,12 +491,14 @@ def test_dot_norm_dim_contract(spark):
     with pytest.raises(TypeError):
         sim.dot("a", F.col("b"), dim=4)
     with pytest.raises(TypeError):
+        sim.dot(F.col("a"), F.col("b"))
+    with pytest.raises(TypeError):
         sim.norm(F.col("a"), dim=4)
     with pytest.raises(TypeError):
         sim.norm(F.col("a"))
     rows = df.select(
         sim.dot("a", "b", dim=4).alias("dot_u"),
-        sim.dot(F.col("a"), F.col("b")).alias("dot_f"),
+        sim.dot("a", "b").alias("dot_f"),
         sim.norm("a", dim=4).alias("norm_u"),
         sim.norm("a").alias("norm_f"),
     ).collect()
@@ -695,42 +697,63 @@ def _search_jobs(spark, fn):
     return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _serves_from_one_partition(spark, index, corpus):
+    """After a first search has filled ``index``'s serving copy, the
+    copy is one partition and a batch is 2 jobs (the broadcast of the
+    probed queries and the result) over an in-memory scan of it, with
+    no shuffle; the results equal the exact search at full probe.
+    Returns the copy."""
+    queries = corpus.filter("vec_id < 8").toDF("query_id", "embedding")
+    sim.ivf_search_vectors(index, queries, k=5, n_probe=4).collect()  # fill
+    copy = index.serving()
+    assert copy.rdd.getNumPartitions() == 1
+    res = sim.ivf_search_vectors(index, queries, k=5, n_probe=4)
+    rows, jobs = _search_jobs(spark, res.collect)
+    assert jobs == 2, jobs
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, plan
+    shuffles = [
+        line for line in plan.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+    assert not shuffles and "ShuffleQueryStage" not in plan, plan
+    exact = sim.cosine_topk_vectors(corpus, queries, k=5).collect()
+
+    def hexed(rs):
+        return sorted((r.query_id, r.neighbor_id, r.sim.hex()) for r in rs)
+
+    assert hexed(rows) == hexed(exact)
+    return copy
+
+
 def test_ivf_search_vectors_serves_from_its_resident_copy(spark, corpus):
-    """After the first search has filled the index's serving copy, a
-    batch is 2 jobs (the broadcast of the probed queries and the
-    result) over an in-memory scan of the copy, with no shuffle: the
-    one-partition copy already satisfies the top-k window's
-    clustering. Its rows are the flat assignment (``nrm > 0`` rows
-    only), and the results equal the exact search at full probe."""
+    """A table-backed index serves from a one-partition in-memory copy
+    of the flat assignment (``nrm > 0`` rows only): the copy already
+    satisfies the top-k window's clustering, so a batch plans no
+    shuffle."""
     table = "ivf_serving_jobs_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
         index = sim.ivf_build(corpus, n_cells=4, table=table, buckets=4)
-        queries = corpus.filter("vec_id < 8").toDF("query_id", "embedding")
-        sim.ivf_search_vectors(index, queries, k=5, n_probe=4).collect()  # fill
-        copy = index.serving()
-        assert copy.rdd.getNumPartitions() == 1
+        copy = _serves_from_one_partition(spark, index, corpus)
         assert copy.columns == ["vec_id", "cell", "nrm"] + [
             f"_a{i}" for i in range(1, 7)
         ]
-        res = sim.ivf_search_vectors(index, queries, k=5, n_probe=4)
-        rows, jobs = _search_jobs(spark, res.collect)
-        assert jobs == 2, jobs
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, plan
-        shuffles = [
-            line for line in plan.splitlines()
-            if "Exchange" in line and "BroadcastExchange" not in line
-        ]
-        assert not shuffles and "ShuffleQueryStage" not in plan, plan
-        exact = sim.cosine_topk_vectors(corpus, queries, k=5).collect()
-
-        def hexed(rs):
-            return sorted((r.query_id, r.neighbor_id, r.sim.hex()) for r in rs)
-
-        assert hexed(rows) == hexed(exact)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_index_over_a_python_side_frame_serves_without_a_shuffle(
+    spark, corpus
+):
+    """An index built without ``table=`` over a ``createDataFrame``
+    corpus, which the optimizer cannot size, still gets a one-partition
+    serving copy (cut by the size its first copy measured), so its
+    searches plan no shuffle under the top-k window either."""
+    index = sim.ivf_build(corpus, n_cells=4)
+    size = index.assigned._jdf.queryExecution().optimizedPlan().stats()
+    assert int(size.sizeInBytes()) >= 2**63 - 1  # no estimate
+    _serves_from_one_partition(spark, index, corpus)
 
 
 def test_dropping_the_index_unpersists_its_serving_copy(spark, corpus):
