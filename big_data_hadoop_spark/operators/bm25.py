@@ -183,20 +183,21 @@ def hybrid_topk(
     on the id key)."""
     from big_data_hadoop_spark.operators.similarity import dot, norm
 
+    qid, key = _quote(query_id_col), _quote(index.id_col)
     cand = bm25_topk(
         index, queries, topk=n_candidates, k1=k1, b=b,
         query_id_col=query_id_col, query_text_col=query_text_col,
-    ).select(query_id_col, index.id_col, F.col("score").alias("bm25_score"))
+    ).select(qid, key, F.col("score").alias("bm25_score"))
     # zero-norm guard (review finding): cosine of a zero vector is NaN,
     # and Spark sorts NaN ABOVE every double — an empty/failed embedding
     # would take rank 1. Zero-norm rows are excluded from both sides.
     q_emb = queries.select(
-        F.col(query_id_col),
-        F.col(query_vec_col).cast("array<double>").alias("_q"),
+        qid,
+        F.col(_quote(query_vec_col)).cast("array<double>").alias("_q"),
     ).withColumn("_qn", norm("_q", dim)).filter(F.col("_qn") > 0)
     c_emb = corpus_emb.select(
-        F.col(index.id_col),
-        F.col(vec_col).cast("array<double>").alias("_c"),
+        key,
+        F.col(_quote(vec_col)).cast("array<double>").alias("_c"),
     ).withColumn("_cn", norm("_c", dim)).filter(F.col("_cn") > 0)
     cos = dot("_q", "_c", dim) / (F.col("_qn") * F.col("_cn"))
     scored = (
@@ -205,6 +206,5 @@ def hybrid_topk(
         .withColumn("cosine", cos)
     )
     return top_k_per(
-        scored, query_id_col, f"cosine DESC, {_quote(index.id_col)} ASC",
-        topk, rank="rank",
-    ).select(query_id_col, index.id_col, "bm25_score", "cosine", "rank")
+        scored, query_id_col, f"cosine DESC, {key} ASC", topk, rank="rank"
+    ).select(qid, key, "bm25_score", "cosine", "rank")

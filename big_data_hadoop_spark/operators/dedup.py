@@ -39,8 +39,8 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.functions.text import split_tokens
 
 # Minhash "permutations" are seeded re-hashes of the base shingle hash:
@@ -154,53 +154,76 @@ def shingles(
     copies — and measured ~4x slower at sf0.1.) ``zip_with`` pads the
     shorter (shifted) side with nulls and ``concat`` propagates them, so
     the tail positions with no full n-gram filter out naturally.
-    Documents shorter than ``n`` tokens produce no shingles.
+    Documents shorter than ``n`` tokens produce no shingles. The whole
+    fold is one parsed SQL string over the single-space split of
+    ``functions.text.split_tokens``.
     """
-    arr = split_tokens(F.col(text_col), lowercase=lowercase)
+    text = _quote(text_col)
+    arr = f"split({f'lower({text})' if lowercase else text}, ' ', -1)"
     acc = arr
     for d in range(1, n):
-        shifted = F.slice(
-            arr, d + 1, F.greatest(F.size(arr) - d, F.lit(0))
+        acc = (
+            f"zip_with({acc}, slice({arr}, {d + 1}, greatest(size({arr}) - {d}, 0)), "
+            "(x, y) -> concat(x, ' ', y))"
         )
-        acc = F.zip_with(
-            acc, shifted, lambda x, y: F.concat(x, F.lit(" "), y)
-        )
-    sh = F.array_distinct(F.filter(acc, lambda s: s.isNotNull()))
-    return df.select(F.col(id_col), F.explode(sh).alias("shingle"))
-
-
-def _verified_jaccard(
-    cand: DataFrame, sh: DataFrame, id_col: str
-) -> DataFrame:
-    """Exact Jaccard for a candidate pair set: ``(id_a, id_b, jac)``.
-
-    Fans each candidate pair out to the left document's shingles, then
-    equi-joins on ``(id_b, shingle)`` to count the intersection — cost is
-    O(|candidates| x shingles per doc), never corpus-quadratic. ``jac`` is
-    an exact integer division — bit-identical across engines."""
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
+    return df.selectExpr(
+        _quote(id_col),
+        f"explode(array_distinct(filter({acc}, s -> s IS NOT NULL))) AS shingle",
     )
+
+
+def _overlap_pairs(
+    elems: DataFrame,
+    id_col: str,
+    elem: str,
+    cand: DataFrame | None = None,
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """The shared-element overlap join, the one copy of it: columns
+    ``id_a, id_b, n_shared, sz_a, sz_b`` for the document pairs of ``elems``
+    (one row per distinct ``(id_col, elem)``) that share an element.
+    ``n_shared`` counts the shared elements; ``sz_a``/``sz_b`` are the
+    two set sizes over EVERY row of ``elems``. Each caller applies its
+    own score (Jaccard, containment).
+
+    Without ``cand`` the pairs come from the inverted-index self-join of
+    ``index`` (default ``elems``; a caller may drop hot elements from
+    this side only) on ``elem`` with ``id_a < id_b`` — only documents
+    sharing an element ever meet. With ``cand`` (``(id_a, id_b)``
+    candidates) each candidate fans out to ``id_a``'s elements and
+    equi-joins ``id_b``'s on ``(id_b, elem)``: O(|cand| x elements per
+    document), never corpus-quadratic. Parsed from SQL strings with the
+    caller's column names quoted."""
+    key, e = _quote(id_col), _quote(elem)
+    idx = elems if index is None else index
+    a = idx.selectExpr(f"{key} AS id_a", f"{e} AS _e")
+    b = idx.selectExpr(f"{key} AS id_b", f"{e} AS _e")
+    if cand is None:
+        met = a.join(b, "_e").where("id_a < id_b")
+    else:
+        met = cand.join(a, "id_a").join(b, ["id_b", "_e"])
+    sizes = elems.groupBy(key).agg(F.expr("count(*) AS sz"))
     return (
-        inter.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")),
-            "id_a",
+        met.groupBy("id_a", "id_b")
+        .agg(F.expr("count(*) AS n_shared"))
+        .join(sizes.selectExpr(f"{key} AS id_a", "sz AS sz_a"), "id_a")
+        .join(sizes.selectExpr(f"{key} AS id_b", "sz AS sz_b"), "id_b")
+    )
+
+
+def _jaccard_pairs(
+    sh: DataFrame, id_col: str, threshold: float, cand: DataFrame | None = None
+) -> DataFrame:
+    """Exact shingle-Jaccard pairs ``(id_a, id_b, jac)`` with ``jac >=
+    threshold`` over :func:`_overlap_pairs` (all sharing pairs, or the
+    ``cand`` pairs only). ``jac`` is an exact integer division —
+    bit-identical across engines."""
+    return (
+        _overlap_pairs(sh, id_col, "shingle", cand=cand)
+        .selectExpr(
+            "id_a", "id_b", "CAST(n_shared AS DOUBLE) / (sz_a + sz_b - n_shared) AS jac"
         )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
+        .where(F.col("jac") >= threshold)
     )
 
 
@@ -227,7 +250,7 @@ def ngram_jaccard_pairs(
       (``t*|A| <= |B| <= |A|/t``) and the paper's positional filter
       (shared-prefix-token ranks bound the achievable overlap — see
       ``_ppjoin_candidates``) prune further, then candidates are
-      verified by ``_verified_jaccard``. Any pair with Jaccard >= t must
+      verified by ``_overlap_pairs``. Any pair with Jaccard >= t must
       share a prefix shingle, so there are no false negatives. This is
       the skew defense: frequent (stopword-like) shingles — the
       join-explosion drivers at corpus scale — sort to the end of the
@@ -235,40 +258,11 @@ def ngram_jaccard_pairs(
       (frequency + rank), so it loses at low skew and wins when the
       inverted join's hot shingle groups dominate.
     """
-    if method == "prefix":
-        return _ppjoin_jaccard_pairs(df, n, threshold, text_col, id_col)
-    if method != "inverted":
+    if method not in ("inverted", "prefix"):
         raise ValueError(f"unknown method {method!r}")
     sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    ja = (
-        inter.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .withColumn(
-            "jac",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-    )
-    return ja.filter(F.col("jac") >= threshold).select("id_a", "id_b", "jac")
+    cand = _ppjoin_candidates(sh, threshold, id_col) if method == "prefix" else None
+    return _jaccard_pairs(sh, id_col, threshold, cand)
 
 
 def _ppjoin_candidates(
@@ -295,64 +289,35 @@ def _ppjoin_candidates(
     conservative (never rounds the required overlap up past its true
     integer value).
     """
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    w = Window.partitionBy(id_col).orderBy(F.asc("df_"), F.asc("shingle"))
-    ranked = (
-        sh.join(freq, "shingle")
-        .withColumn("rk", F.row_number().over(w))
-        .join(sizes, id_col)
-    )
+    key, t = _quote(id_col), float(threshold)
+    freq = sh.groupBy("shingle").agg(F.expr("count(*) AS df_"))
+    sizes = sh.groupBy(key).agg(F.expr("count(*) AS sz"))
+    rank = f"row_number() OVER (PARTITION BY {key} ORDER BY df_ ASC, shingle ASC)"
+    ranked = sh.join(freq, "shingle").withColumn("rk", F.expr(rank)).join(sizes, id_col)
     # Every ceil carries the same 1e-9 guard as the positional filter:
     # double rounding can overshoot an exact product (0.56 * 25 =
     # 14.000000000000002 -> ceil 15, not 14), which would shorten the
     # prefix and tighten the size filter past their true integer bounds
     # — FALSE NEGATIVES on a filter documented as exact (review
     # finding). The epsilon can never loosen a bound by a full integer.
-    eps = F.lit(1e-9)
-    prefix = ranked.filter(
-        F.col("rk")
-        <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz") - eps) + 1
-    ).select(id_col, "shingle", "sz", "rk")
+    prefix = ranked.where(f"rk <= sz - ceil({t!r}D * sz - 1e-9D) + 1").select(
+        key, "shingle", "sz", "rk"
+    )
     cond = (
-        (F.col("a.shingle") == F.col("b.shingle"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (F.col("b.sz") >= F.ceil(F.lit(threshold) * F.col("a.sz") - eps))
-        & (F.col("a.sz") >= F.ceil(F.lit(threshold) * F.col("b.sz") - eps))
+        f"a.shingle = b.shingle AND a.{key} < b.{key}"
+        f" AND b.sz >= ceil({t!r}D * a.sz - 1e-9D)"
+        f" AND a.sz >= ceil({t!r}D * b.sz - 1e-9D)"
     )
     if positional:
-        required = F.ceil(
-            F.lit(threshold / (1.0 + threshold))
-            * (F.col("a.sz") + F.col("b.sz"))
-            - F.lit(1e-9)
+        cond += (
+            " AND 1 + least(a.sz - a.rk, b.sz - b.rk)"
+            f" >= ceil({t / (1.0 + t)!r}D * (a.sz + b.sz) - 1e-9D)"
         )
-        bound = F.lit(1) + F.least(
-            F.col("a.sz") - F.col("a.rk"), F.col("b.sz") - F.col("b.rk")
-        )
-        cond = cond & (bound >= required)
     return (
         prefix.alias("a")
-        .join(prefix.alias("b"), cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        .join(prefix.alias("b"), F.expr(cond))
+        .selectExpr(f"a.{key} AS id_a", f"b.{key} AS id_b")
         .distinct()
-    )
-
-
-def _ppjoin_jaccard_pairs(
-    df: DataFrame,
-    n: int,
-    threshold: float,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    cand = _ppjoin_candidates(sh, threshold, id_col)
-    return (
-        _verified_jaccard(cand, sh, id_col)
-        .filter(F.col("jac") >= threshold)
-        .select("id_a", "id_b", "jac")
     )
 
 
@@ -385,78 +350,87 @@ def minhash_signatures(
     Documents with no shingles (< n tokens) produce no row, matching the
     previous ``size(sig) > 0`` filter.
     """
-    sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    hashed = sh.select(F.col(id_col), F.xxhash64("shingle").alias("h"))
-    # the num_perm min-aggregates and the signature array are parsed from
-    # strings in TWO py4j calls: building 3·num_perm Column nodes through
-    # py4j costs ~1 s of driver time per call at the 128 default
-    # (measured; tree identical — pinned by the plan-equality A/B)
-    mins = [
-        F.expr(f"min(xxhash64(h, {i})) AS _s{i}") for i in range(num_perm)
-    ]
+    key = _quote(id_col)
+    # the num_perm min-aggregates and the signature array are ONE parsed
+    # string: building 3·num_perm Column nodes through py4j costs ~1 s
+    # of driver time per call at the 128 default (measured)
+    slots = ", ".join(f"min(xxhash64(h, {i}))" for i in range(num_perm))
     return (
-        hashed.groupBy(id_col)
-        .agg(*mins)
-        .selectExpr(
-            f"`{id_col}`",
-            "array(" + ", ".join(f"_s{i}" for i in range(num_perm)) + ") AS sig",
-        )
+        shingles(df, n=n, text_col=text_col, id_col=id_col)
+        .selectExpr(key, "xxhash64(shingle) AS h")
+        .groupBy(key)
+        .agg(F.expr(f"array({slots}) AS sig"))
     )
 
 
-def _sig_est(col_a: str, col_b: str, num_perm: int):
+def _sig_est(col_a: str, col_b: str, num_perm: int) -> str:
     """Fraction of agreeing minhash signature slots between two
-    ``array<bigint>`` columns — the unbiased Jaccard estimator with
-    stderr ``<= 1/(2*sqrt(num_perm))``; one native ``zip_with`` /
-    ``aggregate`` fold. SHARED expression: ``minhash_matches_against``
-    and the persisted near-dup graph store score with this same
-    estimator, which is what keeps the store's refresh-equals-rebuild
-    invariant aligned with the incremental-dedup tier (round-9 review
-    finding: two inlined copies could silently diverge)."""
-    return F.aggregate(
-        F.zip_with(col_a, col_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ).cast("double") / F.lit(float(num_perm))
-
-
-def _band_self_candidates(banded: DataFrame, id_col: str) -> DataFrame:
-    """Within-set LSH candidates ``(id_a, id_b)`` with ``id_a <
-    id_b``: pairs agreeing on any whole band (equi-join on
-    ``(band, bh)``), distinct. SHARED by ``_lsh_pairs_given_sigs``
-    and the near-dup graph store (same review finding as
-    :func:`_sig_est`)."""
+    ``array<bigint>`` columns, as SQL text — the unbiased Jaccard
+    estimator with stderr ``<= 1/(2*sqrt(num_perm))``; one native
+    ``zip_with`` / ``aggregate`` fold. Only :func:`_est_pairs` scores
+    with it, so ``minhash_matches_against`` and the persisted near-dup
+    graph store cannot diverge (which keeps the store's
+    refresh-equals-rebuild invariant aligned with the incremental-dedup
+    tier)."""
     return (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
+        f"CAST(aggregate(zip_with({col_a}, {col_b}, (x, y) -> CAST(x = y AS INT)), "
+        f"0, (acc, x) -> acc + x) AS DOUBLE) / {float(num_perm)!r}D"
     )
 
 
-def _banded(sig: DataFrame, bands: int, r: int, id_col: str) -> DataFrame:
-    """Explode ``(id, sig)`` into ``(id, band, bh)`` band-bucket keys:
-    band ``b``'s key is the hash of signature slots ``[b*r, (b+1)*r)``."""
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(F.slice("sig", b * r + 1, r)).alias("bh"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+def _band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    num_perm: int,
+    bands: int,
+    id_col: str,
+    ordered: bool = False,
+) -> DataFrame:
+    """The LSH band-candidate join, the one copy of it: distinct id
+    pairs ``(id_a, id_b)`` of the ``(id_col, sig)`` frames ``a`` and
+    ``b`` whose signatures agree on a whole band. Band ``i``'s key is
+    the hash of signature slots ``[i*r, (i+1)*r)`` with ``r = num_perm
+    / bands``; candidates meet on an equi-join of ``(band, bh)`` — never
+    all pairs. ``ordered`` keeps only ``id_a < id_b`` (the self-join,
+    ``a`` and ``b`` the same signatures). ``minhash_lsh_pairs``,
+    ``minhash_matches_against`` and the near-dup graph store all
+    generate candidates through it."""
+    r = num_perm // bands
+    keys = (
+        f"inline(transform(sequence(0, {bands - 1}), i -> "
+        f"struct(i AS band, xxhash64(slice(sig, i * {r} + 1, {r})) AS bh)))"
+    )
+    key = _quote(id_col)
+    pairs = a.selectExpr(f"{key} AS id_a", keys).join(
+        b.selectExpr(f"{key} AS id_b", keys), ["band", "bh"]
+    )
+    if ordered:
+        pairs = pairs.where("id_a < id_b")
+    return pairs.select("id_a", "id_b").distinct()
+
+
+def _est_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    num_perm: int,
+    bands: int,
+    threshold: float,
+    id_col: str,
+    ordered: bool = False,
+) -> DataFrame:
+    """Signature-estimate pairs ``(id_a, id_b, jac_est)`` with
+    ``jac_est >= threshold``: the :func:`_band_pairs` candidates of
+    ``a`` and ``b`` (``ordered`` as there), each scored by fetching both
+    signatures and comparing them slot by slot (:func:`_sig_est`). Only
+    candidate pairs ever compare full signatures."""
+    key = _quote(id_col)
+    return (
+        _band_pairs(a, b, num_perm, bands, id_col, ordered)
+        .join(a.selectExpr(f"{key} AS id_a", "sig AS _sa"), "id_a")
+        .join(b.selectExpr(f"{key} AS id_b", "sig AS _sb"), "id_b")
+        .selectExpr("id_a", "id_b", f"{_sig_est('_sa', '_sb', num_perm)} AS jac_est")
+        .where(F.col("jac_est") >= threshold)
+    )
 
 
 def minhash_lsh_pairs(
@@ -502,16 +476,10 @@ def _lsh_pairs_given_sigs(
     callers that already hold the signatures (``minhash_dedup_against``
     reuses the batch signatures instead of re-running the ``num_perm``-
     aggregate signature computation on the surviving subset)."""
-    r = num_perm // bands
-    banded = _banded(sig, bands, r, id_col)
-    cand = _band_self_candidates(banded, id_col)
+    cand = _band_pairs(sig, sig, num_perm, bands, id_col, ordered=True)
     # Exact-Jaccard verification restricted to the LSH candidate set.
     sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    return (
-        _verified_jaccard(cand, sh, id_col)
-        .filter(F.col("jac") >= threshold)
-        .select("id_a", "id_b", "jac")
-    )
+    return _jaccard_pairs(sh, id_col, threshold, cand)
 
 
 def minhash_matches_against(
@@ -544,35 +512,9 @@ def minhash_matches_against(
     """
     if num_perm % bands:
         raise ValueError("bands must divide num_perm")
-    r = num_perm // bands
-    nb = _banded(new_sigs, bands, r, id_col)
-    pb = _banded(prior_sigs.select(F.col(id_col), "sig"), bands, r, id_col)
-    cand = (
-        nb.alias("a")
-        .join(
-            pb.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias(id_col),
-            F.col(f"b.{id_col}").alias("prior_id"),
-        )
-        .distinct()
-    )
-    est = _sig_est("sig", "prior_sig", num_perm)
-    return (
-        cand.join(new_sigs, id_col)
-        .join(
-            prior_sigs.select(
-                F.col(id_col).alias("prior_id"), F.col("sig").alias("prior_sig")
-            ),
-            "prior_id",
-        )
-        .withColumn("jac_est", est)
-        .filter(F.col("jac_est") >= threshold)
-        .select(id_col, "prior_id", "jac_est")
-    )
+    return _est_pairs(
+        new_sigs, prior_sigs, num_perm, bands, threshold, id_col
+    ).selectExpr(f"id_a AS {_quote(id_col)}", "id_b AS prior_id", "jac_est")
 
 
 def minhash_dedup_against(
@@ -612,7 +554,7 @@ def minhash_dedup_against(
             threshold=threshold,
             id_col=id_col,
         )
-        .select(id_col)
+        .select(_quote(id_col))
         .localCheckpoint(eager=True)
     )
     fresh = df.join(hits, id_col, "left_anti")

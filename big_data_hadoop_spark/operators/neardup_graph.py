@@ -55,39 +55,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.operators.dedup import (
-    _band_self_candidates,
-    _banded,
-    _sig_est,
+    _est_pairs,
     minhash_matches_against,
     minhash_signatures,
 )
 from big_data_hadoop_spark.sources import batch_store
-
-
-def _self_est_pairs(
-    sigs: DataFrame, num_perm: int, bands: int, threshold: float, id_col: str
-) -> DataFrame:
-    """Estimate-scored LSH pairs WITHIN one signature set →
-    ``(id_a, id_b, jac_est)`` with ``id_a < id_b``: the band-collision
-    candidate join of ``minhash_lsh_pairs``, scored with the signature
-    estimate instead of exact shingle verification (see the module
-    docstring for why the estimate is the store's uniform metric)."""
-    r = num_perm // bands
-    cand = _band_self_candidates(_banded(sigs, bands, r, id_col), id_col)
-    return (
-        cand.join(
-            sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("_sa")),
-            "id_a",
-        )
-        .join(
-            sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("_sb")),
-            "id_b",
-        )
-        .withColumn("jac_est", _sig_est("_sa", "_sb", num_perm))
-        .filter(F.col("jac_est") >= threshold)
-        .select("id_a", "id_b", "jac_est")
-    )
 
 
 def _refuse_duplicate_ids(df: DataFrame, id_col: str) -> None:
@@ -149,14 +123,19 @@ def _accept(sigs: DataFrame, n: int, prior, meta: dict, stats: dict):
     num_perm, bands, threshold, id_col = (
         meta["num_perm"], meta["bands"], meta["threshold"], meta["id_col"]
     )
-    edges = _self_est_pairs(sigs, num_perm, bands, threshold, id_col)
+    # within-batch pairs: the band join of minhash_lsh_pairs, scored
+    # with the signature estimate instead of exact shingle verification
+    # (see the module docstring for why the estimate is the store's
+    # uniform metric)
+    edges = _est_pairs(sigs, sigs, num_perm, bands, threshold, id_col, ordered=True)
     if prior is not None:
+        key = _quote(id_col)
         cross = minhash_matches_against(
             sigs, prior, num_perm=num_perm, bands=bands,
             threshold=threshold, id_col=id_col,
-        ).select(
-            F.least(F.col(id_col), F.col("prior_id")).alias("id_a"),
-            F.greatest(F.col(id_col), F.col("prior_id")).alias("id_b"),
+        ).selectExpr(
+            f"least({key}, prior_id) AS id_a",
+            f"greatest({key}, prior_id) AS id_b",
             "jac_est",
         )
         edges = edges.unionByName(cross)

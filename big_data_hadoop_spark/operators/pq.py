@@ -190,7 +190,7 @@ def pq_train(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     dsub = dim // m
-    e = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_ed"))
+    e = df.select(_quote(id_col), _as_double(F.col(_quote(vec_col))).alias("_ed"))
     train = _bounded_training_sample(e, id_col, train_cap, n_rows=n_rows).cache()
     if n_rows is not None and n_rows <= train_cap:
         # the sample IS the corpus and the caller told us its size —
@@ -212,7 +212,7 @@ def pq_train(
             # returns an arbitrary partition's first row and the
             # codebook would differ across runs (review finding).
             (row,) = (
-                train.orderBy(id_col)
+                train.orderBy(_quote(id_col))
                 .limit(1)
                 .select(array_to_vector(F.slice("_ed", j * dsub + 1, dsub)).alias("_v"))
                 .collect()
@@ -435,7 +435,7 @@ def ivfpq_build(
         # join-back below all read this checkpoint (round-12 review:
         # the lazy frame re-ran the corpus-wide assignment 3x)
         res = ivf.assigned.select(
-            F.col(id_col),
+            _quote(id_col),
             F.col("cell"),
             F.expr(_residual("emb_d", ivf.centroids, "cell")).alias("_res"),
         ).localCheckpoint(eager=True)
@@ -444,7 +444,7 @@ def ivfpq_build(
             seed=seed, train_cap=train_cap, n_rows=n_rows,
         )
         codes = pq_encode(res, cb, id_col=id_col, vec_col="_res").join(
-            res.select(F.col(id_col), "cell"), id_col
+            res.select(_quote(id_col), "cell"), id_col
         )
         return IVFPQIndex(
             centroids=ivf.centroids, cb=cb, codes=codes, id_col=id_col,
@@ -455,7 +455,7 @@ def ivfpq_build(
         seed=seed, train_cap=train_cap, n_rows=n_rows,
     )
     codes = pq_encode(df, cb, id_col=id_col, vec_col=vec_col).join(
-        ivf.assigned.select(F.col(id_col), "cell"), id_col
+        ivf.assigned.select(_quote(id_col), "cell"), id_col
     )
     return IVFPQIndex(
         centroids=ivf.centroids, cb=cb, codes=codes, id_col=id_col
@@ -486,7 +486,7 @@ def ivfpq_search(
     the per-candidate sum joins on (query, cell, subspace, code). A
     query vector whose width is not the codebook's fails the search
     with an error naming both widths."""
-    cb = index.cb
+    cb, qid, key = index.cb, _quote(query_id_col), _quote(index.id_col)
     q = _query_vectors(
         queries, query_id_col, query_vec_col, cb.dim, "ivfpq_search"
     )
@@ -495,14 +495,14 @@ def ivfpq_search(
         # one LUT row set per (query, probed cell): the query's
         # residual against THAT cell vs every (j, code) centroid
         probed_res = probed.select(
-            query_id_col,
+            qid,
             "q_cell",
             F.expr(_residual("_qd", index.centroids, "q_cell")).alias("_qr"),
         )
         lut = (
             probed_res.join(F.broadcast(cb.entries))
             .select(
-                query_id_col,
+                qid,
                 "q_cell",
                 "j",
                 "code",
@@ -512,12 +512,12 @@ def ivfpq_search(
             )
         )
         cand = index.codes.join(
-            F.broadcast(probed_res.select(query_id_col, "q_cell")),
+            F.broadcast(probed_res.select(qid, "q_cell")),
             F.col("cell") == F.col("q_cell"),
-        ).select(query_id_col, index.id_col, "cell", "codes")
+        ).select(qid, key, "cell", "codes")
         flat = cand.select(
-            query_id_col,
-            F.col(index.id_col),
+            qid,
+            key,
             "cell",
             F.posexplode("codes").alias("j", "code"),
         )
@@ -525,19 +525,19 @@ def ivfpq_search(
             flat.join(
                 F.broadcast(lut),
                 (F.col("cell") == F.col("q_cell"))
-                & (flat[query_id_col] == lut[query_id_col])
+                & (flat[qid] == lut[qid])
                 & (flat["j"] == lut["j"])
                 & (flat["code"] == lut["code"]),
             )
-            .groupBy(flat[query_id_col], F.col(index.id_col))
+            .groupBy(flat[qid], F.col(key))
             .agg(F.sum("pdist").alias("adc_dist"))
         )
     else:
-        probed = probed.select(query_id_col, "q_cell")
+        probed = probed.select(qid, "q_cell")
         lut = (
             q.join(F.broadcast(cb.entries))
             .select(
-                query_id_col,
+                qid,
                 "j",
                 "code",
                 F.expr(_sq_l2_sql(_sub("_qd", cb.dsub), "centroid")).alias(
@@ -548,22 +548,21 @@ def ivfpq_search(
         cand = index.codes.join(
             F.broadcast(probed),
             F.col("cell") == F.col("q_cell"),
-        ).select(query_id_col, index.id_col, "codes")
+        ).select(qid, key, "codes")
         flat = cand.select(
-            query_id_col,
-            F.col(index.id_col),
+            qid,
+            key,
             F.posexplode("codes").alias("j", "code"),
         )
         dists = (
             flat.join(F.broadcast(lut), [query_id_col, "j", "code"])
-            .groupBy(query_id_col, index.id_col)
+            .groupBy(qid, key)
             .agg(F.sum("pdist").alias("adc_dist"))
         )
     return release_on_drop(
         top_k_per(
-            dists, query_id_col, f"adc_dist ASC, {_quote(index.id_col)} ASC",
-            topk, rank="rank",
-        ).select(query_id_col, index.id_col, "adc_dist", "rank")
+            dists, query_id_col, f"adc_dist ASC, {key} ASC", topk, rank="rank"
+        ).select(qid, key, "adc_dist", "rank")
     )
 
 

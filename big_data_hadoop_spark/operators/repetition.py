@@ -23,7 +23,7 @@ by the pure-Python oracle in ``tests/test_repetition.py``):
   each line's first / total line characters; ``dup_para_char_frac``
   likewise per paragraph.
 * Tokens are the engine's single-space split (``functions.text.
-  split_tokens``), lowercased, empties dropped. An n-gram's character
+  kept_tokens``: lowercased, empties dropped). An n-gram's character
   length is the sum of its token lengths (joining spaces excluded); the
   per-document denominator is the sum of ALL token lengths.
 * ``top_{n}gram_char_frac`` = count * chars(g) / total for the most
@@ -66,7 +66,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from big_data_hadoop_spark.functions.text import split_tokens
+from big_data_hadoop_spark.functions.text import kept_tokens
 
 __all__ = ["dup_line_frac_col", "repetition_signals"]
 
@@ -77,6 +77,20 @@ def _char_sum(arr: Column) -> Column:
     )
 
 
+def _lines(text: Column) -> Column:
+    """The non-empty lines of ``text``."""
+    return F.filter(F.split(text, "\n", -1), lambda l: l != F.lit(""))
+
+
+def _dup_frac(units: Column) -> Column:
+    """The fraction of ``units`` that repeat an earlier unit (0 when
+    there are none)."""
+    n = F.size(units).cast("long")
+    return (n - F.size(F.array_distinct(units)).cast("long")).cast(
+        "double"
+    ) / F.greatest(n, F.lit(1).cast("long"))
+
+
 def dup_line_frac_col(text_col: str = "text") -> Column:
     """``dup_line_frac`` as a STANDALONE per-row Column (same contract as
     the ``repetition_signals`` output column, pinned by test): the
@@ -84,13 +98,7 @@ def dup_line_frac_col(text_col: str = "text") -> Column:
     and shuffle-free, so it composes into fused gate predicates — batch
     scan filters and streaming filters alike (``pipeline.curation_gate``
     uses it for the Gopher-style repetition gate)."""
-    lines = F.filter(
-        F.split(F.col(text_col), "\n", -1), lambda l: l != F.lit("")
-    )
-    n = F.size(lines).cast("long")
-    return (n - F.size(F.array_distinct(lines)).cast("long")).cast(
-        "double"
-    ) / F.greatest(n, F.lit(1).cast("long"))
+    return _dup_frac(_lines(F.col(text_col)))
 
 
 def repetition_signals(
@@ -111,10 +119,8 @@ def repetition_signals(
     if not all_ns or min(all_ns) < 1:
         raise ValueError(f"n-gram sizes must be >= 1: top={top_ns} dup={dup_ns}")
 
-    toks = F.filter(
-        split_tokens(F.col(text_col), lowercase=True), lambda t: t != F.lit("")
-    )
-    lines = F.filter(F.split(F.col(text_col), "\n", -1), lambda l: l != F.lit(""))
+    toks = kept_tokens(F.col(text_col))
+    lines = _lines(F.col(text_col))
     # "whitespace-only" pins an EXPLICIT ASCII class: SQL trim strips
     # only spaces and Python str.strip() strips all unicode whitespace —
     # either shorthand diverges between the engine and its oracle (same
@@ -135,16 +141,12 @@ def repetition_signals(
     )
 
     def _unit_fracs(col: str) -> tuple[Column, Column]:
-        n = F.size(col).cast("long")
         dist = F.array_distinct(F.col(col))
-        frac = (n - F.size(dist).cast("long")).cast("double") / F.greatest(
-            n, F.lit(1).cast("long")
-        )
         char_frac = (
             (_char_sum(F.col(col)) - _char_sum(dist)).cast("double")
             / F.greatest(_char_sum(F.col(col)), F.lit(1).cast("long"))
         )
-        return frac, char_frac
+        return _dup_frac(F.col(col)), char_frac
 
     line_frac, line_char_frac = _unit_fracs("_lines")
     para_frac, para_char_frac = _unit_fracs("_paras")

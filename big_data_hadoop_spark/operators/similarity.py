@@ -186,9 +186,9 @@ def _flat(
     and null-free, so the fallback value is never observed.
     """
     cast_once = df.selectExpr(
-        f"`{id_col}`",
-        *[f"`{c}`" for c in extra],
-        f"CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS _ed",
+        _quote(id_col),
+        *map(_quote, extra),
+        f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>) AS _ed",
     )
     # one selectExpr / one F.expr: the 3·dim-node projection and the
     # dim-term norm are parsed JVM-side from strings — assembling them
@@ -196,8 +196,8 @@ def _flat(
     # dim=64 (measured; the parse is <1 ms and the expression tree is
     # identical, pinned by the optimized-plan equality A/B this round)
     flat = cast_once.selectExpr(
-        f"`{id_col}`",
-        *[f"`{c}`" for c in extra],
+        _quote(id_col),
+        *map(_quote, extra),
         *_flat_cols("_ed", prefix, dim),
     )
     acc = _dot_sql(prefix, prefix, dim, flat=True)
@@ -280,9 +280,7 @@ def cosine_neardup_pairs(
             )
             .select("vec_a", "vec_b", sim.alias("sim"))
         )
-    e = with_norm(
-        df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
-    )
+    e = with_norm(df.select(_quote(id_col), _quote(vec_col)), vec_col=vec_col)
     a = e.selectExpr(f"{_quote(id_col)} AS vec_a", "emb_d AS _ea", "nrm AS _na")
     b = e.selectExpr(f"{_quote(id_col)} AS vec_b", "emb_d AS _eb", "nrm AS _nb")
     sim = dot("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
@@ -309,38 +307,38 @@ def cosine_topk(
     by query — k rows per query survive. With ``dim`` given, both sides are
     flattened to scalar columns (see ``_flat``) for codegen'd scoring.
     """
-    df = _nonzero(df, vec_col)
+    df, key = _nonzero(df, vec_col), F.col(_quote(id_col))
     if dim is not None:
         e = _flat(df, id_col, vec_col, dim, "_a")
         q = (
             _flat(df, id_col, vec_col, dim, "_b")
-            .filter(F.col(id_col).isin(query_ids))
+            .filter(key.isin(query_ids))
             .withColumnRenamed(id_col, "query_id")
             .withColumnRenamed("nrm", "q_nrm")
         )
         sim = _flat_dot("_b", "_a", dim) / (F.col("q_nrm") * F.col("nrm"))
         scored = e.join(
-            F.broadcast(q), F.col("query_id") != F.col(id_col)
-        ).select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+            F.broadcast(q), F.col("query_id") != key
+        ).select("query_id", key.alias("neighbor_id"), sim.alias("sim"))
         return release_on_drop(
             top_k_per(
                 scored, "query_id", "sim DESC, neighbor_id ASC", k
             ).select("query_id", "neighbor_id", "sim")
         )
     e = with_norm(
-        df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
-    ).select(F.col(id_col), "emb_d", "nrm")
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
+        df.select(key, F.col(_quote(vec_col))), vec_col=vec_col
+    ).select(key, "emb_d", "nrm")
+    q = e.filter(key.isin(query_ids)).select(
+        key.alias("query_id"),
         F.col("emb_d").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
     sim = dot("q_emb", "emb_d") / (F.col("q_nrm") * F.col("nrm"))
     scored = (
-        e.join(F.broadcast(q), F.col("query_id") != F.col(id_col))
+        e.join(F.broadcast(q), F.col("query_id") != key)
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            key.alias("neighbor_id"),
             sim.alias("sim"),
         )
     )
@@ -503,11 +501,12 @@ def _bounded_training_sample(
     to an eager one-column ``count()`` (an extra job per fit —
     VERDICT r2 #6).
     """
-    n = e.select(F.col(id_col)).count() if n_rows is None else n_rows
+    key = F.col(_quote(id_col))
+    n = e.select(key).count() if n_rows is None else n_rows
     if n <= cap:
         return e
     modulus = -(-n // cap)  # ceil → keep ~cap rows
-    return e.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(modulus)) == 0)
+    return e.filter(F.pmod(F.xxhash64(key), F.lit(modulus)) == 0)
 
 
 def _finite_centroids(centroids: list[list[float]]) -> list[list[float]]:
@@ -778,9 +777,8 @@ def ivf_build(
 
     global IVF_FIT_COUNT
 
-    e = df.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "_v", array_to_vector(_as_double(F.col(vec_col)))
-    )
+    key, vec = F.col(_quote(id_col)), F.col(_quote(vec_col))
+    e = df.select(key, vec).withColumn("_v", array_to_vector(_as_double(vec)))
     train = _bounded_training_sample(e, id_col, train_cap, n_rows=n_rows)
     # KMeans.fit aborts on an empty dataset and on k > n. Clamp k to the
     # rows actually available: with n_rows known this is arithmetic
@@ -809,10 +807,10 @@ def ivf_build(
         # governed by n_probe).
         centroids = []
         if available == 1:
-            (row,) = train.orderBy(id_col).limit(1).select("_v").collect()
+            (row,) = train.orderBy(key).limit(1).select("_v").collect()
             centroids = [[float(x) for x in row._v.toArray()]]
         assigned = with_norm(e, vec_col=vec_col).select(
-            F.col(id_col), F.lit(0).alias("cell"), "emb_d", "nrm"
+            key, F.lit(0).alias("cell"), "emb_d", "nrm"
         )
     else:
         model = KMeans(
@@ -821,7 +819,7 @@ def ivf_build(
         ).fit(train)
         IVF_FIT_COUNT += 1
         assigned = with_norm(model.transform(e), vec_col=vec_col).select(
-            F.col(id_col), "cell", "emb_d", "nrm"
+            key, "cell", "emb_d", "nrm"
         )
         centroids = [[float(x) for x in c] for c in model.clusterCenters()]
     # the empty index persists too: a serving job's ivf_load/spark.table
@@ -898,7 +896,7 @@ def _ivf_search_core(
         cond += f" AND query_id != {_quote(index.id_col)}"
     sim = _flat_dot("_b", "_a", dim) / (F.col("q_nrm") * F.col("nrm"))
     scored = index.serving().join(F.broadcast(fb), F.expr(cond)).select(
-        "query_id", F.col(index.id_col).alias("neighbor_id"), sim.alias("sim")
+        "query_id", F.col(_quote(index.id_col)).alias("neighbor_id"), sim.alias("sim")
     )
     return release_on_drop(
         top_k_per(scored, "query_id", "sim DESC, neighbor_id ASC", k).select(
@@ -921,8 +919,9 @@ def ivf_search(
     assigned, id_col = index.assigned, index.id_col
     if not index.centroids:
         return _ivf_empty_result(index, assigned.schema[id_col].dataType)
-    q = assigned.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
+    key = F.col(_quote(id_col))
+    q = assigned.filter(key.isin(query_ids)).select(
+        key.alias("query_id"),
         F.col("emb_d").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )

@@ -55,10 +55,28 @@ hash partition, never lists.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
+
 __all__ = ["duplicate_spans", "remove_duplicate_spans"]
+
+
+def _kgram_hashes(t: str, k: int) -> str:
+    """SQL text for the ``xxhash64`` of every character ``k``-gram of
+    the string column ``t``, in position order: one ``substring`` slice
+    per position over an index sequence (one O(k) copy each — a
+    char-array concat-fold measured ~4x slower). NULL when ``t`` is
+    shorter than ``k``. ``t`` must be an attribute (stage an expression
+    as a column first): a subtree captured by the lambda re-evaluates at
+    every position. The one rendering behind this module's windows and
+    ``textstats.winnow_fingerprints``."""
+    n = f"length({t}) - {k} + 1"
+    return (
+        f"CASE WHEN {n} >= 1 THEN transform(sequence(1, greatest({n}, 1)), "
+        f"i -> xxhash64(substring({t}, i, {k}))) END"
+    )
 
 
 def _redundant_starts(
@@ -69,55 +87,32 @@ def _redundant_starts(
     Documents with no redundant window are absent."""
     if k < 2:
         raise ValueError(f"window length k must be >= 2, got {k}")
-    staged = df.select(F.col(id_col), F.col(text_col).alias("_t"))
-    n_windows = F.length("_t") - k + 1
-    hashes = F.when(
-        n_windows >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n_windows, F.lit(1))),
-            lambda i: F.xxhash64(F.substring(F.col("_t"), i, F.lit(k))),
-        ),
-    )
-    occ = staged.select(
-        F.col(id_col), F.posexplode(hashes).alias("pos", "h")
+    key = _quote(id_col)
+    occ = df.selectExpr(key, f"{_quote(text_col)} AS _t").selectExpr(
+        key, f"posexplode({_kgram_hashes('_t', k)}) AS (pos, h)"
     )
     # Unique hashes (the dominant mass) are their own minimum and drop
     # out here; only genuinely duplicated windows survive the filter.
-    first = F.min(
-        F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
-    ).over(Window.partitionBy("h"))
+    first = F.expr(f"min(struct({key} AS d, pos AS p)) OVER (PARTITION BY h)")
     red = (
         occ.withColumn("first", first)
-        .filter(
-            (F.col(id_col) != F.col("first.d")) | (F.col("pos") != F.col("first.p"))
-        )
-        .select(id_col, "pos")
+        .where(f"{key} != first.d OR pos != first.p")
+        .select(key, "pos")
     )
-    return red.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("pos")).alias("starts")
-    )
+    return red.groupBy(key).agg(F.expr("sort_array(collect_list(pos)) AS starts"))
 
 
-def _merge_spans(starts: Column, k: int) -> Column:
-    """Sorted window starts -> merged ``array<struct<s,e>>`` spans
-    (``e`` exclusive), merging windows that overlap or touch."""
-    empty = F.expr("cast(array() as array<struct<s:int,e:int>>)")
-    span = lambda s, e: F.struct(s.alias("s"), e.alias("e"))  # noqa: E731
-    return F.aggregate(
-        starts,
-        empty,
-        lambda acc, s: F.when(
-            (F.size(acc) > 0) & (s <= F.element_at(acc, -1)["e"]),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    span(
-                        F.element_at(acc, -1)["s"],
-                        F.greatest(F.element_at(acc, -1)["e"], s + k),
-                    )
-                ),
-            ),
-        ).otherwise(F.concat(acc, F.array(span(s, s + F.lit(k))))),
+def _merge_spans(starts: str, k: int) -> str:
+    """Sorted window starts (the array column ``starts``) -> merged
+    ``array<struct<s,e>>`` spans (``e`` exclusive), merging windows that
+    overlap or touch; one fold, as SQL text."""
+    last = "element_at(acc, -1)"
+    return (
+        f"aggregate({starts}, CAST(array() AS ARRAY<STRUCT<s: INT, e: INT>>), "
+        f"(acc, s) -> CASE WHEN size(acc) > 0 AND s <= {last}.e "
+        f"THEN concat(slice(acc, 1, size(acc) - 1), "
+        f"array(struct({last}.s AS s, greatest({last}.e, s + {k}) AS e))) "
+        f"ELSE concat(acc, array(struct(s AS s, s + {k} AS e))) END)"
     )
 
 
@@ -131,13 +126,13 @@ def duplicate_spans(
     docstring for the redundancy contract). Output: ``(id_col,
     span_start, span_len)``, one row per merged span; documents whose
     text repeats nothing emit no rows."""
-    spans = _redundant_starts(df, k, text_col, id_col).select(
-        F.col(id_col), F.explode(_merge_spans(F.col("starts"), k)).alias("sp")
-    )
-    return spans.select(
-        id_col,
-        F.col("sp.s").cast("long").alias("span_start"),
-        (F.col("sp.e") - F.col("sp.s")).cast("long").alias("span_len"),
+    key = _quote(id_col)
+    return _redundant_starts(df, k, text_col, id_col).selectExpr(
+        key, f"explode({_merge_spans('starts', k)}) AS sp"
+    ).selectExpr(
+        key,
+        "CAST(sp.s AS BIGINT) AS span_start",
+        "CAST(sp.e - sp.s AS BIGINT) AS span_len",
     )
 
 
@@ -154,8 +149,8 @@ def remove_duplicate_spans(
     through byte-identical."""
     marked = _redundant_starts(df, k, text_col, id_col)
     joined = df.join(marked, id_col, "left")
-    spans = _merge_spans(F.col("starts"), k)
-    text = F.col(text_col)
+    spans = F.expr(_merge_spans("starts", k))
+    text = F.col(_quote(text_col))
     seed = F.struct(
         F.lit(0).alias("prev"), F.lit("").cast("string").alias("out")
     )
@@ -177,7 +172,7 @@ def remove_duplicate_spans(
     out_text = F.when(F.col("starts").isNull(), text).otherwise(cleaned)
     return joined.select(
         *[
-            out_text.alias(c) if c == text_col else F.col(c)
+            out_text.alias(c) if c == text_col else F.col(_quote(c))
             for c in df.columns
         ]
     )

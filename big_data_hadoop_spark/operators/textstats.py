@@ -13,7 +13,10 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.functions.text import kept_tokens, split_tokens
+from big_data_hadoop_spark.operators.dedup import _overlap_pairs
+from big_data_hadoop_spark.operators.substring import _kgram_hashes
 from big_data_hadoop_spark.operators.tokenize import tokenized
 
 #: BPE-ish subword-run pattern (GPT-2-style approximation): a token is an
@@ -150,26 +153,22 @@ def winnow_fingerprints(
     # (see dedup.minhash_signatures), so substring over a raw
     # ``lower(text)`` subtree would re-lower the whole string at every
     # position — O(n^2) per document. An attribute reference is O(1).
-    staged = df.select(F.col(id_col), F.lower(F.col(text_col)).alias("_lt"))
-    lowered = F.col("_lt")
-    n_grams = F.length(lowered) - k + 1
-    hash_expr = F.when(n_grams >= 1, F.transform(
-        F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
-        lambda i: F.xxhash64(F.substring(lowered, i, F.lit(k))),
-    )).otherwise(F.expr("cast(array() as array<bigint>)"))
+    key = _quote(id_col)
+    staged = df.selectExpr(key, f"lower({_quote(text_col)}) AS _lt")
     # Stage the hash array as a column as well: the minima fold below
     # references it w + 1 times (fold base, each shifted slice, the final
     # size), and every reference to a non-attribute subtree re-runs the
-    # whole k-gram hashing pass.
-    hashed = staged.select(F.col(id_col), hash_expr.alias("_hs"))
-    hs = F.col("_hs")
-    mins = hs
+    # whole k-gram hashing pass. A text shorter than k has no hash array,
+    # and so no fingerprint.
+    hashed = staged.selectExpr(key, f"{_kgram_hashes('_lt', k)} AS _hs")
+    mins = "_hs"
     for d in range(1, w):
-        shifted_h = F.slice(hs, d + 1, F.greatest(F.size(hs) - d, F.lit(0)))
-        mins = F.zip_with(mins, shifted_h, lambda x, y: F.least(x, y))
-    full = F.slice(mins, 1, F.greatest(F.size(hs) - w + 1, F.lit(0)))
-    fps = F.array_distinct(full)
-    return hashed.select(F.col(id_col), F.explode(fps).alias("fp"))
+        mins = (
+            f"zip_with({mins}, slice(_hs, {d + 1}, greatest(size(_hs) - {d}, 0)), "
+            "(x, y) -> least(x, y))"
+        )
+    full = f"slice({mins}, 1, greatest(size(_hs) - {w} + 1, 0))"
+    return hashed.selectExpr(key, f"explode(array_distinct({full})) AS fp")
 
 
 def winnow_neardup_pairs(
@@ -192,14 +191,16 @@ def winnow_neardup_pairs(
     min(|fp_a|, |fp_b|)`` — MOSS reports containment of the smaller
     document, so a file pasted whole into a larger one still scores 1.0.
 
-    Plan shape: an inverted-index equi-join on the fingerprint value
-    (never all-pairs), followed by a pair-count aggregation and two size
-    joins — the same skeleton as ``dedup.ngram_jaccard_pairs``. Skew
+    Plan shape: the inverted-index overlap join of
+    ``dedup.ngram_jaccard_pairs`` (``dedup._overlap_pairs``: an
+    equi-join on the fingerprint value, never all-pairs, a pair-count
+    aggregation and two size joins), scored by containment. Skew
     valve for corpus scale: ``max_doc_freq`` drops fingerprints appearing
     in more than that many documents before the self-join (boilerplate
     headers/footers are exactly the hashes whose posting lists explode
     the join; dropping them can only lower recall for pairs whose whole
-    overlap is boilerplate). Default keeps every fingerprint — exact.
+    overlap is boilerplate). The set sizes still count every
+    fingerprint. Default keeps every fingerprint — exact.
     """
     fps = winnow_fingerprints(df, k=k, w=w, text_col=text_col, id_col=id_col)
     # Pin ONE hash-exchange on fp that every consumer shares: without it
@@ -211,45 +212,24 @@ def winnow_neardup_pairs(
     # exchange subtree, which Spark executes once (ReusedExchange), and
     # shuffling by fp is the 100 TB-correct join layout anyway.
     fps = fps.repartition("fp")
-    # winnow_fingerprints is distinct per document, so count(*) = |fp set|
-    sizes = fps.groupBy(id_col).agg(F.count("*").alias("sz"))
     idx = fps
     if max_doc_freq is not None:
         hot = (
             fps.groupBy("fp")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
+            .agg(F.expr("count(*) AS _df"))
+            .where(f"_df > {int(max_doc_freq)}")
             .select("fp")
         )
         idx = fps.join(hot, "fp", "left_anti")
-    shared = (
-        idx.alias("a")
-        .join(
-            idx.alias("b"),
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
-    )
+    # winnow_fingerprints is distinct per document, so the sizes are the
+    # |fp set|s
     return (
-        shared.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")),
-            "id_a",
+        _overlap_pairs(fps, id_col, "fp", index=idx)
+        .selectExpr(
+            "id_a", "id_b", "n_shared",
+            "CAST(n_shared AS DOUBLE) / least(sz_a, sz_b) AS overlap_ratio",
         )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .withColumn(
-            "overlap_ratio",
-            F.col("n_shared").cast("double") / F.least("sz_a", "sz_b"),
-        )
-        .filter(F.col("overlap_ratio") >= threshold)
-        .select("id_a", "id_b", "n_shared", "overlap_ratio")
+        .where(F.col("overlap_ratio") >= threshold)
     )
 
 

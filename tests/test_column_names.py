@@ -1,16 +1,28 @@
 """Caller-supplied column names reach SQL quoted: an id, group or query
-column whose name holds a backtick or a dot ranks exactly like a plain
-one in ``cap_per_group``, ``pq_search`` and ``bm25_topk``. Unquoted, a
-backtick fails to parse (``INVALID_ATTRIBUTE_NAME_SYNTAX``) and a dot is
-read as struct access."""
+column whose name holds a backtick or a dot gives exactly the rows a
+plain one does — in the ranked operators (``cap_per_group``,
+``pq_search``, ``bm25_topk``, ``cosine_topk``, IVF and IVF-PQ search,
+``hybrid_topk``), the exact cosine pairs, and the near-duplicate pair
+operators. Unquoted, a backtick fails to parse
+(``INVALID_ATTRIBUTE_NAME_SYNTAX``) and a dot is read as struct access
+(``UNRESOLVED_COLUMN``)."""
 
 from __future__ import annotations
 
 import pytest
 
-from big_data_hadoop_spark.operators import pq
-from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk
+from big_data_hadoop_spark.operators import dedup, pq
+from big_data_hadoop_spark.operators import similarity as sim
+from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk, hybrid_topk
+from big_data_hadoop_spark.operators.substring import duplicate_spans
+from big_data_hadoop_spark.operators.textstats import winnow_neardup_pairs
 from big_data_hadoop_spark.pipeline import cap_per_group
+
+ODD_KEYS = ["doc `id`", "doc.id"]
+
+
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _frames(spark, key: str, query: str, group: str):
@@ -20,30 +32,16 @@ def _frames(spark, key: str, query: str, group: str):
              [float((i * j) % 7) - 3.0 for j in range(1, 5)])
             for i in range(40)
         ],
-        f"`{key.replace('`', '``')}` long, text string, "
-        f"`{group.replace('`', '``')}` string, embedding array<double>",
+        f"{_q(key)} long, text string, {_q(group)} string, "
+        "embedding array<double>",
     )
     queries = docs.where("text LIKE 'w1 %'").selectExpr(
-        f"`{key.replace('`', '``')}` AS `{query.replace('`', '``')}`",
-        "text", "embedding",
+        f"{_q(key)} AS {_q(query)}", "text", "embedding",
     )
     return docs, queries
 
 
-def _ranked(spark, key: str, query: str, group: str) -> dict:
-    docs, queries = _frames(spark, key, query, group)
-    cb = pq.pq_train(docs.toDF("vec_id", "text", "g", "embedding"),
-                     dim=4, m=2, k=4, seed=3)
-    codes = pq.pq_encode(docs, cb, id_col=key)
-    out = {
-        "cap_per_group": cap_per_group(docs, group_col=group, cap=5, id_col=key),
-        "pq_search": pq.pq_search(
-            codes, cb, queries, topk=3, id_col=key, query_id_col=query
-        ),
-        "bm25_topk": bm25_topk(
-            bm25_index(docs, id_col=key), queries, topk=3, query_id_col=query
-        ),
-    }
+def _rows(out: dict) -> dict:
     return {
         name: sorted(
             tuple(v.hex() if isinstance(v, float) else v for v in r)
@@ -53,10 +51,93 @@ def _ranked(spark, key: str, query: str, group: str) -> dict:
     }
 
 
-@pytest.mark.parametrize("key", ["doc `id`", "doc.id"])
-def test_odd_column_names_rank_like_plain_ones(spark, key):
-    plain = _ranked(spark, "doc_id", "query_id", "grp")
+def _ranked(spark, key: str, query: str, group: str) -> dict:
+    docs, queries = _frames(spark, key, query, group)
+    cb = pq.pq_train(docs.toDF("vec_id", "text", "g", "embedding"),
+                     dim=4, m=2, k=4, seed=3)
+    codes = pq.pq_encode(docs, cb, id_col=key)
+    bm25 = bm25_index(docs, id_col=key)
+    ivf = sim.ivf_build(docs, n_cells=4, id_col=key)
+    ivfpq = pq.ivfpq_build(docs, dim=4, n_cells=2, m=2, k=4, id_col=key)
+    return _rows({
+        "cap_per_group": cap_per_group(docs, group_col=group, cap=5, id_col=key),
+        "pq_search": pq.pq_search(
+            codes, cb, queries, topk=3, id_col=key, query_id_col=query
+        ),
+        "bm25_topk": bm25_topk(bm25, queries, topk=3, query_id_col=query),
+        "cosine_topk": sim.cosine_topk(docs, [1, 2, 3], k=3, id_col=key),
+        "cosine_topk_dim": sim.cosine_topk(
+            docs, [1, 2, 3], k=3, id_col=key, dim=4
+        ),
+        "cosine_neardup_pairs": sim.cosine_neardup_pairs(
+            docs, threshold=0.9, id_col=key
+        ),
+        "cosine_neardup_pairs_dim": sim.cosine_neardup_pairs(
+            docs, threshold=0.9, id_col=key, dim=4
+        ),
+        "ivf_search": sim.ivf_search(ivf, [1, 2, 3], k=3, n_probe=2),
+        "ivf_search_vectors": sim.ivf_search_vectors(
+            ivf, queries, k=3, n_probe=2, id_col=query
+        ),
+        "hybrid_topk": hybrid_topk(
+            bm25, docs, queries, topk=3, n_candidates=10,
+            query_id_col=query,
+        ),
+        "ivfpq_search": pq.ivfpq_search(
+            ivfpq, queries, topk=3, n_probe=2, query_id_col=query
+        ),
+    })
+
+
+@pytest.fixture(scope="module")
+def plain_ranked(spark):
+    return _ranked(spark, "doc_id", "query_id", "grp")
+
+
+@pytest.mark.parametrize("key", ODD_KEYS)
+def test_odd_column_names_rank_like_plain_ones(spark, plain_ranked, key):
     odd = _ranked(spark, key, f"query {key}", f"{key} group")
-    for name, rows in plain.items():
+    for name, rows in plain_ranked.items():
+        assert rows, name
+        assert odd[name] == rows, name
+
+
+def _pairs(spark, key: str) -> dict:
+    """Groups of three documents that differ in their last word, plus a
+    line repeated across groups."""
+    docs = spark.createDataFrame(
+        [
+            (i, " ".join(f"w{i // 3 * 10 + j}" for j in range(12))
+             + f" tail{i % 3} shared boilerplate line number {i // 9}")
+            for i in range(30)
+        ],
+        f"{_q(key)} long, text string",
+    )
+    return _rows({
+        "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs(
+            docs, threshold=0.5, id_col=key
+        ),
+        "ngram_jaccard_pairs_prefix": dedup.ngram_jaccard_pairs(
+            docs, threshold=0.5, id_col=key, method="prefix"
+        ),
+        "minhash_lsh_pairs": dedup.minhash_lsh_pairs(
+            docs, threshold=0.5, id_col=key
+        ),
+        "winnow_neardup_pairs": winnow_neardup_pairs(
+            docs, threshold=0.5, id_col=key
+        ),
+        "duplicate_spans": duplicate_spans(docs, k=20, id_col=key),
+    })
+
+
+@pytest.fixture(scope="module")
+def plain_pairs(spark):
+    return _pairs(spark, "doc_id")
+
+
+@pytest.mark.parametrize("key", ODD_KEYS)
+def test_odd_column_names_pair_like_plain_ones(spark, plain_pairs, key):
+    odd = _pairs(spark, key)
+    for name, rows in plain_pairs.items():
         assert rows, name
         assert odd[name] == rows, name

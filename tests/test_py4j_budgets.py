@@ -1,10 +1,10 @@
 """py4j round-trip budgets for building (not running) the plans of the
-calls perfbench times layer by layer. The driver's fixed cost per call
-sits in these round trips, and unlike construction time their count is
-deterministic. Each budget is the count measured on a warm session and
-a 50-document frame; a change that raises one has made plan building
-costlier. ``ivf_search_vectors`` has its own budget in
-``test_ivf_index.py``."""
+calls perfbench times layer by layer and of the near-duplicate pair
+operators. The driver's fixed cost per call sits in these round trips,
+and unlike construction time their count is deterministic. Each
+budget is the count measured on a warm session and a 50-document
+frame; a change that raises one has made plan building costlier.
+``ivf_search_vectors`` has its own budget in ``test_ivf_index.py``."""
 
 from __future__ import annotations
 
@@ -13,19 +13,36 @@ import pytest
 from big_data_hadoop_spark.operators import similarity as sim
 from big_data_hadoop_spark.operators.cooccur import pair_counts, stripes
 from big_data_hadoop_spark.operators.counts import token_counts, top_k
-from big_data_hadoop_spark.operators.dedup import minhash_signatures
+from big_data_hadoop_spark.operators.dedup import (
+    minhash_lsh_pairs,
+    minhash_signatures,
+    ngram_jaccard_pairs,
+)
+from big_data_hadoop_spark.operators.substring import duplicate_spans
+from big_data_hadoop_spark.operators.textstats import winnow_neardup_pairs
 from big_data_hadoop_spark.operators.tokenize import tokenized
 
 #: name -> (build the plan from (docs, vectors), budget in py4j calls).
 #: Counts before the dot and the hyperplane planes were parsed from SQL
-#: text: hyperplane_signatures 2,356, cosine_topk 444.
+#: text: hyperplane_signatures 2,356, cosine_topk 444. Counts before the
+#: shingles, the signature aggregate and the near-duplicate pair kernels
+#: were parsed from SQL text: minhash_signatures 807, minhash_lsh_pairs
+#: 1,832, ngram_jaccard_pairs 690 (prefix 1,362), winnow_neardup_pairs
+#: 911, duplicate_spans 838.
 BUDGETS = {
     "tokenized": (lambda d, v: tokenized(d), 15),
     "top_k_token_counts": (lambda d, v: top_k(token_counts(d), 1000), 77),
     "pair_counts_m1": (lambda d, v: pair_counts(d, m=1), 59),
     "pair_counts_m3": (lambda d, v: pair_counts(d, m=3), 59),
     "stripes_m2": (lambda d, v: stripes(d, m=2), 127),
-    "minhash_signatures": (lambda d, v: minhash_signatures(d), 807),
+    "minhash_signatures": (lambda d, v: minhash_signatures(d), 31),
+    "minhash_lsh_pairs": (lambda d, v: minhash_lsh_pairs(d), 198),
+    "ngram_jaccard_pairs": (lambda d, v: ngram_jaccard_pairs(d), 125),
+    "ngram_jaccard_pairs_prefix": (
+        lambda d, v: ngram_jaccard_pairs(d, method="prefix"), 217
+    ),
+    "winnow_neardup_pairs": (lambda d, v: winnow_neardup_pairs(d), 149),
+    "duplicate_spans": (lambda d, v: duplicate_spans(d), 64),
     "hyperplane_signatures": (
         lambda d, v: sim.hyperplane_signatures(v, dim=4, num_planes=16), 16
     ),
