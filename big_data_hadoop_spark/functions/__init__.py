@@ -3,17 +3,11 @@
 from big_data_hadoop_spark.functions.text import (
     NUMBER_PATTERN,
     WORD_PATTERN,
-    categorize,
-    is_number,
-    is_word,
     split_tokens,
 )
 
 __all__ = [
     "NUMBER_PATTERN",
     "WORD_PATTERN",
-    "categorize",
-    "is_number",
-    "is_word",
     "split_tokens",
 ]

@@ -19,6 +19,12 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _literal(text: str) -> str:
+    """``text`` as a SQL string literal: the parser unescapes
+    backslashes, so they are doubled along with the quote."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def top_k_per(
     df: DataFrame, by: str, order: str, k: int, rank: str = "rn"
 ) -> DataFrame:

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
+
 #: Full-match pattern for the *word* category: lower-case letters, dash,
 #: underscore (``HadoopWordCount.java:39``). Uppercase tokens do NOT match —
 #: the Hadoop jobs never lowercase (SURVEY Q1); lowercasing is an explicit
@@ -30,60 +32,42 @@ WORD = "word"
 NUMBER = "number"
 
 
-def is_word(token: Column) -> Column:
-    """True iff ``token`` fully matches the word pattern.
-
-    Anchored ``\\A...\\z``, not ``^...$``: Java's ``$`` matches BEFORE a
-    trailing line terminator, so ``"abc\\n"`` would count as a word in
-    Spark but not in RE2-based engines (DuckDB) — a cross-engine
-    divergence found by the hypothesis fuzz. The reference can never
-    observe the difference (``TextInputFormat`` strips line terminators,
-    so its tokens cannot contain ``\\n``), so the strict absolute-end
-    interpretation is reference-faithful AND engine-portable.
-    """
-    return token.rlike(f"\\A{WORD_PATTERN}\\z")
-
-
-def is_number(token: Column) -> Column:
-    """True iff ``token`` fully matches the number pattern (same
-    absolute-end anchoring rationale as :func:`is_word`)."""
-    return token.rlike(f"\\A{NUMBER_PATTERN}\\z")
-
-
-def categorize(token: Column) -> Column:
-    """``'word'`` / ``'number'`` / NULL (token discarded).
-
-    Mirrors the emit loop at ``HadoopWordCount.java:54-61``: a token that
-    matches neither pattern produces nothing. Empty tokens (from consecutive
-    spaces) never match either pattern but still occupy stream positions —
-    load-bearing for pair/stripe adjacency (SURVEY Q6).
-    """
-    return (
-        F.when(is_word(token), F.lit(WORD))
-        .when(is_number(token), F.lit(NUMBER))
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-
 def category_sql(token_sql: str) -> str:
-    """:func:`categorize` as a SQL ``CASE`` over the SQL expression
-    ``token_sql``, for lambdas parsed from a string (``t -> ...``); the
-    doubled backslashes are SQL string-literal escapes."""
+    """``'word'`` / ``'number'`` / NULL (token discarded) for the SQL
+    expression ``token_sql``, as a SQL ``CASE`` (parse it inside a
+    lambda: ``t -> ...``); the doubled backslashes are SQL
+    string-literal escapes.
+
+    Mirrors the emit loop at ``HadoopWordCount.java:54-61``: a token
+    that matches neither pattern produces nothing. Empty tokens (from
+    consecutive spaces) never match either pattern but still occupy
+    stream positions — load-bearing for pair/stripe adjacency (SURVEY
+    Q6).
+
+    Both patterns are anchored ``\\A...\\z``, not ``^...$``: Java's
+    ``$`` matches BEFORE a trailing line terminator, so ``"abc\\n"``
+    would count as a word in Spark but not in RE2-based engines
+    (DuckDB) — a cross-engine divergence found by the hypothesis fuzz.
+    The reference can never observe the difference
+    (``TextInputFormat`` strips line terminators, so its tokens cannot
+    contain ``\\n``), so the strict absolute-end interpretation is
+    reference-faithful AND engine-portable.
+    """
     return (
         f"CASE WHEN {token_sql} RLIKE '\\\\A{WORD_PATTERN}\\\\z' THEN '{WORD}' "
         f"WHEN {token_sql} RLIKE '\\\\A{NUMBER_PATTERN}\\\\z' THEN '{NUMBER}' END"
     )
 
 
-def kept_tokens(text: Column, lowercase: bool = True) -> Column:
-    """Kept-token array: single-space split with empties dropped
-    (lowercased by default) — the shared token contract of the
-    LLM-pipeline operators (BM25, the bigram LM, BPE, the corpus
-    profile). One definition so the engine's token semantics — and
-    their cross-engine regex pins — change in exactly one place."""
-    return F.filter(
-        split_tokens(text, lowercase=lowercase), lambda t: t != F.lit("")
-    )
+def kept_tokens(text_col: str, lowercase: bool = True) -> Column:
+    """Kept-token array of the column NAMED ``text_col``: single-space
+    split with empties dropped (lowercased by default) — the shared
+    token contract of the LLM-pipeline operators (BM25, the bigram LM,
+    BPE, the corpus profile), parsed from one SQL string. One
+    definition so the engine's token semantics — and their
+    cross-engine regex pins — change in exactly one place."""
+    text = f"lower({_quote(text_col)})" if lowercase else _quote(text_col)
+    return F.expr(f"filter(split({text}, ' ', -1), t -> t != '')")
 
 
 def split_tokens(text: Column, lowercase: bool = False) -> Column:

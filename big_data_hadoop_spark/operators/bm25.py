@@ -47,10 +47,6 @@ from big_data_hadoop_spark.session import release_on_drop
 __all__ = ["BM25Index", "bm25_index", "bm25_topk", "hybrid_topk"]
 
 
-def _kept(text_col: str):
-    return kept_tokens(F.col(_quote(text_col)))
-
-
 @dataclass(frozen=True)
 class BM25Index:
     """Postings ``(term, id, tf, df)``, docstats ``(id, dlen)``, totals
@@ -76,10 +72,10 @@ def bm25_index(
     docstring). ``None`` keeps everything.
     """
     key = _quote(id_col)
-    toks = docs.select(key, F.explode(_kept(text_col)).alias("term"))
+    toks = docs.select(key, F.explode(kept_tokens(text_col)).alias("term"))
     postings = toks.groupBy(key, "term").agg(F.count("*").alias("tf"))
     docstats = docs.select(
-        key, F.size(_kept(text_col)).cast("long").alias("dlen")
+        key, F.size(kept_tokens(text_col)).cast("long").alias("dlen")
     )
     totals = docstats.agg(
         F.count("*").alias("n_docs"),
@@ -117,7 +113,7 @@ def bm25_topk(
     qid, key = _quote(query_id_col), _quote(index.id_col)
     qt = queries.select(
         qid,
-        F.explode(F.array_distinct(_kept(query_text_col))).alias("term"),
+        F.explode(F.array_distinct(kept_tokens(query_text_col))).alias("term"),
     )
     hit = (
         qt.join(index.postings, "term")

@@ -141,7 +141,7 @@ def bpe_train(
     the bounded top-``max_words`` vocabulary collect."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    toks = kept_tokens(F.col(text_col))
+    toks = kept_tokens(text_col)
     vocab = (
         docs.select(F.explode(toks).alias("w"))
         .groupBy("w")

@@ -162,8 +162,5 @@ def stripe_entries(stripes_df: DataFrame) -> DataFrame:
     """
     return stripes_df.withColumn(
         "stripe",
-        F.transform(
-            F.map_entries("stripe"),
-            lambda e: F.concat_ws(":", e["key"], e["value"]),
-        ),
+        F.expr("transform(map_entries(stripe), e -> concat_ws(':', e.key, e.value))"),
     )

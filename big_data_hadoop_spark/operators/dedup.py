@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.functions.rank import _quote
-from big_data_hadoop_spark.functions.text import split_tokens
+from big_data_hadoop_spark.functions.text import kept_tokens
 
 # Minhash "permutations" are seeded re-hashes of the base shingle hash:
 # slot i = min over shingles of xxhash64(h, i). An arithmetic family
@@ -593,10 +593,10 @@ def simhash(
     aggregation, the same shape as ``minhash_signatures`` (a nested
     array-HOF fold re-scans the token hashes once per bit).
     """
-    arr = split_tokens(F.col(text_col), lowercase=True)
+    key = _quote(id_col)
     hashed = df.select(
-        F.col(id_col), F.explode(F.filter(arr, lambda t: t != "")).alias("_t")
-    ).select(F.col(id_col), F.xxhash64("_t").alias("h"))
+        F.col(key), F.explode(kept_tokens(text_col)).alias("_t")
+    ).select(F.col(key), F.xxhash64("_t").alias("h"))
     # the bit-vote aggregates and the fingerprint OR-fold are parsed from
     # strings: building ~10·bits Column nodes through py4j costs ~1.5 s
     # of driver time per call at bits=64 (measured; tree identical —
@@ -614,11 +614,9 @@ def simhash(
         for b in range(bits)
     )
     return (
-        hashed.groupBy(id_col)
+        hashed.groupBy(F.col(key))
         .agg(*votes)
-        .selectExpr(
-            f"`{id_col}`", f"(CAST(0 AS BIGINT) | {fp}) AS simhash"
-        )
+        .selectExpr(key, f"(CAST(0 AS BIGINT) | {fp}) AS simhash")
     )
 
 

@@ -91,6 +91,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.operators.dedup import dedup_by_clusters
 from big_data_hadoop_spark.operators.similarity import (
     _finite_centroids,
@@ -305,12 +306,10 @@ def _bad_vector(dim: int, vec_col: str):
     nothing, and was STORED permanently invisible to future dedup).
     Whole-NULL embeddings are NOT flagged — they stay the disclosed
     zero-norm drop (no direction, counted in stats)."""
-    return F.col(vec_col).isNotNull() & (
-        (F.size(F.col(vec_col)) != F.lit(int(dim)))
-        | F.exists(
-            F.col(vec_col),
-            lambda x: x.isNull() | F.isnan(x.cast("double")),
-        )
+    vec = _quote(vec_col)
+    return F.expr(
+        f"{vec} IS NOT NULL AND (size({vec}) != {int(dim)} OR "
+        f"exists({vec}, x -> x IS NULL OR isnan(CAST(x AS DOUBLE))))"
     )
 
 

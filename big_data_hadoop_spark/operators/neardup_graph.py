@@ -71,9 +71,10 @@ def _refuse_duplicate_ids(df: DataFrame, id_col: str) -> None:
     their shingles — a signature matching neither document) and the
     corruption would be committed permanently (the same hazard class
     as the NULL refusal). One column-pruned scan of the id column."""
+    key = F.col(_quote(id_col))
     dup = (
-        df.filter(F.col(id_col).isNotNull())  # NULLs get the NULL refusal
-        .groupBy(F.col(id_col))
+        df.filter(key.isNotNull())  # NULLs get the NULL refusal
+        .groupBy(key)
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") > 1)
         .limit(1)
@@ -104,7 +105,8 @@ def _validate(df: DataFrame, meta: dict, check_dups: bool):
         text_col=meta["text_col"], id_col=id_col,
     ).localCheckpoint(eager=True)
     row = sigs.agg(
-        F.count(F.lit(1)).alias("n"), F.count(F.col(id_col)).alias("n_ids")
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.col(_quote(id_col))).alias("n_ids"),
     ).first()
     if row["n_ids"] < row["n"]:
         raise ValueError(
@@ -140,7 +142,7 @@ def _accept(sigs: DataFrame, n: int, prior, meta: dict, stats: dict):
         )
         edges = edges.unionByName(cross)
     stats["docs"] = n
-    return {"sig": sigs.select(F.col(id_col), "sig"), "edge": edges}, n
+    return {"sig": sigs.select(_quote(id_col), "sig"), "edge": edges}, n
 
 
 FAMILY = batch_store.Family(

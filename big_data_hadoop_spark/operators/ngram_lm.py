@@ -60,17 +60,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.functions.text import kept_tokens
 
 __all__ = ["NGramLM", "ngram_lm_train", "ngram_lm_score", "ppl_filter"]
-
-
-def _kept_tokens(text_col: str) -> Column:
-    """Lowercased kept-token array (shared engine contract)."""
-    return kept_tokens(F.col(text_col))
 
 
 def _bigram_events(
@@ -84,7 +79,7 @@ def _bigram_events(
     zipped) — a narrow per-row transform; the only shuffles downstream
     are the count joins/aggregations themselves.
     """
-    toks = _kept_tokens(text_col)
+    toks = kept_tokens(text_col)
     n_pairs = F.greatest(F.size(toks) - 1, F.lit(0))
     pairs = F.arrays_zip(
         F.slice(toks, F.lit(1), n_pairs).alias("w1"),
@@ -127,7 +122,7 @@ def ngram_lm_train(
     frame is a single global aggregate over the unigram table (one row).
     """
     toks = ref_docs.select(
-        F.explode(_kept_tokens(text_col)).alias("token")
+        F.explode(kept_tokens(text_col)).alias("token")
     )
     unigrams = toks.groupBy("token").agg(F.count("*").alias("c1"))
     bigrams = (

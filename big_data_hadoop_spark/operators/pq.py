@@ -138,18 +138,13 @@ def _query_vectors(
 def _subvectors(df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int) -> DataFrame:
     """Explode ``(id, vec)`` into ``(id, j, sub array<double>)`` —
     narrow, one output row per subspace."""
-    emb = _as_double(F.col(_quote(vec_col)))
-    subs = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.struct(
-            j.cast("int").alias("j"),
-            F.slice(emb, j * dsub + 1, dsub).alias("sub"),
-        ),
-    )
+    emb = f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)"
     key = _quote(id_col)
-    return df.select(key, F.explode(subs).alias("s")).select(
-        key, F.col("s.j").alias("j"), F.col("s.sub").alias("sub")
-    )
+    return df.selectExpr(
+        key,
+        f"explode(transform(sequence(0, {m - 1}), j -> named_struct('j', "
+        f"CAST(j AS INT), 'sub', slice({emb}, j * {dsub} + 1, {dsub})))) AS s",
+    ).selectExpr(key, "s.j AS j", "s.sub AS sub")
 
 
 def pq_train(
@@ -258,9 +253,9 @@ def pq_encode(
     return (
         best.groupBy(key)
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", F.col("b.code").alias("code")))),
-                lambda s: s["code"],
+            F.expr(
+                "transform(array_sort(collect_list(struct(j, b.code AS code))), "
+                "s -> s.code)"
             ).alias("codes")
         )
     )
@@ -347,26 +342,22 @@ def pq_refine(
     corpus id ascending (deterministic, the ``pq_search`` rule); the
     query row itself is kept if shortlisted (the ``pq_search``
     self-inclusion contract)."""
-    pairs = cand.select(F.col(query_id_col), F.col(id_col))
-    raw = corpus.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_cd")
+    qid, key = _quote(query_id_col), _quote(id_col)
+    pairs = cand.select(qid, key)
+    raw = corpus.selectExpr(
+        key, f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>) AS _cd"
     )
-    qd = queries.select(
-        F.col(query_id_col), _as_double(F.col(query_vec_col)).alias("_qd")
+    qd = queries.selectExpr(
+        qid, f"CAST({_quote(query_vec_col)} AS ARRAY<DOUBLE>) AS _qd"
     )
     scored = (
         raw.join(F.broadcast(pairs), id_col)
         .join(F.broadcast(qd), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.expr(_sq_l2_sql("_qd", "_cd")).alias("dist"),
-        )
+        .select(qid, key, F.expr(_sq_l2_sql("_qd", "_cd")).alias("dist"))
     )
     return top_k_per(
-        scored, query_id_col, f"dist ASC, {_quote(id_col)} ASC", topk,
-        rank="rank",
-    ).select(query_id_col, id_col, "dist", "rank")
+        scored, query_id_col, f"dist ASC, {key} ASC", topk, rank="rank"
+    ).select(qid, key, "dist", "rank")
 
 
 @dataclass

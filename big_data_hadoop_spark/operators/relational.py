@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_hadoop_spark.functions.rank import top_k_per
+from big_data_hadoop_spark.functions.rank import _literal, top_k_per
 
 
 def filter_project(
@@ -603,7 +603,6 @@ def funnel_progress(
         raise ValueError("steps must be non-empty")
     if max_events_per_user is not None and max_events_per_user < 1:
         raise ValueError("max_events_per_user must be >= 1")
-    step_arr = F.array(*[F.lit(s) for s in steps])
     micros = F.unix_micros(F.col(ts_col).cast("timestamp"))
     budget = (
         None
@@ -626,42 +625,25 @@ def funnel_progress(
     per_user = relevant.groupBy("user").agg(
         F.array_sort(F.collect_list("e")).alias("evs")
     )
-    zero = F.struct(
-        F.lit(0).alias("stage"),
-        F.lit(None).cast("long").alias("first_t"),
-        F.lit(None).cast("long").alias("last_t"),
+    # clamp the lookup: after completion stage == len(steps) and the
+    # guard below is false, but ANSI element_at must never see an
+    # out-of-bounds index even in a dead branch (And short-circuiting
+    # in codegen is an implementation detail, not a contract)
+    wanted = (
+        f"element_at(array({', '.join(map(_literal, steps))}), "
+        f"least(acc.stage + 1, {len(steps)}))"
     )
-
-    def step_fold(acc, e):
-        # clamp the lookup: after completion stage == len(steps) and
-        # the guard below is false, but ANSI element_at must never see
-        # an out-of-bounds index even in a dead branch (And
-        # short-circuiting in codegen is an implementation detail,
-        # not a contract)
-        wanted = F.element_at(
-            step_arr, F.least(acc.stage + 1, F.lit(len(steps)))
-        )
-        in_budget = (
-            F.lit(True)
-            if budget is None
-            else F.coalesce(
-                e.t - acc.first_t <= F.lit(budget), F.lit(True)
-            )
-        )
-        advance = F.struct(
-            (acc.stage + 1).alias("stage"),
-            F.coalesce(acc.first_t, e.t).alias("first_t"),
-            e.t.alias("last_t"),
-        )
-        return F.when(
-            (acc.stage < F.lit(len(steps)))
-            & (e.y == wanted)
-            & in_budget,
-            advance,
-        ).otherwise(acc)
-
-    out = per_user.select(
-        "user", F.aggregate("evs", zero, step_fold).alias("st")
+    in_budget = (
+        "true" if budget is None
+        else f"coalesce(e.t - acc.first_t <= {budget}, true)"
+    )
+    out = per_user.selectExpr(
+        "`user`",
+        "aggregate(evs, named_struct('stage', 0, 'first_t', CAST(NULL AS BIGINT), "
+        "'last_t', CAST(NULL AS BIGINT)), (acc, e) -> CASE WHEN "
+        f"acc.stage < {len(steps)} AND e.y = {wanted} AND {in_budget} THEN "
+        "named_struct('stage', acc.stage + 1, 'first_t', coalesce(acc.first_t, e.t), "
+        "'last_t', e.t) ELSE acc END) AS st",
     )
     done = F.col("st.stage") == len(steps)
     return out.select(

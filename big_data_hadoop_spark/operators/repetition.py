@@ -57,6 +57,12 @@ n, state bounded by the document's own token count (the same per-row
 arrays the explode formulation materialized anyway), and the corpus
 never crosses the network — at 100 TB the old (doc, n, gram) exchange
 shipped most of the corpus 9 times; this ships nothing.
+
+Every fold is SQL text parsed JVM-side, with the caller's column names
+quoted — the package's one idiom for array kernels. Built as Column
+lambdas instead, the default call's plan took 9,743 py4j round trips
+and ~1.5 s of driver time on a 50-document frame; parsed, 126 and
+~0.35 s (pinned in ``tests/test_py4j_budgets.py``).
 """
 
 from __future__ import annotations
@@ -66,29 +72,25 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.functions.text import kept_tokens
 
 __all__ = ["dup_line_frac_col", "repetition_signals"]
 
 
-def _char_sum(arr: Column) -> Column:
-    return F.aggregate(
-        arr, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x).cast("long")
-    )
-
-
-def _lines(text: Column) -> Column:
+def _lines(text: str) -> str:
     """The non-empty lines of ``text``."""
-    return F.filter(F.split(text, "\n", -1), lambda l: l != F.lit(""))
+    return f"filter(split({text}, '\\n', -1), l -> l != '')"
 
 
-def _dup_frac(units: Column) -> Column:
+def _dup_frac(units: str) -> str:
     """The fraction of ``units`` that repeat an earlier unit (0 when
     there are none)."""
-    n = F.size(units).cast("long")
-    return (n - F.size(F.array_distinct(units)).cast("long")).cast(
-        "double"
-    ) / F.greatest(n, F.lit(1).cast("long"))
+    n = f"CAST(size({units}) AS BIGINT)"
+    return (
+        f"CAST({n} - CAST(size(array_distinct({units})) AS BIGINT) AS DOUBLE)"
+        f" / greatest({n}, 1L)"
+    )
 
 
 def dup_line_frac_col(text_col: str = "text") -> Column:
@@ -98,7 +100,72 @@ def dup_line_frac_col(text_col: str = "text") -> Column:
     and shuffle-free, so it composes into fused gate predicates — batch
     scan filters and streaming filters alike (``pipeline.curation_gate``
     uses it for the Gopher-style repetition gate)."""
-    return _dup_frac(_lines(F.col(text_col)))
+    return F.expr(_dup_frac(_lines(_quote(text_col))))
+
+
+def _top_chars(n: int) -> str:
+    """``count * char_len`` of the documented argmax gram (0 when no
+    gram repeats): fold the SORTED gram array once, closing each run
+    against the running best with the same (c, gl, g) lexicographic
+    order the previous max(struct) aggregation used."""
+    grams = _grams(n, f"array_join(slice(_toks, i, {n}), ' ')")
+    # the finished run: gram acc.prev, count acc.run, char length =
+    # string length minus the n-1 joining spaces; no run open (empty
+    # array) keeps the best
+    gl = f"CAST(length(acc.prev) - {n} + 1 AS BIGINT)"
+    beats = (
+        f"(acc.run > acc.bc OR (acc.run = acc.bc AND ({gl} > acc.bgl OR "
+        f"({gl} = acc.bgl AND acc.prev > acc.bg))))"
+    )
+    keep = f"(acc.run = 0 OR NOT {beats})"
+    bc = f"CASE WHEN {keep} THEN acc.bc ELSE acc.run END"
+    bgl = f"CASE WHEN {keep} THEN acc.bgl ELSE {gl} END"
+    bg = f"CASE WHEN {keep} THEN acc.bg ELSE acc.prev END"
+    same = "coalesce(acc.prev = g, false)"
+    merge = (
+        f"(acc, g) -> named_struct('prev', g, "
+        f"'run', CASE WHEN {same} THEN acc.run + 1 ELSE 1L END, "
+        f"'bc', CASE WHEN {same} THEN acc.bc ELSE {bc} END, "
+        f"'bgl', CASE WHEN {same} THEN acc.bgl ELSE {bgl} END, "
+        f"'bg', CASE WHEN {same} THEN acc.bg ELSE {bg} END)"
+    )
+    init = (
+        "named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'bc', 0L, "
+        "'bgl', CAST(NULL AS BIGINT), 'bg', CAST(NULL AS STRING))"
+    )
+    finish = f"acc -> CASE WHEN {bc} > 1 THEN {bc} * {bgl} ELSE 0L END"
+    return f"aggregate(array_sort({grams}), {init}, {merge}, {finish})"
+
+
+def _grams(n: int, gram: str) -> str:
+    """The document's n-grams as the SQL lambda body ``gram`` over the
+    1-based start ``i``; NULL for a document shorter than ``n``."""
+    return (
+        f"CASE WHEN size(_toks) >= {n} THEN transform("
+        f"sequence(1, size(_toks) - {n} + 1), i -> {gram}) END"
+    )
+
+
+def _dup_chars(n: int) -> str:
+    """Summed token length of the positions covered by a gram whose
+    hash occurs more than once. duplicated[i] = eq-next[i] OR
+    eq-next[i-1] (eq-next shifted right, padded false at the head) —
+    exactly "this gram's hash occurs more than once"; each such gram
+    covers its n positions from its 0-based start."""
+    sh, en = f"_sh_{n}", f"_en_{n}"
+    dup = (
+        f"zip_with({en}, concat(array(false), slice({en}, 1, "
+        f"greatest(size({en}) - 1, 0))), (a, b) -> a OR b)"
+    )
+    starts = (
+        f"filter(zip_with({sh}, {dup}, (s, d) -> CASE WHEN d THEN s.pos END), "
+        "p -> p IS NOT NULL)"
+    )
+    covered = (
+        f"array_distinct(flatten(transform(coalesce({starts}, "
+        f"cast(array() as array<int>)), s -> sequence(s, s + {n - 1}))))"
+    )
+    return f"aggregate({covered}, 0L, (a, i) -> a + element_at(_tlens, i + 1))"
 
 
 def repetition_signals(
@@ -119,49 +186,43 @@ def repetition_signals(
     if not all_ns or min(all_ns) < 1:
         raise ValueError(f"n-gram sizes must be >= 1: top={top_ns} dup={dup_ns}")
 
-    toks = kept_tokens(F.col(text_col))
-    lines = _lines(F.col(text_col))
-    # "whitespace-only" pins an EXPLICIT ASCII class: SQL trim strips
-    # only spaces and Python str.strip() strips all unicode whitespace —
-    # either shorthand diverges between the engine and its oracle (same
-    # precedent as textstats.BPE_PATTERN).
-    paras = F.filter(
-        F.split(F.col(text_col), "\n\n", -1),
-        lambda p: F.regexp_replace(p, "[ \t\n\x0b\f\r]", "") != F.lit(""),
-    )
-
+    key, text = _quote(id_col), _quote(text_col)
     # Stage arrays as attributes before any reuse: expressions referenced
     # from several places (or inside HOF lambdas) re-evaluate their whole
     # subtree per reference (see textstats.winnow_fingerprints).
+    # "whitespace-only" pins an EXPLICIT ASCII class: SQL trim strips
+    # only spaces and Python str.strip() strips all unicode whitespace —
+    # either shorthand diverges between the engine and its oracle (same
+    # precedent as textstats.BPE_PATTERN). The doubled backslashes are
+    # SQL string-literal escapes.
     staged = df.select(
-        F.col(id_col),
-        toks.alias("_toks"),
-        lines.alias("_lines"),
-        paras.alias("_paras"),
+        F.col(key),
+        kept_tokens(text_col).alias("_toks"),
+        F.expr(_lines(text)).alias("_lines"),
+        F.expr(
+            f"filter(split({text}, '\\n\\n', -1), "
+            r"p -> regexp_replace(p, '[ \\t\\n\\x0b\\f\\r]', '') != '')"
+        ).alias("_paras"),
     )
 
-    def _unit_fracs(col: str) -> tuple[Column, Column]:
-        dist = F.array_distinct(F.col(col))
+    def _unit_fracs(u: str, name: str) -> list[str]:
+        chars = "aggregate({}, 0L, (acc, x) -> acc + CAST(length(x) AS BIGINT))"
         char_frac = (
-            (_char_sum(F.col(col)) - _char_sum(dist)).cast("double")
-            / F.greatest(_char_sum(F.col(col)), F.lit(1).cast("long"))
+            f"CAST({chars.format(u)} - {chars.format(f'array_distinct({u})')} "
+            f"AS DOUBLE) / greatest({chars.format(u)}, 1L)"
         )
-        return _dup_frac(F.col(col)), char_frac
+        return [
+            f"{_dup_frac(u)} AS dup_{name}_frac",
+            f"{char_frac} AS dup_{name}_char_frac",
+        ]
 
-    line_frac, line_char_frac = _unit_fracs("_lines")
-    para_frac, para_char_frac = _unit_fracs("_paras")
-    base = staged.select(
-        F.col(id_col),
-        F.col("_toks"),
-        F.transform("_toks", lambda t: F.length(t).cast("long")).alias("_tlens"),
-        line_frac.alias("dup_line_frac"),
-        line_char_frac.alias("dup_line_char_frac"),
-        para_frac.alias("dup_para_frac"),
-        para_char_frac.alias("dup_para_char_frac"),
-    ).withColumn(
-        "_tot",
-        F.aggregate("_tlens", F.lit(0).cast("long"), lambda a, x: a + x),
-    )
+    base = staged.selectExpr(
+        key,
+        "_toks",
+        "transform(_toks, t -> CAST(length(t) AS BIGINT)) AS _tlens",
+        *_unit_fracs("_lines", "line"),
+        *_unit_fracs("_paras", "para"),
+    ).withColumn("_tot", F.expr("aggregate(_tlens, 0L, (a, x) -> a + x)"))
 
     # Per-document gram counting — no explode, no (doc, n, gram)
     # exchange, no join back (see the module docstring's scale-shape
@@ -179,164 +240,48 @@ def repetition_signals(
     # * dup_ns (large n, coverage): the gram is ONLY an identity key —
     #   ``xxhash64`` over the token slice (the q61 duplicate-span
     #   precedent) — so the sorted array holds (hash, position) structs
-    #   and a shifted zip_with neighbor-equality pass marks the start
-    #   positions of grams occurring more than once.
-    def _grams(n: int, gram_expr) -> Column:
-        return F.when(
-            F.size("_toks") >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size("_toks") - n + 1),
-                gram_expr,
-            ),
-        )
-
-    def _top_chars(n: int) -> Column:
-        """``count * char_len`` of the documented argmax gram (0 when no
-        gram repeats): fold the SORTED gram array once, closing each
-        run against the running best with the same (c, gl, g)
-        lexicographic order the previous max(struct) aggregation used.
-        """
-        sorted_g = F.array_sort(
-            _grams(n, lambda i: F.array_join(F.slice("_toks", i, n), " "))
-        )
-
-        def _close_run(acc) -> list[Column]:
-            # the finished run: gram acc["prev"], count acc["run"],
-            # char length = string length minus the n-1 joining spaces
-            gl = (F.length(acc["prev"]) - F.lit(n) + 1).cast("long")
-            beats = (acc["run"] > acc["bc"]) | (
-                (acc["run"] == acc["bc"])
-                & (
-                    (gl > acc["bgl"])
-                    | ((gl == acc["bgl"]) & (acc["prev"] > acc["bg"]))
-                )
-            )
-            keep = acc["run"] == 0  # no run open (empty array) — keep best
-            return [
-                F.when(keep | ~beats, acc["bc"]).otherwise(acc["run"]),
-                F.when(keep | ~beats, acc["bgl"]).otherwise(gl),
-                F.when(keep | ~beats, acc["bg"]).otherwise(acc["prev"]),
-            ]
-
-        init = F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0).cast("long").alias("run"),
-            F.lit(0).cast("long").alias("bc"),
-            F.lit(None).cast("long").alias("bgl"),
-            F.lit(None).cast("string").alias("bg"),
-        )
-
-        def _merge(acc, g):
-            same = F.coalesce(acc["prev"] == g, F.lit(False))
-            bc, bgl, bg = _close_run(acc)
-            return F.struct(
-                g.alias("prev"),
-                F.when(same, acc["run"] + 1)
-                .otherwise(F.lit(1).cast("long"))
-                .alias("run"),
-                F.when(same, acc["bc"]).otherwise(bc).alias("bc"),
-                F.when(same, acc["bgl"]).otherwise(bgl).alias("bgl"),
-                F.when(same, acc["bg"]).otherwise(bg).alias("bg"),
-            )
-
-        def _finish(acc):
-            bc, bgl, bg = _close_run(acc)
-            return F.when(bc > 1, bc * bgl).otherwise(F.lit(0).cast("long"))
-
-        return F.aggregate(sorted_g, init, _merge, _finish)
-
-    def _dup_starts_sorted(n: int) -> Column:
-        """(hash, pos) structs sorted by hash — duplicate runs are
-        contiguous, so start positions of repeated grams fall out of a
-        neighbor-equality pass (staged as a column by the caller: the
-        two shifted references below re-evaluate their subtree)."""
-        return F.array_sort(
-            _grams(
-                n,
-                lambda i: F.struct(
-                    F.xxhash64(F.slice("_toks", i, n)).alias("h"),
-                    (i - 1).cast("int").alias("pos"),
-                ),
-            )
-        )
-
-    base = base.select(
+    #   sorted by hash (duplicate runs are contiguous, staged as a
+    #   column: the two shifted references below re-evaluate their
+    #   subtree) and a shifted zip_with neighbor-equality pass marks the
+    #   start positions of grams occurring more than once.
+    base = base.selectExpr(
         "*",
-        *[_top_chars(n).alias(f"_top_{n}") for n in top_ns],
-        *[_dup_starts_sorted(n).alias(f"_sh_{n}") for n in dup_ns],
-    ).select(
-        "*",
+        *[f"{_top_chars(n)} AS _top_{n}" for n in top_ns],
         *[
-            # eq-next flags: element i is true when gram hash i equals
-            # hash i+1 in sorted order (zip_with pads the shifted side
-            # with NULL -> coalesce false at the tail)
-            F.zip_with(
-                F.col(f"_sh_{n}"),
-                F.slice(
-                    F.col(f"_sh_{n}"),
-                    2,
-                    F.greatest(F.size(f"_sh_{n}") - 1, F.lit(0)),
-                ),
-                lambda x, y: F.coalesce(x["h"] == y["h"], F.lit(False)),
-            ).alias(f"_en_{n}")
+            "array_sort("
+            + _grams(
+                n,
+                f"named_struct('h', xxhash64(slice(_toks, i, {n})), "
+                "'pos', CAST(i - 1 AS INT))",
+            )
+            + f") AS _sh_{n}"
+            for n in dup_ns
+        ],
+    ).selectExpr(
+        "*",
+        # eq-next flags: element i is true when gram hash i equals hash
+        # i+1 in sorted order (zip_with pads the shifted side with NULL
+        # -> coalesce false at the tail)
+        *[
+            f"zip_with(_sh_{n}, slice(_sh_{n}, 2, greatest(size(_sh_{n}) - 1, 0)), "
+            f"(x, y) -> coalesce(x.h = y.h, false)) AS _en_{n}"
             for n in dup_ns
         ],
     )
-
-    def _starts(n: int) -> Column:
-        # duplicated[i] = eq-next[i] OR eq-next[i-1] (shift right, pad
-        # false at the head) — exactly "this gram's hash occurs more
-        # than once"; emit its 0-based start position
-        ep = F.concat(
-            F.array(F.lit(False)),
-            F.slice(
-                F.col(f"_en_{n}"),
-                1,
-                F.greatest(F.size(f"_en_{n}") - 1, F.lit(0)),
-            ),
-        )
-        dup = F.zip_with(F.col(f"_en_{n}"), ep, lambda a, b: a | b)
-        return F.filter(
-            F.zip_with(
-                F.col(f"_sh_{n}"), dup, lambda s, d: F.when(d, s["pos"])
-            ),
-            lambda p: p.isNotNull(),
-        )
-
-    tot = F.greatest(F.col("_tot"), F.lit(1).cast("long"))
-    out_cols = [
-        F.col(id_col),
-        F.col("dup_line_frac"),
-        F.col("dup_line_char_frac"),
-        F.col("dup_para_frac"),
-        F.col("dup_para_char_frac"),
-    ]
-    for n in top_ns:
-        out_cols.append(
-            F.least(
-                F.coalesce(F.col(f"_top_{n}"), F.lit(0).cast("long")).cast("double")
-                / tot,
-                F.lit(1.0),
-            ).alias(f"top_{n}gram_char_frac")
-        )
-    for n in dup_ns:
-        covered = F.array_distinct(
-            F.flatten(
-                F.transform(
-                    F.coalesce(
-                        _starts(n),
-                        F.expr("cast(array() as array<int>)"),
-                    ),
-                    lambda s: F.sequence(s, s + F.lit(n - 1)),
-                )
-            )
-        )
-        covered_len = F.aggregate(
-            covered,
-            F.lit(0).cast("long"),
-            lambda a, i: a + F.element_at("_tlens", i + 1),
-        )
-        out_cols.append(
-            (covered_len.cast("double") / tot).alias(f"dup_{n}gram_char_frac")
-        )
-    return base.select(*out_cols)
+    tot = "greatest(_tot, 1L)"
+    return base.selectExpr(
+        key,
+        "dup_line_frac",
+        "dup_line_char_frac",
+        "dup_para_frac",
+        "dup_para_char_frac",
+        *[
+            f"least(CAST(coalesce(_top_{n}, 0L) AS DOUBLE) / {tot}, 1.0D) "
+            f"AS top_{n}gram_char_frac"
+            for n in top_ns
+        ],
+        *[
+            f"CAST({_dup_chars(n)} AS DOUBLE) / {tot} AS dup_{n}gram_char_frac"
+            for n in dup_ns
+        ],
+    )

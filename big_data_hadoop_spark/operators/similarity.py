@@ -26,6 +26,7 @@ vectors with one guard, :func:`_nonzero`.
 
 from __future__ import annotations
 
+import collections
 import itertools
 import math
 import weakref
@@ -448,19 +449,16 @@ def lsh_bucketed_topk(
     df = _nonzero(df, vec_col)
     # ONE cast + norm pass emits every table's signature (table t's
     # planes come from seed + t*7919), exploded to (id, t, bucket)
-    base = with_norm(
-        df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
-    )
+    key = _quote(id_col)
+    base = with_norm(df.select(key, _quote(vec_col)), vec_col=vec_col)
     tables = ", ".join(
         f"struct({t} AS t, "
         f"{_hyperplane_sig('emb_d', dim, num_planes, seed + t * 7919)} AS bucket)"
         for t in range(n_tables)
     )
-    e = base.selectExpr(
-        _quote(id_col), "emb_d", "nrm", f"inline(array({tables}))"
-    )
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
+    e = base.selectExpr(key, "emb_d", "nrm", f"inline(array({tables}))")
+    q = e.filter(F.col(key).isin(query_ids)).select(
+        F.col(key).alias("query_id"),
         F.col("t").alias("q_t"),
         F.col("bucket").alias("q_bucket"),
         F.col("emb_d").alias("q_emb"),
@@ -471,8 +469,8 @@ def lsh_bucketed_topk(
         F.broadcast(q),
         (F.col("q_t") == F.col("t"))
         & (F.col("q_bucket") == F.col("bucket"))
-        & (F.col("query_id") != F.col(id_col)),
-    ).select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+        & (F.col("query_id") != F.col(key)),
+    ).select("query_id", F.col(key).alias("neighbor_id"), sim.alias("sim"))
     if n_tables > 1:
         # a pair found by several tables carries IDENTICAL sim on every
         # copy (same vectors) — keep one so the rank window counts each
@@ -660,8 +658,8 @@ class IVFIndex:
     (:meth:`serving`), which the first search fills: the assignment
     flattened to ``(id, cell, nrm, _a1.._a<dim>)`` over the ``nrm > 0``
     rows, persisted, so a batch neither re-reads the table nor
-    re-decodes its arrays. The copy is unpersisted when the index is
-    dropped."""
+    re-decodes its arrays. Once the index is dropped, the next search
+    or build unpersists the copy."""
 
     centroids: list[list[float]]
     assigned: DataFrame
@@ -685,15 +683,20 @@ class IVFIndex:
         ``n = n`` (folded away before the copy is filled) keeps every
         copy's plan distinct: the cache matches plans by result, so two
         indexes over one table would otherwise share an entry, and
-        dropping either would unpersist the other's copy. Unpersisted through ``weakref.finalize`` when
-        the index is dropped: every cached entry adds plan matching to
-        each later query of the session. A local checkpoint would need
+        dropping either would unpersist the other's copy. Released
+        when the index is dropped (every cached entry adds plan
+        matching to each later query of the session): its
+        ``weakref.finalize`` only queues the copy, and the next
+        ``serving`` access or :func:`ivf_build` unpersists it — Python's
+        collector can run a finalizer in the middle of another py4j
+        call on this thread's connection. A local checkpoint would need
         neither tag nor finalizer and serves as fast, but it is not
         released when the index is dropped (its blocks wait for the
         JVM's cleaner, which had not run 20 s after a drop and a
         ``System.gc()``), and it cuts the lineage: once a block is
         lost, every later search fails instead of recomputing it from
         ``assigned``."""
+        _release_dropped()
         if self._serving is None:
             tag = next(_SERVING_TAGS)
             # zero-norm rows: NULL sims are unrankable (see _nonzero)
@@ -711,13 +714,28 @@ class IVFIndex:
             if filled is not None:
                 self._serving.count()  # read from the first copy
                 filled.unpersist()
-            drop = weakref.finalize(self, _unpersist, self._serving)
+            drop = weakref.finalize(self, _DROPPED.append, self._serving)
             drop.atexit = False  # the session may be gone at exit
         return self._serving
 
 
 #: Tags that keep serving copies' cached plans distinct (IVFIndex.serving).
 _SERVING_TAGS = itertools.count(1)
+
+#: Serving copies of dropped indexes, waiting to be unpersisted.
+_DROPPED: collections.deque = collections.deque()
+
+
+def _release_dropped() -> None:
+    """Unpersist the queued serving copies of dropped indexes; an empty
+    queue costs no py4j call."""
+    while True:
+        try:
+            df = _DROPPED.popleft()
+        except IndexError:
+            return
+        if df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist()  # else the session stopped: its cache went with it
 
 
 def _partitions_for(df: DataFrame) -> int:
@@ -729,13 +747,6 @@ def _partitions_for(df: DataFrame) -> int:
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
     return max(1, -(-int(size) // advisory))
-
-
-def _unpersist(df: DataFrame) -> None:
-    """Unpersist ``df`` unless its session is stopped: the cache went
-    with it, and ``unpersist`` would raise."""
-    if df.sparkSession.sparkContext._jsc is not None:
-        df.unpersist()
 
 
 def ivf_build(
@@ -777,6 +788,7 @@ def ivf_build(
 
     global IVF_FIT_COUNT
 
+    _release_dropped()
     key, vec = F.col(_quote(id_col)), F.col(_quote(vec_col))
     e = df.select(key, vec).withColumn("_v", array_to_vector(_as_double(vec)))
     train = _bounded_training_sample(e, id_col, train_cap, n_rows=n_rows)
@@ -1004,11 +1016,12 @@ def cosine_topk_vectors(
     has no cosine."""
     df = _nonzero(df, vec_col)
     queries = _nonzero(queries, query_vec_col)
-    e = with_norm(
-        df.select(F.col(id_col), F.col(vec_col)), vec_col=vec_col
-    ).select(F.col(id_col), "emb_d", "nrm")
+    key = _quote(id_col)
+    e = with_norm(df.select(key, _quote(vec_col)), vec_col=vec_col).select(
+        key, "emb_d", "nrm"
+    )
     q = with_norm(queries, vec_col=query_vec_col).select(
-        F.col(query_id_col).alias("query_id"),
+        F.col(_quote(query_id_col)).alias("query_id"),
         F.col("emb_d").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
@@ -1017,7 +1030,7 @@ def cosine_topk_vectors(
     )
     sim = F.expr(_dot_sql(q_emb, "emb_d")) / (F.col("q_nrm") * F.col("nrm"))
     scored = e.join(F.broadcast(q)).select(
-        "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
+        "query_id", F.col(key).alias("neighbor_id"), sim.alias("sim")
     )
     return release_on_drop(
         top_k_per(scored, "query_id", "sim DESC, neighbor_id ASC", k).select(
@@ -1165,7 +1178,8 @@ def semantic_neardup_pairs(
             df, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
             seed=seed, train_cap=train_cap, n_rows=n_rows,
         )
-    cells = index.assigned.select(F.col(index.id_col), "cell")
+    key = _quote(index.id_col)
+    cells = index.assigned.select(key, "cell")
     if dim is not None:
         # Same boundary reasoning as cosine_neardup_pairs: the
         # fixed-count repartition is the codegen boundary that keeps the
@@ -1205,11 +1219,11 @@ def semantic_neardup_pairs(
         )
     a = index.assigned.filter(F.col("nrm") > 0)
     left = a.select(
-        F.col(index.id_col).alias("id_a"), "cell",
+        F.col(key).alias("id_a"), "cell",
         F.col("emb_d").alias("_ea"), F.col("nrm").alias("_na"),
     )
     right = a.select(
-        F.col(index.id_col).alias("id_b"), "cell",
+        F.col(key).alias("id_b"), "cell",
         F.col("emb_d").alias("_eb"), F.col("nrm").alias("_nb"),
     )
     sim = dot("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
@@ -1278,32 +1292,29 @@ def grouped_centroids(
     a DuckDB oracle can reproduce exactly modulo float-sum order —
     hence ``centroid_j`` is rounded to 9 decimals on both sides.
     """
-    emb = _as_double(F.col(vec_col))
-    if dim is not None:
-        zero = F.array_repeat(F.lit(0.0), dim)
-    else:
-        zero = F.transform(F.col("_vs")[0], lambda _: F.lit(0.0))
+    group = _quote(group_col)
+    zero = (
+        "transform(_vs[0], x -> 0.0D)" if dim is None
+        else f"array_repeat(0.0D, {int(dim)})"
+    )
     # count the COLLECTED vectors, not the rows: collect_list drops NULL
     # embeddings, and dividing by count(*) would understate the centroid
     # of any group containing a null/uncastable vector (review finding;
     # matches SQL AVG's ignore-null semantics and the DuckDB oracle).
-    agg = df.select(F.col(group_col), emb.alias("_e")).groupBy(group_col).agg(
-        F.collect_list("_e").alias("_vs")
-    ).withColumn("_n", F.size("_vs"))
-    summed = agg.select(
-        group_col,
-        "_n",
-        F.aggregate(
-            "_vs",
-            zero,
-            lambda acc, v: F.zip_with(acc, v, lambda a, x: a + x),
-        ).alias("_sum"),
+    agg = df.selectExpr(
+        group, f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>) AS _e"
+    ).groupBy(F.col(group)).agg(F.collect_list("_e").alias("_vs")).withColumn(
+        "_n", F.size("_vs")
     )
-    return summed.select(
-        group_col,
-        F.posexplode(
-            F.transform("_sum", lambda s: F.round(s / F.col("_n"), 9))
-        ).alias("j", "centroid_j"),
+    summed = agg.selectExpr(
+        group,
+        "_n",
+        f"aggregate(_vs, {zero}, (acc, v) -> zip_with(acc, v, (a, x) -> a + x))"
+        " AS _sum",
+    )
+    return summed.selectExpr(
+        group,
+        "posexplode(transform(_sum, s -> round(s / _n, 9))) AS (j, centroid_j)",
     )
 
 
@@ -1337,30 +1348,22 @@ def quantize_embeddings(
     valid max-magnitude vector (Spark treats NaN as the LARGEST
     double, so the naive max would saturate every component to
     +127)."""
-    emb = _as_double(F.col(vec_col))
-    mx = F.array_max(F.transform(emb, lambda x: F.abs(x)))
-    scale = (
-        F.when(F.isnan(mx), F.lit(float("nan")))
-        .when(mx > 0, mx / F.lit(127.0))
-        .otherwise(F.lit(0.0))
+    key = _quote(id_col)
+    emb = f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)"
+    mx = f"array_max(transform({emb}, x -> abs(x)))"
+    staged = df.selectExpr(
+        key,
+        f"CAST(CASE WHEN isnan({mx}) THEN CAST('NaN' AS DOUBLE) "
+        f"WHEN {mx} > 0 THEN {mx} / 127.0D ELSE 0.0D END AS DOUBLE) AS scale",
+        f"{emb} AS _e",
     )
-    staged = df.select(
-        F.col(id_col), scale.cast("double").alias("scale"), emb.alias("_e")
+    return staged.selectExpr(
+        key,
+        "scale",
+        "transform(_e, x -> CAST(least(greatest(CASE WHEN NOT isnan(scale) "
+        "AND scale > 0 THEN round(x / scale) ELSE 0.0D END, -127.0D), 127.0D) "
+        "AS TINYINT)) AS qvec",
     )
-    usable = ~F.isnan(F.col("scale")) & (F.col("scale") > 0)
-    q = F.transform(
-        F.col("_e"),
-        lambda x: F.least(
-            F.greatest(
-                F.when(usable, F.round(x / F.col("scale"))).otherwise(
-                    F.lit(0.0)
-                ),
-                F.lit(-127.0),
-            ),
-            F.lit(127.0),
-        ).cast("tinyint"),
-    )
-    return staged.select(F.col(id_col), "scale", q.alias("qvec"))
 
 
 def dequantize_embeddings(
@@ -1368,10 +1371,7 @@ def dequantize_embeddings(
 ) -> DataFrame:
     """Inverse of :func:`quantize_embeddings` → ``(<id_col>,
     embedding array<double>)``, ``x ≈ q * scale``."""
-    return df.select(
-        F.col(id_col),
-        F.transform(
-            F.col("qvec"),
-            lambda v: v.cast("double") * F.col("scale"),
-        ).alias("embedding"),
+    return df.selectExpr(
+        _quote(id_col),
+        "transform(qvec, v -> CAST(v AS DOUBLE) * scale) AS embedding",
     )

@@ -149,27 +149,15 @@ def remove_duplicate_spans(
     through byte-identical."""
     marked = _redundant_starts(df, k, text_col, id_col)
     joined = df.join(marked, id_col, "left")
-    spans = F.expr(_merge_spans("starts", k))
-    text = F.col(_quote(text_col))
-    seed = F.struct(
-        F.lit(0).alias("prev"), F.lit("").cast("string").alias("out")
+    text = _quote(text_col)
+    cleaned = (
+        f"aggregate({_merge_spans('starts', k)}, named_struct('prev', 0, "
+        "'out', CAST('' AS STRING)), (acc, sp) -> named_struct('prev', sp.e, "
+        f"'out', concat(acc.out, substring({text}, acc.prev + 1, sp.s - acc.prev)))"
+        f", acc -> concat(acc.out, substring({text}, acc.prev + 1, "
+        f"length({text}) - acc.prev)))"
     )
-    cleaned = F.aggregate(
-        spans,
-        seed,
-        lambda acc, sp: F.struct(
-            sp["e"].alias("prev"),
-            F.concat(
-                acc["out"],
-                F.substring(text, acc["prev"] + 1, sp["s"] - acc["prev"]),
-            ).alias("out"),
-        ),
-        lambda acc: F.concat(
-            acc["out"],
-            F.substring(text, acc["prev"] + 1, F.length(text) - acc["prev"]),
-        ),
-    )
-    out_text = F.when(F.col("starts").isNull(), text).otherwise(cleaned)
+    out_text = F.expr(f"CASE WHEN starts IS NULL THEN {text} ELSE {cleaned} END")
     return joined.select(
         *[
             out_text.alias(c) if c == text_col else F.col(_quote(c))

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from big_data_hadoop_spark.functions.rank import _literal, _quote
+
 __all__ = [
     "normalize_text",
     "compression_signals",
@@ -176,12 +178,11 @@ def dedup_lines(
     # with text NULL, not vanish from the output (review finding —
     # plain posexplode of a NULL array yields zero rows and the doc
     # silently disappeared).
+    key, text = _quote(id_col), _quote(text_col)
     lines = docs.select(
-        F.col(id_col),
-        F.col(text_col).isNull().alias("_null_text"),
-        F.posexplode_outer(F.split(F.col(text_col), "\n")).alias(
-            "pos", "line"
-        ),
+        F.col(key),
+        F.col(text).isNull().alias("_null_text"),
+        F.posexplode_outer(F.split(F.col(text), "\n")).alias("pos", "line"),
     ).withColumn(
         "key",
         F.when(
@@ -191,7 +192,7 @@ def dedup_lines(
     dfc = (
         lines.filter(F.col("key").isNotNull())
         .groupBy("key")
-        .agg(F.count_distinct(F.col(id_col)).alias("_df"))
+        .agg(F.count_distinct(F.col(key)).alias("_df"))
         .filter(F.col("_df") > max_df)
         .select("key", F.lit(True).alias("_drop"))
     )
@@ -199,29 +200,17 @@ def dedup_lines(
         "_drop", F.coalesce("_drop", F.lit(False))
     )
     return (
-        kept.groupBy(id_col)
+        kept.groupBy(F.col(key))
         .agg(
             F.count("line").alias("n_lines"),  # 0 for a NULL-text doc
             F.sum(F.col("_drop").cast("long")).alias("n_dropped"),
-            F.when(
-                ~F.first("_null_text"),
-                F.concat_ws(
-                    "\n",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.when(
-                                    ~F.col("_drop"),
-                                    F.struct("pos", "line"),
-                                )
-                            )
-                        ),
-                        lambda s: s["line"],
-                    ),
-                ),
+            F.expr(
+                "CASE WHEN NOT first(_null_text) THEN concat_ws('\\n', "
+                "transform(array_sort(collect_list(CASE WHEN NOT _drop THEN "
+                "struct(pos, line) END)), s -> s.line)) END"
             ).alias(text_col),
         )
-        .select(id_col, text_col, "n_lines", "n_dropped")
+        .select(key, text, "n_lines", "n_dropped")
     )
 
 
@@ -323,11 +312,16 @@ _TRACKING_PARAM_RE = (
     r"(?i)^(?:utm_[a-z]+|fbclid|gclid|gclsrc|dclid|msclkid|mc_eid|"
     r"igshid|ref_src|spm|_ga)(?:=|$)"
 )
+_SCHEME_RE = r"^([A-Za-z][\w+.-]*)://"
+_HOSTPORT_RE = r"^[A-Za-z][\w+.-]*://([^/?#]*)"
+_REST_RE = r"^[A-Za-z][\w+.-]*://[^/?#]*([^#]*)"
+_QUERY_RE = r"\?(.*)$"
 
 
-def canonical_url(col: Column) -> Column:
-    """Canonical form of a URL for dedup/aggregation, pure native
-    expressions (no UDF): lowercase scheme and host, strip the
+def canonical_url(url_col: str) -> Column:
+    """Canonical form of the URL in the column NAMED ``url_col`` for
+    dedup/aggregation, parsed from one SQL string of native expressions
+    (no UDF): lowercase scheme and host, strip the
     fragment, strip default ports (``:80`` for http, ``:443`` for
     https), drop tracking query parameters (``utm_*``, ``fbclid``,
     ``gclid``, ...), SORT the surviving parameters (param order is
@@ -337,37 +331,36 @@ def canonical_url(col: Column) -> Column:
     dedup at crawl scale undercounts duplicates by exactly the
     tracking-decoration rate. Non-URL-shaped strings pass through
     unchanged (NULL in, NULL out)."""
-    no_frag = F.regexp_replace(col, r"#.*$", "")
-    scheme = F.lower(F.regexp_extract(no_frag, r"^([A-Za-z][\w+.-]*)://", 1))
-    hostport = F.regexp_extract(no_frag, r"^[A-Za-z][\w+.-]*://([^/?#]*)", 1)
+    url = _quote(url_col)
+    no_frag = f"regexp_replace({url}, '#.*$', '')"
+    scheme = f"lower(regexp_extract({no_frag}, {_literal(_SCHEME_RE)}, 1))"
+    hostport = f"regexp_extract({no_frag}, {_literal(_HOSTPORT_RE)}, 1)"
     # strip only the port that is DEFAULT for the scheme —
     # scheme-mismatched ports (https://x:80) are preserved as-is
-    host = F.when(
-        (scheme == "http") & F.lower(hostport).endswith(":80"),
-        F.lower(F.regexp_replace(hostport, r":80$", "")),
-    ).when(
-        (scheme == "https") & F.lower(hostport).endswith(":443"),
-        F.lower(F.regexp_replace(hostport, r":443$", "")),
-    ).otherwise(F.lower(hostport))
-    rest = F.regexp_extract(no_frag, r"^[A-Za-z][\w+.-]*://[^/?#]*([^#]*)", 1)
-    path = F.regexp_extract(rest, r"^([^?]*)", 1)
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.when(
-        rest.contains("?"), F.regexp_extract(rest, r"\?(.*)$", 1)
-    ).otherwise(F.lit(""))
-    params = F.filter(
-        F.split(query, "&"),
-        lambda p: (p != "") & ~p.rlike(_TRACKING_PARAM_RE),
+    host = (
+        f"CASE WHEN {scheme} = 'http' AND endswith(lower({hostport}), ':80') "
+        f"THEN lower(regexp_replace({hostport}, ':80$', '')) "
+        f"WHEN {scheme} = 'https' AND endswith(lower({hostport}), ':443') "
+        f"THEN lower(regexp_replace({hostport}, ':443$', '')) "
+        f"ELSE lower({hostport}) END"
     )
-    qs = F.array_join(F.array_sort(params), "&")
-    canon = F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        path,
-        F.when(qs == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs)),
+    rest = f"regexp_extract({no_frag}, {_literal(_REST_RE)}, 1)"
+    path = f"regexp_extract({rest}, '^([^?]*)', 1)"
+    query = (
+        f"CASE WHEN contains({rest}, '?') THEN "
+        f"regexp_extract({rest}, {_literal(_QUERY_RE)}, 1) ELSE '' END"
     )
-    return F.when(scheme == "", col).otherwise(canon)
+    params = (
+        f"filter(split({query}, '&'), "
+        f"p -> p != '' AND NOT p RLIKE {_literal(_TRACKING_PARAM_RE)})"
+    )
+    qs = f"array_join(array_sort({params}), '&')"
+    canon = (
+        f"concat({scheme}, '://', {host}, "
+        f"CASE WHEN {path} = '' THEN '/' ELSE {path} END, "
+        f"CASE WHEN {qs} = '' THEN '' ELSE concat('?', {qs}) END)"
+    )
+    return F.expr(f"CASE WHEN {scheme} = '' THEN {url} ELSE {canon} END")
 
 
 def canonical_urls(
@@ -377,4 +370,4 @@ def canonical_urls(
     occurrence with its canonical form — the input to URL-keyed dedup
     and to honest per-domain/per-page frequency counts."""
     u = extract_urls(docs, id_col=id_col, text_col=text_col)
-    return u.withColumn("canonical", canonical_url(F.col("url")))
+    return u.withColumn("canonical", canonical_url("url"))

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_hadoop_spark.functions.rank import _quote
-from big_data_hadoop_spark.functions.text import kept_tokens, split_tokens
+from big_data_hadoop_spark.functions.text import kept_tokens
 from big_data_hadoop_spark.operators.dedup import _overlap_pairs
 from big_data_hadoop_spark.operators.substring import _kgram_hashes
 from big_data_hadoop_spark.operators.tokenize import tokenized
@@ -40,13 +40,28 @@ STOPWORDS = {
 }
 
 
-def _toks(text_col: str) -> Column:
-    return split_tokens(F.col(text_col), lowercase=True)
+def _toks(text_col: str) -> str:
+    """SQL text: the lowercased single-space split of ``text_col``,
+    empty tokens kept (``functions.text.split_tokens``)."""
+    return f"split(lower({_quote(text_col)}), ' ', -1)"
 
 
-def _stop_count(toks: Column, words: list[str]) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("long")
+def _stop_count(toks: str, words: list[str]) -> str:
+    """SQL text: how many tokens of the array ``toks`` are in ``words``."""
+    arr = ", ".join(f"'{w}'" for w in words)
+    return f"CAST(size(filter({toks}, t -> array_contains(array({arr}), t))) AS BIGINT)"
+
+
+def _lang_pred(toks: str) -> str:
+    """SQL text: the q25 stopword-vote language CASE over the token
+    array ``toks`` (fixed precedence, see :func:`language_id`)."""
+    en, de, fr, es = (_stop_count(toks, STOPWORDS[x]) for x in ("en", "de", "fr", "es"))
+    return (
+        f"CASE WHEN {en} > 0 AND {en} >= greatest({de}, {fr}, {es}) THEN 'en' "
+        f"WHEN {de} > 0 AND {de} >= greatest({fr}, {es}) THEN 'de' "
+        f"WHEN {fr} > 0 AND {fr} >= {es} THEN 'fr' "
+        f"WHEN {es} > 0 THEN 'es' ELSE 'und' END"
+    )
 
 
 def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -58,19 +73,17 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     reproduces exactly.
     """
     t = tokenized(df, text_col=text_col, lowercase=True, keep_cols=(id_col, text_col))
+    text = F.col(_quote(text_col))
     n_tokens = F.size("toks").cast("long")
     return t.select(
-        F.col(id_col),
+        F.col(_quote(id_col)),
         n_tokens.alias("n_tokens"),
-        F.regexp_count(F.col(text_col), F.lit(BPE_PATTERN))
-        .cast("long")
-        .alias("n_bpe_tokens"),
-        F.size(F.filter("cats", lambda c: c == "word")).cast("long").alias("n_words"),
-        F.size(F.filter("cats", lambda c: c == "number")).cast("long").alias("n_numbers"),
-        (
-            (F.length(F.col(text_col)) - n_tokens + 1).cast("double")
-            / n_tokens
-        ).alias("avg_token_len"),
+        F.regexp_count(text, F.lit(BPE_PATTERN)).cast("long").alias("n_bpe_tokens"),
+        F.expr("CAST(size(filter(cats, c -> c = 'word')) AS BIGINT)").alias("n_words"),
+        F.expr("CAST(size(filter(cats, c -> c = 'number')) AS BIGINT)").alias("n_numbers"),
+        ((F.length(text) - n_tokens + 1).cast("double") / n_tokens).alias(
+            "avg_token_len"
+        ),
     )
 
 
@@ -80,15 +93,15 @@ def quality_scores(
     """Heuristic quality signals: alphabetic-character ratio, stopword
     ratio, and a fixed linear score. Term order in the score is part of the
     contract (bit-exact oracle comparison)."""
-    text = F.col(text_col)
+    text = F.col(_quote(text_col))
     toks = _toks(text_col)
-    n_tokens = F.size(toks).cast("long")
+    n_tokens = F.expr(f"CAST(size({toks}) AS BIGINT)")
     alpha = F.length(F.regexp_replace(F.lower(text), "[^a-z]", "")).cast("long")
-    stops = _stop_count(toks, STOPWORDS["en"])
+    stops = F.expr(_stop_count(toks, STOPWORDS["en"]))
     alpha_ratio = alpha.cast("double") / F.greatest(F.length(text).cast("long"), F.lit(1).cast("long"))
     stop_ratio = stops.cast("double") / F.greatest(n_tokens, F.lit(1).cast("long"))
     return df.select(
-        F.col(id_col),
+        F.col(_quote(id_col)),
         alpha_ratio.alias("alpha_ratio"),
         stop_ratio.alias("stop_ratio"),
         (F.lit(0.5) * alpha_ratio + F.lit(0.5) * stop_ratio).alias("quality_score"),
@@ -102,29 +115,17 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     (en > de > fr > es) and ``'und'`` when no list scores — a deterministic
     CASE expression, reproduced verbatim in the oracle SQL.
     """
-    toks = _toks(text_col)
-    scores = {lang: _stop_count(toks, ws) for lang, ws in STOPWORDS.items()}
-    s_en, s_de, s_fr, s_es = (scores[lang] for lang in ("en", "de", "fr", "es"))
-    pred = (
-        F.when((s_en > 0) & (s_en >= F.greatest(s_de, s_fr, s_es)), "en")
-        .when((s_de > 0) & (s_de >= F.greatest(s_fr, s_es)), "de")
-        .when((s_fr > 0) & (s_fr >= s_es), "fr")
-        .when(s_es > 0, "es")
-        .otherwise("und")
+    return df.selectExpr(
+        _quote(id_col), f"{_lang_pred(_toks(text_col))} AS pred_lang"
     )
-    return df.select(F.col(id_col), pred.alias("pred_lang"))
 
 
 def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Canonical document fingerprint: md5 of the sorted distinct token
     set (the classic key-collision fingerprint). Word-order- and
     duplication-insensitive; the digest shuffles instead of the text."""
-    fp = F.md5(
-        F.concat_ws(
-            " ", F.array_sort(F.array_distinct(_toks(text_col)))
-        )
-    )
-    return df.select(F.col(id_col), fp.alias("fp"))
+    fp = f"md5(concat_ws(' ', array_sort(array_distinct({_toks(text_col)}))))"
+    return df.selectExpr(_quote(id_col), f"{fp} AS fp")
 
 
 def winnow_fingerprints(
@@ -278,39 +279,35 @@ def hashed_linear_scores(
         spark, [([float(x) for x in weights],)], "_w array<double>"
     )
     staged = df.join(F.broadcast(wdf)).select(
-        F.col(id_col),
-        kept_tokens(F.col(text_col)).alias("_tk"),
+        F.col(_quote(id_col)),
+        kept_tokens(text_col).alias("_tk"),
         F.col("_w"),
     )
-    z = _hashed_mean_margin(F.col("_tk"), F.col("_w"), dim) + F.lit(
-        float(bias)
-    )
+    z = _hashed_mean_margin(dim) + F.lit(float(bias))
     return staged.select(
-        F.col(id_col),
+        F.col(_quote(id_col)),
         (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias(out_col),
     )
 
 
-def _hashed_bucket(t: Column, dim: int) -> Column:
-    """1-based hashing-trick bucket of token ``t`` (``element_at``
-    indexing). SHARED by scoring and training — the model is only
-    valid if both hash identically, so there is exactly one definition
-    (review finding: a copy in each function could silently
-    desynchronize)."""
-    return (F.pmod(F.xxhash64(t), F.lit(dim)) + 1).cast("int")
+def _hashed_bucket(t: str, dim: int) -> str:
+    """SQL text: the 1-based hashing-trick bucket of token ``t``
+    (``element_at`` indexing). SHARED by scoring and training — the
+    model is only valid if both hash identically, so there is exactly
+    one definition (review finding: a copy in each function could
+    silently desynchronize)."""
+    return f"CAST(pmod(xxhash64({t}), {int(dim)}) + 1 AS INT)"
 
 
-def _hashed_mean_margin(tk: Column, w: Column, dim: int) -> Column:
-    """Mean of the tokens' bucket weights (empty docs → 0) — the
-    linear margin both :func:`hashed_linear_scores` and
+def _hashed_mean_margin(dim: int) -> Column:
+    """Mean of the ``_tk`` tokens' bucket weights in ``_w`` (empty docs
+    → 0) — the linear margin both :func:`hashed_linear_scores` and
     :func:`train_hashed_linear` compute, defined once for the same
     reason as :func:`_hashed_bucket`."""
-    total = F.aggregate(
-        tk,
-        F.lit(0.0),
-        lambda acc, t: acc + F.element_at(w, _hashed_bucket(t, dim)),
+    return F.expr(
+        f"aggregate(_tk, 0.0D, (acc, t) -> acc + element_at(_w, "
+        f"{_hashed_bucket('t', dim)})) / CAST(greatest(size(_tk), 1) AS DOUBLE)"
     )
-    return total / F.greatest(F.size(tk), F.lit(1)).cast("double")
 
 
 class HashedLinearModel(NamedTuple):
@@ -397,7 +394,7 @@ def train_hashed_linear(
     spark = df.sparkSession
     staged = (
         df.select(
-            kept_tokens(F.col(text_col)).alias("_tk"),
+            kept_tokens(text_col).alias("_tk"),
             F.col(label_col).cast("double").alias("_y"),
         )
         .withColumn(
@@ -415,26 +412,17 @@ def train_hashed_linear(
         wdf = local_frame(
             spark, [([float(x) for x in w],)], "_w array<double>"
         )
-        z = _hashed_mean_margin(F.col("_tk"), F.col("_w"), dim) + F.lit(
-            float(b)
-        )
+        z = _hashed_mean_margin(dim) + F.lit(float(b))
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
         err = staged.join(F.broadcast(wdf)).select(
             "_tk", "_n", (p - F.col("_y")).alias("_e")
         )
         # tokens contribute error/n to their bucket; sentinel -1 is the
         # bias gradient — one explode, one hash aggregation, one job
-        contrib = F.concat(
-            F.transform(
-                "_tk",
-                lambda t: F.struct(
-                    (_hashed_bucket(t, dim) - 1).alias("k"),
-                    (F.col("_e") / F.col("_n")).alias("v"),
-                ),
-            ),
-            F.array(
-                F.struct(F.lit(-1).alias("k"), F.col("_e").alias("v"))
-            ),
+        contrib = F.expr(
+            f"concat(transform(_tk, t -> named_struct('k', "
+            f"{_hashed_bucket('t', dim)} - 1, 'v', _e / _n)), "
+            "array(named_struct('k', -1, 'v', _e)))"
         )
         grads = {
             r.k: r.g

@@ -33,20 +33,7 @@ from pyspark.sql.window import Window
 from big_data_hadoop_spark.functions.rank import _quote, top_k_per
 from big_data_hadoop_spark.functions.text import split_tokens
 from big_data_hadoop_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
-from big_data_hadoop_spark.operators.textstats import STOPWORDS, _stop_count
-
-
-def _lang_pred(toks: Column) -> Column:
-    """The q25 language-ID CASE expression (fixed precedence)."""
-    scores = {lang: _stop_count(toks, ws) for lang, ws in STOPWORDS.items()}
-    s_en, s_de, s_fr, s_es = (scores[x] for x in ("en", "de", "fr", "es"))
-    return (
-        F.when((s_en > 0) & (s_en >= F.greatest(s_de, s_fr, s_es)), "en")
-        .when((s_de > 0) & (s_de >= F.greatest(s_fr, s_es)), "de")
-        .when((s_fr > 0) & (s_fr >= s_es), "fr")
-        .when(s_es > 0, "es")
-        .otherwise("und")
-    )
+from big_data_hadoop_spark.operators.textstats import _lang_pred, _toks
 
 
 def curation_gate(
@@ -62,9 +49,9 @@ def curation_gate(
     admit exactly the same documents. ``max_dup_line_frac`` adds the
     Gopher-style repetition gate (q60's ``dup_line_frac`` — also
     per-row, so it fuses into the same scan filter and streams as-is)."""
-    text = F.col(text_col)
-    toks = split_tokens(text, lowercase=True)
-    n_tokens = F.size(toks).cast("long")
+    text = F.col(_quote(text_col))
+    toks = _toks(text_col)
+    n_tokens = F.expr(f"CAST(size({toks}) AS BIGINT)")
     alpha = F.length(F.regexp_replace(F.lower(text), "[^a-z]", "")).cast("long")
     alpha_ratio = alpha.cast("double") / F.greatest(
         F.length(text).cast("long"), F.lit(1).cast("long")
@@ -72,7 +59,7 @@ def curation_gate(
     gate = (
         (n_tokens >= F.lit(min_tokens))
         & (alpha_ratio >= F.lit(min_alpha_ratio))
-        & _lang_pred(toks).isin(list(langs))
+        & F.expr(_lang_pred(toks)).isin(list(langs))
     )
     if max_dup_line_frac is not None:
         from big_data_hadoop_spark.operators.repetition import dup_line_frac_col
@@ -490,19 +477,13 @@ def materialize_packs(
     packed = (
         member.groupBy("pack_id")
         .agg(F.sort_array(F.collect_list(entry)).alias("_m"))
-        .select(
+        .selectExpr(
             "pack_id",
-            F.size("_m").alias("n_docs"),
-            F.aggregate(
-                "_m", F.lit(0).cast("long"), lambda a, x: a + x["kept"]
-            ).alias("token_count"),
-            F.aggregate(
-                "_m", F.lit(0).cast("long"), lambda a, x: a + x["cut"]
-            ).alias("n_truncated"),
-            F.transform("_m", lambda x: x["doc_id"]).alias("doc_ids"),
-            F.concat_ws(
-                " ", F.flatten(F.transform("_m", lambda x: x["toks"]))
-            ).alias("payload"),
+            "size(_m) AS n_docs",
+            "aggregate(_m, 0L, (a, x) -> a + x.kept) AS token_count",
+            "aggregate(_m, 0L, (a, x) -> a + x.cut) AS n_truncated",
+            "transform(_m, x -> x.doc_id) AS doc_ids",
+            "concat_ws(' ', flatten(transform(_m, x -> x.toks))) AS payload",
         )
     )
     return packed
@@ -643,7 +624,7 @@ def corpus_profile(
 
     from big_data_hadoop_spark.functions.text import kept_tokens
 
-    toks = kept_tokens(F.col(text_col))
+    toks = kept_tokens(text_col)
     staged = df.select(
         *group_cols,
         F.size(toks).cast("long").alias("_ntok"),

@@ -78,6 +78,7 @@ from typing import Callable
 
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.sources.io import _VERB_LOCK_OPTS, table_write_lock
 
 META = "meta.json"
@@ -182,11 +183,12 @@ def refuse_bad_ids(
     ``what`` names the ids in the NULL refusal, ``dup`` the hazard of
     a duplicate. ``key`` rows with a NULL id stay out of the distinct
     count: they get the NULL refusal instead."""
-    key = F.col(id_col) if key is None else key
+    ids = F.col(_quote(id_col))
+    key = ids if key is None else key
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
-        F.count(F.col(id_col)).alias("n_ids"),
-        F.count_distinct(F.when(F.col(id_col).isNotNull(), key)).alias(
+        F.count(ids).alias("n_ids"),
+        F.count_distinct(F.when(ids.isNotNull(), key)).alias(
             "n_distinct"
         ),
         *[agg.alias(name) for name, agg in extra.items()],
@@ -284,7 +286,8 @@ def append(
             return {"batch": None, **fam.empty}
         prior = _history(spark, fam, path, meta)
         id_col = meta["id_col"]
-        known = prior.select(id_col)
+        key = _quote(id_col)
+        known = prior.select(key)
         if drop_known:
             # the replay-safe mode: dedup against history INSIDE the
             # claim — an out-of-lock pre-check is a TOCTOU against a
@@ -295,7 +298,7 @@ def append(
             n = batch.count()
             if n == 0:
                 return {"batch": None, **fam.empty}
-        elif batch.select(id_col).join(known, id_col, "semi").limit(1).count():
+        elif batch.select(key).join(known, id_col, "semi").limit(1).count():
             raise ValueError(fam.known.format(path=path))
         slot = max(meta["batches"]) + 1
         return _commit(spark, fam, path, lock, meta, batch, n, prior, slot)

@@ -36,6 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
+
 __all__ = [
     "zorder_value",
     "write_zordered",
@@ -285,9 +287,15 @@ def _validate_bloom(bits: int, k: int) -> None:
         raise ValueError(f"bloom_k must be in [1, 16] (got {k})")
 
 
-def _bloom_positions(col: Column, bits: int, k: int) -> Column:
-    """The k Bloom bit positions for one value, as ``array<int>`` —
-    classic Kirsch–Mitzenmacher double hashing ``(h1 + i*h2) mod m``
+def _bloom_positions(value: str, bits: int, k: int) -> Column:
+    """The k Bloom bit positions of the SQL expression ``value``, as
+    ``array<int>``, parsed from :func:`_bloom_positions_sql`."""
+    return F.expr(_bloom_positions_sql(value, bits, k))
+
+
+def _bloom_positions_sql(value: str, bits: int, k: int) -> str:
+    """:func:`_bloom_positions` as SQL text: classic Kirsch–Mitzenmacher
+    double hashing ``(h1 + i*h2) mod m``
     with ``h2`` forced odd (odd is coprime with the power-of-two table
     size, so the k positions never collapse onto one slot). Pure JVM
     expressions: the SAME code path hashes the column at build time and
@@ -297,14 +305,12 @@ def _bloom_positions(col: Column, bits: int, k: int) -> Column:
     reduced mod m BEFORE the combine, so the arithmetic stays under
     ``m * (k+1)`` — no 64-bit overflow (ANSI mode would refuse the
     wrap); ``pmod`` keeps every slot non-negative."""
-    m = F.lit(bits).cast("long")
-    h1 = F.pmod(F.xxhash64(col), m)
-    h2 = F.pmod(F.xxhash64(col, F.lit(1)), m).bitwiseOR(
-        F.lit(1).cast("long")
-    )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.pmod(h1 + i.cast("long") * h2, m).cast("int"),
+    m = f"{int(bits)}L"
+    h1 = f"pmod(xxhash64({value}), {m})"
+    h2 = f"(pmod(xxhash64({value}, 1), {m}) | 1L)"
+    return (
+        f"transform(sequence(0, {int(k) - 1}), "
+        f"i -> CAST(pmod({h1} + CAST(i AS BIGINT) * {h2}, {m}) AS INT))"
     )
 
 
@@ -321,23 +327,20 @@ def _blooms_for_scan(
     or NULL bitset — both mean "definitely absent" at read time. The
     result is eagerly checkpointed: it is a SNAPSHOT with the same
     no-silent-refresh contract as the stats pass."""
-    # single-arg lambda factories: a two-parameter lambda would be
-    # interpreted by F.transform as (value, index) and the captured
-    # loop variable would silently become the ELEMENT INDEX column
-    def _tag(ci):
-        return lambda p: F.struct(F.lit(ci).alias("ci"), p.alias("pos"))
-
     arrs = []
     for ci, (c, bits, k) in enumerate(specs):
-        ent = F.transform(_bloom_positions(F.col(c), bits, k), _tag(ci))
+        ent = (
+            f"transform({_bloom_positions_sql(_quote(c), bits, k)}, "
+            f"p -> named_struct('ci', {ci}, 'pos', p))"
+        )
         # empty array OF THE SAME STRUCT TYPE for NULL values —
         # slice(ent, 1, 0) sidesteps the untyped-empty-array cast
         arrs.append(
-            F.when(F.col(c).isNotNull(), ent).otherwise(F.slice(ent, 1, 0))
+            f"CASE WHEN {_quote(c)} IS NOT NULL THEN {ent} ELSE slice({ent}, 1, 0) END"
         )
     exploded = data.select(
         _norm_file(F.col("_file")).alias("file"),
-        F.explode(F.flatten(F.array(*arrs))).alias("e"),
+        F.expr(f"explode(flatten(array({', '.join(arrs)})))").alias("e"),
     ).select("file", "e.ci", "e.pos")
     words = (
         exploded.select(
@@ -365,16 +368,12 @@ def _blooms_for_scan(
             ]
         )
     )
-    def _dense(ci):
-        return lambda w: F.coalesce(
-            F.element_at(F.col(f"_wmap_{ci}"), w), F.lit(0).cast("long")
-        )
-
     dense = words.select(
         "file",
         *[
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bits // 64 - 1)), _dense(ci)
+            F.expr(
+                f"transform(sequence(0, {bits // 64 - 1}), "
+                f"w -> coalesce(element_at(_wmap_{ci}, w), 0L))"
             ).alias(_bloom_name(c, bits, k))
             for ci, (c, bits, k) in enumerate(specs)
         ],
@@ -388,13 +387,9 @@ def _blooms_for_scan(
     dense = dense.select(
         "*",
         *[
-            (
-                F.aggregate(
-                    F.col(_bloom_name(c, bits, k)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + F.bit_count(x),
-                )
-                / F.lit(float(bits))
+            F.expr(
+                f"aggregate({_quote(_bloom_name(c, bits, k))}, 0L, "
+                f"(acc, x) -> acc + bit_count(x)) / {float(bits)}D"
             ).alias(_bloom_name(c, bits, k) + "_density")
             for c, bits, k in specs
         ],
@@ -850,15 +845,17 @@ def read_pruned_where(
                 for s in _bloom_specs_from_schema(stats.columns)
                 if s[0] == col
             ]
-            sel = [
+            probed = spark.range(1).select(
                 F.coalesce(
                     F.lit(eq).try_cast(dtype) == F.lit(eq), F.lit(False)
                 ).alias("ok")
-            ]
+            )
             if specs:
                 _c, bits, k = specs[0]
-                sel.append(_bloom_positions(probe, bits, k).alias("p"))
-            row = spark.range(1).select(*sel).head()
+                probed = probed.withColumn("_probe", probe).withColumn(
+                    "p", _bloom_positions("_probe", bits, k)
+                )
+            row = probed.head()
             if not row["ok"]:
                 return spark.read.parquet(path).filter(F.lit(False))
             cond = cond & (

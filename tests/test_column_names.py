@@ -1,9 +1,11 @@
 """Caller-supplied column names reach SQL quoted: an id, group or query
 column whose name holds a backtick or a dot gives exactly the rows a
 plain one does — in the ranked operators (``cap_per_group``,
-``pq_search``, ``bm25_topk``, ``cosine_topk``, IVF and IVF-PQ search,
-``hybrid_topk``), the exact cosine pairs, and the near-duplicate pair
-operators. Unquoted, a backtick fails to parse
+``pq_search``, ``pq_refine``, ``bm25_topk``, ``cosine_topk``, exact,
+LSH, IVF and IVF-PQ search, ``hybrid_topk``), the exact and semantic
+cosine pairs, the embedding quantizer and centroids, the near-duplicate
+pair operators, the per-document text signals and the near-dup graph
+store. Unquoted, a backtick fails to parse
 (``INVALID_ATTRIBUTE_NAME_SYNTAX``) and a dot is read as struct access
 (``UNRESOLVED_COLUMN``)."""
 
@@ -14,8 +16,17 @@ import pytest
 from big_data_hadoop_spark.operators import dedup, pq
 from big_data_hadoop_spark.operators import similarity as sim
 from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk, hybrid_topk
+from big_data_hadoop_spark.operators.neardup_graph import (
+    neardup_graph_build,
+    neardup_graph_load,
+)
+from big_data_hadoop_spark.operators.repetition import repetition_signals
 from big_data_hadoop_spark.operators.substring import duplicate_spans
-from big_data_hadoop_spark.operators.textstats import winnow_neardup_pairs
+from big_data_hadoop_spark.operators.texthygiene import dedup_lines
+from big_data_hadoop_spark.operators.textstats import (
+    token_stats,
+    winnow_neardup_pairs,
+)
 from big_data_hadoop_spark.pipeline import cap_per_group
 
 ODD_KEYS = ["doc `id`", "doc.id"]
@@ -59,6 +70,9 @@ def _ranked(spark, key: str, query: str, group: str) -> dict:
     bm25 = bm25_index(docs, id_col=key)
     ivf = sim.ivf_build(docs, n_cells=4, id_col=key)
     ivfpq = pq.ivfpq_build(docs, dim=4, n_cells=2, m=2, k=4, id_col=key)
+    shortlist = pq.pq_search(
+        codes, cb, queries, topk=5, id_col=key, query_id_col=query
+    )
     return _rows({
         "cap_per_group": cap_per_group(docs, group_col=group, cap=5, id_col=key),
         "pq_search": pq.pq_search(
@@ -86,6 +100,23 @@ def _ranked(spark, key: str, query: str, group: str) -> dict:
         "ivfpq_search": pq.ivfpq_search(
             ivfpq, queries, topk=3, n_probe=2, query_id_col=query
         ),
+        "pq_refine": pq.pq_refine(
+            shortlist, docs, queries, topk=3, id_col=key, query_id_col=query
+        ),
+        "cosine_topk_vectors": sim.cosine_topk_vectors(
+            docs, queries, k=3, id_col=key, query_id_col=query
+        ),
+        "lsh_bucketed_topk": sim.lsh_bucketed_topk(
+            docs, [1, 2, 3], k=3, dim=4, num_planes=2, id_col=key
+        ),
+        "semantic_neardup_pairs": sim.semantic_neardup_pairs(
+            docs, eps=0.9, index=ivf, id_col=key
+        ),
+        "semantic_neardup_pairs_dim": sim.semantic_neardup_pairs(
+            docs, eps=0.9, index=ivf, id_col=key, dim=4
+        ),
+        "quantize_embeddings": sim.quantize_embeddings(docs, id_col=key),
+        "grouped_centroids": sim.grouped_centroids(docs, group_col=group),
     })
 
 
@@ -102,10 +133,10 @@ def test_odd_column_names_rank_like_plain_ones(spark, plain_ranked, key):
         assert odd[name] == rows, name
 
 
-def _pairs(spark, key: str) -> dict:
+def _pair_docs(spark, key: str):
     """Groups of three documents that differ in their last word, plus a
     line repeated across groups."""
-    docs = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (i, " ".join(f"w{i // 3 * 10 + j}" for j in range(12))
              + f" tail{i % 3} shared boilerplate line number {i // 9}")
@@ -113,6 +144,10 @@ def _pairs(spark, key: str) -> dict:
         ],
         f"{_q(key)} long, text string",
     )
+
+
+def _pairs(spark, key: str) -> dict:
+    docs = _pair_docs(spark, key)
     return _rows({
         "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs(
             docs, threshold=0.5, id_col=key
@@ -127,6 +162,9 @@ def _pairs(spark, key: str) -> dict:
             docs, threshold=0.5, id_col=key
         ),
         "duplicate_spans": duplicate_spans(docs, k=20, id_col=key),
+        "repetition_signals": repetition_signals(docs, id_col=key),
+        "dedup_lines": dedup_lines(docs, id_col=key),
+        "token_stats": token_stats(docs, id_col=key),
     })
 
 
@@ -141,3 +179,19 @@ def test_odd_column_names_pair_like_plain_ones(spark, plain_pairs, key):
     for name, rows in plain_pairs.items():
         assert rows, name
         assert odd[name] == rows, name
+
+
+@pytest.mark.parametrize("key", ODD_KEYS)
+def test_odd_column_names_build_a_neardup_graph_like_plain_ones(
+    spark, tmp_path, key
+):
+    def build(name: str, path: str):
+        stats = neardup_graph_build(
+            spark, _pair_docs(spark, name), path, threshold=0.5, id_col=name
+        )
+        return stats, _rows({"edges": neardup_graph_load(spark, path)})
+
+    odd = build(key, str(tmp_path / "odd"))
+    plain = build("doc_id", str(tmp_path / "plain"))
+    assert plain[0]["new_edges"] > 0
+    assert odd == plain

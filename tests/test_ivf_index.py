@@ -756,10 +756,15 @@ def test_index_over_a_python_side_frame_serves_without_a_shuffle(
     _serves_from_one_partition(spark, index, corpus)
 
 
-def test_dropping_the_index_unpersists_its_serving_copy(spark, corpus):
-    """The serving copy's cache entry lives exactly as long as its
-    index, and two indexes over one assignment own separate entries:
-    dropping one leaves the other's copy cached."""
+def test_dropping_the_index_unpersists_its_serving_copy(
+    spark, corpus, py4j_calls
+):
+    """The serving copy's cache entry lives as long as its index, up to
+    the next search or ``ivf_build``, and two indexes over one
+    assignment own separate entries: dropping one leaves the other's
+    copy cached. The drop itself only queues the copy: Python's
+    collector can run the finalizer inside another py4j call on the
+    same thread's connection, so it makes no py4j call there."""
     import gc
 
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -771,12 +776,17 @@ def test_dropping_the_index_unpersists_its_serving_copy(spark, corpus):
     copy, twin_copy = index.serving(), twin.serving()
     assert index.serving() is copy  # filled once
     assert cache.lookupCachedData(copy._jdf).isDefined()
-    del index
-    gc.collect()
+    with py4j_calls() as n:
+        del index
+        gc.collect()
+    assert n[0] == 0
+    assert cache.lookupCachedData(copy._jdf).isDefined()
+    sim.ivf_search_vectors(twin, queries, k=3, n_probe=2).collect()
     assert cache.lookupCachedData(copy._jdf).isEmpty()
     assert cache.lookupCachedData(twin_copy._jdf).isDefined()
     del twin
     gc.collect()
+    sim.ivf_build(corpus, n_cells=4)
     assert cache.lookupCachedData(twin_copy._jdf).isEmpty()
 
 

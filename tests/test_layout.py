@@ -792,7 +792,7 @@ def test_bloom_positions_match_python_replication(spark):
         F.col("id").alias("v"),
         F.xxhash64("id").alias("h1"),
         F.xxhash64("id", F.lit(1)).alias("h2"),
-        _bloom_positions(F.col("id"), bits, k).alias("pos"),
+        _bloom_positions("id", bits, k).alias("pos"),
     )
     for r in vals.collect():
         h1 = r.h1 % bits  # Python % matches pmod on negatives
@@ -955,7 +955,6 @@ def test_bloom_membership_tested_jvm_side(spark, tmp_path):
         _bloom_positions,
         build_file_stats,
     )
-    from pyspark.sql import functions as FF
 
     path = str(tmp_path / "mem")
     spark.range(0, 1000).selectExpr("id as x").repartition(4).write.parquet(
@@ -970,7 +969,7 @@ def test_bloom_membership_tested_jvm_side(spark, tmp_path):
     for v in (0, 63, 511, 999):
         positions = (
             spark.range(1)
-            .select(_bloom_positions(FF.lit(v).cast("long"), 8192, 6).alias("p"))
+            .select(_bloom_positions(f"CAST({v} AS BIGINT)", 8192, 6).alias("p"))
             .head()["p"]
         )
         n = stats.filter(_bloom_membership_cond(name, positions)).count()

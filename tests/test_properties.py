@@ -503,6 +503,6 @@ def test_canonical_url_idempotent(spark, scheme, host, port, path, params, frag)
         url += "?" + "&".join(params)
     url += frag
     once, twice = spark.createDataFrame([(url,)], "u string").select(
-        canonical_url(F.col("u")).alias("c1"),
-    ).select("c1", canonical_url(F.col("c1")).alias("c2")).first()
+        canonical_url("u").alias("c1"),
+    ).select("c1", canonical_url("c1").alias("c2")).first()
     assert once == twice, f"{url!r}: {once!r} != {twice!r}"

@@ -1,7 +1,8 @@
 """py4j round-trip budgets for building (not running) the plans of the
-calls perfbench times layer by layer and of the near-duplicate pair
-operators. The driver's fixed cost per call sits in these round trips,
-and unlike construction time their count is deterministic. Each
+calls perfbench times layer by layer, of the near-duplicate pair
+operators and of the per-document text and vector signals. The
+driver's fixed cost per call sits in these round trips, and unlike
+construction time their count is deterministic. Each
 budget is the count measured on a warm session and a 50-document
 frame; a change that raises one has made plan building costlier.
 ``ivf_search_vectors`` has its own budget in ``test_ivf_index.py``."""
@@ -18,9 +19,22 @@ from big_data_hadoop_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
 )
-from big_data_hadoop_spark.operators.substring import duplicate_spans
-from big_data_hadoop_spark.operators.textstats import winnow_neardup_pairs
+from big_data_hadoop_spark.operators.repetition import (
+    dup_line_frac_col,
+    repetition_signals,
+)
+from big_data_hadoop_spark.operators.substring import (
+    duplicate_spans,
+    remove_duplicate_spans,
+)
+from big_data_hadoop_spark.operators.texthygiene import dedup_lines
+from big_data_hadoop_spark.operators.textstats import (
+    quality_scores,
+    token_stats,
+    winnow_neardup_pairs,
+)
 from big_data_hadoop_spark.operators.tokenize import tokenized
+from big_data_hadoop_spark.pipeline import curation_gate
 
 #: name -> (build the plan from (docs, vectors), budget in py4j calls).
 #: Counts before the dot and the hyperplane planes were parsed from SQL
@@ -28,7 +42,11 @@ from big_data_hadoop_spark.operators.tokenize import tokenized
 #: shingles, the signature aggregate and the near-duplicate pair kernels
 #: were parsed from SQL text: minhash_signatures 807, minhash_lsh_pairs
 #: 1,832, ngram_jaccard_pairs 690 (prefix 1,362), winnow_neardup_pairs
-#: 911, duplicate_spans 838.
+#: 911, duplicate_spans 838. Counts before the last Python-lambda
+#: higher-order functions were parsed from SQL text: repetition_signals
+#: 9,743, curation_gate 646, dedup_lines 503, remove_duplicate_spans
+#: 415, quantize_embeddings 374, quality_scores 348, grouped_centroids
+#: 312, token_stats 299, dup_line_frac_col 149.
 BUDGETS = {
     "tokenized": (lambda d, v: tokenized(d), 15),
     "top_k_token_counts": (lambda d, v: top_k(token_counts(d), 1000), 77),
@@ -47,6 +65,19 @@ BUDGETS = {
         lambda d, v: sim.hyperplane_signatures(v, dim=4, num_planes=16), 16
     ),
     "cosine_topk": (lambda d, v: sim.cosine_topk(v, [1, 2], k=5), 346),
+    "repetition_signals": (lambda d, v: repetition_signals(d), 126),
+    "curation_gate": (lambda d, v: d.where(curation_gate()), 174),
+    "dedup_lines": (lambda d, v: dedup_lines(d), 405),
+    "remove_duplicate_spans": (
+        lambda d, v: remove_duplicate_spans(d, k=10), 89
+    ),
+    "quantize_embeddings": (lambda d, v: sim.quantize_embeddings(v), 16),
+    "quality_scores": (lambda d, v: quality_scores(d), 243),
+    "grouped_centroids": (
+        lambda d, v: sim.grouped_centroids(v, group_col="vec_id"), 70
+    ),
+    "token_stats": (lambda d, v: token_stats(d), 196),
+    "dup_line_frac_col": (lambda d, v: d.select(dup_line_frac_col()), 9),
 }
 
 

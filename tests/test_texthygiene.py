@@ -371,7 +371,7 @@ def test_canonical_url_golden(spark):
     )
     got = {
         r.i: r.c
-        for r in df.select("i", canonical_url(F.col("url")).alias("c")).collect()
+        for r in df.select("i", canonical_url("url").alias("c")).collect()
     }
     for i, (u, want) in enumerate(cases):
         assert got[i] == want, f"{u!r}: {got[i]!r} != {want!r}"
