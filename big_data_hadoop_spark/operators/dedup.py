@@ -80,12 +80,14 @@ def exact_dedup_groups(
     group size. The groupBy key is the md5 digest, so the shuffle carries
     32-byte keys regardless of document size.
     """
+    key = _quote(id_col)
     return (
         df.select(
-            F.md5(normalized_text(F.col(text_col))).alias("h"), F.col(id_col)
+            F.md5(normalized_text(F.col(_quote(text_col)))).alias("h"),
+            F.col(key),
         )
         .groupBy("h")
-        .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("keep_id"))
+        .agg(F.count("*").alias("n_dups"), F.min(key).alias("keep_id"))
     )
 
 
@@ -117,13 +119,14 @@ def exact_dedup_against(
     Emit the new snapshot's digests with :func:`content_digests` and
     union them into the stored table for the next run."""
     fresh = df.withColumn(
-        "_h", F.md5(normalized_text(F.col(text_col)))
+        "_h", F.md5(normalized_text(F.col(_quote(text_col))))
     ).join(seen_digests.select(F.col("h").alias("_h")), "_h", "left_anti")
     # Within-batch keep-first on the ALREADY-COMPUTED digest (review
     # finding: delegating to exact_dedup re-ran the normalize+md5 regex
     # pass over every surviving body — a second full scan at corpus
     # scale). min-id per digest is exactly exact_dedup's rule.
-    keep = fresh.groupBy("_h").agg(F.min(id_col).alias(id_col)).select(id_col)
+    key = _quote(id_col)
+    keep = fresh.groupBy("_h").agg(F.min(key).alias(id_col)).select(key)
     return fresh.join(keep, id_col, "left_semi").drop("_h")
 
 
@@ -740,16 +743,17 @@ def _simhash_pairs_given_fps(
     ``(id_col, simhash)`` — every caller passes one fingerprint per id
     (aggregation outputs / store representatives); duplicated input
     rows would emit duplicated pair rows (round-10 review note)."""
-    fps = fp.select(F.col(id_col), "simhash").localCheckpoint(eager=True)
+    key = _quote(id_col)
+    fps = fp.select(F.col(key), "simhash").localCheckpoint(eager=True)
     vals = fps.select("simhash").distinct().localCheckpoint(eager=True)
     vpairs = _hamming_value_pairs(vals, vals, max_hamming, ordered=True)
     cross = (
         vpairs.join(
-            fps.select(F.col(id_col).alias("_xid"), F.col("simhash").alias("_u")),
+            fps.select(F.col(key).alias("_xid"), F.col("simhash").alias("_u")),
             "_u",
         )
         .join(
-            fps.select(F.col(id_col).alias("_yid"), F.col("simhash").alias("_v")),
+            fps.select(F.col(key).alias("_yid"), F.col("simhash").alias("_v")),
             "_v",
         )
         .select(
@@ -763,11 +767,11 @@ def _simhash_pairs_given_fps(
         x.join(
             y,
             (F.col("x.simhash") == F.col("y.simhash"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+            & (F.col(f"x.{key}") < F.col(f"y.{key}")),
         )
         .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
+            F.col(f"x.{key}").alias("id_a"),
+            F.col(f"y.{key}").alias("id_b"),
             F.lit(0).cast("int").alias("hamming"),
         )
     )
@@ -931,10 +935,12 @@ def duplicate_clusters(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+                        F.col(_quote(id_a)).alias("src"),
+                        F.col(_quote(id_b)).alias("dst"),
                     ),
                     F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
+                        F.col(_quote(id_b)).alias("src"),
+                        F.col(_quote(id_a)).alias("dst"),
                     ),
                 )
             ).alias("e")
@@ -1355,8 +1361,8 @@ def dedup_by_clusters(
 
         scored = clusters.join(
             docs.select(
-                F.col(id_col).alias("member_id"),
-                F.col(keep_best_col).alias("_score"),
+                F.col(_quote(id_col)).alias("member_id"),
+                F.col(_quote(keep_best_col)).alias("_score"),
             ),
             "member_id",
         )

@@ -187,8 +187,15 @@ def ngram_lm_score(
         )
     )
     nll = -F.log(F.lit(float(lam)) * p_ml + F.lit(1.0 - float(lam)) * p_uni)
-    per_doc = scored.groupBy(id_col).agg(
-        F.count("*").alias("n_bigrams"), F.avg(nll).alias("avg_nll")
+    # the mean sums in ascending order, not by F.avg: after three shuffle
+    # joins a document's rows arrive in a different order from run to
+    # run, and so did the last bit of the mean
+    per_doc = scored.select(id_col, nll.alias("_nll")).groupBy(id_col).agg(
+        F.count("*").alias("n_bigrams"),
+        F.expr(
+            "aggregate(array_sort(collect_list(_nll)), 0.0D, "
+            "(acc, x) -> acc + x) / nullif(count(_nll), 0)"
+        ).alias("avg_nll"),
     )
     return (
         docs.select(id_col)

@@ -1069,14 +1069,15 @@ def topk_recall_audit(
     neighbors absent from the exact set are impossible when both
     paths verify with exact cosine, and are simply ignored if a
     caller audits an unverified tier."""
-    e = exact.select(F.col(query_col), F.col(neighbor_col)).distinct()
-    a = approx.select(F.col(query_col), F.col(neighbor_col)).distinct()
+    q, n = _quote(query_col), _quote(neighbor_col)
+    e = exact.select(F.col(q), F.col(n)).distinct()
+    a = approx.select(F.col(q), F.col(n)).distinct()
     hits = e.join(a, [query_col, neighbor_col], "left_semi")
     per_query = (
-        e.groupBy(query_col)
+        e.groupBy(F.col(q))
         .agg(F.count(F.lit(1)).alias("exact_k"))
         .join(
-            hits.groupBy(query_col).agg(F.count(F.lit(1)).alias("hit")),
+            hits.groupBy(F.col(q)).agg(F.count(F.lit(1)).alias("hit")),
             query_col,
             "left",
         )

@@ -179,31 +179,26 @@ def dedup_lines(
     # plain posexplode of a NULL array yields zero rows and the doc
     # silently disappeared).
     key, text = _quote(id_col), _quote(text_col)
-    lines = docs.select(
-        F.col(key),
-        F.col(text).isNull().alias("_null_text"),
-        F.posexplode_outer(F.split(F.col(text), "\n")).alias("pos", "line"),
-    ).withColumn(
-        "key",
-        F.when(
-            F.trim(F.col("line")) != "", F.md5(F.trim(F.col("line")))
-        ),
-    )
+    lines = docs.selectExpr(
+        key,
+        f"{text} IS NULL AS _null_text",
+        f"posexplode_outer(split({text}, '\\n')) AS (pos, line)",
+    ).selectExpr("*", "CASE WHEN trim(line) != '' THEN md5(trim(line)) END AS key")
     dfc = (
-        lines.filter(F.col("key").isNotNull())
+        lines.where("key IS NOT NULL")
         .groupBy("key")
-        .agg(F.count_distinct(F.col(key)).alias("_df"))
-        .filter(F.col("_df") > max_df)
-        .select("key", F.lit(True).alias("_drop"))
+        .agg(F.expr(f"count(DISTINCT {key}) AS _df"))
+        .where(f"_df > {int(max_df)}")
+        .selectExpr("key", "true AS _drop")
     )
     kept = lines.join(dfc, "key", "left").withColumn(
-        "_drop", F.coalesce("_drop", F.lit(False))
+        "_drop", F.expr("coalesce(_drop, false)")
     )
     return (
-        kept.groupBy(F.col(key))
+        kept.groupBy(key)
         .agg(
-            F.count("line").alias("n_lines"),  # 0 for a NULL-text doc
-            F.sum(F.col("_drop").cast("long")).alias("n_dropped"),
+            F.expr("count(line) AS n_lines"),  # 0 for a NULL-text doc
+            F.expr("sum(CAST(_drop AS BIGINT)) AS n_dropped"),
             F.expr(
                 "CASE WHEN NOT first(_null_text) THEN concat_ws('\\n', "
                 "transform(array_sort(collect_list(CASE WHEN NOT _drop THEN "

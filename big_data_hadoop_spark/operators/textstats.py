@@ -93,18 +93,21 @@ def quality_scores(
     """Heuristic quality signals: alphabetic-character ratio, stopword
     ratio, and a fixed linear score. Term order in the score is part of the
     contract (bit-exact oracle comparison)."""
-    text = F.col(_quote(text_col))
-    toks = _toks(text_col)
-    n_tokens = F.expr(f"CAST(size({toks}) AS BIGINT)")
-    alpha = F.length(F.regexp_replace(F.lower(text), "[^a-z]", "")).cast("long")
-    stops = F.expr(_stop_count(toks, STOPWORDS["en"]))
-    alpha_ratio = alpha.cast("double") / F.greatest(F.length(text).cast("long"), F.lit(1).cast("long"))
-    stop_ratio = stops.cast("double") / F.greatest(n_tokens, F.lit(1).cast("long"))
-    return df.select(
-        F.col(_quote(id_col)),
-        alpha_ratio.alias("alpha_ratio"),
-        stop_ratio.alias("stop_ratio"),
-        (F.lit(0.5) * alpha_ratio + F.lit(0.5) * stop_ratio).alias("quality_score"),
+    text, toks = _quote(text_col), _toks(text_col)
+    alpha_ratio = (
+        f"CAST(CAST(length(regexp_replace(lower({text}), '[^a-z]', '')) "
+        f"AS BIGINT) AS DOUBLE) / greatest(CAST(length({text}) AS BIGINT), "
+        "CAST(1 AS BIGINT))"
+    )
+    stop_ratio = (
+        f"CAST({_stop_count(toks, STOPWORDS['en'])} AS DOUBLE) / "
+        f"greatest(CAST(size({toks}) AS BIGINT), CAST(1 AS BIGINT))"
+    )
+    return df.selectExpr(
+        _quote(id_col),
+        f"{alpha_ratio} AS alpha_ratio",
+        f"{stop_ratio} AS stop_ratio",
+        f"0.5D * ({alpha_ratio}) + 0.5D * ({stop_ratio}) AS quality_score",
     )
 
 

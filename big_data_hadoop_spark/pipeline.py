@@ -341,9 +341,10 @@ def _global_token_prefix(
     and a per-bucket window adds the within-bucket prefix in parallel —
     no single-partition exchange anywhere (plan-test pinned).
     """
-    h = F.xxhash64(F.col(id_col))
+    key = F.col(_quote(id_col))
+    h = F.xxhash64(key)
     bucket = F.pmod(h, F.lit(n_buckets)).cast("int")
-    toks = split_tokens(F.col(text_col), lowercase=True)
+    toks = split_tokens(F.col(_quote(text_col)), lowercase=True)
     base = docs.withColumn("_tok_n", F.size(toks).cast("long")).withColumn(
         "_bkt", bucket
     )
@@ -364,7 +365,7 @@ def _global_token_prefix(
 
     w = (
         Window.partitionBy("_bkt")
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+        .orderBy(h, key)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     before = F.coalesce(F.sum("_tok_n").over(w), F.lit(0)) + F.col("_offset")
@@ -458,7 +459,8 @@ def materialize_packs(
         .withColumn(
             "_kept_toks",
             F.slice(
-                split_tokens(F.col(text_col)), 1, F.col("_kept").cast("int")
+                split_tokens(F.col(_quote(text_col))), 1,
+                F.col("_kept").cast("int"),
             ),
         )
     )
@@ -468,8 +470,8 @@ def materialize_packs(
     entry = F.struct(
         (F.col("_before") - F.col("pack_id") * c).alias("off"),
         F.col("_bkt").alias("bkt"),
-        F.xxhash64(F.col(id_col)).alias("h"),
-        F.col(id_col).alias("doc_id"),
+        F.xxhash64(F.col(_quote(id_col))).alias("h"),
+        F.col(_quote(id_col)).alias("doc_id"),
         F.col("_kept").alias("kept"),
         (F.col("_tok_n") - F.col("_kept")).alias("cut"),
         F.col("_kept_toks").alias("toks"),

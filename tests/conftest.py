@@ -103,13 +103,10 @@ def golden_lines(spark):
 # (fail-safe: slower, never less checked at close).
 _SLOWTIER_IDS = {
     "tests/test_asof.py::test_asof_join_matches_pandas_merge_asof",
-    "tests/test_bfs.py::test_bfs_matches_python",
     "tests/test_cli.py::test_cli_embedding_store_rebuild_and_audit",
     "tests/test_cli.py::test_cli_fingerprint_store_simhash_lifecycle",
     "tests/test_cli.py::test_cli_ingest_incremental",
     "tests/test_cli.py::test_cli_neardup_graph_refresh_honors_meta_columns",
-    "tests/test_clusters.py::test_star_converges_in_log_rounds_on_10k_chain",
-    "tests/test_copurchase.py::test_copurchase_feeds_weighted_pagerank",
     "tests/test_crossengine_fuzz.py::test_corpus_profile_agrees_with_duckdb_on_random_text",
     "tests/test_crossengine_fuzz.py::test_curation_gate_agrees_with_duckdb_on_random_text",
     "tests/test_crossengine_fuzz.py::test_token_counts_agree_with_duckdb_on_random_text",
@@ -139,7 +136,6 @@ _SLOWTIER_IDS = {
     "tests/test_io_formats.py::test_read_parquet_evolving_merges_schemas",
     "tests/test_ivf_index.py::test_lsh_multi_table_backcompat_and_monotone_recall",
     "tests/test_ivf_index.py::test_topk_recall_audit_books",
-    "tests/test_label_propagation.py::test_lpa_matches_python_rule",
     "tests/test_label_propagation.py::test_wlpa_matches_python_rule",
     "tests/test_layout.py::test_bloom_null_values_excluded",
     "tests/test_neardup_graph.py::test_graph_consumers_run_off_loaded_table",
@@ -147,7 +143,6 @@ _SLOWTIER_IDS = {
     "tests/test_pagerank.py::test_null_endpoints_dropped_mass_conserved",
     "tests/test_pagerank.py::test_personalized_matches_numpy",
     "tests/test_pagerank.py::test_weighted_matches_numpy",
-    "tests/test_pagerank.py::test_weighted_raw_validation_and_selfloop_parity",
     "tests/test_plans.py::test_no_cartesian_products_anywhere",
     "tests/test_plans.py::test_no_row_wise_python_anywhere",
     "tests/test_pq.py::test_ivfpq_save_load_roundtrip_both_modes",
@@ -162,10 +157,8 @@ _SLOWTIER_IDS = {
     "tests/test_properties.py::test_topk_is_prefix_of_full_sort",
     "tests/test_properties.py::test_window_m_is_union_of_distances",
     "tests/test_properties.py::test_winnow_pairs_equal_python_reference",
-    "tests/test_properties_graph_ts.py::test_triangles_match_bruteforce",
     "tests/test_semantic_dedup.py::test_zero_norm_vectors_never_pair",
     "tests/test_session_agg.py::test_session_agg_streams_and_equals_batch_when_drained",
-    "tests/test_shared_stores.py::test_graph_probes_equal_consumers_off_loaded_store",
     "tests/test_sketches.py::test_streaming_agg_state_checkpoint_reset_not_suppressed",
     "tests/test_sketches.py::test_streaming_cms_equals_batch",
     "tests/test_streaming.py::test_reconcile_flags_inplace_overwrite_not_appends",

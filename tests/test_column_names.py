@@ -4,8 +4,10 @@ plain one does — in the ranked operators (``cap_per_group``,
 ``pq_search``, ``pq_refine``, ``bm25_topk``, ``cosine_topk``, exact,
 LSH, IVF and IVF-PQ search, ``hybrid_topk``), the exact and semantic
 cosine pairs, the embedding quantizer and centroids, the near-duplicate
-pair operators, the per-document text signals and the near-dup graph
-store. Unquoted, a backtick fails to parse
+pair operators, the per-document text signals, the near-dup graph
+store, the graph operators and connected components, exact dedup,
+SimHash pairs, sequence packing, the curation funnel and the recall
+audit. Unquoted, a backtick fails to parse
 (``INVALID_ATTRIBUTE_NAME_SYNTAX``) and a dot is read as struct access
 (``UNRESOLVED_COLUMN``)."""
 
@@ -16,6 +18,14 @@ import pytest
 from big_data_hadoop_spark.operators import dedup, pq
 from big_data_hadoop_spark.operators import similarity as sim
 from big_data_hadoop_spark.operators.bm25 import bm25_index, bm25_topk, hybrid_topk
+from big_data_hadoop_spark.operators.graph import (
+    bfs_distances,
+    copurchase_edges,
+    k_core,
+    label_propagation,
+    pagerank,
+    triangle_count,
+)
 from big_data_hadoop_spark.operators.neardup_graph import (
     neardup_graph_build,
     neardup_graph_load,
@@ -27,7 +37,12 @@ from big_data_hadoop_spark.operators.textstats import (
     token_stats,
     winnow_neardup_pairs,
 )
-from big_data_hadoop_spark.pipeline import cap_per_group
+from big_data_hadoop_spark.pipeline import (
+    cap_per_group,
+    curate_training_data,
+    materialize_packs,
+    pack_sequences,
+)
 
 ODD_KEYS = ["doc `id`", "doc.id"]
 
@@ -195,3 +210,113 @@ def test_odd_column_names_build_a_neardup_graph_like_plain_ones(
     plain = build("doc_id", str(tmp_path / "plain"))
     assert plain[0]["new_edges"] > 0
     assert odd == plain
+
+
+def _graph(spark, key: str) -> dict:
+    """Every graph operator over one pair frame whose id and weight
+    columns are named after ``key`` (a duplicate row, a reversed row, a
+    self-loop and a half-NULL pair included)."""
+    a, b, w, item = f"{key} a", f"{key} b", f"{key} w", f"{key} item"
+    pairs = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 2.0), (1, 3, 1.0), (3, 4, 0.5), (4, 5, 1.0),
+         (5, 3, 1.5), (5, 5, 1.0), (6, None, 1.0), (2, 1, 1.0)],
+        f"{_q(a)} long, {_q(b)} long, {_q(w)} double",
+    )
+    baskets = spark.createDataFrame(
+        [(i // 4, i % 5) for i in range(20)], f"{_q(key)} long, {_q(item)} long"
+    )
+    ids = {"id_a": a, "id_b": b}
+
+    def ranked(**kw):
+        out = pagerank(pairs, max_iter=3, **ids, **kw)
+        return out.selectExpr("id", "round(rank, 12) AS rank")
+
+    return _rows({
+        "pagerank": ranked(),
+        "pagerank_weighted": ranked(weight_col=w),
+        "pagerank_directed": ranked(directed=True),
+        "k_core": k_core(pairs, 2, **ids),
+        "k_core_weighted": k_core(pairs, 2.0, weight_col=w, **ids),
+        "label_propagation": label_propagation(pairs, max_iter=3, **ids),
+        "label_propagation_weighted": label_propagation(
+            pairs, max_iter=3, weight_col=w, **ids
+        ),
+        "bfs_distances": bfs_distances(pairs, [1], **ids),
+        "bfs_distances_directed": bfs_distances(
+            pairs, [1], directed=True, **ids
+        ),
+        "triangle_count": triangle_count(pairs, **ids),
+        "copurchase_edges": copurchase_edges(baskets, key, item),
+        "duplicate_clusters": dedup.duplicate_clusters(pairs, **ids),
+    })
+
+
+@pytest.fixture(scope="module")
+def plain_graph(spark):
+    return _graph(spark, "doc_id")
+
+
+@pytest.mark.parametrize("key", ODD_KEYS)
+def test_odd_column_names_graph_like_plain_ones(spark, plain_graph, key):
+    odd = _graph(spark, key)
+    for name, rows in plain_graph.items():
+        assert rows, name
+        assert odd[name] == rows, name
+
+
+def _curation(spark, key: str) -> dict:
+    """Exact dedup, SimHash pairs, packing, the curation funnel and the
+    recall audit with the id column named ``key``: English documents in
+    near-duplicate groups of three, each also present as an exact copy
+    under another id."""
+    docs = spark.createDataFrame(
+        [
+            (i, "the " + " ".join(f"w{i // 3 * 10 + j}" for j in range(12))
+             + f" and the tail{i % 3} of the shared line {i // 9}")
+            for i in range(30)
+        ],
+        f"{_q(key)} long, text string",
+    )
+    docs = docs.unionByName(
+        docs.selectExpr(f"{_q(key)} + 100 AS {_q(key)}", "text")
+    )
+    query, neighbor = f"query {key}", f"{key} neighbor"
+    exact = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (2, 4)], f"{_q(query)} long, {_q(neighbor)} long"
+    )
+    approx = spark.createDataFrame(
+        [(1, 2), (2, 4), (2, 5)], f"{_q(query)} long, {_q(neighbor)} long"
+    )
+    per_query, summary = sim.topk_recall_audit(
+        exact, approx, query_col=query, neighbor_col=neighbor
+    )
+    out = _rows({
+        "exact_dedup": dedup.exact_dedup(docs, id_col=key),
+        "simhash_neardup_pairs": dedup.simhash_neardup_pairs(
+            docs, id_col=key
+        ),
+        "pack_sequences": pack_sequences(docs, 40, id_col=key),
+        "materialize_packs": materialize_packs(docs, 40, id_col=key),
+        "curate_training_data": curate_training_data(
+            docs, id_col=key, neardup_threshold=0.5
+        ),
+        "curate_training_data_cluster": curate_training_data(
+            docs, id_col=key, neardup_threshold=0.5, neardup_mode="cluster"
+        ),
+        "topk_recall_audit": per_query,
+    })
+    out["topk_recall_audit_summary"] = sorted(summary.items())
+    return out
+
+
+@pytest.fixture(scope="module")
+def plain_curation(spark):
+    return _curation(spark, "doc_id")
+
+
+@pytest.mark.parametrize("key", ODD_KEYS)
+def test_odd_column_names_curate_like_plain_ones(spark, plain_curation, key):
+    odd = _curation(spark, key)
+    for name, rows in plain_curation.items():
+        assert rows, name
+        assert odd[name] == rows, name

@@ -1,8 +1,8 @@
 """Value oracle for ``operators.ngram_lm`` (CCNet-style bigram-LM
 perplexity scoring): train and score are recomputed in pure Python with
 the identical token contract and smoothing formula; Spark must agree to
-float-sum reordering tolerance (the per-document mean is the only
-order-sensitive reduction).
+float-sum reordering tolerance (the per-document mean sums in ascending
+order, so Spark's own runs agree bit for bit).
 """
 
 from __future__ import annotations
@@ -83,6 +83,34 @@ def test_scores_match_python(spark, corpus):
         else:
             assert g_avg == pytest.approx(avg, rel=1e-9), doc_id
             assert g_ppl == pytest.approx(ppl, rel=1e-9), doc_id
+
+
+def test_scores_bit_identical_across_shuffle_layouts(spark, corpus):
+    """A document's mean does not depend on the order its bigram rows
+    arrive in: two runs whose joins shuffle into different partition
+    counts give ``avg_nll`` equal by ``float.hex`` (an order-dependent
+    mean differed in its last bit from run to run)."""
+    docs, ref = corpus
+    conf = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in [*conf, "spark.sql.shuffle.partitions"]}
+    runs = []
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for parts in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            rows = ngram_lm_score(docs, ngram_lm_train(ref), lam=LAM).collect()
+            runs.append(sorted(
+                (r["doc_id"], r["n_bigrams"], r["avg_nll"] and r["avg_nll"].hex())
+                for r in rows
+            ))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert runs[0] and runs[0] == runs[1]
 
 
 def test_short_and_oov_docs(spark):

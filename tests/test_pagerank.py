@@ -8,7 +8,13 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from big_data_hadoop_spark.operators.graph import pagerank
+from big_data_hadoop_spark.operators.graph import (
+    bfs_distances,
+    k_core,
+    label_propagation,
+    pagerank,
+    triangle_count,
+)
 
 
 def _np_pagerank(edges, n_ids, damping=0.85, tol=1e-6, max_iter=40,
@@ -283,13 +289,28 @@ def test_weighted_raw_validation_and_selfloop_parity(spark):
         assert w[k] == pytest.approx(u[k], abs=1e-12), k
 
 
-def test_weighted_upstream_executes_once(spark):
-    """The weighted path's raw-weight validation is an action; the
-    narrow (src, dst, w) projection is checkpointed FIRST so the
-    upstream pair subtree executes exactly once — not once for
-    validation and again inside the edges checkpoint (judge finding
-    r8; the LPA/BFS single-execution pattern). Counted with a
-    per-partition accumulator on a single-partition source."""
+UPSTREAM_CASES = {
+    "pagerank": lambda p: pagerank(p),
+    "pagerank_weighted": lambda p: pagerank(p, weight_col="w"),
+    "pagerank_directed": lambda p: pagerank(p, directed=True),
+    "label_propagation": lambda p: label_propagation(p),
+    "label_propagation_weighted": lambda p: label_propagation(
+        p, weight_col="w"
+    ),
+    "k_core": lambda p: k_core(p, 1),
+    "k_core_weighted": lambda p: k_core(p, 1.0, weight_col="w"),
+    "bfs_distances": lambda p: bfs_distances(p, [1]),
+    "triangle_count": lambda p: triangle_count(p),
+}
+
+
+@pytest.mark.parametrize("case", sorted(UPSTREAM_CASES))
+def test_upstream_executes_once(spark, case):
+    """Every graph operator reads its pair frame through one eagerly
+    checkpointed projection, so the upstream pair subtree executes
+    exactly once — not once for the weight validation (an action), again
+    for the vertex set and again inside the edge checkpoint. Counted
+    with a per-partition accumulator on a single-partition source."""
     acc = spark.sparkContext.accumulator(0)
 
     def tap(it):
@@ -299,8 +320,10 @@ def test_weighted_upstream_executes_once(spark):
     rows = [(1, 2, 2.0), (2, 3, 1.0), (1, 3, 1.0)]
     rdd = spark.sparkContext.parallelize(rows, 1).mapPartitions(tap)
     pairs = spark.createDataFrame(rdd, "id_a long, id_b long, w double")
-    out = pagerank(pairs, weight_col="w")
-    assert abs(sum(r.rank for r in out.collect()) - 1.0) < 1e-9
+    out = UPSTREAM_CASES[case](pairs).collect()
+    assert out
+    if case.startswith("pagerank"):
+        assert abs(sum(r.rank for r in out) - 1.0) < 1e-9
     assert acc.value == 1
 
 
@@ -344,14 +367,12 @@ def test_half_null_pair_keeps_isolated_vertex(spark):
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-6)
     # and the vertex set now matches label_propagation's exactly
-    from big_data_hadoop_spark.operators.graph import label_propagation
-
     assert {r.id for r in label_propagation(df).collect()} == set(got)
 
 
 def test_bad_weight_on_half_null_row_still_refuses(spark):
-    """The loud-refusal contract is on the RAW weight column, matching
-    label_propagation: a negative weight riding a half-NULL row (the
+    """The loud-refusal contract is on the RAW weight column, the same
+    for pagerank, label_propagation and k_core: a negative weight riding a half-NULL row (the
     shape of an upstream join bug) must refuse even though that row's
     edge is dropped (round-9 review, 2nd pass)."""
     df = spark.createDataFrame(
@@ -359,7 +380,7 @@ def test_bad_weight_on_half_null_row_still_refuses(spark):
     )
     with pytest.raises(ValueError, match="strictly positive"):
         pagerank(df, weight_col="w")
-    from big_data_hadoop_spark.operators.graph import label_propagation
-
     with pytest.raises(ValueError, match="strictly positive"):
         label_propagation(df, weight_col="w")
+    with pytest.raises(ValueError, match="strictly positive"):
+        k_core(df, 1.0, weight_col="w")

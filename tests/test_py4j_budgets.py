@@ -46,7 +46,9 @@ from big_data_hadoop_spark.pipeline import curation_gate
 #: higher-order functions were parsed from SQL text: repetition_signals
 #: 9,743, curation_gate 646, dedup_lines 503, remove_duplicate_spans
 #: 415, quantize_embeddings 374, quality_scores 348, grouped_centroids
-#: 312, token_stats 299, dup_line_frac_col 149.
+#: 312, token_stats 299, dup_line_frac_col 149. Counts before
+#: dedup_lines and quality_scores were parsed whole from SQL text:
+#: dedup_lines 405, quality_scores 243.
 BUDGETS = {
     "tokenized": (lambda d, v: tokenized(d), 15),
     "top_k_token_counts": (lambda d, v: top_k(token_counts(d), 1000), 77),
@@ -67,12 +69,12 @@ BUDGETS = {
     "cosine_topk": (lambda d, v: sim.cosine_topk(v, [1, 2], k=5), 346),
     "repetition_signals": (lambda d, v: repetition_signals(d), 126),
     "curation_gate": (lambda d, v: d.where(curation_gate()), 174),
-    "dedup_lines": (lambda d, v: dedup_lines(d), 405),
+    "dedup_lines": (lambda d, v: dedup_lines(d), 108),
     "remove_duplicate_spans": (
         lambda d, v: remove_duplicate_spans(d, k=10), 89
     ),
     "quantize_embeddings": (lambda d, v: sim.quantize_embeddings(v), 16),
-    "quality_scores": (lambda d, v: quality_scores(d), 243),
+    "quality_scores": (lambda d, v: quality_scores(d), 9),
     "grouped_centroids": (
         lambda d, v: sim.grouped_centroids(v, group_col="vec_id"), 70
     ),
