@@ -1152,9 +1152,9 @@ def edit_distance_pairs(
     # duplicate_clusters follows (review finding)
     base = (
         docs.select(
-            F.col(id_col).alias("_id"),
-            F.col(text_col).alias("_txt"),
-            F.length(text_col).alias("_l"),
+            F.col(_quote(id_col)).alias("_id"),
+            F.col(_quote(text_col)).alias("_txt"),
+            F.length(F.col(_quote(text_col))).alias("_l"),
         )
         .filter(F.col("_txt").isNotNull())
         .localCheckpoint(eager=True)

@@ -63,6 +63,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_hadoop_spark.functions.rank import _quote
 from big_data_hadoop_spark.functions.text import kept_tokens
 
 __all__ = ["NGramLM", "ngram_lm_train", "ngram_lm_score", "ppl_filter"]
@@ -85,14 +86,9 @@ def _bigram_events(
         F.slice(toks, F.lit(1), n_pairs).alias("w1"),
         F.slice(toks, F.lit(2), n_pairs).alias("w2"),
     )
-    return (
-        df.select(F.col(id_col), *[F.col(c) for c in keep], F.explode(pairs).alias("bg"))
-        .select(
-            id_col,
-            *keep,
-            F.col("bg.w1").alias("w1"),
-            F.col("bg.w2").alias("w2"),
-        )
+    cols = [F.col(_quote(c)) for c in (id_col, *keep)]
+    return df.select(*cols, F.explode(pairs).alias("bg")).select(
+        *cols, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
     )
 
 
@@ -190,7 +186,8 @@ def ngram_lm_score(
     # the mean sums in ascending order, not by F.avg: after three shuffle
     # joins a document's rows arrive in a different order from run to
     # run, and so did the last bit of the mean
-    per_doc = scored.select(id_col, nll.alias("_nll")).groupBy(id_col).agg(
+    key = F.col(_quote(id_col))
+    per_doc = scored.select(key, nll.alias("_nll")).groupBy(key).agg(
         F.count("*").alias("n_bigrams"),
         F.expr(
             "aggregate(array_sort(collect_list(_nll)), 0.0D, "
@@ -198,10 +195,10 @@ def ngram_lm_score(
         ).alias("avg_nll"),
     )
     return (
-        docs.select(id_col)
+        docs.select(key)
         .join(per_doc, id_col, "left")
         .select(
-            id_col,
+            key,
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             "avg_nll",
             F.exp("avg_nll").alias("ppl"),
@@ -236,6 +233,6 @@ def ppl_filter(
     keep = (
         scored.join(F.broadcast(cutoff))
         .filter(F.col("ppl").isNotNull() & (F.col("ppl") <= F.col("_cut")))
-        .select(id_col, "n_bigrams", "avg_nll", "ppl")
+        .select(F.col(_quote(id_col)), "n_bigrams", "avg_nll", "ppl")
     )
     return docs.join(keep, id_col, "inner")

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import collections
 import itertools
+import json
 import math
 import weakref
 from dataclasses import dataclass, field
@@ -35,7 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from big_data_hadoop_spark.functions.rank import _quote, top_k_per
+from big_data_hadoop_spark.functions.rank import _literal, _quote, top_k_per
 from big_data_hadoop_spark.session import release_on_drop
 
 #: KMeans fits performed by ``ivf_build`` since import — test observability
@@ -76,9 +77,19 @@ def _width_checked(
     The refusal is part of the plan: it costs no extra job."""
     return (
         f"CASE WHEN {vec} IS NOT NULL AND size({vec}) != {width} THEN "
+        f"{_width_refusal(f'size({vec})', width, op, of)} ELSE {vec} END"
+    )
+
+
+def _width_refusal(
+    size: int | str, width: int | str, op: str, of: str = "the index"
+) -> str:
+    """SQL text that fails the query with the message of
+    :func:`_width_checked` for a query vector of ``size`` elements."""
+    return (
         f"raise_error(concat('{op}: a query vector has ', "
-        f"CAST(size({vec}) AS STRING), ' dimensions, {of} has ', "
-        f"CAST({width} AS STRING))) ELSE {vec} END"
+        f"CAST({size} AS STRING), ' dimensions, {of} has ', "
+        f"CAST({width} AS STRING)))"
     )
 
 
@@ -123,19 +134,19 @@ def norm(a: str, dim: int | None = None) -> Column:
     identical association order, so both forms are bit-equal."""
     if not isinstance(a, str):
         raise TypeError("norm takes a column name, not a Column")
-    return F.expr(_norm_sql(a, dim))
+    return F.expr(_norm_sql(_quote(a), dim))
 
 
 def _norm_sql(a: str, dim: int | None) -> str:
-    """:func:`norm` as SQL text: the one rendering of the norm fold —
-    the array fold, or with ``dim`` :func:`_dot_sql`'s unrolled chain
-    of ``a`` with itself."""
+    """:func:`norm` as SQL text over the double-array SQL text ``a``:
+    the one rendering of the norm fold — the array fold, or with
+    ``dim`` :func:`_dot_sql`'s unrolled chain of ``a`` with itself."""
     if dim is None:
         return (
-            f"SQRT(aggregate(transform({_quote(a)}, x -> x * x), 0.0D, "
+            f"SQRT(aggregate(transform({a}, x -> x * x), 0.0D, "
             "(acc, x) -> acc + x))"
         )
-    return f"SQRT({_dot_sql(_quote(a), _quote(a), dim)})"
+    return f"SQRT({_dot_sql(a, a, dim)})"
 
 
 def with_norm(
@@ -551,6 +562,29 @@ def _centroid_matrix(centroids: list[list[float]]) -> str:
     return f"from_json('[{rows}]', 'array<array<double>>')"
 
 
+def _cell_dists_sql(vec: str, centroids: list[list[float]], var: str) -> str:
+    """SQL text for the squared L2 from the double array ``vec`` to
+    every centroid, in cell order; ``var`` names the centroid lambda
+    variable, so it must not shadow a column ``vec`` reads."""
+    return (
+        f"transform({_centroid_matrix(centroids)}, "
+        f"{var} -> {_sq_l2_sql(vec, var)})"
+    )
+
+
+def _by_distance_sql(dists: str) -> str:
+    """SQL text for the distance array ``dists`` as ``(d, i)`` structs
+    sorted by distance, then by LOWER index: element 1 is the first
+    minimum, the :func:`assign_cells` rule."""
+    return f"array_sort(transform({dists}, (d, i) -> struct(d AS d, i AS i)))"
+
+
+def _nearest_sql(ranked: str, p: int) -> str:
+    """SQL text for the cell indices of the first ``p`` (≥ 0) structs
+    of ``ranked`` (:func:`_by_distance_sql`)."""
+    return f"transform(slice({ranked}, 1, {p}), s -> CAST(s.i AS INT))"
+
+
 def assign_cells(
     df: DataFrame,
     centroids: list[list[float]],
@@ -605,13 +639,7 @@ def assign_cells(
     vec = f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)"
     # the centroid lambda variable borrows the scratch name: absent from
     # the caller's columns, it cannot shadow the one ``vec`` reads
-    out = df.withColumn(
-        scratch,
-        F.expr(
-            f"transform({_centroid_matrix(centroids)}, "
-            f"{scratch} -> {_sq_l2_sql(vec, scratch)})"
-        ),
-    )
+    out = df.withColumn(scratch, F.expr(_cell_dists_sql(vec, centroids, scratch)))
     cols = {
         "cell": f"CAST(array_position({scratch}, array_min({scratch})) - 1 AS INT)"
     }
@@ -622,15 +650,11 @@ def assign_cells(
         # top-p slice AND the runner-up distance below read ONE sort
         # per row (round-12 review: cell_dist2 previously re-sorted
         # the k-vector a second time).
-        cols[scratch2] = (
-            f"array_sort(transform({scratch}, (d, i) -> struct(d AS d, i AS i)))"
-        )
+        cols[scratch2] = _by_distance_sql(scratch)
     out = out.withColumns({c: F.expr(e) for c, e in cols.items()})
     cols = {}
     if p > 1:
-        cols["cells"] = (
-            f"transform(slice({scratch2}, 1, {min(p, k)}), s -> CAST(s.i AS INT))"
-        )
+        cols["cells"] = _nearest_sql(scratch2, min(p, k))
     if with_dist:
         cols["cell_dist"] = f"array_min({scratch})"
         if k < 2:
@@ -658,8 +682,11 @@ class IVFIndex:
     (:meth:`serving`), which the first search fills: the assignment
     flattened to ``(id, cell, nrm, _a1.._a<dim>)`` over the ``nrm > 0``
     rows, persisted, so a batch neither re-reads the table nor
-    re-decodes its arrays. Once the index is dropped, the next search
-    or build unpersists the copy."""
+    re-decodes its arrays. A search reads its query batch when it is
+    called and inlines the probed queries into its plan as one literal,
+    so each batch is one job over the copy, with no broadcast and no
+    join (:func:`_ivf_search_core`). Once the index is dropped, the next
+    search or build unpersists the copy."""
 
     centroids: list[list[float]]
     assigned: DataFrame
@@ -844,19 +871,19 @@ def ivf_build(
     return IVFIndex(centroids, assigned, id_col)
 
 
-def _ivf_empty_result(index: IVFIndex, id_type) -> DataFrame:
-    from pyspark.sql import types as T
-
-    return index.assigned.sparkSession.createDataFrame(
-        [],
-        T.StructType(
-            [
-                T.StructField("query_id", id_type),
-                T.StructField("neighbor_id", index.assigned.schema[index.id_col].dataType),
-                T.StructField("sim", T.DoubleType()),
-            ]
-        ),
-    )
+def _ivf_empty_result(
+    index: IVFIndex, id_type, refusal: str | None = None
+) -> DataFrame:
+    """A search result with no rows, or with ``refusal`` (SQL text that
+    raises, :func:`_width_refusal`) one that fails when it runs."""
+    cols = [
+        F.expr(refusal or "NULL").cast(id_type).alias("query_id"),
+        F.lit(None).cast(index.assigned.schema[index.id_col].dataType)
+        .alias("neighbor_id"),
+        F.lit(None).cast("double").alias("sim"),
+    ]
+    out = index.assigned.sparkSession.range(1).select(*cols)
+    return out if refusal else out.where("false")
 
 
 def _probe_cells(
@@ -874,41 +901,106 @@ def _probe_cells(
     return probed if n_probe >= 1 else probed.where("false")
 
 
+#: ``to_json`` / ``from_json`` options of the IVF query literal: a
+#: timestamp id keeps its microseconds (the default format writes
+#: milliseconds), and a literal that fails to parse raises instead of
+#: becoming NULL, which would drop every candidate of the batch.
+_JSON_OPTS = "map({})".format(", ".join(map(_literal, (
+    "mode", "FAILFAST",
+    "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+))))
+
+
 def _ivf_search_core(
     index: IVFIndex,
     q: DataFrame,
+    id_col: str,
+    vec_col: str,
     k: int,
     n_probe: int,
     exclude_self: bool,
+    op: str,
 ) -> DataFrame:
-    """Shared IVF search: ``q`` is ``(query_id, q_emb, q_nrm)``. Each
-    query keeps its ``n_probe`` nearest cells (``_probe_cells`` over
-    the index's parsed centroid matrix) and exact-cosine re-ranks
-    inside them via a broadcast equi-join on the cell id — the corpus
-    meets candidates on a short key, never all-pairs. The corpus side
-    is the index's persisted serving copy (:meth:`IVFIndex.serving`),
-    already flat; the probed queries are flattened below the join, so
-    a candidate pair is scored by one codegen'd multiply-add chain,
-    :func:`dot`'s left fold (bit-identical sims), as in
-    ``cosine_topk(dim=...)``. A one-partition copy needs no exchange
-    under the top-k window: a batch is the broadcast job plus the
-    result job. The result releases its JVM query when dropped
-    (:func:`release_on_drop`): the flat plan is large, and a search
-    runs once per serving batch."""
-    dim = len(index.centroids[0])
-    fb = (
-        _probe_cells(q, index.centroids, "q_emb", n_probe)
-        .where("q_nrm > 0")
-        .selectExpr(
-            "query_id", "q_cell", "q_nrm", *_flat_cols("q_emb", "_b", dim)
-        )
+    """Shared IVF search of the query rows ``(id_col, vec_col)`` of
+    ``q``. The batch is READ WHEN THE CALL IS MADE: one parsed
+    projection casts each query, takes its norm and ranks the index's
+    centroids by the :func:`assign_cells` rule, and is collected. Over
+    a driver-local batch (``local_frame``, an Arrow
+    ``createDataFrame``) the optimizer evaluates it into the
+    ``LocalRelation``, so the collect runs no Spark job.
+
+    The probed queries enter the plan as ONE ``from_json`` literal,
+    ``array<array<struct<query_id, q_nrm, _b1.._b<dim>>>>`` indexed by
+    cell, which ConstantFolding turns into a literal array (as
+    :func:`_centroid_matrix`): doubles by ``repr`` (NaN and ±Infinity
+    as JSON's non-numeric tokens), the id by Spark's ``to_json``, so it
+    keeps the frame's type. Each row of the serving copy
+    (:meth:`IVFIndex.serving`) meets the queries that probe its cell
+    through ``inline(get(<literal>, cell))`` — no join, no broadcast —
+    and a candidate pair is scored by :func:`dot`'s left fold over
+    flat columns (bit-identical sims). A one-partition copy needs no
+    exchange under the top-k window: a batch is one job.
+
+    Zero-norm queries never rank (see :func:`_nonzero`); a query of
+    another width than the index's fails the search when it runs;
+    ``n_probe < 1`` probes nothing. Each probed query is ``dim``
+    doubles of plan text per probed cell: the shape is a serving
+    batch, not a bulk join of a large query table. The result releases
+    its JVM query when dropped (:func:`release_on_drop`)."""
+    from pyspark.sql import types as T
+
+    dim, n_cells = len(index.centroids[0]), len(index.centroids)
+    id_type = q.schema[id_col].dataType
+    if n_probe < 1:
+        return _ivf_empty_result(index, id_type)
+    vec = f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)"
+    var = "__bdhs_centroid"  # must not shadow the column ``vec`` reads
+    while var.lower() == vec_col.lower():
+        var += "_"
+    cells = _nearest_sql(
+        _by_distance_sql(_cell_dists_sql(vec, index.centroids, var)),
+        min(n_probe, n_cells),
     )
-    cond = "cell = q_cell"
+    nrm = _norm_sql(vec, None)
+    rows = q.selectExpr(
+        f"to_json(array({_quote(id_col)}), {_JSON_OPTS}) AS id_json",
+        f"{vec} AS q_emb", f"{nrm} AS q_nrm", f"{nrm} > 0 AS live",
+        f"{cells} AS cells",
+    ).collect()
+    for r in rows:  # every row is checked, as the in-plan check did
+        if r.q_emb is not None and len(r.q_emb) != dim:
+            return _ivf_empty_result(
+                index, id_type, _width_refusal(len(r.q_emb), dim, op)
+            )
+    fields = [f'"_b{i}":' for i in range(1, dim + 1)]
+    by_cell: list[list[str]] = [[] for _ in range(n_cells)]
+    for r in filter(lambda r: r.live, rows):  # Spark's > 0: NaN passes
+        # json.dumps writes a float by repr, and NaN and ±inf as the
+        # tokens from_json reads; no repr contains ", "
+        elems = json.dumps(r.q_emb)[1:-1].split(", ")
+        entry = '{"query_id":%s,"q_nrm":%s,%s}' % (
+            r.id_json[1:-1], json.dumps(r.q_nrm),
+            ",".join(map(str.__add__, fields, elems)),
+        )
+        for c in r.cells:
+            by_cell[c].append(entry)
+    doc = "[" + ",".join("[" + ",".join(c) + "]" for c in by_cell) + "]"
+    schema = T.ArrayType(T.ArrayType(T.StructType(
+        [T.StructField("query_id", id_type), T.StructField("q_nrm", T.DoubleType())]
+        + [T.StructField(f"_b{i}", T.DoubleType()) for i in range(1, dim + 1)]
+    ))).json()
+    key = _quote(index.id_col)
+    scored = index.serving().selectExpr(
+        "*",
+        f"inline(get(from_json({_literal(doc)}, {_literal(schema)}, "
+        f"{_JSON_OPTS}), cell))",
+    )
     if exclude_self:
-        cond += f" AND query_id != {_quote(index.id_col)}"
-    sim = _flat_dot("_b", "_a", dim) / (F.col("q_nrm") * F.col("nrm"))
-    scored = index.serving().join(F.broadcast(fb), F.expr(cond)).select(
-        "query_id", F.col(_quote(index.id_col)).alias("neighbor_id"), sim.alias("sim")
+        scored = scored.where(f"query_id != {key}")
+    scored = scored.selectExpr(
+        "query_id", f"{key} AS neighbor_id",
+        f"({_dot_sql('_b', '_a', dim, flat=True)}) / (q_nrm * nrm) AS sim",
     )
     return release_on_drop(
         top_k_per(scored, "query_id", "sim DESC, neighbor_id ASC", k).select(
@@ -927,17 +1019,16 @@ def ivf_search(
     query excludes itself from its neighbors). Recall is tuned by
     ``n_probe``/``n_cells``; ``n_probe = n_cells`` degrades to exact. NO
     KMeans fit happens here — repeated searches reuse the index as-is.
-    """
+    The query rows are read from the index's assignment when the call
+    is made (one job), and enter the search plan as one literal
+    (:func:`_ivf_search_core`)."""
     assigned, id_col = index.assigned, index.id_col
     if not index.centroids:
         return _ivf_empty_result(index, assigned.schema[id_col].dataType)
-    key = F.col(_quote(id_col))
-    q = assigned.filter(key.isin(query_ids)).select(
-        key.alias("query_id"),
-        F.col("emb_d").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    q = assigned.filter(F.col(_quote(id_col)).isin(query_ids))
+    return _ivf_search_core(
+        index, q, id_col, "emb_d", k, n_probe, exclude_self=True, op="ivf_search"
     )
-    return _ivf_search_core(index, q, k, n_probe, exclude_self=True)
 
 
 def ivf_search_vectors(
@@ -952,23 +1043,23 @@ def ivf_search_vectors(
     serving shape: queries arrive as ``(id, embedding)`` rows that are
     NOT part of the indexed corpus (no self-exclusion), e.g. a batch of
     fresh documents to link against the training set. Same plan as
-    :func:`ivf_search`: each query ranks the centroids with
-    :func:`assign_cells` (a per-row sort over one parsed literal
-    matrix; a non-finite centroid raises ``ValueError`` naming its
-    cell), then broadcast of the probed queries, cell equi-join, exact
-    cosine re-rank — the index's serving copy is scanned once per batch
-    regardless of query count. A query vector whose width differs from the index's
-    fails the search with an error naming both widths."""
+    :func:`ivf_search`: the batch is READ WHEN THE CALL IS MADE (no
+    Spark job for a driver-local batch such as ``local_frame``), each
+    query ranks the centroids by the :func:`assign_cells` rule (a
+    per-row sort over one parsed literal matrix; a non-finite centroid
+    raises ``ValueError`` naming its cell), and the probed queries
+    enter the plan as one literal that each row of the index's serving
+    copy reads by its cell: exact cosine re-rank, one job per batch
+    whatever the query count (:func:`_ivf_search_core`). Later changes
+    to the rows behind ``queries`` do not reach the returned frame. A
+    query vector whose width differs from the index's fails the
+    search, when it runs, with an error naming both widths."""
     if not index.centroids:
         return _ivf_empty_result(index, queries.schema[id_col].dataType)
-    checked = _width_checked(
-        _quote(vec_col), len(index.centroids[0]), "ivf_search_vectors"
+    return _ivf_search_core(
+        index, queries, id_col, vec_col, k, n_probe, exclude_self=False,
+        op="ivf_search_vectors",
     )
-    q = queries.selectExpr(
-        f"{_quote(id_col)} AS query_id",
-        f"CAST({checked} AS ARRAY<DOUBLE>) AS q_emb",
-    ).selectExpr("query_id", "q_emb", f"{_norm_sql('q_emb', None)} AS q_nrm")
-    return _ivf_search_core(index, q, k, n_probe, exclude_self=False)
 
 
 def ivf_topk(

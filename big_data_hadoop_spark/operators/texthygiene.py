@@ -265,9 +265,11 @@ def extract_urls(
     extract+explode, no shuffle."""
     return (
         docs.select(
-            F.col(id_col),
+            F.col(_quote(id_col)),
             F.explode(
-                F.regexp_extract_all(F.col(text_col), F.lit(URL_PATTERN), 0)
+                F.regexp_extract_all(
+                    F.col(_quote(text_col)), F.lit(URL_PATTERN), 0
+                )
             ).alias("url"),
         )
         .withColumn(
@@ -290,7 +292,7 @@ def domain_counts(
     u = extract_urls(docs, id_col=id_col, text_col=text_col)
     return u.groupBy("domain").agg(
         F.count("*").alias("n_links"),
-        F.count_distinct(F.col(id_col)).alias("n_docs"),
+        F.count_distinct(F.col(_quote(id_col))).alias("n_docs"),
     )
 
 

@@ -157,9 +157,8 @@ def sample_fraction(
         raise ValueError("fraction must be in [0, 1]")
     den = 1_000_000
     cut = int(fraction * den)
-    return df.filter(
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(den)) < cut
-    )
+    h = F.xxhash64(F.col(_quote(id_col)), F.lit(seed))
+    return df.filter(F.pmod(h, F.lit(den)) < cut)
 
 
 def mix_corpora(
@@ -232,7 +231,8 @@ def chunk_documents(
             f"overlap must be in [0, max_tokens), got {overlap}"
         )
     stride = max_tokens - overlap
-    toks = split_tokens(F.col(text_col), lowercase=False)
+    key = _quote(id_col)
+    toks = split_tokens(F.col(_quote(text_col)), lowercase=False)
     n = F.size(toks)
     n_chunks = F.greatest(
         F.ceil((n - F.lit(overlap)).cast("double") / F.lit(stride)).cast("int"),
@@ -240,14 +240,14 @@ def chunk_documents(
     )
     starts = F.sequence(F.lit(0), (n_chunks - 1) * F.lit(stride), F.lit(stride))
     exploded = docs.select(
-        F.col(id_col), toks.alias("_toks"), F.posexplode(starts)
+        F.col(key), toks.alias("_toks"), F.posexplode(starts)
     ).select(
-        F.col(id_col),
+        F.col(key),
         F.col("pos").cast("long").alias("chunk_no"),
         F.slice(F.col("_toks"), F.col("col") + 1, max_tokens).alias("_chunk"),
     )
     return exploded.select(
-        F.col(id_col),
+        F.col(key),
         "chunk_no",
         F.concat_ws(" ", F.col("_chunk")).alias("chunk_text"),
         F.size("_chunk").cast("long").alias("n_chunk_tokens"),

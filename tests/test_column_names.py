@@ -6,8 +6,9 @@ LSH, IVF and IVF-PQ search, ``hybrid_topk``), the exact and semantic
 cosine pairs, the embedding quantizer and centroids, the near-duplicate
 pair operators, the per-document text signals, the near-dup graph
 store, the graph operators and connected components, exact dedup,
-SimHash pairs, sequence packing, the curation funnel and the recall
-audit. Unquoted, a backtick fails to parse
+SimHash pairs, sequence packing, the curation funnel, the recall
+audit, the bigram LM scores, chunking, sampling, edit-distance pairs
+and URL extraction. Unquoted, a backtick fails to parse
 (``INVALID_ATTRIBUTE_NAME_SYNTAX``) and a dot is read as struct access
 (``UNRESOLVED_COLUMN``)."""
 
@@ -30,18 +31,29 @@ from big_data_hadoop_spark.operators.neardup_graph import (
     neardup_graph_build,
     neardup_graph_load,
 )
+from big_data_hadoop_spark.operators.ngram_lm import (
+    ngram_lm_score,
+    ngram_lm_train,
+    ppl_filter,
+)
 from big_data_hadoop_spark.operators.repetition import repetition_signals
 from big_data_hadoop_spark.operators.substring import duplicate_spans
-from big_data_hadoop_spark.operators.texthygiene import dedup_lines
+from big_data_hadoop_spark.operators.texthygiene import (
+    dedup_lines,
+    domain_counts,
+    extract_urls,
+)
 from big_data_hadoop_spark.operators.textstats import (
     token_stats,
     winnow_neardup_pairs,
 )
 from big_data_hadoop_spark.pipeline import (
     cap_per_group,
+    chunk_documents,
     curate_training_data,
     materialize_packs,
     pack_sequences,
+    sample_fraction,
 )
 
 ODD_KEYS = ["doc `id`", "doc.id"]
@@ -320,3 +332,52 @@ def test_odd_column_names_curate_like_plain_ones(spark, plain_curation, key):
     for name, rows in plain_curation.items():
         assert rows, name
         assert odd[name] == rows, name
+
+
+#: Per-document text operators, each ``(docs, key) -> DataFrame``.
+_TEXT_OPS = {
+    "ngram_lm_score": lambda docs, key: ngram_lm_score(
+        docs, ngram_lm_train(docs), id_col=key
+    ),
+    "ppl_filter": lambda docs, key: ppl_filter(
+        docs, ngram_lm_train(docs), keep_frac=0.5, id_col=key
+    ),
+    "chunk_documents": lambda docs, key: chunk_documents(
+        docs, 4, overlap=1, id_col=key
+    ),
+    "sample_fraction": lambda docs, key: sample_fraction(
+        docs, 0.5, id_col=key
+    ),
+    "edit_distance_pairs": lambda docs, key: dedup.edit_distance_pairs(
+        docs, max_dist=2, id_col=key
+    ),
+    "extract_urls": lambda docs, key: extract_urls(docs, id_col=key),
+    "domain_counts": lambda docs, key: domain_counts(docs, id_col=key),
+}
+
+
+def _text(spark, key: str, op: str) -> list:
+    """The ``op`` rows over documents that link to three sites and
+    differ pairwise by a few characters, id column named ``key``."""
+    docs = spark.createDataFrame(
+        [
+            (i, f"see https://ex{i % 3}.org/p{i} w{i % 4} w{i % 5} tail{i % 2}")
+            for i in range(24)
+        ],
+        f"{_q(key)} long, text string",
+    )
+    return _rows({op: _TEXT_OPS[op](docs, key)})[op]
+
+
+@pytest.fixture(scope="module")
+def plain_text(spark):
+    return {op: _text(spark, "doc_id", op) for op in _TEXT_OPS}
+
+
+@pytest.mark.parametrize("key", ODD_KEYS)
+@pytest.mark.parametrize("op", sorted(_TEXT_OPS))
+def test_odd_column_names_score_chunk_and_link_like_plain_ones(
+    spark, plain_text, op, key
+):
+    assert plain_text[op], op
+    assert _text(spark, key, op) == plain_text[op], op

@@ -599,13 +599,13 @@ def test_every_top_k_plans_a_window_group_limit(spark):
         assert "WindowGroupLimit" in opt, (name, opt)
 
 
-def test_ivf_search_scores_flat_columns_after_the_join(spark):
+def test_ivf_search_scores_flat_columns_after_the_cell_lookup(spark):
     """IVF serving scores each candidate pair with one codegen'd
-    multiply-add chain over scalar columns flattened below the cell
-    join: the projection right above the join holds no array fold
-    (``aggregate``/``zip_with``), the centroid matrix's ``from_json``
-    is folded into a literal, and the top-k still plans a
-    ``WindowGroupLimit``."""
+    multiply-add chain over scalar columns: the probed queries are one
+    literal that each serving row reads by its cell (a ``Generate``,
+    no join), the projection right above it holds no array fold
+    (``aggregate``/``zip_with``), the literal's ``from_json`` is
+    folded, and the top-k still plans a ``WindowGroupLimit``."""
     from pyspark.sql import functions as F
 
     from big_data_hadoop_spark.operators import similarity as sim
@@ -619,10 +619,12 @@ def test_ivf_search_scores_flat_columns_after_the_join(spark):
     text = plan.toString()
     assert "JsonToStructs" not in text and "from_json" not in text, text
     assert "WindowGroupLimit" in text, text
+    assert "Join" not in text, text
     node = plan
-    while node.children().head().nodeName() != "Join":
+    while node.children().head().nodeName() != "Generate":
         node = node.children().head()
-    post_join = node.simpleString(100_000)
-    assert node.nodeName() == "Project", post_join
-    assert "_b1" in post_join and "_a1" in post_join, post_join
-    assert "aggregate" not in post_join and "zip_with" not in post_join, post_join
+    post_lookup = node.simpleString(100_000)
+    assert node.nodeName() == "Project", post_lookup
+    assert "_b1" in post_lookup and "_a1" in post_lookup, post_lookup
+    assert "aggregate" not in post_lookup, post_lookup
+    assert "zip_with" not in post_lookup, post_lookup
