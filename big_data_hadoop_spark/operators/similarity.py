@@ -77,19 +77,9 @@ def _width_checked(
     The refusal is part of the plan: it costs no extra job."""
     return (
         f"CASE WHEN {vec} IS NOT NULL AND size({vec}) != {width} THEN "
-        f"{_width_refusal(f'size({vec})', width, op, of)} ELSE {vec} END"
-    )
-
-
-def _width_refusal(
-    size: int | str, width: int | str, op: str, of: str = "the index"
-) -> str:
-    """SQL text that fails the query with the message of
-    :func:`_width_checked` for a query vector of ``size`` elements."""
-    return (
         f"raise_error(concat('{op}: a query vector has ', "
-        f"CAST({size} AS STRING), ' dimensions, {of} has ', "
-        f"CAST({width} AS STRING)))"
+        f"CAST(size({vec}) AS STRING), ' dimensions, {of} has ', "
+        f"CAST({width} AS STRING))) ELSE {vec} END"
     )
 
 
@@ -134,19 +124,19 @@ def norm(a: str, dim: int | None = None) -> Column:
     identical association order, so both forms are bit-equal."""
     if not isinstance(a, str):
         raise TypeError("norm takes a column name, not a Column")
-    return F.expr(_norm_sql(_quote(a), dim))
+    return F.expr(_norm_sql(a, dim))
 
 
 def _norm_sql(a: str, dim: int | None) -> str:
-    """:func:`norm` as SQL text over the double-array SQL text ``a``:
-    the one rendering of the norm fold — the array fold, or with
-    ``dim`` :func:`_dot_sql`'s unrolled chain of ``a`` with itself."""
+    """:func:`norm` as SQL text: the one rendering of the norm fold —
+    the array fold, or with ``dim`` :func:`_dot_sql`'s unrolled chain
+    of ``a`` with itself."""
     if dim is None:
         return (
-            f"SQRT(aggregate(transform({a}, x -> x * x), 0.0D, "
+            f"SQRT(aggregate(transform({_quote(a)}, x -> x * x), 0.0D, "
             "(acc, x) -> acc + x))"
         )
-    return f"SQRT({_dot_sql(a, a, dim)})"
+    return f"SQRT({_dot_sql(_quote(a), _quote(a), dim)})"
 
 
 def with_norm(
@@ -562,29 +552,6 @@ def _centroid_matrix(centroids: list[list[float]]) -> str:
     return f"from_json('[{rows}]', 'array<array<double>>')"
 
 
-def _cell_dists_sql(vec: str, centroids: list[list[float]], var: str) -> str:
-    """SQL text for the squared L2 from the double array ``vec`` to
-    every centroid, in cell order; ``var`` names the centroid lambda
-    variable, so it must not shadow a column ``vec`` reads."""
-    return (
-        f"transform({_centroid_matrix(centroids)}, "
-        f"{var} -> {_sq_l2_sql(vec, var)})"
-    )
-
-
-def _by_distance_sql(dists: str) -> str:
-    """SQL text for the distance array ``dists`` as ``(d, i)`` structs
-    sorted by distance, then by LOWER index: element 1 is the first
-    minimum, the :func:`assign_cells` rule."""
-    return f"array_sort(transform({dists}, (d, i) -> struct(d AS d, i AS i)))"
-
-
-def _nearest_sql(ranked: str, p: int) -> str:
-    """SQL text for the cell indices of the first ``p`` (≥ 0) structs
-    of ``ranked`` (:func:`_by_distance_sql`)."""
-    return f"transform(slice({ranked}, 1, {p}), s -> CAST(s.i AS INT))"
-
-
 def assign_cells(
     df: DataFrame,
     centroids: list[list[float]],
@@ -639,7 +606,13 @@ def assign_cells(
     vec = f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)"
     # the centroid lambda variable borrows the scratch name: absent from
     # the caller's columns, it cannot shadow the one ``vec`` reads
-    out = df.withColumn(scratch, F.expr(_cell_dists_sql(vec, centroids, scratch)))
+    out = df.withColumn(
+        scratch,
+        F.expr(
+            f"transform({_centroid_matrix(centroids)}, "
+            f"{scratch} -> {_sq_l2_sql(vec, scratch)})"
+        ),
+    )
     cols = {
         "cell": f"CAST(array_position({scratch}, array_min({scratch})) - 1 AS INT)"
     }
@@ -650,11 +623,15 @@ def assign_cells(
         # top-p slice AND the runner-up distance below read ONE sort
         # per row (round-12 review: cell_dist2 previously re-sorted
         # the k-vector a second time).
-        cols[scratch2] = _by_distance_sql(scratch)
+        cols[scratch2] = (
+            f"array_sort(transform({scratch}, (d, i) -> struct(d AS d, i AS i)))"
+        )
     out = out.withColumns({c: F.expr(e) for c, e in cols.items()})
     cols = {}
     if p > 1:
-        cols["cells"] = _nearest_sql(scratch2, min(p, k))
+        cols["cells"] = (
+            f"transform(slice({scratch2}, 1, {min(p, k)}), s -> CAST(s.i AS INT))"
+        )
     if with_dist:
         cols["cell_dist"] = f"array_min({scratch})"
         if k < 2:
@@ -683,10 +660,11 @@ class IVFIndex:
     flattened to ``(id, cell, nrm, _a1.._a<dim>)`` over the ``nrm > 0``
     rows, persisted, so a batch neither re-reads the table nor
     re-decodes its arrays. A search reads its query batch when it is
-    called and inlines the probed queries into its plan as one literal,
-    so each batch is one job over the copy, with no broadcast and no
-    join (:func:`_ivf_search_core`). Once the index is dropped, the next
-    search or build unpersists the copy."""
+    called and, while the batch is serving-sized, inlines the probed
+    queries into its plan as one literal, so each batch is one job over
+    the copy, with no broadcast and no join (:func:`_ivf_search_core`).
+    Once the index is dropped, the next search or build unpersists the
+    copy."""
 
     centroids: list[list[float]]
     assigned: DataFrame
@@ -871,19 +849,14 @@ def ivf_build(
     return IVFIndex(centroids, assigned, id_col)
 
 
-def _ivf_empty_result(
-    index: IVFIndex, id_type, refusal: str | None = None
-) -> DataFrame:
-    """A search result with no rows, or with ``refusal`` (SQL text that
-    raises, :func:`_width_refusal`) one that fails when it runs."""
-    cols = [
-        F.expr(refusal or "NULL").cast(id_type).alias("query_id"),
+def _ivf_empty_result(index: IVFIndex, id_type) -> DataFrame:
+    """A search result with no rows."""
+    return index.assigned.sparkSession.range(1).select(
+        F.lit(None).cast(id_type).alias("query_id"),
         F.lit(None).cast(index.assigned.schema[index.id_col].dataType)
         .alias("neighbor_id"),
         F.lit(None).cast("double").alias("sim"),
-    ]
-    out = index.assigned.sparkSession.range(1).select(*cols)
-    return out if refusal else out.where("false")
+    ).where("false")
 
 
 def _probe_cells(
@@ -900,6 +873,45 @@ def _probe_cells(
     )
     return probed if n_probe >= 1 else probed.where("false")
 
+
+def _rank_cells(
+    embs: list[list[float]], centroids: list[list[float]], p: int
+) -> tuple[list[float], list[list[int]]]:
+    """The norm of each query vector in ``embs`` and its ``p`` nearest
+    cells, computed on the driver by the rules of :func:`_norm_sql` and
+    :func:`assign_cells`: squared L2 and squared norm as the same left
+    fold (``cumsum`` adds in order, and ``0.0 + t`` is ``t`` for the
+    non-negative terms, so both are bit-equal to the SQL folds), cells
+    sorted by distance, then by lower index, with NaN distances last as
+    in Spark's ordering; a non-finite centroid raises ``ValueError``
+    naming its cell (:func:`_finite_centroids`). For the few dozen rows
+    of a serving batch this costs well under a millisecond, where the
+    same ranking as a SQL projection is evaluated row by row,
+    interpreted, when the optimizer folds it into a ``LocalRelation``."""
+    import numpy as np
+
+    c = np.asarray(_finite_centroids(centroids), dtype=np.float64)
+    if not embs:
+        return [], []
+    e = np.asarray(embs, dtype=np.float64)
+    with np.errstate(all="ignore"):  # inf and NaN propagate as in Spark
+        norms = np.sqrt(np.cumsum(e * e, axis=1)[:, -1])
+        diff = e[:, None, :] - c[None, :, :]
+        d = np.cumsum(diff * diff, axis=2)[:, :, -1]
+    nan = np.isnan(d)
+    idx = np.broadcast_to(np.arange(d.shape[1]), d.shape)
+    order = np.lexsort((idx, np.where(nan, 0.0, d), nan), axis=-1)[:, :p]
+    return [float(n) for n in norms], order.tolist()
+
+
+#: Probed doubles (live queries × probed cells × dim) up to which an IVF
+#: search batch enters its plan as one literal; a larger batch is
+#: broadcast and joined on the cell instead (:func:`_ivf_search_core`).
+#: The literal's cost grows with its size (folding, Java serialization
+#: of the task, rendering for the plan description), the broadcast's
+#: barely: at 10,000×32, 16 cells and n_probe 4 (4 vCPU) the literal
+#: batch cost less CPU than the broadcast at 32 queries and more at 128.
+_LITERAL_DOUBLES = 8192
 
 #: ``to_json`` / ``from_json`` options of the IVF query literal: a
 #: timestamp id keeps its microseconds (the default format writes
@@ -923,79 +935,80 @@ def _ivf_search_core(
     op: str,
 ) -> DataFrame:
     """Shared IVF search of the query rows ``(id_col, vec_col)`` of
-    ``q``. The batch is READ WHEN THE CALL IS MADE: one parsed
-    projection casts each query, takes its norm and ranks the index's
-    centroids by the :func:`assign_cells` rule, and is collected. Over
-    a driver-local batch (``local_frame``, an Arrow
-    ``createDataFrame``) the optimizer evaluates it into the
-    ``LocalRelation``, so the collect runs no Spark job.
+    ``q``. The batch is READ WHEN THE CALL IS MADE: its ids (as
+    ``to_json``) and vectors (cast to ``array<double>``) are collected,
+    which over a driver-local batch (``local_frame``, an Arrow
+    ``createDataFrame``) runs no Spark job, and each query's norm and
+    probed cells are computed on the driver (:func:`_rank_cells`). A
+    query of another width than the index's raises ``ValueError`` here,
+    naming both widths; zero-norm queries never rank (see
+    :func:`_nonzero`); ``n_probe < 1`` probes nothing and reads nothing.
 
-    The probed queries enter the plan as ONE ``from_json`` literal,
+    A batch of at most :data:`_LITERAL_DOUBLES` probed doubles enters
+    the plan as ONE ``from_json`` literal,
     ``array<array<struct<query_id, q_nrm, _b1.._b<dim>>>>`` indexed by
     cell, which ConstantFolding turns into a literal array (as
     :func:`_centroid_matrix`): doubles by ``repr`` (NaN and ±Infinity
     as JSON's non-numeric tokens), the id by Spark's ``to_json``, so it
     keeps the frame's type. Each row of the serving copy
     (:meth:`IVFIndex.serving`) meets the queries that probe its cell
-    through ``inline(get(<literal>, cell))`` — no join, no broadcast —
-    and a candidate pair is scored by :func:`dot`'s left fold over
-    flat columns (bit-identical sims). A one-partition copy needs no
-    exchange under the top-k window: a batch is one job.
-
-    Zero-norm queries never rank (see :func:`_nonzero`); a query of
-    another width than the index's fails the search when it runs;
-    ``n_probe < 1`` probes nothing. Each probed query is ``dim``
-    doubles of plan text per probed cell: the shape is a serving
-    batch, not a bulk join of a large query table. The result releases
-    its JVM query when dropped (:func:`release_on_drop`)."""
+    through ``inline(get(<literal>, cell))``: over a one-partition copy
+    a batch is one job, with no broadcast and no join. A larger batch
+    is planned as a broadcast of its probed queries equi-joined to the
+    copy on the cell (:func:`_joined_queries`), which reads ``q`` again
+    when it runs. Either way a candidate pair is scored by :func:`dot`'s
+    left fold over flat columns (bit-identical sims). The result
+    releases its JVM query when dropped (:func:`release_on_drop`)."""
     from pyspark.sql import types as T
 
     dim, n_cells = len(index.centroids[0]), len(index.centroids)
     id_type = q.schema[id_col].dataType
     if n_probe < 1:
         return _ivf_empty_result(index, id_type)
-    vec = f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)"
-    var = "__bdhs_centroid"  # must not shadow the column ``vec`` reads
-    while var.lower() == vec_col.lower():
-        var += "_"
-    cells = _nearest_sql(
-        _by_distance_sql(_cell_dists_sql(vec, index.centroids, var)),
-        min(n_probe, n_cells),
-    )
-    nrm = _norm_sql(vec, None)
+    probes = min(n_probe, n_cells)
     rows = q.selectExpr(
         f"to_json(array({_quote(id_col)}), {_JSON_OPTS}) AS id_json",
-        f"{vec} AS q_emb", f"{nrm} AS q_nrm", f"{nrm} > 0 AS live",
-        f"{cells} AS cells",
+        f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>) AS q_emb",
     ).collect()
     for r in rows:  # every row is checked, as the in-plan check did
         if r.q_emb is not None and len(r.q_emb) != dim:
-            return _ivf_empty_result(
-                index, id_type, _width_refusal(len(r.q_emb), dim, op)
+            raise ValueError(
+                f"{op}: a query vector has {len(r.q_emb)} dimensions, "
+                f"the index has {dim}"
             )
-    fields = [f'"_b{i}":' for i in range(1, dim + 1)]
-    by_cell: list[list[str]] = [[] for _ in range(n_cells)]
-    for r in filter(lambda r: r.live, rows):  # Spark's > 0: NaN passes
-        # json.dumps writes a float by repr, and NaN and ±inf as the
-        # tokens from_json reads; no repr contains ", "
-        elems = json.dumps(r.q_emb)[1:-1].split(", ")
-        entry = '{"query_id":%s,"q_nrm":%s,%s}' % (
-            r.id_json[1:-1], json.dumps(r.q_nrm),
-            ",".join(map(str.__add__, fields, elems)),
-        )
-        for c in r.cells:
-            by_cell[c].append(entry)
-    doc = "[" + ",".join("[" + ",".join(c) + "]" for c in by_cell) + "]"
-    schema = T.ArrayType(T.ArrayType(T.StructType(
-        [T.StructField("query_id", id_type), T.StructField("q_nrm", T.DoubleType())]
-        + [T.StructField(f"_b{i}", T.DoubleType()) for i in range(1, dim + 1)]
-    ))).json()
+    # a NULL vector or element has a NULL norm: it never ranks
+    rows = [r for r in rows if r.q_emb is not None and None not in r.q_emb]
+    norms, cells = _rank_cells([r.q_emb for r in rows], index.centroids, probes)
+    live = [  # Spark's nrm > 0: NaN passes
+        (r, n, c) for r, n, c in zip(rows, norms, cells) if n > 0 or n != n
+    ]
     key = _quote(index.id_col)
-    scored = index.serving().selectExpr(
-        "*",
-        f"inline(get(from_json({_literal(doc)}, {_literal(schema)}, "
-        f"{_JSON_OPTS}), cell))",
-    )
+    if len(live) * probes * dim > _LITERAL_DOUBLES:
+        scored = _joined_queries(index, q, id_col, vec_col, n_probe, op)
+    else:
+        fields = [f'"_b{i}":' for i in range(1, dim + 1)]
+        by_cell: list[list[str]] = [[] for _ in range(n_cells)]
+        for r, nrm, probed in live:
+            # json.dumps writes a float by repr, and NaN and ±inf as
+            # the tokens from_json reads; no repr contains ", "
+            elems = json.dumps(r.q_emb)[1:-1].split(", ")
+            entry = '{"query_id":%s,"q_nrm":%s,%s}' % (
+                r.id_json[1:-1], json.dumps(nrm),
+                ",".join(map(str.__add__, fields, elems)),
+            )
+            for c in probed:
+                by_cell[c].append(entry)
+        doc = "[" + ",".join("[" + ",".join(c) + "]" for c in by_cell) + "]"
+        schema = T.ArrayType(T.ArrayType(T.StructType(
+            [T.StructField("query_id", id_type),
+             T.StructField("q_nrm", T.DoubleType())]
+            + [T.StructField(f"_b{i}", T.DoubleType()) for i in range(1, dim + 1)]
+        ))).json()
+        scored = index.serving().selectExpr(
+            "*",
+            f"inline(get(from_json({_literal(doc)}, {_literal(schema)}, "
+            f"{_JSON_OPTS}), cell))",
+        )
     if exclude_self:
         scored = scored.where(f"query_id != {key}")
     scored = scored.selectExpr(
@@ -1009,6 +1022,29 @@ def _ivf_search_core(
     )
 
 
+def _joined_queries(
+    index: IVFIndex, q: DataFrame, id_col: str, vec_col: str, n_probe: int,
+    op: str,
+) -> DataFrame:
+    """The serving copy joined to the queries of ``q`` that probe each
+    row's cell: ``q``'s probed, flattened ``(query_id, q_nrm,
+    _b1.._b<dim>)`` rows broadcast and equi-joined on the cell. The
+    large-batch plan of :func:`_ivf_search_core`: the broadcast is one
+    job more than the literal, but its cost does not grow with the plan
+    text. ``q`` is read when the join runs, so the width check stays in
+    the plan."""
+    dim = len(index.centroids[0])
+    vec = _width_checked(f"CAST({_quote(vec_col)} AS ARRAY<DOUBLE>)", dim, op)
+    probed = _probe_cells(
+        q.selectExpr(f"{_quote(id_col)} AS query_id", f"{vec} AS q_emb")
+        .selectExpr("query_id", "q_emb", f"{_norm_sql('q_emb', None)} AS q_nrm"),
+        index.centroids, "q_emb", n_probe,
+    ).where("q_nrm > 0").selectExpr(
+        "query_id", "q_cell", "q_nrm", *_flat_cols("q_emb", "_b", dim)
+    )
+    return index.serving().join(F.broadcast(probed), F.expr("cell = q_cell"))
+
+
 def ivf_search(
     index: IVFIndex,
     query_ids: list[int],
@@ -1020,8 +1056,8 @@ def ivf_search(
     ``n_probe``/``n_cells``; ``n_probe = n_cells`` degrades to exact. NO
     KMeans fit happens here — repeated searches reuse the index as-is.
     The query rows are read from the index's assignment when the call
-    is made (one job), and enter the search plan as one literal
-    (:func:`_ivf_search_core`)."""
+    is made (one job), and enter the search plan as one literal while
+    the batch is serving-sized (:func:`_ivf_search_core`)."""
     assigned, id_col = index.assigned, index.id_col
     if not index.centroids:
         return _ivf_empty_result(index, assigned.schema[id_col].dataType)
@@ -1045,15 +1081,15 @@ def ivf_search_vectors(
     fresh documents to link against the training set. Same plan as
     :func:`ivf_search`: the batch is READ WHEN THE CALL IS MADE (no
     Spark job for a driver-local batch such as ``local_frame``), each
-    query ranks the centroids by the :func:`assign_cells` rule (a
-    per-row sort over one parsed literal matrix; a non-finite centroid
-    raises ``ValueError`` naming its cell), and the probed queries
-    enter the plan as one literal that each row of the index's serving
-    copy reads by its cell: exact cosine re-rank, one job per batch
-    whatever the query count (:func:`_ivf_search_core`). Later changes
-    to the rows behind ``queries`` do not reach the returned frame. A
-    query vector whose width differs from the index's fails the
-    search, when it runs, with an error naming both widths."""
+    query ranks the centroids by the :func:`assign_cells` rule (on the
+    driver while the batch is serving-sized; a non-finite centroid
+    raises ``ValueError`` naming its cell), and each row of the index's
+    serving copy meets the queries that probe its cell: exact cosine
+    re-rank. A serving-sized batch enters the plan as one literal, one
+    job per batch; a larger one is broadcast and joined on the cell
+    (:func:`_ivf_search_core`). A query vector whose width differs from
+    the index's raises ``ValueError`` naming both widths when the call
+    is made."""
     if not index.centroids:
         return _ivf_empty_result(index, queries.schema[id_col].dataType)
     return _ivf_search_core(

@@ -514,10 +514,11 @@ def test_ivf_search_vectors_py4j_budget(spark, corpus, py4j_calls):
     inside a py4j round-trip budget: the cost of constructing the plan
     is deterministic in calls, unlike its wall time. The count
     includes reading the batch, which the search does when it is
-    called. The budget is the count measured once the query prep
-    (cast, norm, centroid ranking) became one parsed projection and
-    the probed queries one plan literal in place of a broadcast join
-    (211 calls before; 325 before the query cast and norm were parsed
+    called. The budget is the count measured once the batch read
+    became one projection (id and cast) with the norm and centroid
+    ranking on the driver (54 calls before, when the read projection
+    also ranked the centroids; 211 before the probed queries became
+    one plan literal in place of a broadcast join; 325 before the query cast and norm were parsed
     from one SQL string each and the corpus side became the index's
     resident serving copy; 900 before cell assignment and the
     flat-column scoring were parsed from SQL text; 959 before the
@@ -527,7 +528,7 @@ def test_ivf_search_vectors_py4j_budget(spark, corpus, py4j_calls):
     sim.ivf_search_vectors(index, queries, k=5, n_probe=2)  # warm
     with py4j_calls() as n:
         sim.ivf_search_vectors(index, queries, k=5, n_probe=2)
-    assert n[0] <= 54, n[0]
+    assert n[0] <= 51, n[0]
 
 
 def _ranked_results():
@@ -624,7 +625,9 @@ def test_ranked_result_releases_its_jvm_query_when_dropped(spark, corpus, op):
 
 def _assert_refuses_wrong_dimension(spark, corpus, op, width):
     """The ``op`` search of a 6-wide corpus fails when one query vector
-    has ``width`` dimensions, with both widths in the message."""
+    has ``width`` dimensions, with both widths in the message: the IVF
+    search when it is called (it reads the batch then), the others when
+    they run."""
     from big_data_hadoop_spark.operators import pq
 
     queries = spark.createDataFrame(
@@ -634,8 +637,12 @@ def _assert_refuses_wrong_dimension(spark, corpus, op, width):
     of = "the codebook"
     if op == "ivf_search_vectors":
         index = sim.ivf_build(corpus, n_cells=4)
-        res = sim.ivf_search_vectors(index, queries, k=3, n_probe=2)
-        of = "the index"
+        with pytest.raises(
+            ValueError,
+            match=f"{op}: a query vector has {width} dimensions, the index has 6",
+        ):
+            sim.ivf_search_vectors(index, queries, k=3, n_probe=2)
+        return
     elif op == "cosine_topk_vectors":
         res = sim.cosine_topk_vectors(corpus, queries, k=3)
         of = "a corpus vector"
@@ -705,40 +712,42 @@ def _search_jobs(spark, fn):
 
 def _serves_from_one_partition(spark, index, corpus):
     """After a first search has filled ``index``'s serving copy, the
-    copy is one partition and a search over a driver-local batch is ONE
-    Spark job, call and collect together: the batch is read at call
-    time from its ``LocalRelation`` without a job, and the result is an
-    in-memory scan of the copy with no shuffle, no broadcast and no
-    join. The results equal the exact search at full probe. Returns the
-    copy."""
+    copy is one partition and a batch is an in-memory scan of it with
+    no shuffle, no broadcast and no join. Jobs are counted over call
+    and collect together, since the batch is read at call time: a
+    driver-local batch is ONE Spark job (its ``LocalRelation`` is read
+    without one), a batch derived from the corpus frame two (reading
+    it, then the result). The results equal the exact search at full
+    probe. Returns the copy."""
     from big_data_hadoop_spark.sources.io import local_frame
 
-    queries = local_frame(
-        spark,
-        [tuple(r) for r in corpus.filter("vec_id < 8").collect()],
+    derived = corpus.filter("vec_id < 8").toDF("query_id", "embedding")
+    local = local_frame(
+        spark, [tuple(r) for r in derived.collect()],
         "query_id long, embedding array<double>",
     )
-    sim.ivf_search_vectors(index, queries, k=5, n_probe=4).collect()  # fill
+    sim.ivf_search_vectors(index, local, k=5, n_probe=4).collect()  # fill
     copy = index.serving()
     assert copy.rdd.getNumPartitions() == 1
-    got = []
-
-    def search():
-        got.append(sim.ivf_search_vectors(index, queries, k=5, n_probe=4))
-        return got[0].collect()
-
-    rows, jobs = _search_jobs(spark, search)
-    assert jobs == 1, jobs
-    plan = got[0]._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
-    assert "Exchange" not in plan and "ShuffleQueryStage" not in plan, plan
-    assert "Join" not in plan, plan
-    exact = sim.cosine_topk_vectors(corpus, queries, k=5).collect()
+    exact = sim.cosine_topk_vectors(corpus, local, k=5).collect()
 
     def hexed(rs):
         return sorted((r.query_id, r.neighbor_id, r.sim.hex()) for r in rs)
 
-    assert hexed(rows) == hexed(exact)
+    for queries, want_jobs in ((local, 1), (derived, 2)):
+        got = []
+
+        def search():
+            got.append(sim.ivf_search_vectors(index, queries, k=5, n_probe=4))
+            return got[0].collect()
+
+        rows, jobs = _search_jobs(spark, search)
+        assert jobs == want_jobs, (want_jobs, jobs)
+        plan = got[0]._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        assert "Exchange" not in plan and "ShuffleQueryStage" not in plan, plan
+        assert "Join" not in plan, plan
+        assert hexed(rows) == hexed(exact)
     return copy
 
 
@@ -845,35 +854,6 @@ def test_centroid_matrix_folds_to_exact_doubles(spark):
     ]
 
 
-def _broadcast_join_search(index, queries, k, n_probe):
-    """The IVF search as it was planned before the batch became a plan
-    literal, kept as the reference for it: the probed queries
-    (``_probe_cells``) flattened, broadcast and equi-joined to the
-    serving copy on the cell, then the same left-fold sim and top-k
-    tie-break. Applies no width check."""
-    from pyspark.sql import functions as F
-
-    from big_data_hadoop_spark.functions.rank import top_k_per
-
-    dim = len(index.centroids[0])
-    q = queries.selectExpr(
-        "query_id", "CAST(embedding AS ARRAY<DOUBLE>) AS q_emb"
-    ).selectExpr("query_id", "q_emb", f"{sim._norm_sql('q_emb', None)} AS q_nrm")
-    fb = (
-        sim._probe_cells(q, index.centroids, "q_emb", n_probe)
-        .where("q_nrm > 0")
-        .selectExpr(
-            "query_id", "q_cell", "q_nrm", *sim._flat_cols("q_emb", "_b", dim)
-        )
-    )
-    score = sim._flat_dot("_b", "_a", dim) / (F.col("q_nrm") * F.col("nrm"))
-    scored = index.serving().join(F.broadcast(fb), F.expr("cell = q_cell"))
-    scored = scored.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), score.alias("sim")
-    )
-    return top_k_per(scored, "query_id", "sim DESC, neighbor_id ASC", k)
-
-
 _NAN, _INF = float("nan"), float("inf")
 
 #: Query batches whose literal encoding or probing is an edge case:
@@ -887,6 +867,8 @@ _EDGE_BATCHES = {
             (3, [-_INF, 1.0, 1.0, 1.0, 1.0, -_INF]),
             (4, [0.0, 0.0, 0.0, 0.0, 0.0, 0.0]),
             (5, [-0.0, 5e-324, 10.0, 5.0, 1e308, 0.1]),
+            (6, [1.0, None, 0.3, 0.1, 0.0, 0.2]),
+            (7, None),
         ],
     ),
     "string_ids": (
@@ -921,51 +903,76 @@ _EDGE_BATCHES = {
 }
 
 
+def _hexed(df):
+    return sorted(
+        (repr(r.query_id), r.neighbor_id, r.sim.hex()) for r in df.collect()
+    )
+
+
 @pytest.mark.parametrize("batch", sorted(_EDGE_BATCHES))
-def test_literal_batch_matches_the_broadcast_join_search(spark, corpus, batch):
-    """Over edge-case batches (NaN and ±inf elements, string ids with
-    quotes and backslashes, duplicate ids, timestamp ids, an empty
-    batch) the search equals the broadcast-join plan it replaced, sims
-    compared by ``float.hex``, at every probe count including 0; the
-    query id keeps the batch's type."""
+def test_literal_batch_matches_the_broadcast_join_search(
+    spark, corpus, batch, monkeypatch
+):
+    """Over edge-case batches (NaN, ±inf and NULL elements, a NULL
+    vector, string ids with quotes and backslashes, duplicate ids,
+    timestamp ids, an empty batch) the literal plan equals the broadcast-join plan that a batch
+    over the literal cap gets, sims compared by ``float.hex``, at every
+    probe count including 0; the query id keeps the batch's type."""
     schema, rows = _EDGE_BATCHES[batch]
     queries = spark.createDataFrame(rows, schema)
     index = sim.ivf_build(corpus, n_cells=4)
-
-    def hexed(df):
-        return sorted(
-            (repr(r.query_id), r.neighbor_id, r.sim.hex()) for r in df.collect()
-        )
-
     for n_probe in (0, 1, 2, 4):
         got = sim.ivf_search_vectors(index, queries, k=5, n_probe=n_probe)
-        ref = _broadcast_join_search(index, queries, 5, n_probe)
-        assert got.schema["query_id"] == queries.schema["query_id"]
-        assert hexed(got) == hexed(ref), (batch, n_probe)
+        with monkeypatch.context() as m:
+            m.setattr(sim, "_LITERAL_DOUBLES", 0)
+            ref = sim.ivf_search_vectors(index, queries, k=5, n_probe=n_probe)
+        for res in (got, ref):
+            assert res.schema["query_id"] == queries.schema["query_id"]
+        assert _hexed(got) == _hexed(ref), (batch, n_probe)
         if n_probe == 0 or not rows:
             assert not got.collect()
 
 
-def test_width_refusal_is_deferred_to_the_run_and_skipped_unprobed(
-    spark, corpus
+def test_batch_over_the_literal_cap_is_broadcast_and_joined(
+    spark, corpus, monkeypatch
 ):
-    """A wrong-width query fails the search when it runs (building it
-    succeeds), even when the query is zero-norm and so would never
-    rank; with ``n_probe=0`` nothing is probed and nothing is refused,
-    as before."""
+    """A batch with more probed doubles than ``_LITERAL_DOUBLES`` is
+    planned as a broadcast join on the cell, with the same rows as the
+    literal plan, self-exclusion included (``ivf_search``); one at the
+    cap still enters the plan as a literal."""
+    index = sim.ivf_build(corpus, n_cells=4)
+    ids = list(range(8))
+    want = _hexed(sim.ivf_search(index, ids, k=5, n_probe=2))
+    # 8 queries × 2 probed cells × 6 doubles
+    for cap, joined in ((96, False), (95, True)):
+        monkeypatch.setattr(sim, "_LITERAL_DOUBLES", cap)
+        res = sim.ivf_search(index, ids, k=5, n_probe=2)
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastHashJoin" in plan) == joined, plan
+        assert _hexed(res) == want
+
+
+def test_width_refusal_raises_at_the_call_and_skips_unprobed(
+    spark, corpus, monkeypatch
+):
+    """A wrong-width query raises ``ValueError`` when the search is
+    called, whichever plan its batch would get, even when the query is
+    zero-norm and so would never rank; with ``n_probe=0`` nothing is
+    probed and nothing is refused."""
     index = sim.ivf_build(corpus, n_cells=4)
     queries = spark.createDataFrame(
         [(1, [1.0] * 6), (2, [0.0] * 5)],
         "query_id long, embedding array<double>",
     )
-    res = sim.ivf_search_vectors(index, queries, k=3, n_probe=2)
-    with pytest.raises(
-        Exception,
-        match="ivf_search_vectors: a query vector has 5 dimensions, "
-        "the index has 6",
-    ):
-        res.collect()
-    assert not sim.ivf_search_vectors(index, queries, k=3, n_probe=0).collect()
+    for cap in (sim._LITERAL_DOUBLES, 0):
+        monkeypatch.setattr(sim, "_LITERAL_DOUBLES", cap)
+        with pytest.raises(
+            ValueError,
+            match="ivf_search_vectors: a query vector has 5 dimensions, "
+            "the index has 6",
+        ):
+            sim.ivf_search_vectors(index, queries, k=3, n_probe=2)
+        assert not sim.ivf_search_vectors(index, queries, k=3, n_probe=0).collect()
 
 
 def test_query_literal_that_fails_to_parse_raises(spark, corpus):
@@ -979,16 +986,3 @@ def test_query_literal_that_fails_to_parse_raises(spark, corpus):
     )
     with pytest.raises(Exception, match="MALFORMED_RECORD"):
         df.collect()
-
-
-def test_vector_column_named_like_the_centroid_variable(spark, corpus):
-    """The centroid lambda variable of the query prep never shadows the
-    caller's vector column, whatever it is named."""
-    index = sim.ivf_build(corpus, n_cells=4)
-    queries = corpus.filter("vec_id < 4").toDF("query_id", "embedding")
-    odd = queries.toDF("query_id", "__bdhs_centroid")
-    got = sim.ivf_search_vectors(
-        index, odd, k=3, n_probe=2, vec_col="__bdhs_centroid"
-    ).collect()
-    want = sim.ivf_search_vectors(index, queries, k=3, n_probe=2).collect()
-    assert got and sorted(got) == sorted(want)
